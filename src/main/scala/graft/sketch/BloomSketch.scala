@@ -159,8 +159,7 @@ object BloomSketch {
   def fromWords(words: Array[Int], d: Int): BloomSketch =
     new BloomSketch(words.length * 32, d, words)
 
-  def fromBytes(bytes: Array[Byte]): BloomSketch = {
-    val bb = Codec.reader(bytes, Codec.TagBloom)
+  def fromBytes(bytes: Array[Byte]): BloomSketch = Codec.decode(bytes, Codec.TagBloom) { bb =>
     val d = bb.getInt()
     val words = Codec.readIntArray(bb)
     new BloomSketch(words.length * 32, d, words)

@@ -120,8 +120,7 @@ object CmsSketch {
     (w, d)
   }
 
-  def fromBytes(bytes: Array[Byte]): CmsSketch = {
-    val bb = Codec.reader(bytes, Codec.TagCms)
+  def fromBytes(bytes: Array[Byte]): CmsSketch = Codec.decode(bytes, Codec.TagCms) { bb =>
     val w = bb.getInt(); val d = bb.getInt(); val num = bb.getLong()
     new CmsSketch(w, d, Codec.readLongArray(bb), num)
   }
@@ -194,8 +193,7 @@ object CmmSketch {
     new CmmSketch(c.width, c.depth, c.table, 0L)
   }
 
-  def fromBytes(bytes: Array[Byte]): CmmSketch = {
-    val bb = Codec.reader(bytes, Codec.TagCmm)
+  def fromBytes(bytes: Array[Byte]): CmmSketch = Codec.decode(bytes, Codec.TagCmm) { bb =>
     val w = bb.getInt(); val d = bb.getInt(); val num = bb.getLong()
     new CmmSketch(w, d, Codec.readLongArray(bb), num)
   }

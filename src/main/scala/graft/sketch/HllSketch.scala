@@ -187,12 +187,12 @@ object HllSketch {
     case _  => 0.7213 / (1 + 1.079 / m)
   }
 
-  def fromBytes(bytes: Array[Byte]): HllSketch = {
-    val bb = Codec.reader(bytes, Codec.TagHll)
+  def fromBytes(bytes: Array[Byte]): HllSketch = Codec.decode(bytes, Codec.TagHll) { bb =>
     val p = bb.getInt()
+    if (p < 4 || p > 18) throw Codec.corrupt(Codec.TagHll, 3, s"HLL precision $p out of range")
     val mode = bb.get()
     if (mode == 1) {
-      val n = bb.getInt()
+      val n = Codec.readCount(bb, 5)
       val map = scala.collection.mutable.HashMap.empty[Int, Byte]
       var i = 0
       while (i < n) { map.update(bb.getInt(), bb.get()); i += 1 }

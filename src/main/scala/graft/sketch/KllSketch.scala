@@ -254,17 +254,16 @@ object KllSketch {
     math.max(8, math.ceil(k * math.pow(2.0 / 3.0, depth)).toInt)
   }
 
-  def fromBytes(bytes: Array[Byte]): KllSketch = {
-    val bb = Codec.reader(bytes, Codec.TagKll)
+  def fromBytes(bytes: Array[Byte]): KllSketch = Codec.decode(bytes, Codec.TagKll) { bb =>
     val k = bb.getInt()
     val sk = new KllSketch(k)
     sk.n = bb.getLong()
     sk.minV = bb.getDouble()
     sk.maxV = bb.getDouble()
     sk.coinState = bb.getLong()
-    val nl = bb.getInt()
+    val nl = Codec.readCount(bb, 4)
     sk.levels = ArrayBuffer.tabulate(nl) { _ =>
-      val len = bb.getInt()
+      val len = Codec.readCount(bb, 8)
       val buf = new DoubleBuf(len)
       var i = 0
       while (i < len) { buf.add(bb.getDouble()); i += 1 }

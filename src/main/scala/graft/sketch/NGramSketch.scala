@@ -95,11 +95,10 @@ object NGramSketch {
   def apply(n: Int = 2, caseSensitive: Boolean = false): NGramSketch =
     new NGramSketch(n, caseSensitive, mutable.HashMap.empty)
 
-  def fromBytes(bytes: Array[Byte]): NGramSketch = {
-    val bb = Codec.reader(bytes, Codec.TagNGram)
+  def fromBytes(bytes: Array[Byte]): NGramSketch = Codec.decode(bytes, Codec.TagNGram) { bb =>
     val n = bb.getInt()
     val cs = bb.get() == 1
-    val sz = bb.getInt()
+    val sz = Codec.readCount(bb, 12)
     val m = mutable.HashMap.empty[String, Long]
     var i = 0
     while (i < sz) {

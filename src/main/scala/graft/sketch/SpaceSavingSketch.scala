@@ -263,16 +263,16 @@ object SpaceSavingSketch {
     ss
   }
 
-  def fromBytes(bytes: Array[Byte]): SpaceSavingSketch = {
-    val bb = Codec.reader(bytes, Codec.TagSpaceSaving)
-    val cap = bb.getInt()
-    val nb = bb.getInt()
-    val buckets = (0 until nb).map { _ =>
-      val count = bb.getLong()
-      val ne = bb.getInt()
-      val entries = (0 until ne).map(_ => (Codec.readString(bb), bb.getLong()))
-      (count, entries)
+  def fromBytes(bytes: Array[Byte]): SpaceSavingSketch =
+    Codec.decode(bytes, Codec.TagSpaceSaving) { bb =>
+      val cap = bb.getInt()
+      val nb = Codec.readCount(bb, 12)
+      val buckets = (0 until nb).map { _ =>
+        val count = bb.getLong()
+        val ne = Codec.readCount(bb, 12)
+        val entries = (0 until ne).map(_ => (Codec.readString(bb), bb.getLong()))
+        (count, entries)
+      }
+      fromBuckets(cap, buckets)
     }
-    fromBuckets(cap, buckets)
-  }
 }

@@ -318,8 +318,7 @@ object TDigestSketch {
   def fast(compression: Int = DefaultCentroids): TDigestSketch =
     new TDigestSketch(compression, 8 * math.max(1, compression))
 
-  def fromBytes(bytes: Array[Byte]): TDigestSketch = {
-    val bb = Codec.reader(bytes, Codec.TagTDigest)
+  def fromBytes(bytes: Array[Byte]): TDigestSketch = Codec.decode(bytes, Codec.TagTDigest) { bb =>
     val nc = bb.getInt()
     val mn = bb.getDouble()
     val mx = bb.getDouble()

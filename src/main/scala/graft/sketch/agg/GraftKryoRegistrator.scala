@@ -4,20 +4,15 @@ import com.esotericsoftware.kryo.{Kryo, Serializer}
 import com.esotericsoftware.kryo.io.{Input, Output}
 import org.apache.spark.serializer.KryoRegistrator
 
-import graft.sketch._
 import graft.text.MinHashSketch
 
-/** Kryo serializers for sketch aggregation buffers: instead of Kryo's
-  * field-walking default, buffers serialize through the canonical binary
-  * codec and a level-1 deflate. Partial CMS/Bloom states are mostly zeros,
-  * so this shrinks the partial-agg shuffle payload ~5–20× — at 10^12 rows
-  * the shuffle between partial and final aggregation is (chunks × groups ×
-  * sketch size), and this is the knob that keeps it small.
+/** Kryo serializers for the two aggregation buffers still held through
+  * `Encoders.kryo`, `TurnSketches` (`TurnSketchAgg`) and `MinHashSketch`
+  * (`TextFunctions.MinHashAgg`): each serializes through its canonical binary
+  * codec and a level-1 deflate instead of Kryo's field-walking default.
   *
   * Activate per session:
   * `.config("spark.kryo.registrator", "graft.sketch.agg.GraftKryoRegistrator")`
-  * (Encoders.kryo buffers go through Spark's KryoSerializer, which honors
-  * the registrator.)
   */
 class GraftKryoRegistrator extends KryoRegistrator {
 
@@ -57,22 +52,6 @@ class GraftKryoRegistrator extends KryoRegistrator {
     }
 
   override def registerClasses(kryo: Kryo): Unit = {
-    kryo.register(classOf[BloomSketch],
-      codecSerializer[BloomSketch](_.toBytes, BloomSketch.fromBytes))
-    kryo.register(classOf[CmsSketch],
-      codecSerializer[CmsSketch](_.toBytes, CmsSketch.fromBytes))
-    kryo.register(classOf[CmmSketch],
-      codecSerializer[CmmSketch](_.toBytes, CmmSketch.fromBytes))
-    kryo.register(classOf[NGramSketch],
-      codecSerializer[NGramSketch](_.toBytes, NGramSketch.fromBytes))
-    kryo.register(classOf[SpaceSavingSketch],
-      codecSerializer[SpaceSavingSketch](_.toBytes, SpaceSavingSketch.fromBytes))
-    kryo.register(classOf[TDigestSketch],
-      codecSerializer[TDigestSketch](_.toBytes, TDigestSketch.fromBytes))
-    kryo.register(classOf[HllSketch],
-      codecSerializer[HllSketch](_.toBytes, HllSketch.fromBytes))
-    kryo.register(classOf[KllSketch],
-      codecSerializer[KllSketch](_.toBytes, KllSketch.fromBytes))
     kryo.register(classOf[MinHashSketch],
       codecSerializer[MinHashSketch](_.toBytes, MinHashSketch.fromBytes))
     kryo.register(classOf[TurnSketches],

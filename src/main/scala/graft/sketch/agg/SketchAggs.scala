@@ -1,224 +1,213 @@
 package graft.sketch.agg
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, GraftColumns, SparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketch._
+import graft.sketch.core.Fnv1a
 
-/** Typed `Aggregator`s — one per sketch (SURVEY.md §2.2/§2.4): `reduce` is
-  * the reference's `add`, `merge` the (associative, commutative) combine,
-  * `finish` serializes to the canonical binary codec so sketch results are
-  * plain `BinaryType` columns.
+/** One native Catalyst aggregate behind every per-sketch SQL aggregate
+  * (`hll_agg`, `kll_agg`, ... and the `*_merge_agg`s), modelled on
+  * `TurnSketchNativeAgg`. The live sketch is the aggregation buffer, so these
+  * run in `ObjectHashAggregateExec`. Rows are read straight from the
+  * `InternalRow`: strings are hashed from UTF8String memory where the sketch
+  * has a memory hash, and merge aggregates decode the `BinaryType` cell.
+  * Buffers cross shuffle, spill and the sort-based fallback as the sketch's
+  * canonical codec bytes. What differs per sketch is its [[SketchAdapter]].
   *
-  * Buffers are live mutable sketch objects: with a non-primitive buffer type
-  * Spark routes these through `ObjectHashAggregateExec`, which keeps the
-  * object per group and serializes (Kryo → single binary field) only at
-  * shuffle/spill — verified by plan inspection in SparkIntegrationSpec.
-  *
-  * Inputs are nullable boxed types; null rows are skipped, matching the
-  * reference's null handling (ngram.js:19, t-digest.js:82).
+  * Arguments are implicitly cast to the adapter's input types (an INT column
+  * into `kll_agg` is cast to DOUBLE, into `hll_agg` to STRING); any other type
+  * fails at analysis, naming the function. NULL inputs are skipped: a value
+  * aggregate over no rows returns an empty sketch, and a merge aggregate with
+  * no non-NULL input returns NULL.
   */
+case class SketchAgg[S >: Null <: AnyRef](
+    fnName: String,
+    adapter: SketchAdapter[S],
+    children: Seq[Expression],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[S] with ImplicitCastInputTypes {
+
+  override def prettyName: String = fnName
+  override def inputTypes: Seq[DataType] = adapter.inputTypes
+  override def nullable: Boolean = true
+  override def dataType: DataType = BinaryType
+
+  override def createAggregationBuffer(): S = adapter.zero
+  override def update(s: S, input: InternalRow): S = {
+    val v = children.head.eval(input)
+    if (v == null) s else adapter.update(s, v, input, children)
+  }
+  override def merge(a: S, b: S): S =
+    if (a == null) b else if (b == null) a else adapter.ops.merge(a, b)
+  override def eval(s: S): Any = if (s == null) null else adapter.ops.toBytes(s)
+
+  // a merge aggregate's buffer stays null until its first non-NULL sketch
+  override def serialize(s: S): Array[Byte] =
+    if (s == null) Array.emptyByteArray else adapter.ops.toBytes(s)
+  override def deserialize(bytes: Array[Byte]): S =
+    if (bytes.isEmpty) null else adapter.ops.fromBytes(bytes)
+
+  override def withNewMutableAggBufferOffset(offset: Int): SketchAgg[S] =
+    copy(mutableAggBufferOffset = offset)
+  override def withNewInputAggBufferOffset(offset: Int): SketchAgg[S] =
+    copy(inputAggBufferOffset = offset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): SketchAgg[S] = copy(children = newChildren)
+}
+
+/** A named sketch aggregate: the Column-API handle (`fns.hllAgg(col("x"))`)
+  * and its session-scoped SQL registration build the same [[SketchAgg]].
+  */
+final class SketchAggFunction(name: String, adapter: SketchAdapter[_ >: Null <: AnyRef])
+    extends Serializable {
+
+  private def build(fn: String)(children: Seq[Expression]): SketchAgg[_] = {
+    require(children.length == adapter.inputTypes.length,
+      s"$fn expects ${adapter.inputTypes.length} argument(s), got ${children.length}")
+    SketchAgg(fn, adapter, children)
+  }
+
+  def apply(cols: Column*): Column = GraftColumns.aggregate(cols)(build(name))
+
+  def register(spark: SparkSession, prefix: String): Unit = {
+    val fn = prefix + name
+    spark.sessionState.functionRegistry.registerFunction(FunctionIdentifier(fn),
+      new ExpressionInfo(classOf[SketchAgg[_]].getName, null, fn),
+      children => build(fn)(children).toAggregateExpression())
+  }
+}
+
+/** Merge and canonical codec of one sketch type, shared by its value and
+  * merge aggregates.
+  */
+sealed abstract class SketchOps[S](
+    val merge: (S, S) => S,
+    val toBytes: S => Array[Byte],
+    val fromBytes: Array[Byte] => S) extends Serializable
+
+object SketchOps {
+  object Bloom extends SketchOps[BloomSketch](_ unionInPlace _, _.toBytes, BloomSketch.fromBytes)
+  object Cms extends SketchOps[CmsSketch](_ mergeInPlace _, _.toBytes, CmsSketch.fromBytes)
+  object Cmm extends SketchOps[CmmSketch](_ mergeInPlace _, _.toBytes, CmmSketch.fromBytes)
+  object NGram extends SketchOps[NGramSketch](_ mergeInPlace _, _.toBytes, NGramSketch.fromBytes)
+  object TopK extends SketchOps[SpaceSavingSketch](
+    _ mergeInPlace _, _.toBytes, SpaceSavingSketch.fromBytes)
+  object TDigest extends SketchOps[TDigestSketch](
+    _ mergeInPlace _, _.toBytes, TDigestSketch.fromBytes)
+  object Kll extends SketchOps[KllSketch](_ mergeInPlace _, _.toBytes, KllSketch.fromBytes)
+  object Hll extends SketchOps[HllSketch](_ mergeInPlace _, _.toBytes, HllSketch.fromBytes)
+}
+
+/** What a [[SketchAgg]] does for one sketch: its SQL argument types, its
+  * empty state, and how one input row updates the state.
+  */
+abstract class SketchAdapter[S >: Null <: AnyRef](val ops: SketchOps[S]) extends Serializable {
+  def inputTypes: Seq[DataType]
+  /** Empty state; null for merge aggregates, which take the first sketch. */
+  def zero: S
+  /** Fold in a row whose first argument `v` is not NULL. */
+  def update(s: S, v: Any, input: InternalRow, args: Seq[Expression]): S
+}
+
+/** Value aggregate over one argument, updating the state in place. */
+abstract class ValueAdapter[S >: Null <: AnyRef](ops: SketchOps[S], inputType: DataType)
+    extends SketchAdapter[S](ops) {
+  def inputTypes: Seq[DataType] = Seq(inputType)
+  protected def add(s: S, v: Any): Unit
+  def update(s: S, v: Any, input: InternalRow, args: Seq[Expression]): S = { add(s, v); s }
+}
+
 object SketchAggs {
 
-  // ---- value-ingesting aggregators ----
+  // ---- value aggregates ----
 
-  final class BloomAgg(w: Int, d: Int) extends Aggregator[String, BloomSketch, Array[Byte]] {
+  final case class Bloom(w: Int, d: Int) extends ValueAdapter(SketchOps.Bloom, StringType) {
     def zero: BloomSketch = BloomSketch(w, d)
-    def reduce(b: BloomSketch, v: String): BloomSketch = { if (v != null) b.add(v); b }
-    def merge(a: BloomSketch, b: BloomSketch): BloomSketch = a.unionInPlace(b)
-    def finish(b: BloomSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[BloomSketch] = Encoders.kryo[BloomSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    // FNV-1a over the UTF-8 bytes equals the String hash for ASCII; other
+    // strings take the String path (the reference hashes UTF-16 units)
+    protected def add(s: BloomSketch, v: Any): Unit = {
+      val u = v.asInstanceOf[UTF8String]
+      val h = Fnv1a.fnv1aUtf8MemoryOrSentinel(u.getBaseObject, u.getBaseOffset, u.numBytes)
+      if (h != Fnv1a.NonAscii) s.addFnv(h.toInt) else s.add(u.toString)
+    }
   }
 
-  final class CmsAgg(w: Int, d: Int) extends Aggregator[String, CmsSketch, Array[Byte]] {
+  final case class Cms(w: Int, d: Int) extends ValueAdapter(SketchOps.Cms, StringType) {
     def zero: CmsSketch = CmsSketch(w, d)
-    def reduce(b: CmsSketch, v: String): CmsSketch = { if (v != null) b.add(v); b }
-    def merge(a: CmsSketch, b: CmsSketch): CmsSketch = a.mergeInPlace(b)
-    def finish(b: CmsSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[CmsSketch] = Encoders.kryo[CmsSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    protected def add(s: CmsSketch, v: Any): Unit = s.add(v.toString)
   }
 
-  /** Capacity-sized Bloom: buffers constructed through `Bloom.create(n, p)`
-    * (bloom.js:35-44) — the sizing path a membership job must use instead of
-    * riding a fixed-width default (SURVEY.md §2.1).
-    */
-  final class BloomCreateAgg(n: Int, p: Double)
-      extends Aggregator[String, BloomSketch, Array[Byte]] {
-    def zero: BloomSketch = BloomSketch.create(n, p)
-    def reduce(b: BloomSketch, v: String): BloomSketch = { if (v != null) b.add(v); b }
-    def merge(a: BloomSketch, b: BloomSketch): BloomSketch = a.unionInPlace(b)
-    def finish(b: BloomSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[BloomSketch] = Encoders.kryo[BloomSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Error-sized CMS: buffers constructed through `CountMin.create(n, e, p)`
-    * (count-min.js:37-43; note the d=⌈ln 1000⌉=7 default-depth quirk vs the
-    * plain constructor's 9).
-    */
-  final class CmsCreateAgg(n: Long, e: Double, p: Double)
-      extends Aggregator[String, CmsSketch, Array[Byte]] {
-    def zero: CmsSketch = CmsSketch.create(n, e, p)
-    def reduce(b: CmsSketch, v: String): CmsSketch = { if (v != null) b.add(v); b }
-    def merge(a: CmsSketch, b: CmsSketch): CmsSketch = a.mergeInPlace(b)
-    def finish(b: CmsSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[CmsSketch] = Encoders.kryo[CmsSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  final class CmmAgg(w: Int, d: Int) extends Aggregator[String, CmmSketch, Array[Byte]] {
+  final case class Cmm(w: Int, d: Int) extends ValueAdapter(SketchOps.Cmm, StringType) {
     def zero: CmmSketch = CmmSketch(w, d)
-    def reduce(b: CmmSketch, v: String): CmmSketch = { if (v != null) b.add(v); b }
-    def merge(a: CmmSketch, b: CmmSketch): CmmSketch = { a.mergeInPlace(b); a }
-    def finish(b: CmmSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[CmmSketch] = Encoders.kryo[CmmSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    protected def add(s: CmmSketch, v: Any): Unit = s.add(v.toString)
   }
 
-  final class NGramAgg(n: Int, caseSensitive: Boolean)
-      extends Aggregator[String, NGramSketch, Array[Byte]] {
+  final case class NGram(n: Int, caseSensitive: Boolean)
+      extends ValueAdapter(SketchOps.NGram, StringType) {
     def zero: NGramSketch = NGramSketch(n, caseSensitive)
-    def reduce(b: NGramSketch, v: String): NGramSketch = { b.add(v); b }
-    def merge(a: NGramSketch, b: NGramSketch): NGramSketch = a.mergeInPlace(b)
-    def finish(b: NGramSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[NGramSketch] = Encoders.kryo[NGramSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    protected def add(s: NGramSketch, v: Any): Unit = s.add(v.toString)
   }
 
-  final class TopKAgg(capacity: Int)
-      extends Aggregator[String, SpaceSavingSketch, Array[Byte]] {
+  final case class TopK(capacity: Int) extends ValueAdapter(SketchOps.TopK, StringType) {
     def zero: SpaceSavingSketch = SpaceSavingSketch(capacity)
-    def reduce(b: SpaceSavingSketch, v: String): SpaceSavingSketch = {
-      if (v != null) b.add(v); b
-    }
-    def merge(a: SpaceSavingSketch, b: SpaceSavingSketch): SpaceSavingSketch = a.mergeInPlace(b)
-    def finish(b: SpaceSavingSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[SpaceSavingSketch] = Encoders.kryo[SpaceSavingSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    protected def add(s: SpaceSavingSketch, v: Any): Unit = s.add(v.toString)
   }
 
-  /** Weighted top-k: (value, count) pairs, e.g. pre-aggregated partials. */
-  final class TopKWeightedAgg(capacity: Int)
-      extends Aggregator[(String, Long), SpaceSavingSketch, Array[Byte]] {
+  /** Weighted top-k over (value, count) pairs, e.g. pre-aggregated partials.
+    * A NULL count adds the value with count 0.
+    */
+  final case class TopKWeighted(capacity: Int) extends SketchAdapter(SketchOps.TopK) {
+    def inputTypes: Seq[DataType] = Seq(StringType, LongType)
     def zero: SpaceSavingSketch = SpaceSavingSketch(capacity)
-    def reduce(b: SpaceSavingSketch, v: (String, Long)): SpaceSavingSketch = {
-      if (v != null && v._1 != null) b.add(v._1, v._2); b
+    def update(s: SpaceSavingSketch, v: Any, input: InternalRow, args: Seq[Expression])
+        : SpaceSavingSketch = {
+      val c = args(1).eval(input)
+      s.add(v.toString, if (c == null) 0L else c.asInstanceOf[Long])
+      s
     }
-    def merge(a: SpaceSavingSketch, b: SpaceSavingSketch): SpaceSavingSketch = a.mergeInPlace(b)
-    def finish(b: SpaceSavingSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[SpaceSavingSketch] = Encoders.kryo[SpaceSavingSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  final class TDigestAgg(nc: Int)
-      extends Aggregator[java.lang.Double, TDigestSketch, Array[Byte]] {
+  final case class TDigest(nc: Int) extends ValueAdapter(SketchOps.TDigest, DoubleType) {
     def zero: TDigestSketch = TDigestSketch.fast(nc)
-    def reduce(b: TDigestSketch, v: java.lang.Double): TDigestSketch = {
-      if (v != null) b.add(v.doubleValue()); b
-    }
-    def merge(a: TDigestSketch, b: TDigestSketch): TDigestSketch = a.mergeInPlace(b)
-    def finish(b: TDigestSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[TDigestSketch] = Encoders.kryo[TDigestSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    protected def add(s: TDigestSketch, v: Any): Unit = s.add(v.asInstanceOf[Double])
   }
 
-  final class KllAgg(k: Int) extends Aggregator[java.lang.Double, KllSketch, Array[Byte]] {
+  final case class Kll(k: Int) extends ValueAdapter(SketchOps.Kll, DoubleType) {
     def zero: KllSketch = KllSketch(k)
-    def reduce(b: KllSketch, v: java.lang.Double): KllSketch = {
-      if (v != null) b.add(v.doubleValue()); b
-    }
-    def merge(a: KllSketch, b: KllSketch): KllSketch = a.mergeInPlace(b)
-    def finish(b: KllSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[KllSketch] = Encoders.kryo[KllSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    protected def add(s: KllSketch, v: Any): Unit = s.add(v.asInstanceOf[Double])
   }
 
-  final class HllAgg(p: Int) extends Aggregator[String, HllSketch, Array[Byte]] {
+  final case class Hll(p: Int) extends ValueAdapter(SketchOps.Hll, StringType) {
     def zero: HllSketch = HllSketch(p)
-    def reduce(b: HllSketch, v: String): HllSketch = { if (v != null) b.add(v); b }
-    def merge(a: HllSketch, b: HllSketch): HllSketch = a.mergeInPlace(b)
-    def finish(b: HllSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[HllSketch] = Encoders.kryo[HllSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Long-keyed HLL: hashes the 8-byte value directly, skipping string
-    * formatting on the hot path (id columns at 10^12-row scale).
-    */
-  final class HllLongAgg(p: Int) extends Aggregator[java.lang.Long, HllSketch, Array[Byte]] {
-    def zero: HllSketch = HllSketch(p)
-    def reduce(b: HllSketch, v: java.lang.Long): HllSketch = {
-      if (v != null) b.addLong(v.longValue()); b
+    protected def add(s: HllSketch, v: Any): Unit = {
+      val u = v.asInstanceOf[UTF8String]
+      s.addUtf8Memory(u.getBaseObject, u.getBaseOffset, u.numBytes)
     }
-    def merge(a: HllSketch, b: HllSketch): HllSketch = a.mergeInPlace(b)
-    def finish(b: HllSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[HllSketch] = Encoders.kryo[HllSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  // ---- sketch-merging aggregators (re-aggregate BinaryType sketch columns:
-  //      the treeReduce-style second level, SURVEY.md §3.3) ----
+  /** Long-keyed HLL: hashes the 8-byte value, with no string formatting. */
+  final case class HllLong(p: Int) extends ValueAdapter(SketchOps.Hll, LongType) {
+    def zero: HllSketch = HllSketch(p)
+    protected def add(s: HllSketch, v: Any): Unit = s.addLong(v.asInstanceOf[Long])
+  }
 
-  /** Generic shell: BUF starts null (parameters come from the first sketch
-    * seen), merge folds byte payloads through `fromBytes` + `mergeInPlace`.
-    */
-  abstract class MergeAgg[S >: Null <: AnyRef: reflect.ClassTag]
-      extends Aggregator[Array[Byte], S, Array[Byte]] {
-    protected def decode(bytes: Array[Byte]): S
-    protected def combine(a: S, b: S): S
-    protected def encode(s: S): Array[Byte]
+  // ---- merge aggregates: re-aggregate BinaryType sketch columns (the
+  //      treeReduce-style second level, SURVEY.md §3.3) ----
+
+  final case class Merge[S >: Null <: AnyRef](sketch: SketchOps[S])
+      extends SketchAdapter[S](sketch) {
+    def inputTypes: Seq[DataType] = Seq(BinaryType)
     def zero: S = null
-    def reduce(b: S, bytes: Array[Byte]): S =
-      if (bytes == null) b
-      else if (b == null) decode(bytes)
-      else combine(b, decode(bytes))
-    def merge(a: S, b: S): S =
-      if (a == null) b else if (b == null) a else combine(a, b)
-    def finish(s: S): Array[Byte] = if (s == null) null else encode(s)
-    def bufferEncoder: Encoder[S] = Encoders.kryo[S](implicitly[reflect.ClassTag[S]])
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  final class BloomMergeAgg extends MergeAgg[BloomSketch] {
-    def decode(b: Array[Byte]) = BloomSketch.fromBytes(b)
-    def combine(a: BloomSketch, b: BloomSketch) = a.unionInPlace(b)
-    def encode(s: BloomSketch) = s.toBytes
-  }
-  final class CmsMergeAgg extends MergeAgg[CmsSketch] {
-    def decode(b: Array[Byte]) = CmsSketch.fromBytes(b)
-    def combine(a: CmsSketch, b: CmsSketch) = a.mergeInPlace(b)
-    def encode(s: CmsSketch) = s.toBytes
-  }
-  final class CmmMergeAgg extends MergeAgg[CmmSketch] {
-    def decode(b: Array[Byte]) = CmmSketch.fromBytes(b)
-    def combine(a: CmmSketch, b: CmmSketch) = { a.mergeInPlace(b); a }
-    def encode(s: CmmSketch) = s.toBytes
-  }
-  final class NGramMergeAgg extends MergeAgg[NGramSketch] {
-    def decode(b: Array[Byte]) = NGramSketch.fromBytes(b)
-    def combine(a: NGramSketch, b: NGramSketch) = a.mergeInPlace(b)
-    def encode(s: NGramSketch) = s.toBytes
-  }
-  final class TopKMergeAgg extends MergeAgg[SpaceSavingSketch] {
-    def decode(b: Array[Byte]) = SpaceSavingSketch.fromBytes(b)
-    def combine(a: SpaceSavingSketch, b: SpaceSavingSketch) = a.mergeInPlace(b)
-    def encode(s: SpaceSavingSketch) = s.toBytes
-  }
-  final class TDigestMergeAgg extends MergeAgg[TDigestSketch] {
-    def decode(b: Array[Byte]) = TDigestSketch.fromBytes(b)
-    def combine(a: TDigestSketch, b: TDigestSketch) = a.mergeInPlace(b)
-    def encode(s: TDigestSketch) = s.toBytes
-  }
-  final class KllMergeAgg extends MergeAgg[KllSketch] {
-    def decode(b: Array[Byte]) = KllSketch.fromBytes(b)
-    def combine(a: KllSketch, b: KllSketch) = a.mergeInPlace(b)
-    def encode(s: KllSketch) = s.toBytes
-  }
-  final class HllMergeAgg extends MergeAgg[HllSketch] {
-    def decode(b: Array[Byte]) = HllSketch.fromBytes(b)
-    def combine(a: HllSketch, b: HllSketch) = a.mergeInPlace(b)
-    def encode(s: HllSketch) = s.toBytes
+    def update(s: S, v: Any, input: InternalRow, args: Seq[Expression]): S = {
+      val other = sketch.fromBytes(v.asInstanceOf[Array[Byte]])
+      if (s == null) other else sketch.merge(s, other)
+    }
   }
 }

@@ -1,8 +1,8 @@
 package graft.sketch.agg
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.{udaf, udf}
+import org.apache.spark.sql.functions.udf
 
 import graft.sketch._
 
@@ -34,43 +34,48 @@ case class SketchConfig(
     kllK: Int = KllSketch.DefaultK,
     hllP: Int = HllSketch.DefaultP)
 
-/** Column-API handles + one-call SQL registration for every sketch UDAF and
-  * query UDF (SURVEY.md §2.3/§2.4 — the complete operator surface).
+/** Column-API handles + one-call SQL registration for every sketch aggregate
+  * and query UDF (SURVEY.md §2.3/§2.4 — the complete operator surface). The
+  * aggregates are native [[SketchAgg]]s; the query functions are UDFs.
   */
 class SketchFunctions(val config: SketchConfig) extends Serializable {
   import SketchAggs._
   // short internal alias (the public `config` lets call sites read the
   // regime bounds they must enforce, e.g. q_salted_agg's kllK gate)
   private def cfg: SketchConfig = config
+  private def agg(name: String, adapter: SketchAdapter[_ >: Null <: AnyRef]) =
+    new SketchAggFunction(name, adapter)
 
-  // ---- aggregation UDAFs ----
-  val bloomAgg: UserDefinedFunction = udaf(new BloomAgg(cfg.bloomWidth, cfg.bloomDepth))
-  val cmsAgg: UserDefinedFunction = udaf(new CmsAgg(cfg.cmsWidth, cfg.cmsDepth))
-  val cmmAgg: UserDefinedFunction = udaf(new CmmAgg(cfg.cmsWidth, cfg.cmsDepth))
-  val ngramAgg: UserDefinedFunction = udaf(new NGramAgg(cfg.ngramN, cfg.ngramCaseSensitive))
-  val topkAgg: UserDefinedFunction = udaf(new TopKAgg(cfg.topKCapacity))
-  val topkWeightedAgg: UserDefinedFunction = udaf(new TopKWeightedAgg(cfg.topKCapacity))
-  val tdigestAgg: UserDefinedFunction = udaf(new TDigestAgg(cfg.tdigestCentroids))
-  val kllAgg: UserDefinedFunction = udaf(new KllAgg(cfg.kllK))
-  val hllAgg: UserDefinedFunction = udaf(new HllAgg(cfg.hllP))
-  val hllLongAgg: UserDefinedFunction = udaf(new HllLongAgg(cfg.hllP))
+  // ---- value aggregates ----
+  val bloomAgg: SketchAggFunction = agg("bloom_agg", Bloom(cfg.bloomWidth, cfg.bloomDepth))
+  val cmsAgg: SketchAggFunction = agg("cms_agg", Cms(cfg.cmsWidth, cfg.cmsDepth))
+  val cmmAgg: SketchAggFunction = agg("cmm_agg", Cmm(cfg.cmsWidth, cfg.cmsDepth))
+  val ngramAgg: SketchAggFunction =
+    agg("ngram_agg", NGram(cfg.ngramN, cfg.ngramCaseSensitive))
+  val topkAgg: SketchAggFunction = agg("topk_agg", TopK(cfg.topKCapacity))
+  val topkWeightedAgg: SketchAggFunction =
+    agg("topk_weighted_agg", TopKWeighted(cfg.topKCapacity))
+  val tdigestAgg: SketchAggFunction = agg("tdigest_agg", TDigest(cfg.tdigestCentroids))
+  val kllAgg: SketchAggFunction = agg("kll_agg", Kll(cfg.kllK))
+  val hllAgg: SketchAggFunction = agg("hll_agg", Hll(cfg.hllP))
+  val hllLongAgg: SketchAggFunction = agg("hll_agg_long", HllLong(cfg.hllP))
 
-  // capacity-sized constructions (`create` factory path, SURVEY.md §2.1);
-  // parameterized per call site, so methods rather than cached handles
-  def bloomCreateAgg(n: Int, p: Double): UserDefinedFunction =
-    udaf(new BloomCreateAgg(n, p))
-  def cmsCreateAgg(n: Long, e: Double = 0.0, p: Double = 0.0): UserDefinedFunction =
-    udaf(new CmsCreateAgg(n, e, p))
+  // capacity-sized constructions (the `create` factory sizing, SURVEY.md
+  // §2.1); parameterized per call site, so methods rather than cached handles
+  def bloomCreateAgg(n: Int, p: Double): SketchAggFunction =
+    agg("bloom_create_agg", Bloom.tupled(BloomSketch.sizing(n, p)))
+  def cmsCreateAgg(n: Long, e: Double = 0.0, p: Double = 0.0): SketchAggFunction =
+    agg("cms_create_agg", Cms.tupled(CmsSketch.sizing(n, e, p)))
 
-  // ---- sketch-column merge UDAFs (second-level / tree merge) ----
-  val bloomMergeAgg: UserDefinedFunction = udaf(new BloomMergeAgg)
-  val cmsMergeAgg: UserDefinedFunction = udaf(new CmsMergeAgg)
-  val cmmMergeAgg: UserDefinedFunction = udaf(new CmmMergeAgg)
-  val ngramMergeAgg: UserDefinedFunction = udaf(new NGramMergeAgg)
-  val topkMergeAgg: UserDefinedFunction = udaf(new TopKMergeAgg)
-  val tdigestMergeAgg: UserDefinedFunction = udaf(new TDigestMergeAgg)
-  val kllMergeAgg: UserDefinedFunction = udaf(new KllMergeAgg)
-  val hllMergeAgg: UserDefinedFunction = udaf(new HllMergeAgg)
+  // ---- sketch-column merge aggregates (second-level / tree merge) ----
+  val bloomMergeAgg: SketchAggFunction = agg("bloom_merge_agg", Merge(SketchOps.Bloom))
+  val cmsMergeAgg: SketchAggFunction = agg("cms_merge_agg", Merge(SketchOps.Cms))
+  val cmmMergeAgg: SketchAggFunction = agg("cmm_merge_agg", Merge(SketchOps.Cmm))
+  val ngramMergeAgg: SketchAggFunction = agg("ngram_merge_agg", Merge(SketchOps.NGram))
+  val topkMergeAgg: SketchAggFunction = agg("topk_merge_agg", Merge(SketchOps.TopK))
+  val tdigestMergeAgg: SketchAggFunction = agg("tdigest_merge_agg", Merge(SketchOps.TDigest))
+  val kllMergeAgg: SketchAggFunction = agg("kll_merge_agg", Merge(SketchOps.Kll))
+  val hllMergeAgg: SketchAggFunction = agg("hll_merge_agg", Merge(SketchOps.Hll))
 
   // ---- scalar query UDFs over serialized sketches (SURVEY.md §2.3) ----
   // Every UDF is null-safe: a NULL sketch column (all-NULL group through a
@@ -222,21 +227,17 @@ class SketchFunctions(val config: SketchConfig) extends Serializable {
     udf((a: Array[Byte], b: Array[Byte]) =>
       if (a == null || b == null) None else Some(HllSketch.jaccardEstimate(a, b)))
 
-  /** Register every function for SQL under `prefix` (default none):
-    * `SELECT role, hll_cardinality(hll_agg(conv_id)) ... GROUP BY role`.
+  /** Register every function for SQL under `prefix` (default none), scoped
+    * to `spark`'s session: `SELECT role, hll_cardinality(hll_agg(conv_id))
+    * ... GROUP BY role`.
     */
   def register(spark: SparkSession, prefix: String = ""): Unit = {
+    Seq(bloomAgg, cmsAgg, cmmAgg, ngramAgg, topkAgg, topkWeightedAgg, tdigestAgg, kllAgg,
+      hllAgg, hllLongAgg, bloomMergeAgg, cmsMergeAgg, cmmMergeAgg, ngramMergeAgg,
+      topkMergeAgg, tdigestMergeAgg, kllMergeAgg, hllMergeAgg)
+      .foreach(_.register(spark, prefix))
     def reg(name: String, f: UserDefinedFunction): Unit =
       spark.udf.register(prefix + name, f)
-    reg("bloom_agg", bloomAgg); reg("cms_agg", cmsAgg); reg("cmm_agg", cmmAgg)
-    reg("ngram_agg", ngramAgg); reg("topk_agg", topkAgg)
-    reg("topk_weighted_agg", topkWeightedAgg)
-    reg("tdigest_agg", tdigestAgg); reg("kll_agg", kllAgg)
-    reg("hll_agg", hllAgg); reg("hll_agg_long", hllLongAgg)
-    reg("bloom_merge_agg", bloomMergeAgg); reg("cms_merge_agg", cmsMergeAgg)
-    reg("cmm_merge_agg", cmmMergeAgg); reg("ngram_merge_agg", ngramMergeAgg)
-    reg("topk_merge_agg", topkMergeAgg); reg("tdigest_merge_agg", tdigestMergeAgg)
-    reg("kll_merge_agg", kllMergeAgg); reg("hll_merge_agg", hllMergeAgg)
     reg("bloom_contains", bloomContains); reg("bloom_size", bloomSize)
     reg("bloom_jaccard", bloomJaccard); reg("bloom_cover", bloomCover)
     reg("bloom_width", bloomWidth); reg("bloom_depth", bloomDepth)

@@ -101,8 +101,7 @@ object MinHashSketch {
     m
   }
 
-  def fromBytes(bytes: Array[Byte]): MinHashSketch = {
-    val bb = Codec.reader(bytes, Codec.TagMinHash)
+  def fromBytes(bytes: Array[Byte]): MinHashSketch = Codec.decode(bytes, Codec.TagMinHash) { bb =>
     val sig = Codec.readLongArray(bb)
     new MinHashSketch(sig.length, sig)
   }

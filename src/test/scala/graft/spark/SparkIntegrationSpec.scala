@@ -294,24 +294,200 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("many-group agg survives sort-based fallback (buffer serde mid-agg)") {
     // force ObjectHashAggregate to spill to the sort-based path almost
-    // immediately: buffers get serialized/merged through the fallback,
-    // which must produce identical results to the in-memory path
+    // immediately: buffers get serialized/merged through the fallback, which
+    // must give the same sketches as the in-memory path and as a local
+    // fold of the same rows, for every value and merge aggregate. Group 0 has
+    // only NULL inputs (empty sketches); group 1's merge inputs are all NULL.
+    val cfg = graft.sketch.agg.SketchConfig(bloomWidth = 2048, cmsWidth = 64, cmsDepth = 3)
+    SketchFunctions(cfg).register(spark, "fb_")
     val conf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val prev = spark.conf.get(conf, "128")
-    val query =
-      """SELECT conv_id, hll_cardinality(hll_agg(cast(turn_idx AS string))) AS d,
-        |       tdigest_quantile(tdigest_agg(cast(length(text) AS double)), 0.5) AS p50
-        |FROM transcripts GROUP BY conv_id""".stripMargin
+    val groups = 2000
+    spark.range(0, groups * 6).selectExpr(
+      s"id % $groups AS g", "id % 3 AS sub",
+      // non-ASCII values take the sketches' String fallbacks (Bloom's FNV)
+      s"CASE WHEN id % $groups = 0 OR id % 7 = 3 THEN NULL " +
+        "ELSE concat(IF(id % 4 = 0, 'ü', 'v'), id % 37) END AS s",
+      s"CASE WHEN id % $groups = 0 OR id % 5 = 1 THEN NULL " +
+        "ELSE CAST(id % 101 AS DOUBLE) / 4 END AS x",
+      s"CASE WHEN id % $groups = 0 OR id % 11 = 2 THEN NULL ELSE id * 7919 END AS n",
+      "CASE WHEN id % 13 = 4 THEN NULL ELSE id % 5 END AS w")
+      .createOrReplaceTempView("fb_rows")
+    val valueAggs = Seq(
+      "bloom" -> "fb_bloom_agg(s)", "cms" -> "fb_cms_agg(s)", "cmm" -> "fb_cmm_agg(s)",
+      "ngram" -> "fb_ngram_agg(s)", "topk" -> "fb_topk_agg(s)",
+      "topkw" -> "fb_topk_weighted_agg(s, w)", "td" -> "fb_tdigest_agg(x)",
+      "kll" -> "fb_kll_agg(x)", "hll" -> "fb_hll_agg(s)", "hlll" -> "fb_hll_agg_long(n)")
+    val mergeFn = Map("bloom" -> "bloom", "cms" -> "cms", "cmm" -> "cmm", "ngram" -> "ngram",
+      "topk" -> "topk", "topkw" -> "topk", "td" -> "tdigest", "kll" -> "kll", "hll" -> "hll",
+      "hlll" -> "hll")
+    val names = valueAggs.map(_._1)
+    def select(aggs: Seq[(String, String)], keys: String, from: String) =
+      spark.sql(s"SELECT $keys, ${aggs.map { case (n, e) => s"$e AS $n" }.mkString(", ")} " +
+        s"FROM $from GROUP BY $keys")
+    // order-sensitive sketches (top-k tie order, KLL level-0 order) compare by content
+    def canon(c: String, b: Array[Byte]): Any =
+      if (b == null) null
+      else if (c.startsWith("topk")) SpaceSavingSketch.fromBytes(b).topK(None).toSet
+      else if (c == "kll") {
+        val k = KllSketch.fromBytes(b)
+        if (k.totalN == 0) 0L
+        else (k.totalN, k.minValue, k.maxValue, (0 to 20).map(i => k.quantileLower(i / 20.0)))
+      } else b.toSeq
+    def byGroup(df: DataFrame): Map[Long, Seq[Any]] = df.collect()
+      .map(r => r.getLong(0) -> names.map(c => canon(c, r.getAs[Array[Byte]](c)))).toMap
+    def check(what: String, q: () => DataFrame, expected: Map[Long, Seq[Any]]): Unit =
+      Seq("4", "1000000").foreach { threshold =>
+        spark.conf.set(conf, threshold)
+        val got = byGroup(q())
+        assert(got.keySet == expected.keySet, s"$what groups at threshold $threshold")
+        expected.foreach { case (g, want) =>
+          names.zip(got(g).zip(want)).foreach { case (c, (a, b)) =>
+            assert(a == b, s"$what $c, group $g, threshold $threshold")
+          }
+        }
+      }
     try {
+      val rows = spark.table("fb_rows").collect().groupBy(_.getLong(0))
+      val folded = rows.map { case (g, rs) =>
+        val bloom = BloomSketch(cfg.bloomWidth, cfg.bloomDepth)
+        val cms = CmsSketch(cfg.cmsWidth, cfg.cmsDepth)
+        val cmm = CmmSketch(cfg.cmsWidth, cfg.cmsDepth)
+        val ngram = NGramSketch(cfg.ngramN, cfg.ngramCaseSensitive)
+        val topk = SpaceSavingSketch(cfg.topKCapacity)
+        val topkw = SpaceSavingSketch(cfg.topKCapacity)
+        val td = TDigestSketch.fast(cfg.tdigestCentroids)
+        val kll = KllSketch(cfg.kllK)
+        val hll = HllSketch(cfg.hllP)
+        val hlll = HllSketch(cfg.hllP)
+        rs.foreach { r =>
+          if (!r.isNullAt(2)) {
+            val s = r.getString(2)
+            bloom.add(s); cms.add(s); cmm.add(s); ngram.add(s); topk.add(s); hll.add(s)
+            topkw.add(s, if (r.isNullAt(5)) 0L else r.getLong(5))
+          }
+          if (!r.isNullAt(3)) { td.add(r.getDouble(3)); kll.add(r.getDouble(3)) }
+          if (!r.isNullAt(4)) hlll.addLong(r.getLong(4))
+        }
+        g -> names.zip(Seq(bloom.toBytes, cms.toBytes, cmm.toBytes, ngram.toBytes,
+          topk.toBytes, topkw.toBytes, td.toBytes, kll.toBytes, hll.toBytes, hlll.toBytes))
+          .map { case (c, b) => canon(c, b) }
+      }
+      assert(folded.size == groups && folded(0L).forall(_ != null))
+      check("value aggs", () => select(valueAggs, "g", "fb_rows"), folded)
+
       spark.conf.set(conf, "4")
-      val spilled = spark.sql(query).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      spark.conf.set(conf, "1000000")
-      val inMem = spark.sql(query).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      assert(spilled.size == inMem.size && spilled.size > 1000)
-      spilled.foreach { case (k, v) => assert(inMem(k) == v, s"group $k") }
+      select(valueAggs, "g, sub", "fb_rows")
+        .select(col("g") +: col("sub") +: names.map(c =>
+          when(col("g") === 1, lit(null).cast("binary")).otherwise(col(c)).as(c)): _*)
+        .write.parquet(s"$tdir/fb_parts")
+      spark.read.parquet(s"$tdir/fb_parts").createOrReplaceTempView("fb_parts")
+      def merged(c: String, bs: Seq[Array[Byte]]): Array[Byte] = {
+        def fold[S](dec: Array[Byte] => S, m: (S, S) => S, enc: S => Array[Byte]) =
+          bs.map(dec).reduceOption(m).map(enc).orNull
+        mergeFn(c) match {
+          case "bloom" => fold[BloomSketch](BloomSketch.fromBytes, _ unionInPlace _, _.toBytes)
+          case "cms" => fold[CmsSketch](CmsSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+          case "cmm" => fold[CmmSketch](CmmSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+          case "ngram" => fold[NGramSketch](NGramSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+          case "topk" =>
+            fold[SpaceSavingSketch](SpaceSavingSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+          case "tdigest" =>
+            fold[TDigestSketch](TDigestSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+          case "kll" => fold[KllSketch](KllSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+          case "hll" => fold[HllSketch](HllSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+        }
+      }
+      val parts = spark.table("fb_parts").collect().groupBy(_.getLong(0))
+      val mergedLocally = parts.map { case (g, rs) =>
+        g -> names.map(c =>
+          canon(c, merged(c, rs.toSeq.flatMap(r => Option(r.getAs[Array[Byte]](c))))))
+      }
+      assert(mergedLocally(1L).forall(_ == null) && mergedLocally(0L).forall(_ != null))
+      check("merge aggs", () => select(names.map(c => c -> s"fb_${mergeFn(c)}_merge_agg($c)"),
+        "g", "fb_parts"), mergedLocally)
     } finally spark.conf.set(conf, prev)
+  }
+
+  test("sketch aggregates accept the same SQL input types and reject the rest at analysis") {
+    spark.sql(
+      """SELECT CAST(id AS INT) AS i, id AS l, CAST(id AS SMALLINT) AS sm,
+        |       CAST(id AS DOUBLE) AS d, CAST(id AS FLOAT) AS f, CAST(id AS DECIMAL(10,2)) AS dec,
+        |       CAST(id AS STRING) AS s, CAST(CAST(id AS STRING) AS BINARY) AS b,
+        |       id % 2 = 0 AS bo, DATE'2024-01-01' AS dt, TIMESTAMP'2024-01-01 00:00:00' AS ts,
+        |       array(1) AS arr
+        |FROM range(20)""".stripMargin).createOrReplaceTempView("typed_in")
+    val all = Set("i", "l", "sm", "d", "f", "dec", "s", "b", "bo", "dt", "ts", "arr")
+    val numeric = Set("i", "l", "sm", "d", "f", "dec", "s")
+    val accepts =
+      Seq("bloom_agg", "cms_agg", "cmm_agg", "ngram_agg", "topk_agg", "hll_agg")
+        .map(_ -> (all - "arr")) ++
+      Seq("tdigest_agg", "kll_agg", "hll_agg_long").map(_ -> numeric) ++
+      Seq("bloom", "cms", "cmm", "ngram", "topk", "tdigest", "kll", "hll")
+        .map(n => s"${n}_merge_agg" -> Set("s", "b"))
+    def analyze(q: String): Option[org.apache.spark.sql.AnalysisException] =
+      try { spark.sql(q).queryExecution.assertAnalyzed(); None }
+      catch { case e: org.apache.spark.sql.AnalysisException => Some(e) }
+    for ((fn, ok) <- accepts; c <- all) analyze(s"SELECT $fn($c) FROM typed_in") match {
+      case None => assert(ok(c), s"$fn($c) should fail analysis")
+      case Some(e) =>
+        assert(!ok(c), s"$fn($c) should analyze: ${e.getMessage}")
+        assert(e.getMessage.contains(fn), s"error for $fn($c) must name it: ${e.getMessage}")
+    }
+    for (v <- all; w <- Seq("i", "l", "d", "s", "b", "arr")) {
+      val ok = v != "arr" && Set("i", "l", "d", "s")(w)
+      assert(analyze(s"SELECT topk_weighted_agg($v, $w) FROM typed_in").isEmpty == ok,
+        s"topk_weighted_agg($v, $w)")
+    }
+    // accepted non-native types go through the implicit cast: same bytes
+    def bytes(expr: String): Seq[Byte] =
+      spark.sql(s"SELECT $expr FROM typed_in").collect()(0).getAs[Array[Byte]](0).toSeq
+    Seq(
+      "kll_agg(i)" -> "kll_agg(CAST(i AS DOUBLE))",
+      "tdigest_agg(dec)" -> "tdigest_agg(CAST(dec AS DOUBLE))",
+      "hll_agg(i)" -> "hll_agg(CAST(i AS STRING))",
+      "hll_agg_long(i)" -> "hll_agg_long(CAST(i AS BIGINT))",
+      "cms_agg(d)" -> "cms_agg(CAST(d AS STRING))",
+      "topk_weighted_agg(s, i)" -> "topk_weighted_agg(s, CAST(i AS BIGINT))",
+      // a NULL weight counts as 0: the value enters the summary uncounted
+      "topk_weighted_agg(s, CAST(NULL AS BIGINT))" -> "topk_weighted_agg(s, 0L)"
+    ).foreach { case (a, b) => assert(bytes(a) == bytes(b), s"$a != $b") }
+    val hllAsString = spark.sql(
+      "SELECT CAST(hll_agg(s) AS STRING) AS h, hll_agg(s) AS hb FROM typed_in")
+      .selectExpr("hll_merge_agg(h)", "hll_merge_agg(hb)").collect()(0)
+    assert(hllAsString.getAs[Array[Byte]](0).toSeq == hllAsString.getAs[Array[Byte]](1).toSeq)
+  }
+
+  test("truncated or bit-flipped sketch cells fail their merge aggregate with a typed error") {
+    // (sketch, codec tag, value aggregate building it, offset of a length prefix)
+    val cases = Seq(("bloom", 1, "bloom_agg(tool)", 7), ("cms", 2, "cms_agg(tool)", 19),
+      ("cmm", 3, "cmm_agg(tool)", 19), ("ngram", 4, "ngram_agg(tool)", 8),
+      ("topk", 5, "topk_agg(tool)", 7), ("tdigest", 6, "tdigest_agg(text_len)", 23),
+      ("hll", 7, "hll_agg(conv_id)", 8), ("kll", 8, "kll_agg(text_len)", 39))
+    val sp = spark
+    import sp.implicits._
+    for ((sketch, tag, build, prefixAt) <- cases) {
+      val good = spark.sql(s"SELECT $build FROM transcripts").collect()(0).getAs[Array[Byte]](0)
+      spark.sql(s"SELECT ${sketch}_merge_agg(sk) FROM (SELECT $build AS sk FROM transcripts)")
+        .collect()
+      def flipped(mask: Int) = {
+        val b = good.clone(); b(prefixAt + 3) = (b(prefixAt + 3) ^ mask).toByte; b
+      }
+      // the length prefix's sign bit, then its bit 30 (a ~1-8 GB request)
+      val corrupt = Seq("truncated" -> good.dropRight(1),
+        "negative length" -> flipped(0x80), "huge length" -> flipped(0x40))
+      for ((how, bad) <- corrupt) {
+        val e = intercept[Exception] {
+          Seq(good, bad).toDF("sk").selectExpr(s"${sketch}_merge_agg(sk)").collect()
+        }
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(!chain.exists(t => t.isInstanceOf[NegativeArraySizeException] ||
+          t.isInstanceOf[OutOfMemoryError]), s"$sketch $how: $e")
+        assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+          t.getMessage.startsWith(s"corrupt sketch (tag $tag) at offset ")),
+          s"$sketch $how: ${chain.map(_.toString).mkString(" <- ")}")
+      }
+    }
   }
 
   test("sketch UDAFs compose with CUBE / grouping sets") {
