@@ -1563,7 +1563,7 @@ object SparkEntry {
       // aggregates), each recomputing the 4 profile UDFs + the dedup
       // groupBy. Round 5 measured recompute cheaper than caching at
       // verify scale; after this round's 5x candidate-generator speedup
-      // the balance flipped — 3.05 s → 2.20 s at sf0.1 (R6Scratch14,
+      // the balance flipped — 3.05 s → 2.20 s at sf0.1 (OPTIMIZATION_r06.md,
       // result parity exact). At 100 TB this is the documented
       // checkpoint/persist-of-surv shape (guide §5: cache only what is
       // reused AND expensive to recompute).

@@ -10,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sketch._
-import graft.sketch.agg.SketchFunctions
+import graft.sketch.agg.{SketchFunctions, ToolInterner, TurnSketches}
+import graft.sketch.core.Codec
 
 /** Per-partition checkpoint row: every sketch built from one input split,
   * for one role group, plus lineage (partition id, rows seen, wall ms).
@@ -91,28 +92,49 @@ object SketchJob {
     val out = new Array[Byte](bb.position()); bb.flip(); bb.get(out); out
   }
 
+  /** Checkpoint files are outside input: every length prefix is checked
+    * before anything is allocated, and a corrupt or truncated file fails
+    * with a typed `IllegalArgumentException`.
+    */
   def decodeCkpt(gzBytes: Array[Byte]): Seq[PartitionSketches] = {
     val in = new java.util.zip.InflaterInputStream(
       new java.io.ByteArrayInputStream(gzBytes), new java.util.zip.Inflater(), 1 << 16)
-    val bytes = in.readAllBytes()
-    in.close()
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(bb.getInt() == CkptMagic, "bad checkpoint magic")
-    require(bb.getInt() == 1, "bad checkpoint version")
-    val pid = bb.getInt()
-    val n = bb.getInt()
-    (0 until n).map { _ =>
-      val rb = new Array[Byte](bb.getInt()); bb.get(rb)
-      val rows = bb.getLong(); val wall = bb.getLong()
-      def arr(): Array[Byte] = { val a = new Array[Byte](bb.getInt()); bb.get(a); a }
-      PartitionSketches(pid, new String(rb, "UTF-8"), rows, wall,
-        arr(), arr(), arr(), arr(), arr(), arr())
+    val bytes = try in.readAllBytes() catch {
+      case e: java.io.IOException =>
+        throw new IllegalArgumentException(s"corrupt checkpoint: ${e.getMessage}", e)
+    } finally in.close()
+    Codec.decodeUntagged(bytes, "checkpoint") { bb =>
+      require(bb.getInt() == CkptMagic, "bad checkpoint magic")
+      require(bb.getInt() == 1, "bad checkpoint version")
+      val pid = bb.getInt()
+      // a role group is at least its 7 length prefixes and 2 longs
+      (0 until Codec.readCount(bb, 44)).map { _ =>
+        val role = new String(Codec.readBytes(bb), "UTF-8")
+        val rows = bb.getLong(); val wall = bb.getLong()
+        def arr(): Array[Byte] = Codec.readBytes(bb)
+        PartitionSketches(pid, role, rows, wall, arr(), arr(), arr(), arr(), arr(), arr())
+      }
     }
   }
 
-  /** Stage 1: sketch every input partition, checkpointing each one atomically;
-    * partitions already checkpointed are skipped (resume).
+  /** A stage-1 group's empty state. SketchJob always builds the conv-id
+    * Bloom: a non-positive width means the default width, as in
+    * `BloomSketch(w, d)`, where for the aggregates `bloomW = 0` turns it off.
     */
+  private def emptyGroup(c: Config): TurnSketches = TurnSketches.create(c.hllP, c.cmsWidth,
+    c.cmsDepth, c.topKCapacity, c.tdigestCentroids, c.kllK,
+    if (c.bloomWidth > 0) c.bloomWidth else BloomSketch.DefaultBits, c.bloomDepth)
+
+  private def sketches(p: PartitionSketches): TurnSketches = TurnSketches.fromParts(
+    p.rows_seen, p.hll_conv, p.cms_tool, p.topk_tool, p.tdigest_len, p.kll_len, p.bloom_conv)
+
+  private def checkpointRow(pid: Int, role: String, wallMs: Long,
+      t: TurnSketches): PartitionSketches = {
+    val r = t.result
+    PartitionSketches(pid, role, r.turns, wallMs,
+      r.hll_conv, r.cms_tool, r.topk_tool, r.tdigest_len, r.kll_len, r.bloom_conv)
+  }
+
   /** The exact DataFrame stage 1 maps over — also used to pin the planned
     * partition count into the manifest (resume correctness depends on the
     * split layout, not just the file list).
@@ -126,12 +148,14 @@ object SketchJob {
     if (cfg.checkpointChunks > 0) scanned.coalesce(cfg.checkpointChunks) else scanned
   }
 
-  /** Stage 1 consumes `InternalRow`s straight off the physical plan
-    * (`queryExecution.toRdd`) and hashes each `UTF8String`'s backing memory
-    * in place — the same zero-materialization hot path as the native
-    * flagship aggregate. Nothing is allocated per row: no encoder tuple, no
-    * byte[] copies, no String decode (role and tool are interned through
-    * the shared [[graft.sketch.agg.ToolInterner]], which decodes each
+  /** Stage 1: sketch every input partition, checkpointing each one atomically;
+    * partitions already checkpointed are skipped (resume). It consumes
+    * `InternalRow`s straight off the physical plan
+    * (`queryExecution.toRdd`) and feeds each role's [[TurnSketches]]
+    * through its `UTF8String` add — the same zero-materialization hot path
+    * as the native flagship aggregate. Nothing is allocated per row: no
+    * encoder tuple, no byte[] copies, no String decode (role and tool are
+    * interned through [[graft.sketch.agg.ToolInterner]], which decodes each
     * distinct pattern once per partition).
     */
   def buildPartitionSketches(spark: SparkSession, cfg: Config): Unit =
@@ -153,48 +177,27 @@ object SketchJob {
       if (fs.exists(finalPath)) Iterator.empty // resumed: already done
       else {
         val t0 = System.nanoTime()
-        final class Group {
-          val hll = HllSketch(c.hllP)
-          val cms = CmsSketch(c.cmsWidth, c.cmsDepth)
-          val topk = SpaceSavingSketch(c.topKCapacity)
-          val td = TDigestSketch.fast(c.tdigestCentroids)
-          val kll = KllSketch(c.kllK)
-          val bloom = BloomSketch(c.bloomWidth, c.bloomDepth)
-          var rows = 0L
-          val tools = new graft.sketch.agg.ToolInterner
-        }
-        val groups = mutable.HashMap.empty[String, Group]
-        val roles = new graft.sketch.agg.ToolInterner // ~4 distinct values
+        val groups = mutable.HashMap.empty[String, TurnSketches]
+        val roles = new ToolInterner // ~4 distinct values
         rows.foreach { row =>
           // null role groups under "" (coalesce in plannedInput only guards
           // tool; a null role must not NPE the resumable deliverable)
-          val role = if (row.isNullAt(1)) "" else roles.intern(row.getUTF8String(1))
-          val g = groups.getOrElseUpdate(role, new Group)
-          if (!row.isNullAt(0)) {
-            val conv = row.getUTF8String(0)
-            g.hll.addUtf8Memory(conv.getBaseObject, conv.getBaseOffset, conv.numBytes)
-            val h = graft.sketch.core.Fnv1a.fnv1aUtf8MemoryOrSentinel(
-              conv.getBaseObject, conv.getBaseOffset, conv.numBytes)
-            if (h != graft.sketch.core.Fnv1a.NonAscii) g.bloom.addFnv(h.toInt)
-            else g.bloom.add(conv.toString)
+          val role = if (row.isNullAt(1)) "" else {
+            val r = row.getUTF8String(1)
+            roles.intern(r.getBaseObject, r.getBaseOffset, r.numBytes)
           }
           val tool = row.getUTF8String(2)
-          if (tool.numBytes > 0) {
-            val t = g.tools.intern(tool)
-            g.cms.add(t); g.topk.add(t)
-          }
-          if (!row.isNullAt(3)) {
-            val textLen = row.getDouble(3)
-            g.td.add(textLen)
-            g.kll.add(textLen)
-          }
-          g.rows += 1
+          val hasLen = !row.isNullAt(3)
+          // plannedInput coalesces a NULL tool to "", so every empty tool is
+          // skipped here, where the aggregates skip only NULL
+          groups.getOrElseUpdate(role, emptyGroup(c)).add(
+            if (row.isNullAt(0)) null else row.getUTF8String(0),
+            if (tool.numBytes > 0) tool else null,
+            if (hasLen) row.getDouble(3) else 0.0, hasLen)
         }
         val wallMs = (System.nanoTime() - t0) / 1000000
         val out = groups.toSeq.sortBy(_._1).map { case (role, g) =>
-          PartitionSketches(pid, role, g.rows, wallMs,
-            g.hll.toBytes, g.cms.toBytes, g.topk.toBytes,
-            g.td.toBytes, g.kll.toBytes, g.bloom.toBytes)
+          checkpointRow(pid, role, wallMs, g)
         }
         val tmp = new Path(ckptDir,
           f"part-$pid%05d.ckpt.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -255,27 +258,13 @@ object SketchJob {
     */
   private def foldRun(first: PartitionSketches,
       rest: Iterator[PartitionSketches], outPid: Int): PartitionSketches = {
-    var rowsSeen = first.rows_seen
+    val acc = sketches(first)
     var wallMs = first.wall_ms
-    val hll = HllSketch.fromBytes(first.hll_conv)
-    val cms = CmsSketch.fromBytes(first.cms_tool)
-    val topk = SpaceSavingSketch.fromBytes(first.topk_tool)
-    val td = TDigestSketch.fromBytes(first.tdigest_len)
-    val kll = KllSketch.fromBytes(first.kll_len)
-    val bloom = BloomSketch.fromBytes(first.bloom_conv)
     rest.foreach { r =>
-      rowsSeen += r.rows_seen
       wallMs = math.max(wallMs, r.wall_ms)
-      hll.mergeInPlace(HllSketch.fromBytes(r.hll_conv))
-      cms.mergeInPlace(CmsSketch.fromBytes(r.cms_tool))
-      topk.mergeInPlace(SpaceSavingSketch.fromBytes(r.topk_tool))
-      td.mergeInPlace(TDigestSketch.fromBytes(r.tdigest_len))
-      kll.mergeInPlace(KllSketch.fromBytes(r.kll_len))
-      bloom.unionInPlace(BloomSketch.fromBytes(r.bloom_conv))
+      acc.merge(sketches(r))
     }
-    PartitionSketches(outPid, first.role, rowsSeen, wallMs,
-      hll.toBytes, cms.toBytes, topk.toBytes, td.toBytes, kll.toBytes,
-      bloom.toBytes)
+    checkpointRow(outPid, first.role, wallMs, acc)
   }
 
   /** Group a partition's sorted row stream into key runs and fold each. */

@@ -12,7 +12,6 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketch._
 import graft.sketch.agg.TurnSketches
-import graft.sketch.core.Fnv1a
 
 /** Native Catalyst aggregate for the flagship transcript sketch build — the
   * (c)-tier of the custom-operator ladder: a `TypedImperativeAggregate`
@@ -22,11 +21,10 @@ import graft.sketch.core.Fnv1a
   * `cast(x as binary)` byte copies, and the case-class allocation — nothing
   * is materialized between the scan and the sketch arrays.
   *
-  * Per-operator semantics are identical to `TurnSketchAgg` (same sketches,
-  * same hashes: xxHash64 over UTF-8 bytes for HLL, FNV-1a for Bloom with
-  * non-ASCII falling back to the UTF-16 String path, tool names interned
-  * per buffer for CMS/Space-Saving). Buffers serialize through the shared
-  * composite codec, so spill, shuffle and sort-based fallback all work.
+  * A shell over [[graft.sketch.agg.TurnSketches]], as `TurnSketchAgg` is:
+  * the same create/add/merge/emit and the same composite codec for spill,
+  * shuffle and sort-based fallback, so the two registrations build
+  * byte-identical states.
   *
   * Defaults `bloomW = 0` (conv-id Bloom OFF, `bloom_conv` empty) — the same
   * default as `TurnSketchAgg`, so the two registrations cannot silently
@@ -72,59 +70,21 @@ case class TurnSketchNativeAgg(
 
   override def dataType: DataType = TurnSketchNativeAgg.ResultType
 
-  override def createAggregationBuffer(): TurnSketches = new TurnSketches(
-    HllSketch(hllP), CmsSketch(cmsWidth, cmsDepth), SpaceSavingSketch(topKCapacity),
-    TDigestSketch.fast(tdigestNc), KllSketch(kllK),
-    if (bloomW > 0) BloomSketch(bloomW, bloomD) else null, 0L)
+  override def createAggregationBuffer(): TurnSketches =
+    TurnSketches.create(hllP, cmsWidth, cmsDepth, topKCapacity, tdigestNc, kllK, bloomW, bloomD)
 
   override def update(b: TurnSketches, input: InternalRow): TurnSketches = {
-    val c = conv.eval(input)
-    if (c != null) {
-      val u = c.asInstanceOf[UTF8String]
-      b.hll.addUtf8Memory(u.getBaseObject, u.getBaseOffset, u.numBytes)
-      if (b.bloom != null) {
-        val h = Fnv1a.fnv1aUtf8MemoryOrSentinel(u.getBaseObject, u.getBaseOffset, u.numBytes)
-        if (h != Fnv1a.NonAscii) b.bloom.addFnv(h.toInt)
-        else b.bloom.add(u.toString)
-      }
-    }
-    val t = tool.eval(input)
-    if (t != null) {
-      val s = b.internTool(t.asInstanceOf[UTF8String])
-      b.cms.add(s)
-      b.topk.add(s)
-    }
     val l = len.eval(input)
-    if (l != null) {
-      val d = l.asInstanceOf[Number].doubleValue()
-      b.td.add(d)
-      b.kll.add(d)
-    }
-    b.turns += 1
+    b.add(conv.eval(input).asInstanceOf[UTF8String], tool.eval(input).asInstanceOf[UTF8String],
+      if (l == null) 0.0 else l.asInstanceOf[Number].doubleValue(), l != null)
     b
   }
 
-  override def merge(a: TurnSketches, b: TurnSketches): TurnSketches = {
-    a.hll.mergeInPlace(b.hll)
-    a.cms.mergeInPlace(b.cms)
-    a.topk.mergeInPlace(b.topk)
-    a.td.mergeInPlace(b.td)
-    a.kll.mergeInPlace(b.kll)
-    if (a.bloom != null && b.bloom != null) a.bloom.unionInPlace(b.bloom)
-    a.turns += b.turns
-    a
-  }
+  override def merge(a: TurnSketches, b: TurnSketches): TurnSketches = a.merge(b)
 
   override def eval(b: TurnSketches): Any = {
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(7)
-    row.update(0, b.hll.toBytes)
-    row.update(1, b.cms.toBytes)
-    row.update(2, b.topk.toBytes)
-    row.update(3, b.td.toBytes)
-    row.update(4, b.kll.toBytes)
-    row.update(5, if (b.bloom != null) b.bloom.toBytes else Array.emptyByteArray)
-    row.setLong(6, b.turns)
-    row
+    val r = b.result
+    InternalRow.fromSeq(r.parts :+ r.turns)
   }
 
   override def serialize(b: TurnSketches): Array[Byte] = TurnSketches.encode(b)

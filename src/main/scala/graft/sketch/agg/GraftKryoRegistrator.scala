@@ -6,10 +6,10 @@ import org.apache.spark.serializer.KryoRegistrator
 
 import graft.text.MinHashSketch
 
-/** Kryo serializers for the two aggregation buffers still held through
-  * `Encoders.kryo`, `TurnSketches` (`TurnSketchAgg`) and `MinHashSketch`
-  * (`TextFunctions.MinHashAgg`): each serializes through its canonical binary
-  * codec and a level-1 deflate instead of Kryo's field-walking default.
+/** Kryo serializer for the one aggregation buffer still held through
+  * `Encoders.kryo`, `MinHashSketch` (`TextFunctions.MinHashAgg`): it
+  * serializes through its canonical binary codec and a level-1 deflate
+  * instead of Kryo's field-walking default.
   *
   * Activate per session:
   * `.config("spark.kryo.registrator", "graft.sketch.agg.GraftKryoRegistrator")`
@@ -54,7 +54,5 @@ class GraftKryoRegistrator extends KryoRegistrator {
   override def registerClasses(kryo: Kryo): Unit = {
     kryo.register(classOf[MinHashSketch],
       codecSerializer[MinHashSketch](_.toBytes, MinHashSketch.fromBytes))
-    kryo.register(classOf[TurnSketches],
-      codecSerializer[TurnSketches](TurnSketches.encode, TurnSketches.decode))
   }
 }

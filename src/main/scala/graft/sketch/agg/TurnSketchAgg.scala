@@ -1,9 +1,15 @@
 package graft.sketch.agg
 
 import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{BinaryEncoder, TransformingEncoder}
+import org.apache.spark.sql.catalyst.encoders.{Codec => EncoderCodec}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketch._
+import graft.sketch.core.{Codec, Fnv1a, XxHash64}
 
 /** Input projection for the composite transcript aggregator. Ids arrive as
   * UTF-8 bytes (`cast(conv_id as binary)`) — the sketches hash bytes
@@ -21,36 +27,123 @@ case class TurnSketchResult(
     tdigest_len: Array[Byte],
     kll_len: Array[Byte],
     bloom_conv: Array[Byte],
-    turns: Long)
+    turns: Long) {
+  def parts: Seq[Array[Byte]] = Seq(hll_conv, cms_tool, topk_tool, tdigest_len, kll_len, bloom_conv)
+}
 
-/** Live composite buffer. */
-final class TurnSketches(
-    val hll: HllSketch,
-    val cms: CmsSketch,
-    val topk: SpaceSavingSketch,
-    val td: TDigestSketch,
-    val kll: KllSketch,
-    val bloom: BloomSketch,
-    var turns: Long) extends Serializable {
-  /** Tool-name intern cache: the tool domain is tiny (~50 values, Zipf), so
-    * the String the Space-Saving summary needs is decoded once per distinct
-    * byte pattern per buffer, keyed by 64-bit content hash (collision odds
-    * across a ~10^2 domain: ~1e-16). Transient — rebuilt empty after any
-    * buffer serde.
+/** The composite transcript state — HLL++ and Bloom on `conv_id`, CMS and
+  * Space-Saving on `tool`, t-digest and KLL on `len`, plus the row count —
+  * and the one place its rules live: [[TurnSketches.create]], [[add]],
+  * [[merge]], [[result]] and the [[TurnSketches.encode]]/`decode` codec.
+  * `TurnSketchAgg` (`udaf()`), `graft.plans.TurnSketchNativeAgg` (Catalyst)
+  * and `SketchJob` (stage 1 and its checkpoint fold) are shells over it.
+  *
+  * The Bloom is optional (`null`: not built, emitted as empty bytes).
+  */
+final class TurnSketches private (
+    private val hll: HllSketch,
+    private val cms: CmsSketch,
+    private val topk: SpaceSavingSketch,
+    private val td: TDigestSketch,
+    private val kll: KllSketch,
+    private val bloom: BloomSketch,
+    private var turns: Long) extends Serializable {
+  // per buffer; rebuilt empty after any buffer serde
+  @transient private var tools: ToolInterner = _
+
+  /** Add one row. Each string column is UTF-8 memory `(base, offset,
+    * numBytes)` — a `byte[]` at `Platform.BYTE_ARRAY_OFFSET` or a
+    * `UTF8String`'s backing region — with `numBytes < 0` for NULL; a NULL
+    * `len` is `hasLen = false`. NULL columns feed no sketch; the row still
+    * counts. Conv ids go to HLL (xxHash64 over the bytes) and Bloom (FNV-1a
+    * over the bytes; non-ASCII takes the reference's UTF-16 String path),
+    * the interned tool to CMS and top-k, `len` to t-digest and KLL.
     */
-  @transient private var toolCache: ToolInterner = _
-  private def interner: ToolInterner = {
-    if (toolCache == null) toolCache = new ToolInterner
-    toolCache
+  def add(conv: AnyRef, convOffset: Long, convBytes: Int,
+      tool: AnyRef, toolOffset: Long, toolBytes: Int, len: Double, hasLen: Boolean): Unit = {
+    if (convBytes >= 0) {
+      hll.addUtf8Memory(conv, convOffset, convBytes)
+      if (bloom != null) {
+        val h = Fnv1a.fnv1aUtf8MemoryOrSentinel(conv, convOffset, convBytes)
+        if (h != Fnv1a.NonAscii) bloom.addFnv(h.toInt)
+        else bloom.add(UTF8String.fromAddress(conv, convOffset, convBytes).toString)
+      }
+    }
+    if (toolBytes >= 0) {
+      if (tools == null) tools = new ToolInterner
+      val t = tools.intern(tool, toolOffset, toolBytes)
+      cms.add(t)
+      topk.add(t)
+    }
+    if (hasLen) {
+      td.add(len)
+      kll.add(len)
+    }
+    turns += 1
   }
-  def internTool(b: Array[Byte]): String = interner.intern(b)
-  def internTool(u: org.apache.spark.unsafe.types.UTF8String): String = interner.intern(u)
+
+  /** [[add]] over `UTF8String` columns, `null` for NULL. */
+  def add(conv: UTF8String, tool: UTF8String, len: Double, hasLen: Boolean): Unit = add(
+    if (conv == null) null else conv.getBaseObject, if (conv == null) 0L else conv.getBaseOffset,
+    if (conv == null) -1 else conv.numBytes,
+    if (tool == null) null else tool.getBaseObject, if (tool == null) 0L else tool.getBaseOffset,
+    if (tool == null) -1 else tool.numBytes, len, hasLen)
+
+  /** Merge `o` into this state; a side without a Bloom contributes none. */
+  def merge(o: TurnSketches): this.type = {
+    hll.mergeInPlace(o.hll)
+    cms.mergeInPlace(o.cms)
+    topk.mergeInPlace(o.topk)
+    td.mergeInPlace(o.td)
+    kll.mergeInPlace(o.kll)
+    if (bloom != null && o.bloom != null) bloom.unionInPlace(o.bloom)
+    turns += o.turns
+    this
+  }
+
+  /** The six serialized sketches (empty Bloom bytes when off) and the row count. */
+  def result: TurnSketchResult = TurnSketchResult(hll.toBytes, cms.toBytes, topk.toBytes,
+    td.toBytes, kll.toBytes, if (bloom != null) bloom.toBytes else Array.emptyByteArray, turns)
+}
+
+object TurnSketches extends EncoderCodec[TurnSketches, Array[Byte]] {
+  /** An empty state; `bloomW = 0` leaves the Bloom out. */
+  def create(hllP: Int, cmsWidth: Int, cmsDepth: Int, topKCapacity: Int, tdigestNc: Int,
+      kllK: Int, bloomW: Int, bloomD: Int): TurnSketches = new TurnSketches(
+    HllSketch(hllP), CmsSketch(cmsWidth, cmsDepth), SpaceSavingSketch(topKCapacity),
+    TDigestSketch.fast(tdigestNc), KllSketch(kllK),
+    if (bloomW > 0) BloomSketch(bloomW, bloomD) else null, 0L)
+
+  /** A state from its [[TurnSketches.result]] parts (empty Bloom bytes: no Bloom). */
+  def fromParts(turns: Long, hll: Array[Byte], cms: Array[Byte], topk: Array[Byte],
+      td: Array[Byte], kll: Array[Byte], bloom: Array[Byte]): TurnSketches = new TurnSketches(
+    HllSketch.fromBytes(hll), CmsSketch.fromBytes(cms), SpaceSavingSketch.fromBytes(topk),
+    TDigestSketch.fromBytes(td), KllSketch.fromBytes(kll),
+    if (bloom.isEmpty) null else BloomSketch.fromBytes(bloom), turns)
+
+  /** The composite codec: the row count, then each part of
+    * [[TurnSketches.result]] length-prefixed. It is the buffer format of
+    * both aggregates, in shuffle, spill and sort-based fallback.
+    */
+  def encode(t: TurnSketches): Array[Byte] = {
+    val r = t.result
+    val bb = java.nio.ByteBuffer.allocate(8 + r.parts.map(_.length + 4).sum)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.putLong(r.turns)
+    r.parts.foreach { p => bb.putInt(p.length); bb.put(p) }
+    bb.array()
+  }
+
+  def decode(bytes: Array[Byte]): TurnSketches = {
+    val (turns, p) = Codec.decodeUntagged(bytes, "turn-sketch buffer") { bb =>
+      (bb.getLong(), Array.fill(6)(Codec.readBytes(bb)))
+    }
+    fromParts(turns, p(0), p(1), p(2), p(3), p(4), p(5))
+  }
 }
 
 /** Byte-pattern → String intern cache for tiny Zipf domains (tool names):
-  * each distinct pattern is decoded once. Shared by the UDAF buffer, the
-  * native aggregate, and SketchJob's stage-1 groups so the seed/semantics
-  * cannot drift between paths.
+  * each distinct pattern is decoded once, keyed by its 64-bit content hash.
   *
   * Correctness + memory hardening: hits are verified by comparing the
   * actual bytes against the cached pattern (a hash collision must never
@@ -64,31 +157,19 @@ final class TurnSketches(
 final class ToolInterner {
   import ToolInterner._
   private val cache = new java.util.HashMap[java.lang.Long, Entry]()
-  def intern(b: Array[Byte]): String = {
-    val k = java.lang.Long.valueOf(graft.sketch.core.XxHash64.hashBytes(b, Seed))
+
+  /** The String for the UTF-8 bytes at `(base, offset, numBytes)`. */
+  def intern(base: AnyRef, offset: Long, numBytes: Int): String = {
+    val k = java.lang.Long.valueOf(XxHash64.hashMemory(base, offset, numBytes, Seed))
     val e = cache.get(k)
-    if (e != null && java.util.Arrays.equals(e.bytes, b)) e.s
-    else if (e != null || cache.size >= MaxEntries) // collision or full: direct decode
-      new String(b, java.nio.charset.StandardCharsets.UTF_8)
+    if (e != null && e.bytes.length == numBytes && ByteArrayMethods.arrayEquals(
+        base, offset, e.bytes, Platform.BYTE_ARRAY_OFFSET, numBytes)) e.s
     else {
-      val bytes = b.clone()
+      val bytes = new Array[Byte](numBytes)
+      Platform.copyMemory(base, offset, bytes, Platform.BYTE_ARRAY_OFFSET, numBytes)
       val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      cache.put(k, new Entry(s, bytes,
-        org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes)))
-      s
-    }
-  }
-  def intern(u: org.apache.spark.unsafe.types.UTF8String): String = {
-    val k = java.lang.Long.valueOf(graft.sketch.core.XxHash64.hashMemory(
-      u.getBaseObject, u.getBaseOffset, u.numBytes, Seed))
-    val e = cache.get(k)
-    if (e != null && u.equals(e.u8)) e.s // UTF8String.equals = memory compare, no alloc
-    else if (e != null || cache.size >= MaxEntries) u.toString
-    else {
-      val bytes = u.getBytes // fresh copy
-      val s = u.toString
-      cache.put(k, new Entry(s, bytes,
-        org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes)))
+      // a collision or a full cache decodes directly
+      if (e == null && cache.size < MaxEntries) cache.put(k, new Entry(s, bytes))
       s
     }
   }
@@ -100,45 +181,15 @@ object ToolInterner {
     * domain and caching would only burn memory (~100 KB at the cap).
     */
   private[agg] val MaxEntries = 1024
-  private[agg] final class Entry(
-      val s: String, val bytes: Array[Byte],
-      val u8: org.apache.spark.unsafe.types.UTF8String)
+  private[agg] final class Entry(val s: String, val bytes: Array[Byte])
 }
 
-object TurnSketches {
-  /** Composite codec shared by the Kryo buffer serializer and the native
-    * TypedImperativeAggregate's serialize/deserialize: length-prefixed
-    * concatenation of each sketch's own binary codec (bloom optional —
-    * empty bytes when disabled).
-    */
-  def encode(t: TurnSketches): Array[Byte] = {
-    val parts = Seq(t.hll.toBytes, t.cms.toBytes, t.topk.toBytes,
-      t.td.toBytes, t.kll.toBytes,
-      if (t.bloom != null) t.bloom.toBytes else Array.emptyByteArray)
-    val bb = java.nio.ByteBuffer.allocate(8 + parts.map(_.length + 4).sum)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.putLong(t.turns)
-    parts.foreach { p => bb.putInt(p.length); bb.put(p) }
-    val out = new Array[Byte](bb.position()); bb.flip(); bb.get(out); out
-  }
-
-  def decode(bytes: Array[Byte]): TurnSketches = {
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val turns = bb.getLong()
-    def part(): Array[Byte] = { val a = new Array[Byte](bb.getInt()); bb.get(a); a }
-    val hll = HllSketch.fromBytes(part()); val cms = CmsSketch.fromBytes(part())
-    val topk = SpaceSavingSketch.fromBytes(part())
-    val td = TDigestSketch.fromBytes(part()); val kll = KllSketch.fromBytes(part())
-    val bloomBytes = part()
-    new TurnSketches(hll, cms, topk, td, kll,
-      if (bloomBytes.isEmpty) null else BloomSketch.fromBytes(bloomBytes), turns)
-  }
-}
-
-/** The flagship multi-sketch build as ONE Aggregator: one aggregation-buffer
-  * lookup and one input conversion per row instead of six. This is the
-  * operator `SketchJob`'s map-side pass uses through the UDAF path — at
-  * 10^12 rows the per-row constant is the whole game.
+/** The composite transcript sketch build as an `Aggregator` for `udaf()`:
+  * one aggregation-buffer lookup and one input conversion per row instead
+  * of six. A shell over [[TurnSketches]], as is the native
+  * `graft.plans.TurnSketchNativeAgg`; the buffer crosses shuffle, spill and
+  * sort-based fallback as [[TurnSketches.encode]] bytes, so it needs no
+  * Kryo registration.
   *
   * `bloomW = 0` disables the conv-id Bloom (emits empty bytes). A mergeable
   * membership filter must be sized to the group's distinct count
@@ -162,47 +213,24 @@ final class TurnSketchAgg(
     bloomD: Int = BloomSketch.DefaultHash)
     extends Aggregator[TurnInput, TurnSketches, TurnSketchResult] {
 
-  def zero: TurnSketches = new TurnSketches(
-    HllSketch(hllP), CmsSketch(cmsWidth, cmsDepth), SpaceSavingSketch(topKCapacity),
-    TDigestSketch.fast(tdigestNc), KllSketch(kllK),
-    if (bloomW > 0) BloomSketch(bloomW, bloomD) else null, 0L)
+  def zero: TurnSketches =
+    TurnSketches.create(hllP, cmsWidth, cmsDepth, topKCapacity, tdigestNc, kllK, bloomW, bloomD)
 
   def reduce(b: TurnSketches, v: TurnInput): TurnSketches = {
     if (v != null) {
-      if (v.conv_id != null) {
-        b.hll.addUtf8(v.conv_id)
-        if (b.bloom != null) b.bloom.addUtf8(v.conv_id)
-      }
-      if (v.tool != null) {
-        val tool = b.internTool(v.tool)
-        b.cms.add(tool)
-        b.topk.add(tool)
-      }
-      if (v.len != null) {
-        b.td.add(v.len.doubleValue())
-        b.kll.add(v.len.doubleValue())
-      }
-      b.turns += 1
+      val c = v.conv_id; val t = v.tool; val l = v.len
+      b.add(c, Platform.BYTE_ARRAY_OFFSET, if (c == null) -1 else c.length,
+        t, Platform.BYTE_ARRAY_OFFSET, if (t == null) -1 else t.length,
+        if (l == null) 0.0 else l.doubleValue(), l != null)
     }
     b
   }
 
-  def merge(a: TurnSketches, b: TurnSketches): TurnSketches = {
-    a.hll.mergeInPlace(b.hll)
-    a.cms.mergeInPlace(b.cms)
-    a.topk.mergeInPlace(b.topk)
-    a.td.mergeInPlace(b.td)
-    a.kll.mergeInPlace(b.kll)
-    if (a.bloom != null) a.bloom.unionInPlace(b.bloom)
-    a.turns += b.turns
-    a
-  }
+  def merge(a: TurnSketches, b: TurnSketches): TurnSketches = a.merge(b)
 
-  def finish(b: TurnSketches): TurnSketchResult = TurnSketchResult(
-    b.hll.toBytes, b.cms.toBytes, b.topk.toBytes,
-    b.td.toBytes, b.kll.toBytes,
-    if (b.bloom != null) b.bloom.toBytes else Array.emptyByteArray, b.turns)
+  def finish(b: TurnSketches): TurnSketchResult = b.result
 
-  def bufferEncoder: Encoder[TurnSketches] = Encoders.kryo[TurnSketches]
+  def bufferEncoder: Encoder[TurnSketches] =
+    TransformingEncoder(scala.reflect.classTag[TurnSketches], BinaryEncoder, () => TurnSketches)
   def outputEncoder: Encoder[TurnSketchResult] = Encoders.product[TurnSketchResult]
 }

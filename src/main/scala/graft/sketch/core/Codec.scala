@@ -38,6 +38,7 @@ object Codec {
     require(ver == 1, s"unsupported sketch codec version: $ver")
     try read(bb)
     catch {
+      case e: BadLength => throw corrupt(expectTag, e.offset, e.getMessage)
       case _: java.nio.BufferUnderflowException =>
         throw corrupt(expectTag, bb.position(), s"sketch ends early (${bytes.length} bytes)")
     }
@@ -45,6 +46,28 @@ object Codec {
 
   def corrupt(tag: Byte, offset: Int, why: String): IllegalArgumentException =
     new IllegalArgumentException(s"corrupt sketch (tag $tag) at offset $offset: $why")
+
+  /** Decode a framing with no sketch header (the composite aggregation
+    * buffer, SketchJob checkpoints) with `read`, which must consume every
+    * byte. A short read, a bad length prefix or trailing bytes fail with one
+    * typed error naming `what`.
+    */
+  def decodeUntagged[T](bytes: Array[Byte], what: String)(read: ByteBuffer => T): T = {
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    def fail(offset: Int, why: String) =
+      new IllegalArgumentException(s"corrupt $what at offset $offset: $why")
+    val t = try read(bb)
+    catch {
+      case e: BadLength => throw fail(e.offset, e.getMessage)
+      case _: java.nio.BufferUnderflowException =>
+        throw fail(bb.position(), s"ends early (${bytes.length} bytes)")
+    }
+    if (bb.hasRemaining) throw fail(bb.position(), s"${bb.remaining} trailing bytes")
+    t
+  }
+
+  /** A length prefix at `offset` the bytes left cannot hold; the decoder names the framing. */
+  final class BadLength(val offset: Int, why: String) extends IllegalArgumentException(why)
 
   /** Read a count of items that take at least `itemBytes` each, rejecting any
     * count the bytes left cannot hold before anything is allocated for it.
@@ -55,8 +78,13 @@ object Codec {
     n
   }
   // out of line, so the check above stays small enough to inline into decode loops
-  private def badCount(bb: ByteBuffer, n: Int): Nothing = throw corrupt(bb.get(1),
+  private def badCount(bb: ByteBuffer, n: Int): Nothing = throw new BadLength(
     bb.position() - 4, s"length prefix $n exceeds the ${bb.remaining} bytes left")
+
+  /** A length-prefixed byte string, its prefix checked before allocating. */
+  def readBytes(bb: ByteBuffer): Array[Byte] = {
+    val a = new Array[Byte](readCount(bb, 1)); bb.get(a); a
+  }
 
   def finish(bb: ByteBuffer): Array[Byte] = {
     val out = new Array[Byte](bb.position())
@@ -95,8 +123,5 @@ object Codec {
     val b = s.getBytes("UTF-8")
     bb.putInt(b.length); bb.put(b)
   }
-  def readString(bb: ByteBuffer): String = {
-    val n = readCount(bb, 1); val b = new Array[Byte](n); bb.get(b)
-    new String(b, "UTF-8")
-  }
+  def readString(bb: ByteBuffer): String = new String(readBytes(bb), "UTF-8")
 }

@@ -2,7 +2,7 @@ package graft.spark
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -406,6 +406,36 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(mergedLocally(1L).forall(_ == null) && mergedLocally(0L).forall(_ != null))
       check("merge aggs", () => select(names.map(c => c -> s"fb_${mergeFn(c)}_merge_agg($c)"),
         "g", "fb_parts"), mergedLocally)
+
+      // the composite through both registrations: its buffer crosses the
+      // fallback as TurnSketches codec bytes (the native serialize, the
+      // udaf() buffer encoder); bytes for the order-free sketches, answers
+      // for top-k, KLL and t-digest
+      graft.plans.TurnSketchNativeAgg.register(spark, cmsWidth = cfg.cmsWidth,
+        cmsDepth = cfg.cmsDepth, bloomW = cfg.bloomWidth)
+      spark.udf.register("fb_turn_udaf", udaf(new graft.sketch.agg.TurnSketchAgg(
+        cmsWidth = cfg.cmsWidth, cmsDepth = cfg.cmsDepth, bloomW = cfg.bloomWidth)))
+      val tool = "CAST(w AS STRING)"
+      def composites(threshold: String): Map[Long, Seq[Seq[Any]]] = {
+        spark.conf.set(conf, threshold)
+        spark.sql(s"SELECT g, turn_sketch_native(s, $tool, x) AS native, " +
+          s"fb_turn_udaf(CAST(s AS BINARY), CAST($tool AS BINARY), x) AS udaf " +
+          "FROM fb_rows GROUP BY g").collect().map { r =>
+          r.getLong(0) -> Seq("native", "udaf").map { c =>
+            val sk = r.getAs[Row](c)
+            def part(f: String) = sk.getAs[Array[Byte]](f)
+            val td = TDigestSketch.fromBytes(part("tdigest_len"))
+            Seq(part("hll_conv").toSeq, part("cms_tool").toSeq, part("bloom_conv").toSeq,
+              sk.getAs[Long]("turns"), canon("topk", part("topk_tool")),
+              canon("kll", part("kll_len")),
+              // an empty digest's quantiles are NaN: compare their bits
+              (0 to 20).map(i => java.lang.Double.doubleToLongBits(td.quantile(i / 20.0))))
+          }
+        }.toMap
+      }
+      val inMemory = composites("1000000")
+      assert(inMemory.size == groups && inMemory(0L).forall(_(3) == 6L))
+      assert(composites("4") == inMemory, "composite states differ under sort-based fallback")
     } finally spark.conf.set(conf, prev)
   }
 
@@ -566,6 +596,78 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       val nt = SpaceSavingSketch.fromBytes(n.getAs[Array[Byte]]("topk_tool")).topK(Some(5))
       val ut = SpaceSavingSketch.fromBytes(u.getAs[Array[Byte]]("topk_tool")).topK(Some(5))
       assert(nt == ut, s"top-5 mismatch for role ${n.getString(0)}")
+    }
+  }
+
+  test("SketchJob's merged states == the native aggregate's over the same rows") {
+    // the third composite path: stage 1 plus the canonical tree merge,
+    // against turn_sketch_native with SketchJob's Bloom; NULLIF gives the
+    // aggregate SketchJob's rule of skipping empty tools
+    val cfg = SketchJob.Config(
+      input = s"$tdir/transcripts",
+      output = s"$tdir/paths-out",
+      checkpointDir = s"$tdir/paths-ckpt")
+    SketchJob.run(spark, cfg)
+    val job = SketchJob.mergeDeterministic(SketchJob.mergeCheckpoints(spark, cfg))
+      .collect().sortBy(_.role)
+    graft.plans.TurnSketchNativeAgg.register(spark, bloomW = BloomSketch.DefaultBits)
+    val native = spark.sql(
+      """SELECT role, turn_sketch_native(conv_id, NULLIF(tool, ''), CAST(text_len AS DOUBLE))
+        |AS sk FROM transcripts GROUP BY role""".stripMargin)
+      .select(col("role"), col("sk.*")).orderBy("role").collect()
+    assert(job.map(_.role).toSeq == native.map(_.getString(0)).toSeq && job.nonEmpty)
+    job.zip(native).foreach { case (j, n) =>
+      // these merges ignore merge order, so the bytes must agree
+      Seq("hll_conv" -> j.hll_conv, "cms_tool" -> j.cms_tool, "bloom_conv" -> j.bloom_conv)
+        .foreach { case (f, b) =>
+          assert(b.toSeq == n.getAs[Array[Byte]](f).toSeq, s"$f mismatch for role ${j.role}")
+        }
+      assert(j.rows_seen == n.getAs[Long]("turns"), s"turns for role ${j.role}")
+      def top5(b: Array[Byte]) = SpaceSavingSketch.fromBytes(b).topK(Some(5))
+      assert(top5(j.topk_tool) == top5(n.getAs[Array[Byte]]("topk_tool")),
+        s"top-5 mismatch for role ${j.role}")
+    }
+  }
+
+  test("truncated or bit-flipped SketchJob checkpoints fail the merge with a typed error") {
+    val cfg = SketchJob.Config(
+      input = s"$tdir/transcripts",
+      output = s"$tdir/job-corrupt-out",
+      checkpointDir = s"$tdir/ckpt-corrupt")
+    SketchJob.run(spark, cfg)
+    val ckpts = new java.io.File(cfg.checkpointDir).listFiles()
+      .filter(_.getName.endsWith(".ckpt")).sortBy(_.getName)
+    assert(ckpts.length >= 2)
+    def read(f: java.io.File) = Files.readAllBytes(f.toPath)
+    // flip the sign bit of the first group's HLL length prefix, past the
+    // header (magic, version, partition id, group count), the role and the
+    // two lineage longs
+    val raw = new java.util.zip.InflaterInputStream(
+      new java.io.ByteArrayInputStream(read(ckpts(1)))).readAllBytes()
+    val roleLen = java.nio.ByteBuffer.wrap(raw, 16, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt()
+    val prefixAt = 16 + 4 + roleLen + 16
+    raw(prefixAt + 3) = (raw(prefixAt + 3) ^ 0x80).toByte
+    val flipped = new java.io.ByteArrayOutputStream()
+    val os = new java.util.zip.DeflaterOutputStream(flipped)
+    os.write(raw); os.close()
+    val cases = Seq(
+      ("truncated", ckpts(0), read(ckpts(0)).take(read(ckpts(0)).length / 2)),
+      ("bit-flipped length prefix", ckpts(1), flipped.toByteArray))
+    for ((how, file, bad) <- cases) {
+      val good = read(file)
+      // drop the local file system's checksum sidecar, so the bytes reach the decoder
+      new java.io.File(file.getParentFile, s".${file.getName}.crc").delete()
+      Files.write(file.toPath, bad)
+      try {
+        val e = intercept[Exception](SketchJob.mergeCheckpoints(spark, cfg).collect())
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(!chain.exists(t => t.isInstanceOf[NegativeArraySizeException] ||
+          t.isInstanceOf[java.nio.BufferUnderflowException]), s"$how: $e")
+        assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+          t.getMessage.startsWith("corrupt checkpoint")),
+          s"$how: ${chain.map(_.toString).mkString(" <- ")}")
+      } finally Files.write(file.toPath, good)
     }
   }
 
