@@ -43,6 +43,9 @@ def main():
             pass
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for name in sorted(only - set(oracle)):
+        print(f"FAIL {name}: no such query")
+        n_fail += 1
     for name in sorted(oracle):
         if only and name not in only:
             continue

@@ -26,8 +26,9 @@ object Codec {
     bb
   }
 
-  /** Check the header, then decode with `read`; a cell that ends early fails
-    * with the same typed error as a bad length prefix.
+  /** Check the header, then decode the rest with `read`, which must consume
+    * every byte. A short read, a bad length prefix or trailing bytes fail
+    * with `corrupt`'s typed error.
     */
   def decode[T](bytes: Array[Byte], expectTag: Byte)(read: ByteBuffer => T): T = {
     if (bytes.length < 3) throw corrupt(expectTag, 0, s"${bytes.length} bytes, no header")
@@ -36,12 +37,7 @@ object Codec {
     require(magic == Magic, s"bad sketch magic byte: $magic")
     require(tag == expectTag, s"sketch type mismatch: got tag $tag, expected $expectTag")
     require(ver == 1, s"unsupported sketch codec version: $ver")
-    try read(bb)
-    catch {
-      case e: BadLength => throw corrupt(expectTag, e.offset, e.getMessage)
-      case _: java.nio.BufferUnderflowException =>
-        throw corrupt(expectTag, bb.position(), s"sketch ends early (${bytes.length} bytes)")
-    }
+    readAll(bb, corrupt(expectTag, _, _))(read)
   }
 
   def corrupt(tag: Byte, offset: Int, why: String): IllegalArgumentException =
@@ -52,15 +48,17 @@ object Codec {
     * byte. A short read, a bad length prefix or trailing bytes fail with one
     * typed error naming `what`.
     */
-  def decodeUntagged[T](bytes: Array[Byte], what: String)(read: ByteBuffer => T): T = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def fail(offset: Int, why: String) =
-      new IllegalArgumentException(s"corrupt $what at offset $offset: $why")
+  def decodeUntagged[T](bytes: Array[Byte], what: String)(read: ByteBuffer => T): T =
+    readAll(ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN),
+      (offset, why) => new IllegalArgumentException(s"corrupt $what at offset $offset: $why"))(read)
+
+  private def readAll[T](bb: ByteBuffer, fail: (Int, String) => IllegalArgumentException)(
+      read: ByteBuffer => T): T = {
     val t = try read(bb)
     catch {
       case e: BadLength => throw fail(e.offset, e.getMessage)
       case _: java.nio.BufferUnderflowException =>
-        throw fail(bb.position(), s"ends early (${bytes.length} bytes)")
+        throw fail(bb.position(), s"ends early (${bb.limit} bytes)")
     }
     if (bb.hasRemaining) throw fail(bb.position(), s"${bb.remaining} trailing bytes")
     t

@@ -505,7 +505,8 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       // the length prefix's sign bit, then its bit 30 (a ~1-8 GB request)
       val corrupt = Seq("truncated" -> good.dropRight(1),
-        "negative length" -> flipped(0x80), "huge length" -> flipped(0x40))
+        "negative length" -> flipped(0x80), "huge length" -> flipped(0x40),
+        "trailing byte" -> (good :+ 0.toByte))
       for ((how, bad) <- corrupt) {
         val e = intercept[Exception] {
           Seq(good, bad).toDF("sk").selectExpr(s"${sketch}_merge_agg(sk)").collect()
