@@ -381,6 +381,22 @@ object TextFunctions {
     out.result()
   }
 
+  /** The JDK's array-growth ceiling (`ArraysSupport.SOFT_MAX_ARRAY_LENGTH`). */
+  private[text] val MaxBufferSlots: Int = Int.MaxValue - 8
+
+  /** `b`, or a copy grown (doubling) to hold `need` slots. The capped aggs
+    * bound the occupant count, but a framed occupant's length comes from
+    * input, so a need past [[MaxBufferSlots]] fails here, typed and with
+    * the slot count, not later with an index or VM-limit error.
+    */
+  private[text] def ensureSlots(b: Array[Long], need: Long): Array[Long] =
+    if (need <= b.length) b
+    else if (need > MaxBufferSlots)
+      throw new IllegalArgumentException(
+        s"capped bucket buffer needs $need slots, over the $MaxBufferSlots-slot array limit")
+    else java.util.Arrays.copyOf(b, math.min(math.max(2L * b.length, need),
+      MaxBufferSlots.toLong).toInt)
+
   /** Shared cap-enforcement core for bucket occupant collection, with the
     * cap enforced at INGEST: one occupant is `stride` consecutive Long
     * slots in a flat buffer, and the buffer never holds more than
@@ -410,14 +426,10 @@ object TextFunctions {
     // aggregations. Logical content and cap semantics are IDENTICAL
     // (cap + 1 occupants max, overflow marker preserved through merge).
     final def zero: Array[Long] = { val b = new Array[Long](1 + 8 * stride); b(0) = 1; b }
-    private def ensure(b: Array[Long], need: Int): Array[Long] =
-      if (need <= b.length) b
-      else java.util.Arrays.copyOf(b, math.max(2L * b.length, need.toLong)
-        .min(Int.MaxValue.toLong).toInt)
     final def reduce(b0: Array[Long], v: IN): Array[Long] = {
       val used = b0(0).toInt
       if (used - 1 > stride * cap) return b0
-      val b = ensure(b0, used + stride)
+      val b = ensureSlots(b0, used + stride)
       if (write(v, b, used)) b(0) = used + stride
       b
     }
@@ -427,7 +439,7 @@ object TextFunctions {
       var i = 1
       while (a(0).toInt - 1 <= stride * cap && i + stride <= cUsed) {
         val p = a(0).toInt
-        a = ensure(a, p + stride)
+        a = ensureSlots(a, p + stride)
         System.arraycopy(c, i, a, p, stride)
         a(0) = p + stride
         i += stride
@@ -495,15 +507,11 @@ object TextFunctions {
     // array, this agg moves the most bytes of any in the repo). The
     // FINISHED value is bit-identical to before: `[count, frames…]`.
     def zero: Array[Long] = { val b = new Array[Long](64); b(1) = 2; b }
-    private def ensure(b: Array[Long], need: Long): Array[Long] =
-      if (need <= b.length) b
-      else java.util.Arrays.copyOf(b, math.max(2L * b.length, need)
-        .min(Int.MaxValue.toLong).toInt)
     def reduce(b0: Array[Long], v: (java.lang.Long, Array[Long])): Array[Long] = {
       if (v == null || v._1 == null || v._2 == null) return b0
       if (b0(0) > cap) return b0
       val len = v._2.length
-      val b = ensure(b0, b0(1) + len + 2)
+      val b = ensureSlots(b0, b0(1) + len + 2)
       val p = b(1).toInt
       b(p) = len.toLong
       b(p + 1) = v._1.longValue()
@@ -518,7 +526,7 @@ object TextFunctions {
       var i = 2
       while (a(0) <= cap && i < cUsed) {
         val len = c(i).toInt
-        a = ensure(a, a(1) + len + 2)
+        a = ensureSlots(a, a(1) + len + 2)
         val p = a(1).toInt
         System.arraycopy(c, i, a, p, len + 2)
         a(1) += len + 2

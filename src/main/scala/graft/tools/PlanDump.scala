@@ -76,7 +76,7 @@ object PlanDump {
     // per-batch execution above it
     locally {
       import graft.text.VectorIvfIndex
-      import graft.SparkEntry.IvfIndexParams._
+      import graft.text.AnnQueries.IvfIndexParams._
       val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       val cents = VectorIvfIndex.fit(emb, "vec_id", "embedding", k = K, sampleCap = SampleCap)
       val index = VectorIvfIndex.index(emb, "vec_id", "embedding", cents)

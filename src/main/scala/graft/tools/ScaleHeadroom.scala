@@ -29,7 +29,9 @@ import graft.sketch.core.XxHash64
   *    correctly-small cap and the pipeline would return nothing). Sizing
   *    bits with the table (18–20 bits here) keeps occupancy ~1 and the
   *    candidate volume linear in N, which is the parameterization a
-  *    100 TB deployment uses. Plan shapes are identical to PLANS.md.
+  *    100 TB deployment uses. The rows call the functions q_ann_lsh_recall
+  *    and q_embed_near_dup run (`AnnQueries.lshTop1`, `embedNearDups`) at
+  *    18 bits × 12 tables and 20 × 48.
   */
 object ScaleHeadroom {
   private val DocsN = 200000L
@@ -38,8 +40,6 @@ object ScaleHeadroom {
   private val SimhashDocsN = 50000L
   private val VecN = 1000000L
   private val Dim = 64
-  private val EmbedDupOffset = 1000000000L
-  private val Cap = 1024
   // decontamination at 400× verify scale: 2M training docs + 2,000 planted
   // contaminated trainers, each carrying ONE full 5-word gram copied from
   // its eval-slice source (ids ≡ 0 mod 97). The planted-id offset lands on
@@ -228,7 +228,7 @@ object ScaleHeadroom {
         r.getBoolean(1) && r.getBoolean(3))
     }
 
-    // ---- SCALE-SIZED hyperplane-LSH pipelines (same shape as PLANS.md,
+    // ---- SCALE-SIZED hyperplane-LSH pipelines (the query functions,
     // bits = log2(N / target occupancy)) ----
     val emb = spark.read.parquet(s"$v1m/embeddings.parquet")
 
@@ -246,53 +246,15 @@ object ScaleHeadroom {
       (s"bf_top1==source for $bf/20", bf == 20L)
     }
 
-    def lshTop1(bits: Int, tables: Int, probes: DataFrame): DataFrame = {
-      val rawBanded = emb.select(col("vec_id"),
-        explode(tfns.annBucketsParamUdf(col("embedding"), lit(bits), lit(tables))).as("bucket"))
-      val probeBanded = broadcast(probes.select(col("query_id"),
-        explode(tfns.annBucketsParamUdf(col("qe"), lit(bits), lit(tables))).as("bucket")))
-      val probeBuckets = broadcast(probeBanded.select(col("bucket")).distinct())
-      rawBanded.join(probeBuckets, "bucket")
-        .groupBy(col("bucket"))
-        .agg(tfns.cappedIdsAgg(Cap)(col("vec_id")).as("ids"))
-        .filter(size(col("ids")).between(1, Cap))
-        .join(probeBanded, "bucket")
-        .select(col("query_id"), explode(col("ids")).as("neighbor_id"))
-        .distinct()
-        .join(probes, "query_id")
-        .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")),
-          "neighbor_id")
-        .select(col("query_id"), col("neighbor_id"),
-          tfns.cosineUdf(col("qe"), col("ne")).as("s"))
-        .groupBy(col("query_id")).agg(max_by(col("neighbor_id"), col("s")).as("lsh_top1"))
-    }
     run("lsh_recall_18bit@1M", VecN) {
-      val probes = broadcast(emb.filter(col("vec_id") < 200)
-        .select(col("vec_id").as("query_id"),
-          tfns.perturbUdf(col("embedding"), col("vec_id"), lit(0.15)).as("qe")))
-      val hits = lshTop1(18, 12, probes)
-        .filter(col("lsh_top1") === col("query_id")).count()
+      val (_, top) = graft.text.AnnQueries.lshTop1(emb, 18, 12)
+      val hits = top.filter(col("lsh_top1") === col("query_id")).count()
       (s"recall@1=$hits/200 (truth=source, spot-checked)", hits >= 180L)
     }
     run("embed_near_dup_20bitx48@1M", VecN) {
-      val dups = emb.filter(col("vec_id") < 50)
-        .select((col("vec_id") + EmbedDupOffset).as("vec_id"),
-          tfns.perturbUdf(col("embedding"), col("vec_id"), lit(0.15)).as("embedding"))
-      val all = emb.select(col("vec_id"), col("embedding")).unionByName(dups)
-      val banded = all.select(col("vec_id"),
-        explode(tfns.annBucketsParamUdf(col("embedding"), lit(20), lit(48))).as("bucket"))
-      val got = banded.groupBy(col("bucket"))
-        .agg(tfns.cappedIdsAgg(Cap)(col("vec_id")).as("ids"))
-        .filter(size(col("ids")).between(2, Cap))
-        .select(explode(tfns.idPairsUdf(col("ids"))).as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-        .distinct()
-        .join(all.select(col("vec_id").as("id_a"), col("embedding").as("ea")), "id_a")
-        .join(all.select(col("vec_id").as("id_b"), col("embedding").as("eb")), "id_b")
-        .filter(tfns.cosineUdf(col("ea"), col("eb")) >= 0.9)
-        .select(col("id_a"), col("id_b")).collect()
+      val got = graft.text.AnnQueries.embedNearDups(emb, 20, 48).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val want = (0L until 50L).map(i => (i, i + EmbedDupOffset)).toSet
+      val want = (0L until 50L).map(i => (i, i + graft.text.DedupQueries.SynthDupOffset)).toSet
       (s"pairs=${got.size}/50 planted, 0 false positives", got == want)
     }
 
@@ -710,15 +672,17 @@ object ScaleHeadroom {
         |  N=1e6 means E[occupancy]=244, and in-bucket pair expansion alone
         |  would be 24×4096×C(244,2) ≈ 2.9e9 pairs — the quadratic blowup
         |  the ingest cap exists to refuse (with a correctly small cap every
-        |  bucket overflows and the pipeline returns nothing instead). Plan
-        |  shapes are byte-identical to PLANS.md; only the literals differ.
+        |  bucket overflows and the pipeline returns nothing instead). The
+        |  rows call `AnnQueries.lshTop1` and `AnnQueries.embedNearDups`, the
+        |  functions q_ann_lsh_recall and q_embed_near_dup run; only bits and
+        |  tables differ.
         |  The corpus near-dup row's wall time is the price of 48 tables —
         |  20×48 = 960 hyperplane dot-products per vector plus a 49M-row
         |  banded shuffle — bought to push per-planted-pair miss odds to
         |  ~3e-5; a deployment tunes tables against its recall SLO. The
-        |  probe-retrieval row (4.2 s for 1M vectors) shows the same
-        |  banding cost collapsing once the broadcast semi-join prunes the
-        |  corpus stream to probe-relevant buckets before the capped agg.
+        |  probe-retrieval row shows the same banding cost collapsing once
+        |  the driver-side probe routing prunes the corpus stream to
+        |  probe-relevant buckets before the capped agg.
         |
         |- **Streaming dedup, production parameterization**: the
         |  CORRECTNESS row (q_stream_dedup) uses unbounded `dropDuplicates`

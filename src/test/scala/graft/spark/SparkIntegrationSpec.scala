@@ -1,6 +1,6 @@
 package graft.spark
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,7 +41,8 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    try { if (spark != null) spark.stop() }
+    finally if (tdir != null) TestDirs.deleteTree(Paths.get(tdir))
   }
 
   test("generator is deterministic and schema matches input_hint") {
@@ -893,50 +894,54 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q_decontaminate flags exactly the training docs sharing a full 5-word gram with the eval slice") {
     val dir = Files.createTempDirectory("graft-decon").toString
-    val sp = spark
-    import sp.implicits._
-    // eval slice = doc_id % 97 == 0 → ids 0 and 97 are the "benchmark suite"
-    val docs = Seq(
-      (0L, "alpha bravo charlie delta echo foxtrot golf"),
-      (97L, "kilo lima mike november oscar papa"),
-      // shares the 5-gram "bravo charlie delta echo foxtrot" with doc 0
-      (5L, "zulu bravo charlie delta echo foxtrot yankee"),
-      // shares only 4 CONSECUTIVE words with doc 0 → below the gram size
-      (6L, "bravo charlie delta echo xray whiskey victor uniform"),
-      // full 5-grams from BOTH eval docs → eval_hits = 2
-      (7L, "alpha bravo charlie delta echo padding kilo lima mike november oscar"),
-      // disjoint vocabulary
-      (8L, "one two three four five six seven"),
-      // too short for any 5-gram even though every word is eval vocabulary
-      (9L, "alpha bravo charlie delta")
-    ).toDF("doc_id", "text")
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = graft.SparkEntry.queries("q_decontaminate")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.map(_._1).toSeq == Seq(5L, 7L),
-      s"contaminated set must be exactly the planted docs, got ${got.toSeq}")
-    val m = got.map(x => x._1 -> (x._2, x._3)).toMap
-    assert(m(5L) == ((1L, 1L)), "doc 5: one eval doc, one shared gram")
-    assert(m(7L)._1 == 2L, "doc 7 hits BOTH eval docs")
+    try {
+      val sp = spark
+      import sp.implicits._
+      // eval slice = doc_id % 97 == 0 → ids 0 and 97 are the "benchmark suite"
+      val docs = Seq(
+        (0L, "alpha bravo charlie delta echo foxtrot golf"),
+        (97L, "kilo lima mike november oscar papa"),
+        // shares the 5-gram "bravo charlie delta echo foxtrot" with doc 0
+        (5L, "zulu bravo charlie delta echo foxtrot yankee"),
+        // shares only 4 CONSECUTIVE words with doc 0 → below the gram size
+        (6L, "bravo charlie delta echo xray whiskey victor uniform"),
+        // full 5-grams from BOTH eval docs → eval_hits = 2
+        (7L, "alpha bravo charlie delta echo padding kilo lima mike november oscar"),
+        // disjoint vocabulary
+        (8L, "one two three four five six seven"),
+        // too short for any 5-gram even though every word is eval vocabulary
+        (9L, "alpha bravo charlie delta")
+      ).toDF("doc_id", "text")
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = graft.SparkEntry.queries("q_decontaminate")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(got.map(_._1).toSeq == Seq(5L, 7L),
+        s"contaminated set must be exactly the planted docs, got ${got.toSeq}")
+      val m = got.map(x => x._1 -> (x._2, x._3)).toMap
+      assert(m(5L) == ((1L, 1L)), "doc 5: one eval doc, one shared gram")
+      assert(m(7L)._1 == 2L, "doc 7 hits BOTH eval docs")
+    } finally TestDirs.deleteTree(Paths.get(dir))
   }
 
   test("q_bloom_join_filter: bloom-prefiltered join equals the plain join (no false negatives)") {
     val dir = Files.createTempDirectory("graft-bjf").toString
-    val sp = spark
-    import sp.implicits._
-    // dim: custkeys 1,2,3 in nation 2; custkey 4 in another nation
-    Seq((1L, 2), (2L, 2), (3L, 2), (4L, 7))
-      .toDF("c_custkey", "c_nationkey")
-      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    // fact: user 1 twice, user 2 once (all matched), user 4 (wrong nation),
-    // user 99 (no such customer) — the last two must be filtered/dropped
-    Seq((1L, 10.1234), (1L, 20.5), (2L, 1.0), (4L, 5.0), (99L, 7.0))
-      .toDF("user_id", "value")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val row = graft.SparkEntry.queries("q_bloom_join_filter")(spark, dir).collect().head
-    assert(row.getAs[Long]("matched_rows") == 3L)
-    assert(row.getAs[Long]("matched_users") == 2L)
-    assert(row.getAs[Long]("value_sum_milli") == 10123L + 20500L + 1000L)
-    assert(row.getAs[Boolean]("prefilter_ok"))
+    try {
+      val sp = spark
+      import sp.implicits._
+      // dim: custkeys 1,2,3 in nation 2; custkey 4 in another nation
+      Seq((1L, 2), (2L, 2), (3L, 2), (4L, 7))
+        .toDF("c_custkey", "c_nationkey")
+        .write.mode("overwrite").parquet(s"$dir/customer.parquet")
+      // fact: user 1 twice, user 2 once (all matched), user 4 (wrong nation),
+      // user 99 (no such customer) — the last two must be filtered/dropped
+      Seq((1L, 10.1234), (1L, 20.5), (2L, 1.0), (4L, 5.0), (99L, 7.0))
+        .toDF("user_id", "value")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val row = graft.SparkEntry.queries("q_bloom_join_filter")(spark, dir).collect().head
+      assert(row.getAs[Long]("matched_rows") == 3L)
+      assert(row.getAs[Long]("matched_users") == 2L)
+      assert(row.getAs[Long]("value_sum_milli") == 10123L + 20500L + 1000L)
+      assert(row.getAs[Boolean]("prefilter_ok"))
+    } finally TestDirs.deleteTree(Paths.get(dir))
   }
 }

@@ -39,8 +39,9 @@ class StreamingQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stageRoot = Paths.get(sys.props("java.io.tmpdir"), "graft-stage")
     val ids = tables.map(t => s"-${Integer.toHexString(t.hashCode)}-")
     if (Files.exists(stageRoot))
-      names(stageRoot).filter(n => ids.exists(n.contains)).foreach(n => deleteTree(stageRoot.resolve(n)))
-    tables.foreach(t => deleteTree(Paths.get(t)))
+      names(stageRoot).filter(n => ids.exists(n.contains))
+        .foreach(n => TestDirs.deleteTree(stageRoot.resolve(n)))
+    tables.foreach(t => TestDirs.deleteTree(Paths.get(t)))
     if (spark != null) spark.stop()
   }
 
@@ -89,12 +90,6 @@ class StreamingQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     names(stage).filter(_.startsWith("chunk-")).map { n =>
       n -> spark.read.parquet(stage.resolve(n).toString).collect().map(_.toString).toSeq.sorted
     }.toMap
-
-  private def deleteTree(root: Path): Unit = if (Files.exists(root)) {
-    val w = Files.walk(root)
-    try w.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p))
-    finally w.close()
-  }
 
   private def copyTable(): String = {
     val d = Files.createTempDirectory("graft-sq-copy")

@@ -28,7 +28,13 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  // restartScenario's roots: its callers inspect the returned checkpoint,
+  // so the dirs outlive the scenario and go after the last test
+  private val restartRoots = scala.collection.mutable.Buffer.empty[java.nio.file.Path]
+
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() }
+    finally restartRoots.foreach(TestDirs.deleteTree)
 
   test("flatMapGroupsWithState sessionization: event-time timeout closes sessions") {
     import graft.streaming.TranscriptStream
@@ -456,6 +462,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(TurnEvent("A", "user", 9.0, ts(11)), TurnEvent("B", "user", 4.0, ts(11))),
       Seq(TurnEvent("Z", "user", 1.0, ts(60)), TurnEvent("Z", "user", 2.0, ts(120))))
     val root = java.nio.file.Files.createTempDirectory(s"graft-stream-restart-$tag").toFile
+    restartRoots += root.toPath
     val schema = org.apache.spark.sql.Encoders.product[TurnEvent].schema
     def addChunk(dir: java.io.File, i: Int): Unit = {
       dir.mkdirs()

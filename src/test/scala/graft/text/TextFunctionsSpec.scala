@@ -332,6 +332,18 @@ class TextFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("capped bucket buffers grow geometrically and fail typed past the array limit") {
+    val b = Array(1L, 2L, 3L)
+    assert(TextFunctions.ensureSlots(b, 3L) eq b, "a buffer that fits is returned as is")
+    val grown = TextFunctions.ensureSlots(b, 4L)
+    assert(grown.length == 6 && grown.take(3).sameElements(b), "growth doubles and keeps the slots")
+    assert(TextFunctions.ensureSlots(b, 100L).length == 100, "growth reaches a larger need directly")
+    // a need past the limit is refused before anything is allocated
+    val need = TextFunctions.MaxBufferSlots.toLong + 1
+    val e = intercept[IllegalArgumentException](TextFunctions.ensureSlots(b, need))
+    assert(e.getMessage.contains(need.toString), e.getMessage)
+  }
+
   test("synthSimhash == simhash(synthDoc) for both variants (r6 fusion)") {
     (Seq(0L, 1L, 7L, 39L, 40L, 123456L, 999999999L)).foreach { id =>
       Seq(0, 1).foreach { variant =>
