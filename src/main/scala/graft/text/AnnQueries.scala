@@ -36,13 +36,14 @@ object AnnQueries {
   /** Deterministic ANN top-1 read-out over a (query_id, neighbor_id, s)
     * candidate frame: partial-aggregatable max_by (no per-group sort
     * shuffle), ties broken to the LOWEST neighbor_id through the
-    * (s, -neighbor_id) struct order. Shared by every ANN gate so the LSH
-    * and IVF paths always compare against identical tie-break semantics.
+    * (s, -neighbor_id) struct order. The one ANN top-1: every gate and the
+    * IVF index read-out use it, so the LSH, IVF and brute-force sides
+    * always compare under identical tie-break semantics.
     */
   private def top1Expr: Column =
     max_by(col("neighbor_id"), struct(col("s"), -col("neighbor_id")))
 
-  private def top1(df: DataFrame, as: String): DataFrame =
+  private[graft] def top1(df: DataFrame, as: String): DataFrame =
     df.groupBy(col("query_id")).agg(top1Expr.as(as))
 
   /** Brute-force cosine truth for the ANN recall gates. The probe set is
@@ -312,7 +313,7 @@ object AnnQueries {
           val probes = emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
             .select(col("vec_id").as("query_id"),
               tfns.perturbUdf(col("embedding"), col("vec_id"), lit(PerturbEps)).as("qe"))
-          val ivfTop = VectorIvfIndex.top1(
+          val ivfTop = top1(
             VectorIvfIndex.search(index, probes, cents, nprobe = NProbe), "ivf_top1")
           val (qids, qes) = collectProbes(probes)
           val r = bfTop1(qids, qes, emb).join(ivfTop, Seq("query_id"), "left")

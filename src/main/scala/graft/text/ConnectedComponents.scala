@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components over a pair graph — the clustering step
   * a corpus-curation funnel runs AFTER near-dup pair generation: the
@@ -13,35 +12,51 @@ import org.apache.spark.storage.StorageLevel
   * chains; component clustering is the standard fix (near-dup clustering in
   * web-corpus pipelines).
   *
-  * Algorithm: alternating LARGE-STAR / SMALL-STAR (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", ACM SoCC 2014) — the
-  * shuffle-friendly formulation that converges in O(log n) rounds on any
-  * graph (vs O(diameter) for plain label propagation, which a 10^8-node
-  * dup-chain would stall):
+  * Two regimes, switched on the canonical edge count (the count the
+  * convergence fingerprint already computes, checked before the loop and
+  * after every round):
   *
-  *   large-star: every node u links each STRICTLY LARGER neighbor to the
-  *     minimum of its closed neighborhood m(u) = min(N(u) ∪ {u});
-  *   small-star: on the canonical (parent > child) edge list, every node u
-  *     re-links its smaller neighbors (and itself) to m(u).
+  *  - ABOVE 250k edges (about 4 MB of Long pairs, which one task holds
+  *    comfortably): distributed rounds of alternating LARGE-STAR /
+  *    SMALL-STAR (Kiveris et al., "Connected Components in MapReduce and
+  *    Beyond", ACM SoCC 2014) — the shuffle-friendly formulation that
+  *    converges in O(log n) rounds on any graph (vs O(diameter) for plain
+  *    label propagation, which a 10^8-node dup-chain would stall):
   *
-  * Both steps preserve connectivity exactly (each replaced edge (v,x) is
-  * substituted by a path v–m–x inside the emitted set) and never introduce
-  * cross-component edges, so the fixpoint — a star forest rooted at each
-  * component's minimum id — labels every node with exactly the component
-  * min. Everything is joins + partial-aggregating groupBys on Long pairs:
-  * no collect_list (a hub node's neighborhood never materializes in one
-  * buffer — the min is a streaming agg and the re-link is a join), no UDF,
-  * no driver-side data. Each round MATERIALIZES its edge set with an eager
-  * `localCheckpoint` — each round's plan references the previous round's
-  * edges four times, so without lineage truncation the logical plan tree
-  * doubles every round and Catalyst analysis goes exponential (~round 18 it
-  * stalls the driver; observed, not theoretical) — then compares a
-  * (count, bit_xor-of-hashes) fingerprint against the previous round for
-  * convergence; at 100 TB each round is two shuffles over a shrinking edge
-  * list and the O(log n) bound keeps the round count ~20 even at 10^9
-  * nodes. (On a multi-executor cluster swap `localCheckpoint` for
-  * `checkpoint` against the job's reliable checkpoint dir: same lineage
-  * truncation, executor-loss-safe.)
+  *      large-star: every node u links each STRICTLY LARGER neighbor to the
+  *        minimum of its closed neighborhood m(u) = min(N(u) ∪ {u});
+  *      small-star: on the canonical (parent > child) edge list, every node
+  *        u re-links its smaller neighbors (and itself) to m(u).
+  *
+  *    Both steps preserve connectivity exactly (each replaced edge (v,x) is
+  *    substituted by a path v–m–x inside the emitted set, so no node is
+  *    ever dropped) and never introduce cross-component edges, so the
+  *    fixpoint — a star forest rooted at each component's minimum id —
+  *    labels every node with exactly the component min. Everything is
+  *    joins + partial-aggregating groupBys on Long pairs: no collect_list
+  *    (a hub node's neighborhood never materializes in one buffer — the
+  *    min is a streaming agg and the re-link is a join), no UDF. Each
+  *    round MATERIALIZES its edge set with an eager `localCheckpoint` —
+  *    each round's plan references the previous round's edges four times,
+  *    so without lineage truncation the logical plan tree doubles every
+  *    round and Catalyst analysis goes exponential (~round 18 it stalls
+  *    the driver; observed, not theoretical) — then compares a
+  *    (count, bit_xor-of-hashes) fingerprint against the previous round
+  *    for convergence; at 100 TB each round is two shuffles over a
+  *    shrinking edge list and the O(log n) bound keeps the round count ~20
+  *    even at 10^9 nodes. Shuffle widths are the session's; AQE's
+  *    post-shuffle coalescing sizes each round to its edge list.
+  *    (On a multi-executor cluster swap `localCheckpoint` for `checkpoint`
+  *    against the job's reliable checkpoint dir: same lineage truncation,
+  *    executor-loss-safe.)
+  *  - AT OR BELOW the bound (from the start, or once the rounds have
+  *    shrunk the edge list that far): the edges are coalesced into ONE
+  *    task that runs union-find, linking the larger root under the smaller,
+  *    so every root is its component's minimum — the same labels the
+  *    rounds converge to, without their per-round jobs and planning.
+  *
+  * No session conf is read or set: a caller's concurrent queries see the
+  * session exactly as they left it.
   *
   * No reference counterpart (builder-brief addition: dedup at training-data
   * scale, like [[VectorLsh]]/[[VectorIvf]]).
@@ -59,9 +74,18 @@ object ConnectedComponents {
   def run(edges: DataFrame, maxIter: Int = 50): DataFrame =
     runWithRounds(edges, maxIter)._1
 
-  /** As [[run]], also returning the number of large-star/small-star rounds
-    * the fixpoint took — scale evidence against the O(log n) bound. */
-  def runWithRounds(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
+  /** As [[run]], also returning the number of distributed
+    * large-star/small-star rounds run before the labels were finished —
+    * scale evidence against the O(log n) bound (0 when the whole graph
+    * fits the one-task finish). */
+  def runWithRounds(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) =
+    components(edges, maxIter)
+
+  /** [[runWithRounds]] with the one-task bound `localEdges` (edge count at
+    * or below which the labels are finished in one task) as a parameter,
+    * so tests can force either regime: 0 runs the rounds to the end. */
+  private[text] def components(edges: DataFrame, maxIter: Int,
+      localEdges: Long = 250000L): (DataFrame, Int) = {
     val src = edges.columns(0)
     val dst = edges.columns(1)
     // canonical undirected edge list: (hi > lo), no self-loops, distinct
@@ -71,48 +95,11 @@ object ConnectedComponents {
       .filter(col("hi") =!= col("lo"))
       .distinct()
       .localCheckpoint(true)
-    val nodes = e.select(col("hi").as("node"))
-      .union(e.select(col("lo").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // SCALE-ADAPTIVE loop partitioning (guide §2.2/§2.5): each round is
-    // four shuffles over the (shrinking) edge list, so running them at the
-    // session's shuffle.partitions costs partitions × rounds empty-task
-    // overheads on small graphs (64 × 4 × rounds tasks for a few hundred
-    // edges at verify scale). Derive the loop's width from the MEASURED
-    // canonical edge count — ~250k edge rows (≈ 4 MB) per task, clamped to
-    // the session setting so a big graph under a big session keeps its
-    // parallelism. The count is free: `e` was just materialized by the
-    // eager checkpoint. Conf is set around the loop and restored in
-    // `finally`; every job the loop runs (checkpoints, fingerprints,
-    // invariant checks, final label build) executes inside the window, and
-    // the returned labels are materialized before restore.
-    val spark = edges.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(1L, math.min(sessionParts.toLong,
-      e.count() / 250000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevCodegen = spark.conf.get("spark.sql.codegen.wholeStage")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      // At one partition there is nothing for AQE to re-plan (every
-      // shuffle still becomes a separate stage-materialization submission)
-      // and nothing for whole-stage codegen to win (each round is a FRESH
-      // plan, so its generated classes compile cold: measured ~300 ms of
-      // the ~560 ms round cost on a 256-edge graph was first-execution
-      // compile, and interpreted execution of a one-task round is
-      // equivalent). Multi-partition loops (big graphs) keep both.
-      if (loopParts == 1) {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      }
 
     var fp = fingerprint(e)
     var converged = false
     var it = 0
-    while (!converged && it < maxIter) {
+    while (!converged && fp._1 > localEdges && it < maxIter) {
       // LARGE-STAR on the symmetrized adjacency. For u's group the closed-
       // neighborhood min is m = least(min(v), u); every neighbor v > u
       // re-links to m. Under canonical input each undirected edge {a,b}
@@ -153,30 +140,58 @@ object ConnectedComponents {
       it += 1
     }
 
-    // Star-forest invariant, asserted not assumed: no node is both a parent
-    // and a child (a chain would label with a non-root), and every parent
-    // has exactly one root.
-    val chains = e.select(col("hi").as("n")).intersect(e.select(col("lo").as("n"))).limit(1).count()
-    val multi = e.groupBy(col("hi")).agg(countDistinct(col("lo")).as("k"))
-      .filter(col("k") > 1).limit(1).count()
-    if (!converged || chains != 0 || multi != 0) {
-      e.unpersist(); nodes.unpersist()
-      throw new IllegalStateException(
-        s"connected components did not reach a star forest in $maxIter rounds " +
-          s"(converged=$converged chains=$chains multiParent=$multi)")
-    }
-
-    val labels = e.select(col("hi").as("node"), col("lo").as("rep"))
-    val roots = nodes.join(e.select(col("hi").as("node")), Seq("node"), "left_anti")
-      .select(col("node"), col("node").as("rep"))
-    val result = labels.union(roots).localCheckpoint(true)
-    e.unpersist(); nodes.unpersist()
+    val result =
+      if (fp._1 <= localEdges) {
+        val sess = e.sparkSession
+        import sess.implicits._
+        e.coalesce(1).as[(Long, Long)].mapPartitions(unionFind)
+          .toDF("node", "rep").localCheckpoint(true)
+      } else {
+        // Star-forest invariant, asserted not assumed: no node is both a
+        // parent and a child (a chain would label with a non-root), and
+        // every parent has exactly one root.
+        val chains = e.select(col("hi").as("n")).intersect(e.select(col("lo").as("n"))).limit(1).count()
+        val multi = e.groupBy(col("hi")).agg(countDistinct(col("lo")).as("k"))
+          .filter(col("k") > 1).limit(1).count()
+        if (!converged || chains != 0 || multi != 0) {
+          e.unpersist()
+          throw new IllegalStateException(
+            s"connected components did not reach a star forest in $maxIter rounds " +
+              s"(converged=$converged chains=$chains multiParent=$multi)")
+        }
+        // every node survives the rounds, so in the star forest the
+        // non-roots are the parents (hi) and the roots are exactly the
+        // distinct children
+        val labels = e.select(col("hi").as("node"), col("lo").as("rep"))
+        val roots = e.select(col("lo").as("node"), col("lo").as("rep")).distinct()
+        labels.union(roots).localCheckpoint(true)
+      }
+    e.unpersist()
     (result, it)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.codegen.wholeStage", prevCodegen)
+  }
+
+  /** Union-find over one task's canonical `(hi, lo)` edges, emitting
+    * `(node, rep)` for every endpoint. Ids are sorted and compressed to
+    * indices, so linking the larger root index under the smaller keeps every
+    * root at its component's minimum id.
+    */
+  private def unionFind(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val es = edges.toArray
+    val ids = es.flatMap { case (h, l) => Array(h, l) }.distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val nxt = parent(y); parent(y) = r; y = nxt }
+      r
     }
+    es.foreach { case (h, l) =>
+      val a = find(java.util.Arrays.binarySearch(ids, h))
+      val b = find(java.util.Arrays.binarySearch(ids, l))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    Iterator.tabulate(ids.length)(k => (ids(k), ids(find(k))))
   }
 
   /** Cheap order-insensitive convergence fingerprint of an edge set:

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Spark-side IVF index lifecycle around [[VectorIvf]] — the production
@@ -62,7 +62,8 @@ object VectorIvfIndex {
   /** One probe batch against a (persisted) index: candidates from the
     * probes' `nprobe` nearest cells via a cluster equi-join, scored with
     * exact cosine. Pairs are unique by construction (single-cell storage),
-    * so no dedup shuffle precedes the caller's top-k read-out.
+    * so no dedup shuffle precedes the caller's top-1 read-out
+    * (`AnnQueries.top1`).
     * `probes` must carry (query_id, qe).
     */
   def search(index: DataFrame, probes: DataFrame,
@@ -75,12 +76,4 @@ object VectorIvfIndex {
       .select(col("query_id"), col("neighbor_id"),
         cosUdf(col("qe"), col("ne")).as("s"))
   }
-
-  /** Deterministic top-1 read-out (ties to the lowest neighbor_id) —
-    * partial-aggregatable max_by, no per-group sort shuffle.
-    */
-  def top1(candidates: DataFrame, as: String = "top1"): DataFrame =
-    candidates.groupBy(col("query_id"))
-      .agg(max_by(col("neighbor_id"),
-        struct(col("s"), (-col("neighbor_id")).as("nid"))).as(as))
 }

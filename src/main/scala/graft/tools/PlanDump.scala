@@ -63,11 +63,11 @@ object PlanDump {
     dump("q_bloom_join_filter (bloom prefilter on the fact side BEFORE the join — runtime row-level filtering with the library's own sketch; ONE fact scan, conditional agg for pass/match stats)",
       graft.SparkEntry.queries("q_bloom_join_filter")(spark, sf))
     // q_neardup_components is NOT dumped: ConnectedComponents.run executes
-    // eagerly (per-round eager localCheckpoint — lineage truncation is the
-    // correctness-critical design point, see its scaladoc), so the returned
-    // frame's plan is just a checkpoint scan; the per-round shape is two
-    // groupBy-min shuffles + two joins over the shrinking canonical edge
-    // list, asserted by ConnectedComponentsSpec rather than inspected here.
+    // eagerly (a one-task union-find at or below 250k edges, else rounds
+    // with a per-round eager localCheckpoint — see its scaladoc), so the
+    // returned frame's plan is just a checkpoint scan. Both regimes, their
+    // handover and the untouched session confs are asserted by
+    // ConnectedComponentsSpec rather than inspected here.
 
     // the q_ann_ivf_index operator runs eagerly (two probe batches against
     // one persisted index), so dump its SEARCH plan explicitly: the probe
@@ -88,7 +88,8 @@ object PlanDump {
           .select(col("vec_id").as("query_id"),
             tfns.perturbUdf(col("embedding"), col("vec_id"), lit(PerturbEps)).as("qe"))
         dump("q_ann_ivf_index probe batch (persisted assign-once index: InMemoryTableScan, no re-assign)",
-          VectorIvfIndex.top1(VectorIvfIndex.search(index, probes, cents, nprobe = NProbe), "ivf_top1"))
+          graft.text.AnnQueries.top1(
+            VectorIvfIndex.search(index, probes, cents, nprobe = NProbe), "ivf_top1"))
       } finally index.unpersist()
     }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sketch.core.XxHash64
 
@@ -93,17 +93,14 @@ object ScaleHeadroom {
     v
   }
 
-  private def ensure(spark: SparkSession, dir: String)(build: => DataFrame): Unit = {
-    val ok = new java.io.File(s"$dir/_OK")
-    if (!ok.exists()) {
-      build.write.mode("overwrite").parquet(
-        s"$dir/${if (dir.contains("vec")) "embeddings" else "documents"}.parquet")
-      ok.getParentFile.mkdirs(); ok.createNewFile()
-    }
-  }
-
+  /** Runs every row, or only the rows named in `args` (an unknown name
+    * fails before anything runs). Only a full run rewrites
+    * SCALE_HEADROOM.md and scale_headroom.json; a named run prints its rows.
+    * The master is `local[$SPARK_GRAFT_CPUS]` (default 32).
+    */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", 64)
       .config("spark.ui.enabled", "false")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
@@ -115,8 +112,20 @@ object ScaleHeadroom {
     val genTextUdf = udf((id: Long, variant: Int) => genText(id, variant))
     val genVecUdf = udf((id: Long) => genVec(id))
 
-    val t0 = System.nanoTime()
-    ensure(spark, s"$base/docs200k") {
+    // Tables are generated on first use by a row and cached under `base`
+    // (an `_OK` marker per dir); generation time is kept out of row times.
+    var genNanos = 0L
+    def table(dir: String)(write: => Unit): String = {
+      val ok = new java.io.File(s"$dir/_OK")
+      if (!ok.exists()) {
+        val t = System.nanoTime()
+        write
+        ok.getParentFile.mkdirs(); ok.createNewFile()
+        genNanos += System.nanoTime() - t
+      }
+      dir
+    }
+    lazy val d200 = table(s"$base/docs200k") {
       val orig = spark.range(0, DocsN, 1, 32)
         .select(col("id").as("doc_id"), genTextUdf(col("id"), lit(0)).as("text"))
       val dups = spark.range(0, DocDupsN, 1, 4)
@@ -125,17 +134,20 @@ object ScaleHeadroom {
         .withColumn("lang", lit("en")).withColumn("source", lit("headroom"))
         .withColumn("n_chars", length(col("text")).cast("long"))
         .repartition(8)
+        .write.mode("overwrite").parquet(s"$base/docs200k/documents.parquet")
     }
-    ensure(spark, s"$base/docs50k") {
+    lazy val d50 = table(s"$base/docs50k") {
       // q_simhash_near_dup synthesizes its corpus from doc_id alone
       spark.range(0, SimhashDocsN, 1, 8)
         .select(col("id").as("doc_id"), lit("").as("text"),
           lit("en").as("lang"), lit("headroom").as("source"), lit(0L).as("n_chars"))
+        .write.mode("overwrite").parquet(s"$base/docs50k/documents.parquet")
     }
-    ensure(spark, s"$base/vec1m") {
+    lazy val v1m = table(s"$base/vec1m") {
       spark.range(0, VecN, 1, 32)
         .select(col("id").as("vec_id"), genVecUdf(col("id")).as("embedding"),
           (col("id") % 64).cast("int").as("label"))
+        .write.mode("overwrite").parquet(s"$base/vec1m/embeddings.parquet")
     }
     // decontamination corpus: disjoint-per-id token spaces mean NO natural
     // cross-doc gram sharing; a planted trainer (id = DeconOffset + 97k)
@@ -147,7 +159,7 @@ object ScaleHeadroom {
       if (id >= DeconOffset)
         genText(id, 0) + " " + genText(id - DeconOffset, 0).substring(0, 84)
       else genText(id, 0))
-    ensure(spark, s"$base/decon2m") {
+    lazy val decon = table(s"$base/decon2m") {
       val baseDocs = spark.range(0, DeconN, 1, 32)
         .select(col("id").as("doc_id"), genDeconUdf(col("id")).as("text"))
       val planted = spark.range(0, DeconPlantN, 1, 4)
@@ -157,47 +169,37 @@ object ScaleHeadroom {
         .withColumn("lang", lit("en")).withColumn("source", lit("headroom"))
         .withColumn("n_chars", length(col("text")).cast("long"))
         .repartition(16)
+        .write.mode("overwrite").parquet(s"$base/decon2m/documents.parquet")
     }
-    // bloom-join tables (two-table layout, so not via ensure())
-    locally {
-      val bjf = s"$base/bjf50m"
-      if (!new java.io.File(s"$bjf/_OK").exists()) {
-        spark.range(0, 10000, 1, 2)
-          .select(col("id").as("c_custkey"),
-            when(col("id") < 5000, 2).otherwise(7).as("c_nationkey"))
-          .write.mode("overwrite").parquet(s"$bjf/customer.parquet")
-        spark.range(0, BjfFactN, 1, 64)
-          .select((col("id") % 10000000L).as("user_id"),
-            (col("id") % 1000L).cast("double").as("value"))
-          .write.mode("overwrite").parquet(s"$bjf/events.parquet")
-        new java.io.File(s"$bjf/_OK").createNewFile()
-      }
+    lazy val bjf = table(s"$base/bjf50m") {
+      spark.range(0, 10000, 1, 2)
+        .select(col("id").as("c_custkey"),
+          when(col("id") < 5000, 2).otherwise(7).as("c_nationkey"))
+        .write.mode("overwrite").parquet(s"$base/bjf50m/customer.parquet")
+      spark.range(0, BjfFactN, 1, 64)
+        .select((col("id") % 10000000L).as("user_id"),
+          (col("id") % 1000L).cast("double").as("value"))
+        .write.mode("overwrite").parquet(s"$base/bjf50m/events.parquet")
     }
-    val genSec = (System.nanoTime() - t0) / 1e9
 
-    val results = scala.collection.mutable.LinkedHashMap[String, (Long, Double, String, Boolean)]()
-    def run(name: String, rows: Long)(body: => (String, Boolean)): Unit = {
-      val s0 = System.nanoTime()
-      val (outcome, ok) = body
-      val sec = (System.nanoTime() - s0) / 1e9
-      results(name) = (rows, sec, outcome, ok)
-      println(f"[headroom] $name%-28s ${sec}%8.2f s  ${rows / sec}%12.0f rows/s  ok=$ok  $outcome")
-    }
+    // rows register here and run after the name check, in this order
+    val registered = scala.collection.mutable.LinkedHashMap[String, (Long, () => (String, Boolean))]()
+    def row(name: String, rows: Long)(body: => (String, Boolean)): Unit =
+      registered(name) = (rows, () => body)
 
     // ---- VERBATIM rows through SparkEntry.queries ----
-    val d200 = s"$base/docs200k"; val d50 = s"$base/docs50k"; val v1m = s"$base/vec1m"
-    run("dedup_exact@202k", DocsN + DocDupsN) {
+    row("dedup_exact@202k", DocsN + DocDupsN) {
       val r = graft.SparkEntry.queries("q_dedup_exact")(spark, d200).collect()(0)
       (s"docs=${r.getLong(0)} distinct=${r.getLong(1)}",
         r.getLong(0) == DocsN + DocDupsN && r.getLong(1) == DocsN + DocDupsN)
     }
-    run("minhash_near_dup@202k", DocsN + DocDupsN) {
+    row("minhash_near_dup@202k", DocsN + DocDupsN) {
       val rows = graft.SparkEntry.queries("q_minhash_near_dup")(spark, d200).collect()
       val got = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
       val want = (0L until DocDupsN).map(i => (i, i + DocDupOffset)).toSet
       (s"pairs=${rows.length}/$DocDupsN planted", got == want)
     }
-    run("ngram_prefix_join@202k", DocsN + DocDupsN) {
+    row("ngram_prefix_join@202k", DocsN + DocDupsN) {
       // the exact prefix-filtered similarity join (q_ngram_jaccard_near_dup)
       // VERBATIM — no pinned blocking constants to re-size: the prefix length
       // adapts per document (sz − ⌈0.8·sz⌉ + K) and the K=12 count gate is a
@@ -213,16 +215,16 @@ object ScaleHeadroom {
       val want = (0L until DocDupsN).map(i => (i, i + DocDupOffset)).toSet
       (s"pairs=${rows.length}/$DocDupsN planted", got == want)
     }
-    run("simhash_near_dup@50k", SimhashDocsN) {
+    row("simhash_near_dup@50k", SimhashDocsN) {
       val rows = graft.SparkEntry.queries("q_simhash_near_dup")(spark, d50).collect()
       (s"pairs=${rows.length}/40 planted", rows.length == 40)
     }
-    run("ivf_recall_pivot@1M", VecN) {
+    row("ivf_recall_pivot@1M", VecN) {
       val r = graft.SparkEntry.queries("q_ann_ivf_recall")(spark, v1m).collect()(0)
       (s"recall_ok=${r.getBoolean(1)} prune_ok=${r.getBoolean(2)}",
         r.getBoolean(1) && r.getBoolean(2))
     }
-    run("ivf_index_kmeans@1M", VecN) {
+    row("ivf_index_kmeans@1M", VecN) {
       val r = graft.SparkEntry.queries("q_ann_ivf_index")(spark, v1m).collect()(0)
       (s"recall_ok=${r.getBoolean(1)} assign_once_ok=${r.getBoolean(3)}",
         r.getBoolean(1) && r.getBoolean(3))
@@ -230,12 +232,12 @@ object ScaleHeadroom {
 
     // ---- SCALE-SIZED hyperplane-LSH pipelines (the query functions,
     // bits = log2(N / target occupancy)) ----
-    val emb = spark.read.parquet(s"$v1m/embeddings.parquet")
+    lazy val emb = spark.read.parquet(s"$v1m/embeddings.parquet")
 
     // brute-force spot check on 20 probes: the planted truth (a probe's
     // nearest neighbor is its perturbation source at cos ≈ 0.97; the max
     // random cross-cosine at N=1e6, d=64 is ≈ 0.66) holds on this table
-    run("bf_truth_spotcheck@1M", 20L * VecN) {
+    row("bf_truth_spotcheck@1M", 20L * VecN) {
       val probes = broadcast(emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"),
           tfns.perturbUdf(col("embedding"), col("vec_id"), lit(0.15)).as("qe")))
@@ -246,12 +248,12 @@ object ScaleHeadroom {
       (s"bf_top1==source for $bf/20", bf == 20L)
     }
 
-    run("lsh_recall_18bit@1M", VecN) {
+    row("lsh_recall_18bit@1M", VecN) {
       val (_, top) = graft.text.AnnQueries.lshTop1(emb, 18, 12)
       val hits = top.filter(col("lsh_top1") === col("query_id")).count()
       (s"recall@1=$hits/200 (truth=source, spot-checked)", hits >= 180L)
     }
-    run("embed_near_dup_20bitx48@1M", VecN) {
+    row("embed_near_dup_20bitx48@1M", VecN) {
       val got = graft.text.AnnQueries.embedNearDups(emb, 20, 48).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val want = (0L until 50L).map(i => (i, i + graft.text.DedupQueries.SynthDupOffset)).toSet
@@ -266,7 +268,7 @@ object ScaleHeadroom {
     // PREVIOUS chunk's keys 30 min later (cross-batch duplicates, well
     // inside the 3 h watermark window, so suppression is guaranteed by the
     // semantics, not by luck): the emitted count must be exactly 1M.
-    run("stream_dedup_rocksdb@1.15M", 1150000L) {
+    row("stream_dedup_rocksdb@1.15M", 1150000L) {
       import java.nio.file.{Files, StandardCopyOption}
       val work = Files.createTempDirectory("headroom-stream-dedup")
       try {
@@ -358,7 +360,7 @@ object ScaleHeadroom {
     // pinned by DedupSemanticsProbeSpec), and the state store's
     // numRowsTotal must peak at ~2 chunks of keys (<= 700k) — an unbounded
     // dropDuplicates would hold all 2.2M.
-    run("stream_dedup_bounded_state@2.55M", 2550000L) {
+    row("stream_dedup_bounded_state@2.55M", 2550000L) {
       import java.nio.file.{Files, StandardCopyOption}
       val work = Files.createTempDirectory("headroom-bounded-dedup")
       try {
@@ -439,7 +441,7 @@ object ScaleHeadroom {
       }
     }
 
-    run("tree_merge_10k_ckpts", 10000L) {
+    row("tree_merge_10k_ckpts", 10000L) {
       // SketchJob.mergeDeterministic at the 100 TB merge envelope: ~10k
       // checkpoint chunks (the checkpointChunks sizing that keeps checkpoint
       // volume ~0.1% of a 100 TB input). Each synthetic chunk carries REAL
@@ -501,7 +503,7 @@ object ScaleHeadroom {
       } finally parts.unpersist()
     }
 
-    run("connected_components@2M", 2000000L) {
+    row("connected_components@2M", 2000000L) {
       // the near-dup CLUSTERING step (q_neardup_components runs it on a
       // ~500-node pair graph) at 4,000× that: 2M nodes / ~2M edges with
       // closed-form component truth and the two adversarial shapes —
@@ -539,7 +541,7 @@ object ScaleHeadroom {
     // inside a tie run, doc_id carries the order) and tokens cycle 1..7,
     // so the kept set has a closed form the gate recomputes independently
     // with a driver-side O(n) simulation of the selection rule.
-    run("token_budget@20M", 20000000L) {
+    row("token_budget@20M", 20000000L) {
       val n = 20000000L; val enN = 19000000L
       val prof = spark.range(0, n, 1, 64).select(
         col("id").as("doc_id"),
@@ -582,8 +584,8 @@ object ScaleHeadroom {
     // big-side exchanges, and the contaminated set must be EXACTLY the
     // 2,000 planted trainers (disjoint-per-id token spaces make any other
     // hit impossible; a missed full-gram copy is a recall failure).
-    run("decontaminate@2M", DeconN + DeconPlantN) {
-      val rows = graft.SparkEntry.queries("q_decontaminate")(spark, s"$base/decon2m").collect()
+    row("decontaminate@2M", DeconN + DeconPlantN) {
+      val rows = graft.SparkEntry.queries("q_decontaminate")(spark, decon).collect()
       val got = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val want = (0L until DeconPlantN).map(k => (DeconOffset + 97L * k, 1L, 1L)).toSet
       (s"contaminated=${rows.length}/$DeconPlantN planted, ~20.6k-doc eval slice broadcast",
@@ -596,8 +598,8 @@ object ScaleHeadroom {
     // then the exact join; every output column has a closed form. matched =
     // keys 0..4,999 × 5 occurrences; value = id % 1000 and 10M ≡ 0 (mod
     // 1000), so value_sum_milli = 5 · Σ_{k<5000}(k%1000)·1000.
-    run("bloom_join@50M", BjfFactN) {
-      val r = graft.SparkEntry.queries("q_bloom_join_filter")(spark, s"$base/bjf50m").collect()(0)
+    row("bloom_join@50M", BjfFactN) {
+      val r = graft.SparkEntry.queries("q_bloom_join_filter")(spark, bjf).collect()(0)
       val wantSum = 5L * 5L * (999L * 1000L / 2L) * 1000L
       (s"matched_rows=${r.getAs[Long]("matched_rows")}/25000 users=" +
         s"${r.getAs[Long]("matched_users")}/5000 prefilter_ok=${r.getAs[Boolean]("prefilter_ok")}",
@@ -607,7 +609,28 @@ object ScaleHeadroom {
           r.getAs[Boolean]("prefilter_ok"))
     }
 
-    // ---- report ----
+    val unknown = args.filterNot(registered.contains)
+    require(unknown.isEmpty,
+      s"unknown row(s) ${unknown.mkString(", ")}; rows: ${registered.keys.mkString(", ")}")
+    val results = scala.collection.mutable.LinkedHashMap[String, (Long, Double, String, Boolean)]()
+    registered.foreach { case (name, (rows, body)) =>
+      if (args.isEmpty || args.contains(name)) {
+        val g0 = genNanos
+        val s0 = System.nanoTime()
+        val (outcome, ok) = body()
+        val sec = (System.nanoTime() - s0 - (genNanos - g0)) / 1e9
+        results(name) = (rows, sec, outcome, ok)
+        println(f"[headroom] $name%-28s ${sec}%8.2f s  ${rows / sec}%12.0f rows/s  ok=$ok  $outcome")
+      }
+    }
+    val genSec = genNanos / 1e9
+    if (args.isEmpty) report(results, genSec)
+    else println(f"[headroom] table generation $genSec%.1f s; named rows only, report files not rewritten")
+    spark.stop()
+  }
+
+  private def report(results: scala.collection.Map[String, (Long, Double, String, Boolean)],
+      genSec: Double): Unit = {
     val json = new StringBuilder("{\"gen_sec\":" + f"$genSec%.1f" + ",\"ops\":{")
     json.append(results.map { case (n, (rows, sec, out, ok)) =>
       f""""$n":{"rows":$rows,"sec":$sec%.2f,"rows_per_sec":${rows / sec}%.0f,"ok":$ok,"outcome":"$out"}"""
@@ -760,6 +783,5 @@ object ScaleHeadroom {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("/root/repo/SCALE_HEADROOM.md"), md.toString)
     println("[headroom] wrote SCALE_HEADROOM.md + scale_headroom.json")
-    spark.stop()
   }
 }

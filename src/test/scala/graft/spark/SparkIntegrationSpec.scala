@@ -834,7 +834,7 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("IVF index lifecycle: fit from hash-sample, assign once, reuse across probe batches") {
-    import graft.text.{TextFunctions, VectorIvfIndex, VectorLsh}
+    import graft.text.{AnnQueries, TextFunctions, VectorIvfIndex, VectorLsh}
     import graft.sketch.core.XxHash64
     val sp = spark
     import sp.implicits._
@@ -867,8 +867,8 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       }.toDF("query_id", "qe")
     val all = vecs.toMap
     def check(ids: Seq[Int]): Unit = {
-      val got = VectorIvfIndex.top1(
-        VectorIvfIndex.search(index, probeBatch(ids), cents1, nprobe = 2))
+      val got = AnnQueries.top1(
+        VectorIvfIndex.search(index, probeBatch(ids), cents1, nprobe = 2), "top1")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       var hits = 0
       ids.foreach { id =>

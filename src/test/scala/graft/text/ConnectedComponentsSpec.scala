@@ -1,13 +1,22 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Connected components (large-star/small-star): planted shapes, equality
-  * with a brute-force union-find on seeded random graphs, the O(log n)
-  * round bound on a long path (plain propagation would need diameter
-  * rounds and trip maxIter), and invariance to input presentation.
+/** Connected components (large-star/small-star rounds, one-task union-find
+  * finish): planted shapes, equality with a brute-force union-find on
+  * seeded random graphs, the O(log n) round bound on a long path (plain
+  * propagation would need diameter rounds and trip maxIter), and invariance
+  * to input presentation. Every case runs both regimes — the bound forced
+  * to 0 (distributed rounds to the fixpoint) and the default (one-task
+  * finish) — and asserts equal labels; the handover between them and the
+  * session's confs are checked too.
   */
 class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -25,10 +34,20 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = { if (spark != null) spark.stop() }
 
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Labels of `df` through both regimes, asserted equal. */
+  private def runBoth(df: DataFrame, maxIter: Int = 50): Map[Long, Long] = {
+    val rounds = labels(ConnectedComponents.components(df, maxIter, localEdges = 0)._1)
+    val local = labels(ConnectedComponents.components(df, maxIter)._1)
+    assert(rounds == local, "distributed rounds and one-task finish disagree")
+    local
+  }
+
   private def run(edges: Seq[(Long, Long)], maxIter: Int = 50): Map[Long, Long] = {
     val ss = spark; import ss.implicits._
-    ConnectedComponents.run(edges.toDF("a", "b"), maxIter)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    runBoth(edges.toDF("a", "b"), maxIter)
   }
 
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -88,8 +107,79 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = run(edges)
     val shuffled = rnd.shuffle(edges.map { case (a, b) => (b, a) })
     val df = shuffled.toDF("x", "y").repartition(7)
-    val got = ConnectedComponents.run(df)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = runBoth(df)
     assert(got == base)
+  }
+
+  test("chain plus hub: both regimes label like union-find") {
+    // a 200-node chain whose middle node is also the hub of a 100-leaf
+    // star, plus a separate hub whose leaves sit below and above it
+    val chain = (1000L until 1199L).map(i => (i, i + 1))
+    val hub = (2000L until 2100L).map(i => (1100L, i))
+    val star = (1L to 50L).map(i => (500L, i)) ++ (501L to 550L).map(i => (i, 500L))
+    val edges = chain ++ hub ++ star
+    val got = run(edges)
+    assert(got == unionFind(edges))
+    assert(got.values.toSet == Set(1000L, 1L))
+  }
+
+  test("the rounds hand over to the one-task finish once the edge list fits the bound") {
+    val ss = spark; import ss.implicits._
+    // dense random graph: 600 edges over 60 nodes shrink toward a star
+    // forest of at most 59 edges, so a 150-edge bound is crossed mid-run
+    val rnd = new scala.util.Random(3)
+    val edges = Seq.fill(600)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      .filter { case (a, b) => a != b }
+    val initial = edges.map { case (a, b) => (math.max(a, b), math.min(a, b)) }.distinct.size
+    assert(initial > 150)
+    val df = edges.toDF("a", "b")
+    val (full, fullRounds) = ConnectedComponents.components(df, 50, localEdges = 0)
+    val (mid, midRounds) = ConnectedComponents.components(df, 50, localEdges = 150)
+    assert(midRounds > 0 && midRounds < fullRounds,
+      s"expected a mid-run handover: $midRounds of $fullRounds rounds")
+    assert(labels(mid) == labels(full))
+    assert(labels(mid) == unionFind(edges))
+  }
+
+  test("neither regime changes the session's shuffle, AQE or codegen confs") {
+    val ss = spark; import ss.implicits._
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+      "spark.sql.codegen.wholeStage")
+    val session = keys.map(k => k -> spark.conf.get(k)).toMap
+    val marker = "graft.test.cc.marker"
+    // each job's view: the live session conf when the listener sees the
+    // job, and the SQL confs the job was submitted with (its properties)
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit = {
+        if (job.properties != null && job.properties.getProperty(marker) != null) drained = true
+        else keys.foreach { k =>
+          seen.add(k -> spark.conf.get(k))
+          Option(job.properties).flatMap(p => Option(p.getProperty(k))).foreach(v => seen.add(k -> v))
+        }
+      }
+    }
+    val edges = (0L until 99L).map(i => (i, i + 1)).toDF("a", "b")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (bound <- Seq(0L, 250000L)) {
+        seen.clear(); drained = false
+        labels(ConnectedComponents.components(edges, 50, localEdges = bound)._1)
+        // a marker job after the run: once the listener has seen it, it
+        // has seen every job the run submitted
+        spark.sparkContext.setLocalProperty(marker, "1")
+        try spark.sparkContext.parallelize(Seq(1)).count()
+        finally spark.sparkContext.setLocalProperty(marker, null)
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(drained, "listener never saw the marker job")
+        val views = seen.asScala.toSeq
+        assert(views.nonEmpty, s"bound=$bound ran no jobs")
+        val off = views.filter { case (k, v) => session(k) != v }.distinct
+        assert(off.isEmpty, s"bound=$bound: jobs ran under $off, session has $session")
+        keys.foreach(k => assert(spark.conf.get(k) == session(k)))
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
