@@ -195,7 +195,12 @@ object HllSketch {
       val n = Codec.readCount(bb, 5)
       val map = scala.collection.mutable.HashMap.empty[Int, Byte]
       var i = 0
-      while (i < n) { map.update(bb.getInt(), bb.get()); i += 1 }
+      while (i < n) {
+        val idx = bb.getInt(); val rho = bb.get() // a SparseP-bit index, rho in [1, 65 - SparseP]
+        if (idx < 0 || idx >= (1 << SparseP) || rho < 1 || rho > 65 - SparseP) throw Codec.corrupt(
+          Codec.TagHll, bb.position() - 5, s"sparse HLL entry (index $idx, rho $rho) out of range")
+        map.update(idx, rho); i += 1
+      }
       new HllSketch(p, null, map)
     } else {
       val regs = new Array[Byte](1 << p)

@@ -157,7 +157,7 @@ object AnnQueries {
     val rawBanded = emb.select(col("vec_id"),
       explode(tfns.annBucketsParamUdf(col("embedding"), lit(bits), lit(tables))).as("bucket"))
     val candIds = rawBanded.filter(gate.routed(col("bucket")))
-      // cap enforced at ingest (CappedIdsAgg buffer never exceeds cap+1),
+      // cap enforced at ingest (the capped buffer never exceeds cap+1),
       // so a degenerate hot bucket costs O(cap) memory and is dropped
       .groupBy(col("bucket"))
       .agg(tfns.cappedIdsAgg(LshBucketCap)(col("vec_id")).as("ids"))

@@ -3,9 +3,8 @@ package graft.text
 import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
-import org.apache.spark.sql.functions.{udaf, udf}
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 import graft.sketch.core.XxHash64
 
@@ -328,8 +327,8 @@ object TextFunctions {
     * Duplicate ids (possible only if the caller's id space collides) yield
     * no self-pair.
     */
-  def idPairs(ids: Seq[Long]): Seq[IdPair] = {
-    val a = ids.toArray
+  def idPairs(ids: Array[Long]): Seq[IdPair] = {
+    val a = ids.clone()
     java.util.Arrays.sort(a)
     val out = Vector.newBuilder[IdPair]
     var i = 0
@@ -351,14 +350,15 @@ object TextFunctions {
   case class TaggedPair(id_a: Long, tag_a: Long, id_b: Long, tag_b: Long)
 
   /** All unordered id pairs within one capped bucket whose occupants are
-    * interleaved `[id0, tag0, id1, tag1, …]` (the [[CappedTaggedIdsAgg]]
-    * output shape). Carrying the payload through banding is what lets the
-    * caller skip the two join-backs that re-derive it: at table scale the
-    * join-back costs two extra shuffles PLUS a second and third full pass
-    * of the fingerprint UDF over the corpus, versus 8 bytes per banded row
-    * here. Duplicate ids yield no self-pair, mirroring [[idPairs]].
+    * interleaved `[id0, tag0, id1, tag1, …]` (the
+    * [[CappedBucketAgg.TaggedIds]] output shape). Carrying the payload
+    * through banding is what lets the caller skip the two join-backs that
+    * re-derive it: at table scale the join-back costs two extra shuffles
+    * PLUS a second and third full pass of the fingerprint UDF over the
+    * corpus, versus 8 bytes per banded row here. Duplicate ids yield no
+    * self-pair, mirroring [[idPairs]].
     */
-  def taggedPairs(xs: Seq[Long]): Seq[TaggedPair] = {
+  def taggedPairs(xs: Array[Long]): Seq[TaggedPair] = {
     val n = xs.length / 2
     val idx = Array.tabulate(n)(identity)
     val ids = new Array[Long](n)
@@ -380,181 +380,17 @@ object TextFunctions {
     }
     out.result()
   }
+  /** [[taggedPairs]] over a collected interleaved bucket. */
+  def taggedPairs(xs: Seq[Long]): Seq[TaggedPair] = taggedPairs(xs.toArray)
 
-  /** The JDK's array-growth ceiling (`ArraysSupport.SOFT_MAX_ARRAY_LENGTH`). */
-  private[text] val MaxBufferSlots: Int = Int.MaxValue - 8
-
-  /** `b`, or a copy grown (doubling) to hold `need` slots. The capped aggs
-    * bound the occupant count, but a framed occupant's length comes from
-    * input, so a need past [[MaxBufferSlots]] fails here, typed and with
-    * the slot count, not later with an index or VM-limit error.
-    */
-  private[text] def ensureSlots(b: Array[Long], need: Long): Array[Long] =
-    if (need <= b.length) b
-    else if (need > MaxBufferSlots)
-      throw new IllegalArgumentException(
-        s"capped bucket buffer needs $need slots, over the $MaxBufferSlots-slot array limit")
-    else java.util.Arrays.copyOf(b, math.min(math.max(2L * b.length, need),
-      MaxBufferSlots.toLong).toInt)
-
-  /** Shared cap-enforcement core for bucket occupant collection, with the
-    * cap enforced at INGEST: one occupant is `stride` consecutive Long
-    * slots in a flat buffer, and the buffer never holds more than
-    * `cap + 1` occupants (`stride·(cap+1)` slots), so a degenerate hot
-    * bucket (millions of rows under one band key — boilerplate/empty
-    * docs, near-zero vectors) costs O(cap) memory instead of
-    * materializing the whole bucket before a size filter. A result with
-    * more than `cap` occupants means "overflowed — drop this bucket"
-    * (the extra occupant is the overflow marker). Overflow propagates
-    * through `merge` in every merge order: once either side has reached
-    * `cap + 1` occupants the merged buffer has too.
-    */
-  sealed abstract class CappedOccupantsAgg[IN](cap: Int, stride: Int)
-      extends Aggregator[IN, Array[Long], Array[Long]] {
-    /** Write the occupant's `stride` slots at `b(p)…b(p+stride-1)` and
-      * return true, or write nothing and return false (null occupant);
-      * called only while the buffer is below `cap + 1` occupants and with
-      * `stride` slots of capacity guaranteed.
-      */
-    protected def write(v: IN, b: Array[Long], p: Int): Boolean
-    // Buffer layout: slot 0 = used length (header included), occupant
-    // slots from index 1; physical capacity grows geometrically. A flat
-    // primitive Array[Long] with the Catalyst array encoder replaces the
-    // original kryo-serialized ArrayBuffer[Long]: partial-aggregate
-    // buffers cross the exchange as UnsafeArrayData (8 B/slot, no boxing,
-    // no kryo object graph) — measured ~2x on the bucket-heavy near-dup
-    // aggregations. Logical content and cap semantics are IDENTICAL
-    // (cap + 1 occupants max, overflow marker preserved through merge).
-    final def zero: Array[Long] = { val b = new Array[Long](1 + 8 * stride); b(0) = 1; b }
-    final def reduce(b0: Array[Long], v: IN): Array[Long] = {
-      val used = b0(0).toInt
-      if (used - 1 > stride * cap) return b0
-      val b = ensureSlots(b0, used + stride)
-      if (write(v, b, used)) b(0) = used + stride
-      b
-    }
-    final def merge(a0: Array[Long], c: Array[Long]): Array[Long] = {
-      val cUsed = c(0).toInt
-      var a = a0
-      var i = 1
-      while (a(0).toInt - 1 <= stride * cap && i + stride <= cUsed) {
-        val p = a(0).toInt
-        a = ensureSlots(a, p + stride)
-        System.arraycopy(c, i, a, p, stride)
-        a(0) = p + stride
-        i += stride
-      }
-      a
-    }
-    final def finish(b: Array[Long]): Array[Long] =
-      java.util.Arrays.copyOfRange(b, 1, b(0).toInt)
-    final def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    final def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  /** Ingest-capped bucket occupant collection (see [[CappedOccupantsAgg]];
-    * stride 1 — occupants are bare ids).
-    */
-  final class CappedIdsAgg(cap: Int) extends CappedOccupantsAgg[java.lang.Long](cap, 1) {
-    protected def write(v: java.lang.Long, b: Array[Long], p: Int): Boolean = {
-      if (v == null) return false
-      b(p) = v.longValue(); true
-    }
-  }
-
-  /** [[CappedIdsAgg]] variant whose occupants carry a 64-bit payload:
-    * collects `(id, tag)` as an interleaved Long array (`[id0, tag0, …]` —
-    * flat primitives keep the buffer/result codec trivial; stride 2 in
-    * [[CappedOccupantsAgg]] terms, same `cap + 1`-occupants invariant).
-    */
-  final class CappedTaggedIdsAgg(cap: Int)
-      extends CappedOccupantsAgg[(java.lang.Long, java.lang.Long)](cap, 2) {
-    protected def write(v: (java.lang.Long, java.lang.Long), b: Array[Long], p: Int)
-        : Boolean = {
-      if (v == null || v._1 == null || v._2 == null) return false
-      b(p) = v._1.longValue(); b(p + 1) = v._2.longValue(); true
-    }
-  }
-
-  /** Normalize a Long-array argument to the primitive array (mirror of
-    * [[floats]] — same quadratic-List / boxing hazard).
-    */
-  def longs(s: Seq[Long]): Array[Long] = s match {
-    case w: scala.collection.immutable.ArraySeq.ofLong => w.unsafeArray
-    case _                                             => s.toArray
-  }
-
-  /** Ingest-capped bucket collection of VARIABLE-length occupants for the
-    * prefix-filtered similarity join: one occupant is the frame
-    * `[len, xid, g_1 … g_len]` (its id + its full sorted prefix-token
-    * array) appended to a flat Long buffer; occupant COUNT is capped at
-    * ingest exactly like [[CappedOccupantsAgg]] (`cap + 1` occupants max,
-    * the extra one the overflow marker), so a degenerate hot bucket costs
-    * O(cap · prefix) memory. Carrying the prefix arrays into the bucket is
-    * what lets [[prefixBucketPairs]] compute each candidate pair's FULL
-    * shared-prefix count locally — the per-pair hit rows (Σ C(occ,2) of
-    * them, 31M at sf0.1) never cross a shuffle.
-    */
-  final class CappedFramedPrefixAgg(cap: Int)
-      extends Aggregator[(java.lang.Long, Array[Long]), Array[Long], Array[Long]] {
-    // Buffer layout: slot 0 = occupant count, slot 1 = used length (header
-    // included), frames from index 2; geometric growth. Same primitive
-    // Array[Long] + Catalyst-encoder rationale as [[CappedOccupantsAgg]]
-    // (the kryo ArrayBuffer[Long] buffer this replaces serialized every
-    // partial bucket boxed — with each occupant carrying its whole prefix
-    // array, this agg moves the most bytes of any in the repo). The
-    // FINISHED value is bit-identical to before: `[count, frames…]`.
-    def zero: Array[Long] = { val b = new Array[Long](64); b(1) = 2; b }
-    def reduce(b0: Array[Long], v: (java.lang.Long, Array[Long])): Array[Long] = {
-      if (v == null || v._1 == null || v._2 == null) return b0
-      if (b0(0) > cap) return b0
-      val len = v._2.length
-      val b = ensureSlots(b0, b0(1) + len + 2)
-      val p = b(1).toInt
-      b(p) = len.toLong
-      b(p + 1) = v._1.longValue()
-      System.arraycopy(v._2, 0, b, p + 2, len)
-      b(1) += len + 2
-      b(0) += 1
-      b
-    }
-    def merge(a0: Array[Long], c: Array[Long]): Array[Long] = {
-      val cUsed = c(1).toInt
-      var a = a0
-      var i = 2
-      while (a(0) <= cap && i < cUsed) {
-        val len = c(i).toInt
-        a = ensureSlots(a, a(1) + len + 2)
-        val p = a(1).toInt
-        System.arraycopy(c, i, a, p, len + 2)
-        a(1) += len + 2
-        a(0) += 1
-        i += len + 2
-      }
-      a
-    }
-    def finish(b: Array[Long]): Array[Long] = {
-      if (b(0) == 0L) return Array.emptyLongArray
-      val out = new Array[Long](b(1).toInt - 1)
-      out(0) = b(0)
-      System.arraycopy(b, 2, out, 1, b(1).toInt - 2)
-      out
-    }
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  /** Candidate pairs of one framed prefix bucket ([[CappedFramedPrefixAgg]]
-    * output): for every unordered occupant pair, merge-intersect the two
-    * SORTED prefix-token arrays to get the pair's full shared-prefix count
-    * `|prefix(A) ∩ prefix(B)|`, and emit the (xid-ordered) pair when the
-    * count passes `gateK` — or unconditionally for tiny–tiny pairs (both
-    * xids odd: documents whose whole shingle set is inside the prefix, the
-    * α ≤ K case of the prefix-filter lemma). Buckets with fewer than 2 or
+  /** Candidate pairs of one framed prefix bucket
+    * ([[CappedBucketAgg.FramedPrefixes]] output): for every unordered
+    * occupant pair, merge-intersect the two SORTED prefix-token arrays to
+    * get the pair's full shared-prefix count `|prefix(A) ∩ prefix(B)|`, and
+    * emit the (xid-ordered) pair when the count passes `gateK` — or
+    * unconditionally for tiny–tiny pairs (both xids odd: documents whose
+    * whole shingle set is inside the prefix, the α ≤ K case of the
+    * prefix-filter lemma). Buckets with fewer than 2 or
     * more than `cap` occupants (the ingest-overflow marker) yield nothing,
     * mirroring the dropped-bucket guardrail. A pair is emitted by EVERY
     * surviving bucket the two documents share (same count each time — it
@@ -627,17 +463,6 @@ object TextFunctions {
     }
     out.result()
   }
-
-  // ---- MinHash UDAF: signature of all shingles in a group (mergeable) ----
-  final class MinHashAgg(k: Int, shingle: Int)
-      extends Aggregator[String, MinHashSketch, Array[Byte]] {
-    def zero: MinHashSketch = MinHashSketch(k)
-    def reduce(b: MinHashSketch, v: String): MinHashSketch = { b.addText(v, shingle); b }
-    def merge(a: MinHashSketch, b: MinHashSketch): MinHashSketch = a.mergeInPlace(b)
-    def finish(b: MinHashSketch): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[MinHashSketch] = Encoders.kryo[MinHashSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
 }
 
 /** Column-API + SQL registration for the text/dedup/similarity functions. */
@@ -657,7 +482,6 @@ class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializ
       MinHashSketch.fromBytes(a).estJaccard(MinHashSketch.fromBytes(b)))
   val minhashBandsUdf: UserDefinedFunction =
     udf((sk: Array[Byte]) => MinHashSketch.fromBytes(sk).bandKeys(bands))
-  val minhashAgg: UserDefinedFunction = udaf(new MinHashAgg(minHashK, shingle))
 
   val simhashUdf: UserDefinedFunction = udf((t: String) => SimHash.ofText(t))
   val hammingUdf: UserDefinedFunction = udf((a: Long, b: Long) => SimHash.hamming(a, b))
@@ -716,30 +540,27 @@ class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializ
     udf((v: Seq[Float], id: Long, eps: Double) => VectorLsh.perturb(v, id, eps))
 
   /** Expand one capped LSH bucket into its unordered candidate id pairs. */
-  val idPairsUdf: UserDefinedFunction = udf((ids: Seq[Long]) => idPairs(ids))
+  val idPairsUdf: UserDefinedFunction = udf((ids: Array[Long]) => idPairs(ids))
 
-  /** Ingest-capped bucket occupant collection (see TextFunctions.CappedIdsAgg). */
-  def cappedIdsAgg(cap: Int): UserDefinedFunction = udaf(new TextFunctions.CappedIdsAgg(cap))
+  /** Ingest-capped bucket occupant collection (see [[CappedBucketAgg]]). */
+  def cappedIdsAgg(cap: Int): CappedBucketAgg.Fn = CappedBucketAgg.Fn(CappedBucketAgg.Ids, cap)
 
-  /** Payload-carrying variant (see TextFunctions.CappedTaggedIdsAgg):
+  /** Payload-carrying variant (see [[CappedBucketAgg.TaggedIds]]):
     * apply to `(id, tag)` columns, occupants come back interleaved.
     */
-  def cappedTaggedIdsAgg(cap: Int): UserDefinedFunction =
-    udaf(new TextFunctions.CappedTaggedIdsAgg(cap),
-      Encoders.tuple(Encoders.LONG, Encoders.LONG))
+  def cappedTaggedIdsAgg(cap: Int): CappedBucketAgg.Fn =
+    CappedBucketAgg.Fn(CappedBucketAgg.TaggedIds, cap)
 
   /** Expand one capped interleaved `[id, tag, …]` bucket into its
     * unordered payload-carrying candidate pairs.
     */
-  val taggedPairsUdf: UserDefinedFunction = udf((xs: Seq[Long]) => taggedPairs(xs))
+  val taggedPairsUdf: UserDefinedFunction = udf((xs: Array[Long]) => taggedPairs(xs))
 
-  /** Framed prefix-bucket collection (see TextFunctions.CappedFramedPrefixAgg):
+  /** Framed prefix-bucket collection (see [[CappedBucketAgg.FramedPrefixes]]):
     * apply to `(xid, prefixArray)` columns.
     */
-  def cappedPrefixAgg(cap: Int): UserDefinedFunction =
-    udaf(new TextFunctions.CappedFramedPrefixAgg(cap),
-      Encoders.tuple(Encoders.LONG,
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()))
+  def cappedPrefixAgg(cap: Int): CappedBucketAgg.Fn =
+    CappedBucketAgg.Fn(CappedBucketAgg.FramedPrefixes, cap)
 
   /** Gated candidate pairs of one framed prefix bucket as a flat
     * `[a0, b0, a1, b1, …]` Long array (see TextFunctions.prefixBucketPairs).
@@ -750,9 +571,7 @@ class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializ
     * 2-3× the scan cost at sf0.1).
     */
   def prefixPairsUdf(cap: Int, gateK: Int): UserDefinedFunction =
-    udf((flat: Seq[Long]) =>
-      prefixBucketPairs(TextFunctions.longs(flat), cap, gateK))
-      .asNondeterministic()
+    udf((flat: Array[Long]) => prefixBucketPairs(flat, cap, gateK)).asNondeterministic()
 
   /** Planted-near-duplicate synthetic document (see TextFunctions.synthDoc). */
   val synthDocUdf: UserDefinedFunction =
@@ -774,7 +593,6 @@ class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializ
     reg("minhash_sig", minhashSigUdf)
     reg("minhash_jaccard", minhashJaccardUdf)
     reg("minhash_bands", minhashBandsUdf)
-    reg("minhash_agg", minhashAgg)
     reg("simhash", simhashUdf)
     reg("hamming", hammingUdf)
     reg("exact_jaccard", exactJaccardUdf)

@@ -613,14 +613,23 @@ object ScaleHeadroom {
     require(unknown.isEmpty,
       s"unknown row(s) ${unknown.mkString(", ")}; rows: ${registered.keys.mkString(", ")}")
     val results = scala.collection.mutable.LinkedHashMap[String, (Long, Double, String, Boolean)]()
+    // disk bytes spilled by every task so far (the listener bus runs behind
+    // the tasks, so a row's tally can miss its last few tasks)
+    val spilled = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) spilled.addAndGet(e.taskMetrics.diskBytesSpilled)
+    })
     registered.foreach { case (name, (rows, body)) =>
       if (args.isEmpty || args.contains(name)) {
         val g0 = genNanos
         val s0 = System.nanoTime()
+        val d0 = spilled.get
         val (outcome, ok) = body()
         val sec = (System.nanoTime() - s0 - (genNanos - g0)) / 1e9
         results(name) = (rows, sec, outcome, ok)
-        println(f"[headroom] $name%-28s ${sec}%8.2f s  ${rows / sec}%12.0f rows/s  ok=$ok  $outcome")
+        println(f"[headroom] $name%-28s ${sec}%8.2f s  ${rows / sec}%12.0f rows/s  " +
+          f"spill=${(spilled.get - d0) / 1e6}%.1f MB  ok=$ok  $outcome")
       }
     }
     val genSec = genNanos / 1e9

@@ -143,6 +143,29 @@ class HllKllSpec extends AnyFunSuite {
     assert(HllSketch.fromBytes(de.toBytes).toBytes.toSeq == de.toBytes.toSeq)
   }
 
+  test("HLL sparse decode rejects an out-of-range index or rho with a typed error") {
+    // one sparse entry: header, p = 14, mode 1, count 1, (index, rho)
+    def sparseCell(idx: Int, rho: Byte): Array[Byte] = {
+      val bb = graft.sketch.core.Codec.writer(3 + 4 + 1 + 4 + 5, graft.sketch.core.Codec.TagHll)
+      bb.putInt(14).put(1.toByte).putInt(1).putInt(idx).put(rho)
+      bb.array()
+    }
+    val dense = HllSketch(); (0 until 20000).foreach(i => dense.add(s"d$i"))
+    assert(!dense.isSparse)
+    for ((idx, rho) <- Seq((0x7FFFFFFF, 3), (1 << 25, 3), (-1, 3), (5, 0), (5, 41), (5, -7))) {
+      val e = intercept[IllegalArgumentException](HllSketch.fromBytes(sparseCell(idx, rho.toByte)))
+      assert(e.getMessage.startsWith(s"corrupt sketch (tag ${graft.sketch.core.Codec.TagHll}) at offset 12"),
+        s"index $idx rho $rho: $e")
+    }
+    // the range ends decode exactly as before and fold into a dense sketch
+    for ((idx, rho) <- Seq((0, 1), ((1 << 25) - 1, 40))) {
+      val bytes = sparseCell(idx, rho.toByte)
+      val s = HllSketch.fromBytes(bytes)
+      assert(s.isSparse && s.toBytes.toSeq == bytes.toSeq)
+      HllSketch.fromBytes(dense.toBytes).mergeInPlace(s)
+    }
+  }
+
   test("KLL is exact before any compaction") {
     val k = KllSketch(200)
     val vals = (1 to 150).map(_.toDouble)

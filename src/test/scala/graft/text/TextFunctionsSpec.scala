@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Text-pipeline operators: MinHash estimate accuracy vs exact Jaccard,
@@ -172,11 +173,11 @@ class TextFunctionsSpec extends AnyFunSuite {
   }
 
   test("idPairs enumerates each unordered pair once, sorted") {
-    val ps = TextFunctions.idPairs(Seq(5L, 1L, 9L))
+    val ps = TextFunctions.idPairs(Array(5L, 1L, 9L))
     assert(ps.toSet == Set(TextFunctions.IdPair(1, 5), TextFunctions.IdPair(1, 9),
       TextFunctions.IdPair(5, 9)))
-    assert(TextFunctions.idPairs(Seq(7L)).isEmpty)
-    assert(TextFunctions.idPairs(Seq(1L, 2L, 3L, 4L)).length == 6)
+    assert(TextFunctions.idPairs(Array(7L)).isEmpty)
+    assert(TextFunctions.idPairs(Array(1L, 2L, 3L, 4L)).length == 6)
   }
 
   test("taggedPairs: pairs carry each occupant's payload, no self-pairs") {
@@ -213,7 +214,7 @@ class TextFunctionsSpec extends AnyFunSuite {
   }
 
   test("CappedOccupantsAgg: cap invariant holds under adversarial merge trees (both strides)") {
-    // Simulate Spark's Aggregator contract directly: shard the input
+    // Drive the capped aggregate's buffer contract directly: shard the input
     // randomly, reduce each shard into its own buffer, then collapse the
     // buffers with a RANDOM binary merge tree — the orders Spark's partial
     // merges may produce but an integration test can't force. Invariants:
@@ -224,8 +225,8 @@ class TextFunctionsSpec extends AnyFunSuite {
     //       ingested multiset;
     //   (4) stride 2 keeps (id, tag) adjacency in every slot pair.
     val rnd = new scala.util.Random(4242L)
-    val idsAgg = new TextFunctions.CappedIdsAgg(8)
-    val tagAgg = new TextFunctions.CappedTaggedIdsAgg(8)
+    val idsAgg = new CappedBucketAggSpec.Driven(CappedBucketAgg.Ids, 8)
+    val tagAgg = new CappedBucketAggSpec.Driven(CappedBucketAgg.TaggedIds, 8)
     val cap = 8
     (0 until 300).foreach { trial =>
       val n = rnd.nextInt(3 * cap + 2) // straddles the cap boundary
@@ -251,20 +252,17 @@ class TextFunctionsSpec extends AnyFunSuite {
       val b1 = shards.map { sh =>
         sh.result().foldLeft(idsAgg.zero)((b, v) => idsAgg.reduce(b, v))
       }.toSeq
-      // occupant count from the primitive buffer: slot 0 is the used
-      // length (header included), so data length = b(0) - 1
-      val r1 = idsAgg.finish(collapse[Array[Long]](
-        b1, idsAgg.merge, b => b(0).toInt - 1))
+      // occupant count from the primitive buffer's header
+      val r1 = idsAgg.finish(collapse[Array[Long]](b1, idsAgg.merge, idsAgg.count))
       assert(r1.length <= cap + 1)
       if (n > cap) assert(r1.length == cap + 1, s"trial $trial: no overflow marker at n=$n")
       else assert(r1.toSeq.sorted == ids.sorted, s"trial $trial: lost ids below cap")
       // stride 2 (tag = pure function of id so adjacency is checkable)
       val b2 = shards.map { sh =>
         sh.result().foldLeft(tagAgg.zero)((b, v) =>
-          tagAgg.reduce(b, (java.lang.Long.valueOf(v), java.lang.Long.valueOf(v * 13 + 5))))
+          tagAgg.reduce(b, v, v * 13 + 5))
       }.toSeq
-      val r2 = tagAgg.finish(collapse[Array[Long]](
-        b2, tagAgg.merge, b => (b(0).toInt - 1) / 2))
+      val r2 = tagAgg.finish(collapse[Array[Long]](b2, tagAgg.merge, tagAgg.count))
       assert(r2.length % 2 == 0 && r2.length / 2 <= cap + 1)
       r2.grouped(2).foreach(p => assert(p(1) == p(0) * 13 + 5, s"trial $trial: tag detached"))
       if (n > cap) assert(r2.length / 2 == cap + 1, s"trial $trial: no overflow marker at n=$n")
@@ -282,7 +280,7 @@ class TextFunctionsSpec extends AnyFunSuite {
     //       expects, and the empty bucket finishes to an empty array.
     val rnd = new scala.util.Random(2424L)
     val cap = 8
-    val agg = new TextFunctions.CappedFramedPrefixAgg(cap)
+    val agg = new CappedBucketAggSpec.Driven(CappedBucketAgg.FramedPrefixes, cap)
     assert(agg.finish(agg.zero).isEmpty)
     (0 until 300).foreach { trial =>
       val n = rnd.nextInt(3 * cap + 2)
@@ -296,14 +294,14 @@ class TextFunctionsSpec extends AnyFunSuite {
       occupants.foreach(v => shards(rnd.nextInt(nShards)) += v)
       val bufs = shards.map { sh =>
         sh.result().foldLeft(agg.zero)((b, v) =>
-          agg.reduce(b, (java.lang.Long.valueOf(v._1), v._2)))
+          agg.reduce(b, v._1, UnsafeArrayData.fromPrimitiveArray(v._2)))
       }.toSeq
       val pool = scala.collection.mutable.ArrayBuffer(bufs: _*)
       while (pool.length > 1) {
         val a = pool.remove(rnd.nextInt(pool.length))
         val b = pool.remove(rnd.nextInt(pool.length))
         val m = agg.merge(a, b)
-        assert(m(0) <= cap + 1, s"trial $trial: buffer exceeded cap+1 occupants")
+        assert(agg.count(m) <= cap + 1, s"trial $trial: buffer exceeded cap+1 occupants")
         pool += m
       }
       val r = agg.finish(pool.head)
@@ -334,13 +332,13 @@ class TextFunctionsSpec extends AnyFunSuite {
 
   test("capped bucket buffers grow geometrically and fail typed past the array limit") {
     val b = Array(1L, 2L, 3L)
-    assert(TextFunctions.ensureSlots(b, 3L) eq b, "a buffer that fits is returned as is")
-    val grown = TextFunctions.ensureSlots(b, 4L)
+    assert(CappedBucketAgg.ensureSlots(b, 3L) eq b, "a buffer that fits is returned as is")
+    val grown = CappedBucketAgg.ensureSlots(b, 4L)
     assert(grown.length == 6 && grown.take(3).sameElements(b), "growth doubles and keeps the slots")
-    assert(TextFunctions.ensureSlots(b, 100L).length == 100, "growth reaches a larger need directly")
+    assert(CappedBucketAgg.ensureSlots(b, 100L).length == 100, "growth reaches a larger need directly")
     // a need past the limit is refused before anything is allocated
-    val need = TextFunctions.MaxBufferSlots.toLong + 1
-    val e = intercept[IllegalArgumentException](TextFunctions.ensureSlots(b, need))
+    val need = CappedBucketAgg.MaxBufferSlots.toLong + 1
+    val e = intercept[IllegalArgumentException](CappedBucketAgg.ensureSlots(b, need))
     assert(e.getMessage.contains(need.toString), e.getMessage)
   }
 
