@@ -1,7 +1,7 @@
 #!/usr/bin/env node
 // Single-thread add-throughput of the reference library (node v20), for the
 // "matches-or-beats reference single-node throughput" comparison against the
-// Scala per-sketch micro-bench (graft.SketchMicroBench).
+// Scala per-sketch add costs (perfbench `--trace 1`, `core.*.add_ns`).
 'use strict';
 const path = require('path');
 const ref = '/root/reference/src';

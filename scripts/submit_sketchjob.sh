@@ -29,7 +29,6 @@ SPARK_SHUFFLE_PARTITIONS=$((2 * CORES)) /opt/spark/bin/spark-submit \
   --conf spark.sql.files.openCostInBytes=4194304 \
   --conf spark.sql.session.timeZone=UTC \
   --conf spark.ui.enabled=false \
-  --conf spark.kryo.registrator=graft.sketch.agg.GraftKryoRegistrator \
   "$JAR" \
   --input "$INPUT" --output "$OUT/result" --checkpoint "$OUT/ckpt"
 

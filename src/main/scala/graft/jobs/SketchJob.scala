@@ -238,9 +238,6 @@ object SketchJob {
       .flatMap(decodeCkpt(_))
   }
 
-  def finalResults(spark: SparkSession, cfg: Config): DataFrame =
-    finalResultsFrom(mergeCheckpoints(spark, cfg))
-
   /** Level-1 bucket width of the deterministic tree merge: checkpoint rows
     * with `partition_id` in [k*fanout, (k+1)*fanout) fold together (in id
     * order) into bucket partial k, then level 2 folds the bucket partials
@@ -447,7 +444,6 @@ object SketchJob {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.kryo.registrator", "graft.sketch.agg.GraftKryoRegistrator")
       .getOrCreate()
     try run(spark, cfg).show(10, truncate = false)
     finally spark.stop()

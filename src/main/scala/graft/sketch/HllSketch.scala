@@ -191,6 +191,8 @@ object HllSketch {
     val p = bb.getInt()
     if (p < 4 || p > 18) throw Codec.corrupt(Codec.TagHll, 3, s"HLL precision $p out of range")
     val mode = bb.get()
+    if (mode != 0 && mode != 1) throw Codec.corrupt(
+      Codec.TagHll, bb.position() - 1, s"HLL mode $mode is neither dense (0) nor sparse (1)")
     if (mode == 1) {
       val n = Codec.readCount(bb, 5)
       val map = scala.collection.mutable.HashMap.empty[Int, Byte]
@@ -204,7 +206,25 @@ object HllSketch {
       new HllSketch(p, null, map)
     } else {
       val regs = new Array[Byte](1 << p)
+      val at = bb.position()
       bb.get(regs)
+      // a p-bit index leaves 64 - p bits, so rho is in [0, 65 - p]. Eight
+      // registers per word: a byte exceeds maxRho iff its high bit is set or
+      // its low 7 bits plus (127 - maxRho) carry into the high bit.
+      val maxRho = 65 - p
+      val hi = 0x8080808080808080L
+      val bias = (127 - maxRho) * 0x0101010101010101L
+      var over = 0L
+      var k = 0
+      while (k < regs.length) {
+        val w = bb.getLong(at + k)
+        over |= (w | ((w & ~hi) + bias)) & hi
+        k += 8
+      }
+      if (over != 0) {
+        val r = regs.indexWhere(x => (x & 0xff) > maxRho)
+        throw Codec.corrupt(Codec.TagHll, at + r, s"dense HLL register $r (rho ${regs(r)}) out of range")
+      }
       new HllSketch(p, regs, null)
     }
   }

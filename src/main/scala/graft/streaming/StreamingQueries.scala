@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.QuerySupport.{sortedSmall, table}
 import graft.sketch.agg.SketchFunctions
 import graft.streaming.TranscriptStream.{SessionSummary, TurnEvent}
 
@@ -21,9 +22,6 @@ import graft.streaming.TranscriptStream.{SessionSummary, TurnEvent}
 object StreamingQueries {
   private val fns = SketchFunctions.default
 
-  private def events(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
-
   /** File-stream over the events table. The file source wants a
     * directory: if the table IS a directory (part-files), stream it
     * directly; if it is a single file, stream the parent with a glob
@@ -31,7 +29,7 @@ object StreamingQueries {
     * match nothing against part-files).
     */
   private def eventsFileStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = events(s, dir).schema
+    val schema = table(s, dir, "events").schema
     val evPath = new java.io.File(s"$dir/events.parquet")
     if (evPath.isDirectory) s.readStream.schema(schema).parquet(evPath.getPath)
     else s.readStream.schema(schema)
@@ -162,7 +160,7 @@ object StreamingQueries {
     */
   private[graft] def stageEventsByTime(s: SparkSession, dir: String, chunks: Int): String =
     staged("events", dir, chunks) {
-      val ev = events(s, dir)
+      val ev = table(s, dir, "events")
       val tcol = unix_micros(col("ts").cast("timestamp"))
       // one fingerprint scan: time bounds, row count, and an order-free
       // 64-bit content hash over the REPLAYED columns — a regenerated table
@@ -230,7 +228,7 @@ object StreamingQueries {
   private def stageKeyedEventsBySpan(
       s: SparkSession, dir: String, chunks: Int): (String, Long, Long) = {
     val stage = staged("keyed", dir, chunks) {
-      val ev = events(s, dir).filter(col("user_id").isNotNull)
+      val ev = table(s, dir, "events").filter(col("user_id").isNotNull)
       val tcol = unix_micros(col("ts").cast("timestamp"))
       val mm = ev.agg(min(tcol).as("lo"), max(tcol).as("hi"), count(lit(1)).as("n"),
         sum(pmod(xxhash64(col("user_id"), col("event_type"), col("ts")),
@@ -281,7 +279,7 @@ object StreamingQueries {
     staged("flush", dir, chunks) {
       (s"v1-flush|${stampOf(Paths.get(base))}", out => {
         chunkFiles(base).foreach(out.copy)
-        val ev = events(s, dir)
+        val ev = table(s, dir, "events")
         val schema = ev.schema
         val hiMs = ev.agg(max(unix_micros(col("ts").cast("timestamp"))))
           .first().getLong(0) / 1000L
@@ -425,7 +423,7 @@ object StreamingQueries {
       // incremental watermark sealing — not just the single-batch landing
       val stage = stageEventsByTime(s, dir, chunks = 4)
       val sink = "q_stream_sessions_out"
-      val batches = runToEnd(s, sessionsOf(s, events(s, dir).schema, stage)
+      val batches = runToEnd(s, sessionsOf(s, table(s, dir, "events").schema, stage)
         .writeStream.format("memory").queryName(sink).outputMode("append"))
       // the multi-batch claim must hold on the executed path, not by
       // construction. Quantile-cut staging yields 4 non-empty chunk files
@@ -472,7 +470,7 @@ object StreamingQueries {
           dest.toFile.setLastModified(p.toFile.lastModified) // keep source order
         }
       }
-      val schema = events(s, dir).schema
+      val schema = table(s, dir, "events").schema
       def runSegment(): Int = runToEnd(s, sessionsOf(s, schema, src.toString)
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt).outputMode("append"))
@@ -508,7 +506,7 @@ object StreamingQueries {
       // stageFlushSrc)
       val src = stageFlushSrc(s, dir, chunks = 4)
       val sink = "q_stream_flush_out"
-      val batches = runToEnd(s, sessionsOf(s, events(s, dir).schema, src)
+      val batches = runToEnd(s, sessionsOf(s, table(s, dir, "events").schema, src)
         .writeStream.format("memory").queryName(sink).outputMode("append"))
       // >= 4 data batches: the sessions replay's >= 3 gate plus the
       // sentinel's own (always non-empty) final batch
@@ -550,7 +548,7 @@ object StreamingQueries {
       require(spanning >= 1,
         "staged replay has no (user_id, event_type) key spanning two " +
           "chunks — the cross-batch dedup gate would be vacuous")
-      val deduped = chunkStream(s, events(s, dir).schema, stage)
+      val deduped = chunkStream(s, table(s, dir, "events").schema, stage)
         .filter(col("user_id").isNotNull)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
@@ -561,10 +559,11 @@ object StreamingQueries {
       // actually be carried ACROSS batches on the executed path
       require(batches >= 3,
         s"expected >= 3 data micro-batches in the staged replay, saw $batches")
-      s.table(sink)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("distinct_users"))
-        .coalesce(1).orderBy("event_type")
+      sortedSmall(
+        s.table(sink)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("distinct_users")),
+        col("event_type"))
     },
     // BOUNDED-STATE streaming dedup on the oracle-gated path: the
     // q_stream_dedup row proves cross-batch exactness with UNBOUNDED key
@@ -622,11 +621,12 @@ object StreamingQueries {
       // which occurrence emitted is part of the gated semantics: sum the
       // emitted event times (relative ms so the sum stays far inside int64
       // at any SF — absolute micros would overflow past ~5k emitted rows)
-      out.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("emitted"),
-          countDistinct(col("user_id")).as("keys"),
-          sum(expr(s"(unix_micros(ts) - ${lo}L) div 1000")).as("ts_sum_ms"))
-        .coalesce(1).orderBy("event_type")
+      sortedSmall(
+        out.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("emitted"),
+            countDistinct(col("user_id")).as("keys"),
+            sum(expr(s"(unix_micros(ts) - ${lo}L) div 1000")).as("ts_sum_ms")),
+        col("event_type"))
     })
 
   /** Closed-form batch sessionization (lag-islands + the watermark-seal

@@ -8,13 +8,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
+import graft.QuerySupport.{sortedSmall, table}
 import DedupQueries.{LshBucketCap, SynthDupOffset, bucketPairs}
 
 /** The ANN family of the oracle-gated queries, each next to its DuckDB
   * oracle; `SparkEntry.queries` / `SparkEntry.oracleSql` join these maps.
   * Both recall rows use one [[probeGate]] (probe routing plus the recall
   * aggregate), and graft.tools.ScaleHeadroom runs [[lshTop1]] and
-  * [[embedNearDups]] with its own bits and tables.
+  * [[embedNearDups]] with its own bits and tables, and [[bfTop1]] for its
+  * brute-force spot check.
   */
 object AnnQueries {
   private val tfns = TextSqlFunctions.default
@@ -29,9 +31,6 @@ object AnnQueries {
     val PerturbEps = 0.15
     val BatchSize = 100L
   }
-
-  private def embeddings(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
 
   /** Deterministic ANN top-1 read-out over a (query_id, neighbor_id, s)
     * candidate frame: partial-aggregatable max_by (no per-group sort
@@ -60,7 +59,7 @@ object AnnQueries {
     * sf0.1 (guide §2.3 "shuffle keys and metadata instead of payloads",
     * §4.2 batch the hot loop; verified bit-equal on all 200 probes).
     */
-  private def bfTop1(qids: Array[Long], bcQes: Broadcast[Array[Array[Float]]],
+  private[graft] def bfTop1(qids: Array[Long], bcQes: Broadcast[Array[Array[Float]]],
       emb: DataFrame): DataFrame = {
     val sess = emb.sparkSession
     import sess.implicits._
@@ -93,7 +92,7 @@ object AnnQueries {
     * broadcast of its vectors — so the recall rows collect the probe set
     * ONCE and share it between the candidate side and the brute-force gate.
     */
-  private def collectProbes(probes: DataFrame): (Array[Long], Broadcast[Array[Array[Float]]]) = {
+  private[graft] def collectProbes(probes: DataFrame): (Array[Long], Broadcast[Array[Array[Float]]]) = {
     val rows = probes.select(col("query_id"), col("qe")).collect()
       .map(r => (r.getLong(0), TextFunctions.floats(r.getSeq[Float](1))))
     (rows.map(_._1), probes.sparkSession.sparkContext.broadcast(rows.map(_._2)))
@@ -208,7 +207,7 @@ object AnnQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // brute-force cosine ANN baseline: top-3 neighbors per query vector
     "q_ann_top3" -> { (s, dir) =>
-      val emb = embeddings(s, dir)
+      val emb = table(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val joined = broadcast(q)
@@ -217,10 +216,11 @@ object AnnQueries {
         .select(col("query_id"), col("neighbor_id"),
           tfns.cosineUdf(col("qe"), col("ne")).as("s"))
       val w = Window.partitionBy(col("query_id")).orderBy(desc("s"), asc("neighbor_id"))
-      joined.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"))
-        .coalesce(1).orderBy("query_id", "rank")
+      sortedSmall(
+        joined.withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= 3)
+          .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id")),
+        col("query_id"), col("rank"))
     },
     // ANN scale path: LSH bucket equi-join (no cross join), degenerate
     // buckets capped, candidate pairs deduped on ids BEFORE the embeddings
@@ -232,7 +232,7 @@ object AnnQueries {
     // not what ANN indexes are for. Recall@1 vs the brute-force truth is
     // gated as a boolean; everything is hash-deterministic on fixed data.
     "q_ann_lsh_recall" -> { (s, dir) =>
-      val (gate, lshTop) = lshTop1(embeddings(s, dir), 10, 12)
+      val (gate, lshTop) = lshTop1(table(s, dir, "embeddings"), 10, 12)
       gate.recall(lshTop, "lsh_top1")
     },
     // ANN scale path #2: IVF coarse quantizer (the inverted-file layer of
@@ -253,7 +253,7 @@ object AnnQueries {
     // gates top-1 agreement with the broadcast brute-force truth at >= 0.9
     // over the same 200 perturbed probes as q_ann_lsh_recall.
     "q_ann_ivf_recall" -> { (s, dir) =>
-      val emb = embeddings(s, dir)
+      val emb = table(s, dir, "embeddings")
       val cents: Array[Array[Float]] = emb.filter(col("vec_id") < 64)
         .select(col("vec_id"), col("embedding")).collect()
         .sortBy(_.getLong(0))
@@ -294,7 +294,7 @@ object AnnQueries {
     // tie-break semantics as the LSH/pivot-IVF rows.
     "q_ann_ivf_index" -> { (s, dir) =>
       import IvfIndexParams._
-      val emb = embeddings(s, dir)
+      val emb = table(s, dir, "embeddings")
       val cents = VectorIvfIndex.fit(emb, "vec_id", "embedding", k = K, sampleCap = SampleCap)
       val assignCalls = s.sparkContext.longAccumulator("ivf_assign_calls")
       val assignUdf = udf((v: Seq[Float]) => {
@@ -349,7 +349,7 @@ object AnnQueries {
     // set is exactly the planted set — which the oracle knows in closed
     // form. No all-pairs pass anywhere.
     "q_embed_near_dup" -> { (s, dir) =>
-      embedNearDups(embeddings(s, dir), 12, 24).orderBy("id_a", "id_b")
+      embedNearDups(table(s, dir, "embeddings"), 12, 24).orderBy("id_a", "id_b")
     })
 
   val oracleSql: Map[String, String] = Map(

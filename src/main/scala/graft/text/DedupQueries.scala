@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QuerySupport.{sortedSmall, table}
+
 /** The text-dedup family of the oracle-gated queries, each next to its
   * DuckDB oracle; `SparkEntry.queries` / `SparkEntry.oracleSql` join these
   * maps. Each candidate step has one home: [[bucketPairs]] expands capped
@@ -26,9 +28,6 @@ object DedupQueries {
     * universe and double-attach rows in the verify joins).
     */
   private[graft] val SynthDupOffset = 1000000000L
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** Capped-bucket pair expansion: ONE shuffle groups each `bucket`'s `id`s
     * through the ingest-capped agg (an overflowed bucket holds cap + 1 ids
@@ -220,7 +219,7 @@ object DedupQueries {
     "q_token_counts" -> { (s, dir) =>
       // sort first, project after — same sampling-pass rationale as
       // q_text_profile (the split/filter token count ran twice per row)
-      documents(s, dir)
+      table(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .orderBy("doc_id")
         .select(col("doc_id"),
@@ -228,7 +227,7 @@ object DedupQueries {
     },
     // exact dedup: hash-groupBy distinct + normalized 64-bit fingerprints
     "q_dedup_exact" -> { (s, dir) =>
-      documents(s, dir)
+      table(s, dir, "documents")
         .agg(
           count(lit(1)).as("docs"),
           countDistinct(col("text")).as("distinct_texts"),
@@ -245,7 +244,7 @@ object DedupQueries {
     // ordering-of-operations; measured 0.78 s → 0.40 s at sf0.1). A
     // Project above Sort preserves the global order.
     "q_text_profile" -> { (s, dir) =>
-      documents(s, dir)
+      table(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .orderBy("doc_id")
         .select(col("doc_id"),
@@ -262,7 +261,7 @@ object DedupQueries {
     // planted near-dups sit at J >= 0.92 where 16x8 banding recall is
     // 1 - 3e-6 per pair, and the next-closest pairs are J <= 0.31.
     "q_minhash_near_dup" -> { (s, dir) =>
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val banded = docs
         .select(col("doc_id"), tfns.minhashSigUdf(col("text")).as("sig"))
         .select(col("doc_id"), explode(tfns.minhashBandsUdf(col("sig"))).as("band"))
@@ -291,7 +290,7 @@ object DedupQueries {
     // replaced after measurement — see the prefixJaccardCandidates
     // scaladoc for the 6.2M → 62k candidate collapse.)
     "q_ngram_jaccard_near_dup" -> { (s, dir) =>
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       verifiedSorted(prefixJaccardCandidates(docs), docs)
     },
     // Near-dup CLUSTERING: the verified pair set is a graph and a duplicate
@@ -304,7 +303,7 @@ object DedupQueries {
     // recursive CTE, so chain-linked clusters gate the CLUSTERING itself,
     // not just the pairs.
     "q_neardup_components" -> { (s, dir) =>
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       ConnectedComponents.run(verifiedPairs(prefixJaccardCandidates(docs), docs))
         .select(col("node").as("doc_id"), col("rep").as("rep_id"))
         .orderBy("doc_id")
@@ -322,19 +321,20 @@ object DedupQueries {
     // kept set is closed-form; quality/lang/token formulas are the
     // q_text_profile ones, bit-identical across engines.
     "q_token_budget_sample" -> { (s, dir) =>
-      val prof = budgetProfile(documents(s, dir))
+      val prof = budgetProfile(table(s, dir, "documents"))
       val ord = Window.partitionBy(col("lang"))
         .orderBy(col("quality").desc, col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val whole = Window.partitionBy(col("lang")) // default frame: entire partition
-      prof.withColumn("cum", sum(col("tokens")).over(ord))
-        .withColumn("budget", floor(sum(col("tokens")).over(whole) * 0.3))
-        .filter(col("cum") <= col("budget"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("docs_kept"),
-          sum(col("tokens")).as("tokens_kept"),
-          min(col("quality")).as("min_quality"))
-        .coalesce(1).orderBy("lang")
+      sortedSmall(
+        prof.withColumn("cum", sum(col("tokens")).over(ord))
+          .withColumn("budget", floor(sum(col("tokens")).over(whole) * 0.3))
+          .filter(col("cum") <= col("budget"))
+          .groupBy(col("lang"))
+          .agg(count(lit(1)).as("docs_kept"),
+            sum(col("tokens")).as("tokens_kept"),
+            min(col("quality")).as("min_quality")),
+        col("lang"))
     },
     // The SAME selection through the 100 TB execution shape: the window
     // formulation above is oracle-exact but `PARTITION BY lang` puts every
@@ -349,7 +349,7 @@ object DedupQueries {
     // so this row shares the window row's closed-form oracle — gating that
     // the scalable path IS the semantics, not an approximation of it.
     "q_token_budget_scalable" -> { (s, dir) =>
-      TokenBudget.sampleSummary(budgetProfile(documents(s, dir)), frac = 0.3)
+      TokenBudget.sampleSummary(budgetProfile(table(s, dir, "documents")), frac = 0.3)
     },
     // The COMPOSED training-data curation pipeline — what a 100 TB corpus
     // job actually runs, end to end in one query: language-ID filter →
@@ -380,7 +380,7 @@ object DedupQueries {
     // engines (q_text_profile proves the formula replication), so the 0.85
     // cut is deterministic.
     "q_corpus_curation" -> { (s, dir) =>
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
+      val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val prof = docs.select(
         col("doc_id"), col("text"),
         tfns.tokenCountCol(col("text")).cast("long").as("tokens"),
@@ -440,7 +440,7 @@ object DedupQueries {
     // — or bloom them with this library — same plan shape).
     "q_decontaminate" -> { (s, dir) =>
       val n = 5
-      val grams = documents(s, dir)
+      val grams = table(s, dir, "documents")
         .select(col("doc_id"),
           filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("tk"))
         .filter(size(col("tk")) >= n)
@@ -476,7 +476,7 @@ object DedupQueries {
     // token-set similarity diverge on this corpus, so SimHash candidates
     // cannot be oracle-gated against a shingle-Jaccard truth).
     "q_simhash_near_dup" -> { (s, dir) =>
-      val ids = documents(s, dir).select(col("doc_id"))
+      val ids = table(s, dir, "documents").select(col("doc_id"))
       // fused synth+simhash UDF: one hash pass per row, no ~8 KB document
       // string materialized and re-split per row (bit-identical fingerprints
       // — see TextFunctions.synthSimhash; the corpus construction is

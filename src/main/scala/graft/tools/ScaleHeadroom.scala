@@ -236,14 +236,13 @@ object ScaleHeadroom {
 
     // brute-force spot check on 20 probes: the planted truth (a probe's
     // nearest neighbor is its perturbation source at cos ≈ 0.97; the max
-    // random cross-cosine at N=1e6, d=64 is ≈ 0.66) holds on this table
+    // random cross-cosine at N=1e6, d=64 is ≈ 0.66) holds on this table.
+    // Same brute-force top-1 (and lowest-id tie-break) as the recall gates.
     row("bf_truth_spotcheck@1M", 20L * VecN) {
-      val probes = broadcast(emb.filter(col("vec_id") < 20)
+      val (qids, qes) = graft.text.AnnQueries.collectProbes(emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"),
           tfns.perturbUdf(col("embedding"), col("vec_id"), lit(0.15)).as("qe")))
-      val bf = probes.crossJoin(emb.select(col("vec_id").as("nid"), col("embedding").as("ne")))
-        .select(col("query_id"), col("nid"), tfns.cosineUdf(col("qe"), col("ne")).as("s"))
-        .groupBy(col("query_id")).agg(max_by(col("nid"), col("s")).as("bf_top1"))
+      val bf = graft.text.AnnQueries.bfTop1(qids, qes, emb)
         .filter(col("bf_top1") === col("query_id")).count()
       (s"bf_top1==source for $bf/20", bf == 20L)
     }

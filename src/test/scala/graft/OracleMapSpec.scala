@@ -22,6 +22,27 @@ class OracleMapSpec extends AnyFunSuite {
     assert(q.size == 44)
   }
 
+  test("each family holds its own queries' oracles; the families partition the 44") {
+    val families = Seq(
+      "SketchQueries" -> (graft.sketch.agg.SketchQueries.queries.keySet,
+        graft.sketch.agg.SketchQueries.oracleSql.keySet),
+      "MultimodalQueries" -> (graft.mm.MultimodalQueries.queries.keySet,
+        graft.mm.MultimodalQueries.oracleSql.keySet),
+      "DedupQueries" -> (graft.text.DedupQueries.queries.keySet,
+        graft.text.DedupQueries.oracleSql.keySet),
+      "AnnQueries" -> (graft.text.AnnQueries.queries.keySet,
+        graft.text.AnnQueries.oracleSql.keySet),
+      "StreamingQueries" -> (graft.streaming.StreamingQueries.queries.keySet,
+        graft.streaming.StreamingQueries.oracleSql.keySet))
+    for ((name, (q, o)) <- families)
+      assert(q == o, s"$name: without an oracle: ${(q -- o).toSeq.sorted}; " +
+        s"oracle without a query: ${(o -- q).toSeq.sorted}")
+    for (Seq((a, (qa, _)), (b, (qb, _))) <- families.combinations(2))
+      assert((qa & qb).isEmpty, s"$a and $b both define ${(qa & qb).toSeq.sorted}")
+    assert(families.map(_._2._1).reduce(_ ++ _) == SparkEntry.queries.keySet)
+    assert(families.map(_._2._1.size).sum == 44)
+  }
+
   test("oracle SQL text is unchanged") {
     val md = MessageDigest.getInstance("SHA-256")
     SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (name, sql) =>

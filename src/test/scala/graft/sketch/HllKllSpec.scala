@@ -166,6 +166,33 @@ class HllKllSpec extends AnyFunSuite {
     }
   }
 
+  test("HLL dense decode rejects an unknown mode or an out-of-range register with a typed error") {
+    import graft.sketch.core.Codec
+    // header, p = 10, mode, 1024 registers with register 700 set to `rho`
+    def denseCell(mode: Byte, rho: Byte): Array[Byte] = {
+      val bb = Codec.writer(3 + 4 + 1 + 1024, Codec.TagHll)
+      bb.putInt(10).put(mode)
+      val regs = Array.fill[Byte](1024)(3); regs(700) = rho
+      bb.put(regs)
+      bb.array()
+    }
+    def corruptAt(bytes: Array[Byte], offset: Int): Unit = {
+      val e = intercept[IllegalArgumentException](HllSketch.fromBytes(bytes))
+      assert(e.getMessage.startsWith(s"corrupt sketch (tag ${Codec.TagHll}) at offset $offset"), e)
+    }
+    for (mode <- Seq(2, -1, 7)) corruptAt(denseCell(mode.toByte, 3), 7)
+    for (rho <- Seq(56, 64, 127, -1)) corruptAt(denseCell(0, rho.toByte), 8 + 700)
+    // the range ends decode exactly as before and merge
+    for (rho <- Seq(0, 55)) {
+      val bytes = denseCell(0, rho.toByte)
+      val s = HllSketch.fromBytes(bytes)
+      assert(!s.isSparse && s.toBytes.toSeq == bytes.toSeq)
+      val sp = HllSketch(10); sp.add("x")
+      sp.mergeInPlace(s)
+      assert(sp.estimate > 0)
+    }
+  }
+
   test("KLL is exact before any compaction") {
     val k = KllSketch(200)
     val vals = (1 to 150).map(_.toDouble)
