@@ -9,7 +9,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sketch._
+import graft.sketch.{BloomSketch, CmsSketch}
 import graft.sketch.agg.{SketchFunctions, ToolInterner, TurnSketches}
 import graft.sketch.core.Codec
 
@@ -50,14 +50,8 @@ object SketchJob {
       checkpointDir: String,
       dateFrom: Option[String] = None,
       dateTo: Option[String] = None,
-      hllP: Int = HllSketch.DefaultP,
       cmsWidth: Int = CmsSketch.DefaultBins,
       cmsDepth: Int = CmsSketch.DefaultHash,
-      topKCapacity: Int = 100,
-      tdigestCentroids: Int = 100,
-      kllK: Int = 200,
-      bloomWidth: Int = BloomSketch.DefaultBits,
-      bloomDepth: Int = BloomSketch.DefaultHash,
       // resume granularity: coalesce the scan into this many chunks, each
       // checkpointed atomically. 0 = one checkpoint per raw input split.
       // At 100TB / ~800k splits, per-split checkpoints would write TBs of
@@ -76,7 +70,7 @@ object SketchJob {
 
   // ---- checkpoint codec (one file per input partition) ----
 
-  private def encodeCkpt(pid: Int, groups: Seq[PartitionSketches]): Array[Byte] = {
+  private[graft] def encodeCkpt(pid: Int, groups: Seq[PartitionSketches]): Array[Byte] = {
     def len(p: PartitionSketches) =
       64 + p.role.length * 3 + Seq(p.hll_conv, p.cms_tool, p.topk_tool,
         p.tdigest_len, p.kll_len, p.bloom_conv).map(_.length + 4).sum
@@ -117,18 +111,14 @@ object SketchJob {
     }
   }
 
-  /** A stage-1 group's empty state. SketchJob always builds the conv-id
-    * Bloom: a non-positive width means the default width, as in
-    * `BloomSketch(w, d)`, where for the aggregates `bloomW = 0` turns it off.
-    */
-  private def emptyGroup(c: Config): TurnSketches = TurnSketches.create(c.hllP, c.cmsWidth,
-    c.cmsDepth, c.topKCapacity, c.tdigestCentroids, c.kllK,
-    if (c.bloomWidth > 0) c.bloomWidth else BloomSketch.DefaultBits, c.bloomDepth)
+  /** A stage-1 group's empty state: SketchJob always builds the default conv-id Bloom. */
+  private def emptyGroup(c: Config): TurnSketches = TurnSketches.create(
+    c.cmsWidth, c.cmsDepth, BloomSketch.DefaultBits, BloomSketch.DefaultHash)
 
   private def sketches(p: PartitionSketches): TurnSketches = TurnSketches.fromParts(
     p.rows_seen, p.hll_conv, p.cms_tool, p.topk_tool, p.tdigest_len, p.kll_len, p.bloom_conv)
 
-  private def checkpointRow(pid: Int, role: String, wallMs: Long,
+  private[graft] def checkpointRow(pid: Int, role: String, wallMs: Long,
       t: TurnSketches): PartitionSketches = {
     val r = t.result
     PartitionSketches(pid, role, r.turns, wallMs,
@@ -142,7 +132,7 @@ object SketchJob {
   def plannedInput(spark: SparkSession, cfg: Config): DataFrame = {
     val hasLen = scan(spark, cfg).columns.contains("text_len")
     val scanned = scan(spark, cfg)
-      .select(col("conv_id"), col("role"), coalesce(col("tool"), lit("")).as("tool"),
+      .select(col("conv_id"), col("role"), col("tool"),
         (if (hasLen) col("text_len") else length(col("text")))
           .cast("double").as("text_len"))
     if (cfg.checkpointChunks > 0) scanned.coalesce(cfg.checkpointChunks) else scanned
@@ -180,19 +170,17 @@ object SketchJob {
         val groups = mutable.HashMap.empty[String, TurnSketches]
         val roles = new ToolInterner // ~4 distinct values
         rows.foreach { row =>
-          // null role groups under "" (coalesce in plannedInput only guards
-          // tool; a null role must not NPE the resumable deliverable)
+          // null role groups under "" (a null role must not NPE the
+          // resumable deliverable)
           val role = if (row.isNullAt(1)) "" else {
             val r = row.getUTF8String(1)
             roles.intern(r.getBaseObject, r.getBaseOffset, r.numBytes)
           }
-          val tool = row.getUTF8String(2)
           val hasLen = !row.isNullAt(3)
-          // plannedInput coalesces a NULL tool to "", so every empty tool is
-          // skipped here, where the aggregates skip only NULL
+          // a NULL column feeds no sketch, as in both aggregates
           groups.getOrElseUpdate(role, emptyGroup(c)).add(
             if (row.isNullAt(0)) null else row.getUTF8String(0),
-            if (tool.numBytes > 0) tool else null,
+            if (row.isNullAt(2)) null else row.getUTF8String(2),
             if (hasLen) row.getDouble(3) else 0.0, hasLen)
         }
         val wallMs = (System.nanoTime() - t0) / 1000000

@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Encoders, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -10,8 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sketch._
-import graft.sketch.agg.TurnSketches
+import graft.sketch.{BloomSketch, CmsSketch}
+import graft.sketch.agg.{TurnSketchResult, TurnSketches}
 
 /** Native Catalyst aggregate for the flagship transcript sketch build — the
   * (c)-tier of the custom-operator ladder: a `TypedImperativeAggregate`
@@ -40,14 +39,9 @@ case class TurnSketchNativeAgg(
     conv: Expression,
     tool: Expression,
     len: Expression,
-    hllP: Int = HllSketch.DefaultP,
     cmsWidth: Int = CmsSketch.DefaultBins,
     cmsDepth: Int = CmsSketch.DefaultHash,
-    topKCapacity: Int = SpaceSavingSketch.DefaultCounters,
-    tdigestNc: Int = TDigestSketch.DefaultCentroids,
-    kllK: Int = KllSketch.DefaultK,
     bloomW: Int = 0,
-    bloomD: Int = BloomSketch.DefaultHash,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[TurnSketches] {
@@ -71,7 +65,7 @@ case class TurnSketchNativeAgg(
   override def dataType: DataType = TurnSketchNativeAgg.ResultType
 
   override def createAggregationBuffer(): TurnSketches =
-    TurnSketches.create(hllP, cmsWidth, cmsDepth, topKCapacity, tdigestNc, kllK, bloomW, bloomD)
+    TurnSketches.create(cmsWidth, cmsDepth, bloomW, BloomSketch.DefaultHash)
 
   override def update(b: TurnSketches, input: InternalRow): TurnSketches = {
     val l = len.eval(input)
@@ -100,14 +94,9 @@ case class TurnSketchNativeAgg(
 }
 
 object TurnSketchNativeAgg {
-  val ResultType: StructType = StructType(Seq(
-    StructField("hll_conv", BinaryType, nullable = false),
-    StructField("cms_tool", BinaryType, nullable = false),
-    StructField("topk_tool", BinaryType, nullable = false),
-    StructField("tdigest_len", BinaryType, nullable = false),
-    StructField("kll_len", BinaryType, nullable = false),
-    StructField("bloom_conv", BinaryType, nullable = false),
-    StructField("turns", LongType, nullable = false)))
+  /** [[graft.sketch.agg.TurnSketchResult]]'s fields, none nullable. */
+  val ResultType: StructType = StructType(
+    Encoders.product[TurnSketchResult].schema.map(_.copy(nullable = false)))
 
   val FunctionName = "turn_sketch_native"
 

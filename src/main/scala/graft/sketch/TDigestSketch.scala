@@ -327,9 +327,17 @@ object TDigestSketch {
     fromCentroids(nc, mn, mx, means, weights)
   }
 
-  /** Rebuild from centroid state (shared by the binary and JSON codecs). */
+  /** Rebuild from centroid state (shared by the binary and JSON codecs).
+    * A state whose compression is out of range, or whose centroids do not
+    * fit its 2·nc centroid capacity or pair up with their weights, fails
+    * with an `IllegalArgumentException`.
+    */
   def fromCentroids(nc: Int, mn: Double, mx: Double,
       means: Array[Double], weights: Array[Double]): TDigestSketch = {
+    require(nc >= 0 && nc < (1 << 30), s"t-digest compression $nc out of range")
+    require(means.length == weights.length && means.length <= 2 * nc,
+      s"t-digest state holds ${means.length} means and ${weights.length} weights, " +
+        s"not one weight per mean within the ${2 * nc} centroids compression $nc allows")
     val td = new TDigestSketch(nc)
     if (means.nonEmpty) {
       td.ensureCentroidCap(means.length + 1)

@@ -107,12 +107,12 @@ final class TurnSketches private (
 }
 
 object TurnSketches extends EncoderCodec[TurnSketches, Array[Byte]] {
-  /** An empty state; `bloomW = 0` leaves the Bloom out. */
-  def create(hllP: Int, cmsWidth: Int, cmsDepth: Int, topKCapacity: Int, tdigestNc: Int,
-      kllK: Int, bloomW: Int, bloomD: Int): TurnSketches = new TurnSketches(
-    HllSketch(hllP), CmsSketch(cmsWidth, cmsDepth), SpaceSavingSketch(topKCapacity),
-    TDigestSketch.fast(tdigestNc), KllSketch(kllK),
-    if (bloomW > 0) BloomSketch(bloomW, bloomD) else null, 0L)
+  /** An empty state: HLL++, Space-Saving, t-digest and KLL at their sketch
+    * defaults, the CMS and Bloom as given; `bloomW = 0` leaves the Bloom out.
+    */
+  def create(cmsWidth: Int, cmsDepth: Int, bloomW: Int, bloomD: Int): TurnSketches =
+    new TurnSketches(HllSketch(), CmsSketch(cmsWidth, cmsDepth), SpaceSavingSketch(),
+      TDigestSketch.fast(), KllSketch(), if (bloomW > 0) BloomSketch(bloomW, bloomD) else null, 0L)
 
   /** A state from its [[TurnSketches.result]] parts (empty Bloom bytes: no Bloom). */
   def fromParts(turns: Long, hll: Array[Byte], cms: Array[Byte], topk: Array[Byte],
@@ -203,18 +203,13 @@ object ToolInterner {
   * native registration can never silently change which sketches it builds.
   */
 final class TurnSketchAgg(
-    hllP: Int = HllSketch.DefaultP,
     cmsWidth: Int = CmsSketch.DefaultBins,
     cmsDepth: Int = CmsSketch.DefaultHash,
-    topKCapacity: Int = SpaceSavingSketch.DefaultCounters,
-    tdigestNc: Int = TDigestSketch.DefaultCentroids,
-    kllK: Int = KllSketch.DefaultK,
     bloomW: Int = 0,
     bloomD: Int = BloomSketch.DefaultHash)
     extends Aggregator[TurnInput, TurnSketches, TurnSketchResult] {
 
-  def zero: TurnSketches =
-    TurnSketches.create(hllP, cmsWidth, cmsDepth, topKCapacity, tdigestNc, kllK, bloomW, bloomD)
+  def zero: TurnSketches = TurnSketches.create(cmsWidth, cmsDepth, bloomW, bloomD)
 
   def reduce(b: TurnSketches, v: TurnInput): TurnSketches = {
     if (v != null) {

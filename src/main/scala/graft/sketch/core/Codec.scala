@@ -18,7 +18,6 @@ object Codec {
   final val TagHll: Byte = 7
   final val TagKll: Byte = 8
   final val TagMinHash: Byte = 9
-  final val TagSimHash: Byte = 10
 
   def writer(capacity: Int, tag: Byte): ByteBuffer = {
     val bb = ByteBuffer.allocate(capacity).order(ByteOrder.LITTLE_ENDIAN)

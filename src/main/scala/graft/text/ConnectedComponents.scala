@@ -67,24 +67,25 @@ object ConnectedComponents {
     * integral columns: the endpoint pair of each edge; self-loops and
     * duplicates tolerated). Returns `(node BIGINT, rep BIGINT)` — one row
     * per distinct endpoint, `rep` = the smallest node id in its component.
-    * Throws if the star-forest fixpoint is not reached within `maxIter`
-    * rounds (2·⌈log₂ n⌉ + 4 is the published envelope; 50 covers any
-    * realistic graph) — a loud failure, never a silently wrong labeling.
+    * Throws if the star-forest fixpoint is not reached within [[MaxIter]]
+    * rounds — a loud failure, never a silently wrong labeling.
     */
-  def run(edges: DataFrame, maxIter: Int = 50): DataFrame =
-    runWithRounds(edges, maxIter)._1
+  def run(edges: DataFrame): DataFrame = runWithRounds(edges)._1
 
   /** As [[run]], also returning the number of distributed
     * large-star/small-star rounds run before the labels were finished —
     * scale evidence against the O(log n) bound (0 when the whole graph
     * fits the one-task finish). */
-  def runWithRounds(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) =
-    components(edges, maxIter)
+  def runWithRounds(edges: DataFrame): (DataFrame, Int) = components(edges)
+
+  /** Round cap: 2·⌈log₂ n⌉ + 4 is the published envelope, and 50 covers any
+    * realistic graph. */
+  private val MaxIter = 50
 
   /** [[runWithRounds]] with the one-task bound `localEdges` (edge count at
     * or below which the labels are finished in one task) as a parameter,
     * so tests can force either regime: 0 runs the rounds to the end. */
-  private[text] def components(edges: DataFrame, maxIter: Int,
+  private[text] def components(edges: DataFrame,
       localEdges: Long = 250000L): (DataFrame, Int) = {
     val src = edges.columns(0)
     val dst = edges.columns(1)
@@ -99,7 +100,7 @@ object ConnectedComponents {
     var fp = fingerprint(e)
     var converged = false
     var it = 0
-    while (!converged && fp._1 > localEdges && it < maxIter) {
+    while (!converged && fp._1 > localEdges && it < MaxIter) {
       // LARGE-STAR on the symmetrized adjacency. For u's group the closed-
       // neighborhood min is m = least(min(v), u); every neighbor v > u
       // re-links to m. Under canonical input each undirected edge {a,b}
@@ -156,7 +157,7 @@ object ConnectedComponents {
         if (!converged || chains != 0 || multi != 0) {
           e.unpersist()
           throw new IllegalStateException(
-            s"connected components did not reach a star forest in $maxIter rounds " +
+            s"connected components did not reach a star forest in $MaxIter rounds " +
               s"(converged=$converged chains=$chains multiParent=$multi)")
         }
         // every node survives the rounds, so in the star forest the

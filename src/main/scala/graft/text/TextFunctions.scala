@@ -465,9 +465,12 @@ object TextFunctions {
   }
 }
 
-/** Column-API + SQL registration for the text/dedup/similarity functions. */
-class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializable {
+/** Column-API + SQL registration for the text/dedup/similarity functions,
+  * at fixed parameters: MinHash k = 128, 5-character shingles, 16 LSH bands.
+  */
+class TextSqlFunctions extends Serializable {
   import TextFunctions._
+  import TextSqlFunctions.{Bands, MinHashK, Shingle}
 
   val langIdUdf: UserDefinedFunction = udf((t: String) => langId(t))
   val tokenCountUdf: UserDefinedFunction = udf((t: String) => tokenCount(t))
@@ -476,17 +479,17 @@ class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializ
   val fingerprintUdf: UserDefinedFunction = udf((t: String) => fingerprint(t))
 
   val minhashSigUdf: UserDefinedFunction =
-    udf((t: String) => MinHashSketch.ofText(t, minHashK, shingle).toBytes)
+    udf((t: String) => MinHashSketch.ofText(t, MinHashK, Shingle).toBytes)
   val minhashJaccardUdf: UserDefinedFunction =
     udf((a: Array[Byte], b: Array[Byte]) =>
       MinHashSketch.fromBytes(a).estJaccard(MinHashSketch.fromBytes(b)))
   val minhashBandsUdf: UserDefinedFunction =
-    udf((sk: Array[Byte]) => MinHashSketch.fromBytes(sk).bandKeys(bands))
+    udf((sk: Array[Byte]) => MinHashSketch.fromBytes(sk).bandKeys(Bands))
 
   val simhashUdf: UserDefinedFunction = udf((t: String) => SimHash.ofText(t))
   val hammingUdf: UserDefinedFunction = udf((a: Long, b: Long) => SimHash.hamming(a, b))
   val exactJaccardUdf: UserDefinedFunction =
-    udf((a: String, b: String) => exactShingleJaccard(a, b, shingle))
+    udf((a: String, b: String) => exactShingleJaccard(a, b, Shingle))
 
   /** [[exactJaccardUdf]] marked non-deterministic (it is pure): for the
     * `select(jaccard).filter(jaccard >= τ)` verify shape, the optimizer
@@ -495,14 +498,14 @@ class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializ
     * this variant when the score column is both emitted and filtered on.
     */
   val exactJaccardOnceUdf: UserDefinedFunction =
-    udf((a: String, b: String) => exactShingleJaccard(a, b, shingle))
+    udf((a: String, b: String) => exactShingleJaccard(a, b, Shingle))
       .asNondeterministic()
 
   /** KMV bottom-k blocking keys over the distinct shingle set
     * (see TextFunctions.minKShingleHashes).
     */
   val minKShinglesUdf: UserDefinedFunction =
-    udf((t: String, k: Int) => minKShingleHashes(t, shingle, k))
+    udf((t: String, k: Int) => minKShingleHashes(t, Shingle, k))
 
   /** Full hashed shingle set (see TextFunctions.shingleHashes). Marked
     * non-deterministic (it is pure) to stop InferFiltersFromGenerate +
@@ -512,7 +515,7 @@ class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializ
     * (guide §4.4).
     */
   val shingleHashesUdf: UserDefinedFunction =
-    udf((t: String) => TextFunctions.shingleHashes(t, shingle)).asNondeterministic()
+    udf((t: String) => TextFunctions.shingleHashes(t, Shingle)).asNondeterministic()
 
   /** Codegen-friendly (no ScalaUDF) whitespace token count. */
   def tokenCountCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
@@ -573,10 +576,6 @@ class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializ
   def prefixPairsUdf(cap: Int, gateK: Int): UserDefinedFunction =
     udf((flat: Array[Long]) => prefixBucketPairs(flat, cap, gateK)).asNondeterministic()
 
-  /** Planted-near-duplicate synthetic document (see TextFunctions.synthDoc). */
-  val synthDocUdf: UserDefinedFunction =
-    udf((id: Long, variant: Int) => synthDoc(id, variant))
-
   /** Fused `simhash(synth_doc(id, variant))` (see TextFunctions.synthSimhash:
     * bit-identical, no intermediate text materialization).
     */
@@ -604,7 +603,12 @@ class TextSqlFunctions(minHashK: Int, shingle: Int, bands: Int) extends Serializ
 }
 
 object TextSqlFunctions {
-  lazy val default: TextSqlFunctions = new TextSqlFunctions(128, 5, 16)
-  def apply(minHashK: Int = 128, shingle: Int = 5, bands: Int = 16): TextSqlFunctions =
-    new TextSqlFunctions(minHashK, shingle, bands)
+  /** MinHash signature length. */
+  private val MinHashK = 128
+  /** Character shingle length; the oracle SQL's 5-gram `substr` matches it. */
+  private val Shingle = 5
+  /** LSH bands over the MinHash signature. */
+  private val Bands = 16
+
+  lazy val default: TextSqlFunctions = new TextSqlFunctions
 }

@@ -42,11 +42,11 @@ object VectorIvfIndex {
   }
 
   /** Learn the codebook: hash-sample then deterministic spherical k-means
-    * ([[VectorIvf.kmeans]]).
+    * ([[VectorIvf.kmeans]], at its default 10 Lloyd rounds).
     */
   def fit(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      sampleCap: Int = 4096, iters: Int = 10): Array[Array[Float]] =
-    VectorIvf.kmeans(sampleVectors(emb, idCol, vecCol, sampleCap), k, iters)
+      sampleCap: Int): Array[Array[Float]] =
+    VectorIvf.kmeans(sampleVectors(emb, idCol, vecCol, sampleCap), k)
 
   /** Assign every vector to its cell — run ONCE per codebook, persisted /
     * materialized by the caller and reused across probe batches. Output:

@@ -3,17 +3,19 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Times individual SparkEntry queries at a given sf dir (steady-state:
-  * one warmup pass then best of 3). Usage:
+  * one warmup pass then best of 3). The master is `local[$SPARK_GRAFT_CPUS]`
+  * with as many shuffle partitions (default 4), as in `graft.Verify`. Usage:
   *   sbt "runMain graft.tools.QueryProbe <sfDir> <query>[,<query>...]"
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val names = (if (args.length > 1) args(1) else "q_embed_near_dup").split(",")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[$cpus]")
       .appName("query-probe")
-      .config("spark.sql.shuffle.partitions", 32)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

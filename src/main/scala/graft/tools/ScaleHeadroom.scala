@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import graft.sketch.core.XxHash64
 
 /** Scale-headroom evidence for the dedup / near-dup / ANN pipelines.
@@ -259,91 +260,94 @@ object ScaleHeadroom {
       (s"pairs=${got.size}/50 planted, 0 false positives", got == want)
     }
 
-    // ---- STREAMING cross-batch dedup at 10× verify scale, under the
-    // production parameterization: dropDuplicatesWithinWatermark (bounded
-    // key state — q_stream_dedup's oracle row uses unbounded dropDuplicates
-    // for exactness) + RocksDBStateStoreProvider (the 10^12-key backend).
-    // 4 chunks × 250k fresh keys, chunks 1–3 each replaying 50k of the
-    // PREVIOUS chunk's keys 30 min later (cross-batch duplicates, well
-    // inside the 3 h watermark window, so suppression is guaranteed by the
-    // semantics, not by luck): the emitted count must be exactly 1M.
-    row("stream_dedup_rocksdb@1.15M", 1150000L) {
+    // ---- STREAMING cross-batch dedup under the production parameterization:
+    // dropDuplicatesWithinWatermark (bounded key state — q_stream_dedup's
+    // oracle row uses unbounded dropDuplicates for exactness) +
+    // RocksDBStateStoreProvider (the 10^12-key backend). Each chunk is one
+    // parquet file, replayed one file per trigger with `delay` as the
+    // watermark, in a session of its own (RocksDB provider, 16 shuffle
+    // partitions), so the shared session's confs are never touched. `check`
+    // sees the query's progress, the rows the memory sink emitted and the
+    // checkpoint dir; the work area is swept afterwards.
+    val replayBaseTs = 1735689600000L
+    def dedupReplay(sink: String, delay: String, chunks: Seq[DataFrame])(
+        check: (Array[StreamingQueryProgress], Long, java.io.File) => (String, Boolean))
+        : (String, Boolean) = {
       import java.nio.file.{Files, StandardCopyOption}
-      val work = Files.createTempDirectory("headroom-stream-dedup")
+      val work = Files.createTempDirectory(s"headroom-$sink")
       try {
-      val src = work.resolve("src"); Files.createDirectories(src)
-      val baseTs = 1735689600000L
-      (0 until 4).foreach { c =>
-        val fresh = spark.range(c * 250000L, (c + 1) * 250000L, 1, 8)
-          .select(col("id").as("user_id"),
-            timestamp_millis(lit(baseTs + c * 3600000L) + (col("id") % 1000L)).as("ts"))
-        val dups =
-          if (c == 0) fresh.limit(0)
-          else spark.range((c - 1) * 250000L, (c - 1) * 250000L + 50000L, 1, 2)
-            .select(col("id").as("user_id"),
-              timestamp_millis(lit(baseTs + c * 3600000L + 1800000L)).as("ts"))
-        val tmpOut = work.resolve(s"build-$c")
-        fresh.unionByName(dups).coalesce(1).write.parquet(tmpOut.toString)
-        val part = {
-          val l = Files.list(tmpOut)
-          try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().orElseThrow(() => new IllegalStateException(s"no part in $tmpOut"))
-          finally l.close()
-        }
-        val dest = src.resolve(f"chunk-$c%03d.parquet")
-        Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-        dest.toFile.setLastModified(baseTs + c * 1000L)
-      }
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = spark.conf.getOption(provKey)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val ckpt = work.resolve("ckpt").toString
-      val emitted =
-        try {
-          spark.conf.set(provKey,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          spark.conf.set("spark.sql.shuffle.partitions", "16")
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("user_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("ts",
-              org.apache.spark.sql.types.TimestampType)))
-          val q = spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(src.toString)
-            .withWatermark("ts", "3 hours")
-            .dropDuplicatesWithinWatermark("user_id")
-            .writeStream.format("memory").queryName("headroom_dedup_out")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          val batches = q.recentProgress.count(_.numInputRows > 0)
-          require(batches >= 4, s"expected >= 4 data micro-batches, saw $batches")
-          spark.table("headroom_dedup_out").count()
-        } finally {
-          prevProv match {
-            case Some(v) => spark.conf.set(provKey, v)
-            case None    => spark.conf.unset(provKey)
+        val src = work.resolve("src"); Files.createDirectories(src)
+        chunks.zipWithIndex.foreach { case (chunk, c) =>
+          val tmpOut = work.resolve(s"build-$c")
+          chunk.coalesce(1).write.parquet(tmpOut.toString)
+          val part = {
+            val l = Files.list(tmpOut)
+            try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
+              .findFirst().orElseThrow(() => new IllegalStateException(s"no part in $tmpOut"))
+            finally l.close()
           }
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          val dest = src.resolve(f"chunk-$c%03d.parquet")
+          Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
+          dest.toFile.setLastModified(replayBaseTs + c * 1000L)
         }
-      // the provider must have actually held the state: RocksDB checkpoints
-      // versioned .zip snapshots (+ .changelog), never HDFS-provider .delta
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
-      val stateFiles = walk(new java.io.File(ckpt, "state")).map(_.getName)
-      val rocks = stateFiles.exists(n => n.endsWith(".zip") || n.endsWith(".changelog"))
-      val noDelta = !stateFiles.exists(_.endsWith(".delta"))
-      (s"emitted=$emitted/1000000 exact, rocksdb_files=$rocks no_delta=$noDelta",
-        emitted == 1000000L && rocks && noDelta)
+        val ss = spark.newSession()
+        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        ss.conf.set("spark.sql.shuffle.partitions", "16")
+        val ckpt = work.resolve("ckpt").toFile
+        val q = ss.readStream.schema("user_id BIGINT, ts TIMESTAMP")
+          .option("maxFilesPerTrigger", "1").parquet(src.toString)
+          .withWatermark("ts", delay)
+          .dropDuplicatesWithinWatermark("user_id")
+          .writeStream.format("memory").queryName(sink)
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        check(q.recentProgress, ss.table(sink).count(), ckpt)
       } finally {
-        // this row's work area (1.15M-row chunks + RocksDB checkpoint) is
-        // per-run scratch, unlike the cached $base tables — sweep it
+        // the chunks and the RocksDB checkpoint are per-run scratch, unlike
+        // the cached $base tables
         val w = Files.walk(work)
         try w.sorted(java.util.Comparator.reverseOrder())
           .forEach(f => Files.deleteIfExists(f))
         finally w.close()
+      }
+    }
+    // `n` fresh keys [lo, lo + n) at chunk hour `c`, spread over its first second
+    def freshKeys(c: Int, lo: Long, n: Long): DataFrame = spark.range(lo, lo + n, 1, 8)
+      .select(col("id").as("user_id"),
+        timestamp_millis(lit(replayBaseTs + c * 3600000L) + (col("id") % 1000L)).as("ts"))
+    // replayed keys [lo, lo + n), all at `offsetMs` into chunk hour `c`
+    def replayedKeys(c: Int, lo: Long, n: Long, offsetMs: Long): DataFrame =
+      spark.range(lo, lo + n, 1, 2)
+        .select(col("id").as("user_id"),
+          timestamp_millis(lit(replayBaseTs + c * 3600000L + offsetMs)).as("ts"))
+
+    // Cross-batch dedup at 10× verify scale: 4 chunks × 250k fresh keys,
+    // chunks 1–3 each replaying 50k of the PREVIOUS chunk's keys 30 min
+    // later (cross-batch duplicates, well inside the 3 h watermark window,
+    // so suppression is guaranteed by the semantics, not by luck): the
+    // emitted count must be exactly 1M.
+    row("stream_dedup_rocksdb@1.15M", 1150000L) {
+      val chunks = (0 until 4).map { c =>
+        val fresh = freshKeys(c, c * 250000L, 250000L)
+        if (c == 0) fresh
+        else fresh.unionByName(replayedKeys(c, (c - 1) * 250000L, 50000L, 1800000L))
+      }
+      dedupReplay("headroom_dedup_out", "3 hours", chunks) { (progress, emitted, ckpt) =>
+        val batches = progress.count(_.numInputRows > 0)
+        require(batches >= 4, s"expected >= 4 data micro-batches, saw $batches")
+        // the provider must have actually held the state: RocksDB checkpoints
+        // versioned .zip snapshots (+ .changelog), never HDFS-provider .delta
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+        val stateFiles = walk(new java.io.File(ckpt, "state")).map(_.getName)
+        val rocks = stateFiles.exists(n => n.endsWith(".zip") || n.endsWith(".changelog"))
+        val noDelta = !stateFiles.exists(_.endsWith(".delta"))
+        (s"emitted=$emitted/1000000 exact, rocksdb_files=$rocks no_delta=$noDelta",
+          emitted == 1000000L && rocks && noDelta)
       }
     }
 
@@ -360,92 +364,33 @@ object ScaleHeadroom {
     // numRowsTotal must peak at ~2 chunks of keys (<= 700k) — an unbounded
     // dropDuplicates would hold all 2.2M.
     row("stream_dedup_bounded_state@2.55M", 2550000L) {
-      import java.nio.file.{Files, StandardCopyOption}
-      val work = Files.createTempDirectory("headroom-bounded-dedup")
-      try {
-        val src = work.resolve("src"); Files.createDirectories(src)
-        val baseTs = 1735689600000L
-        val hourMs = 3600000L
-        (0 until 8).foreach { c =>
-          val fresh = spark.range(c * 250000L, (c + 1) * 250000L, 1, 8)
-            .select(col("id").as("user_id"),
-              timestamp_millis(lit(baseTs + c * hourMs) + (col("id") % 1000L)).as("ts"))
-          val nearDups = // ids [base, base+50k) of chunk c-1, 10 min in
-            if (c == 0) fresh.limit(0)
-            else spark.range((c - 1) * 250000L, (c - 1) * 250000L + 50000L, 1, 2)
-              .select(col("id").as("user_id"),
-                timestamp_millis(lit(baseTs + c * hourMs + 600000L)).as("ts"))
-          val farDups = // ids [base+50k, base+100k) of chunk c-4, 5 min in
-            if (c < 4) fresh.limit(0)
-            else spark.range((c - 4) * 250000L + 50000L, (c - 4) * 250000L + 100000L, 1, 2)
-              .select(col("id").as("user_id"),
-                timestamp_millis(lit(baseTs + c * hourMs + 300000L)).as("ts"))
-          val tmpOut = work.resolve(s"build-$c")
-          fresh.unionByName(nearDups).unionByName(farDups)
-            .coalesce(1).write.parquet(tmpOut.toString)
-          val part = {
-            val l = Files.list(tmpOut)
-            try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
-              .findFirst().orElseThrow(() => new IllegalStateException(s"no part in $tmpOut"))
-            finally l.close()
-          }
-          val dest = src.resolve(f"chunk-$c%03d.parquet")
-          Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-          dest.toFile.setLastModified(baseTs + c * 1000L)
-        }
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProv = spark.conf.getOption(provKey)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val ckpt = work.resolve("ckpt").toString
-        val (emitted, maxState) =
-          try {
-            spark.conf.set(provKey,
-              "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-            spark.conf.set("spark.sql.shuffle.partitions", "16")
-            val schema = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("user_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("ts",
-                org.apache.spark.sql.types.TimestampType)))
-            val q = spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(src.toString)
-              .withWatermark("ts", "30 minutes")
-              .dropDuplicatesWithinWatermark("user_id")
-              .writeStream.format("memory").queryName("headroom_bounded_out")
-              .option("checkpointLocation", ckpt)
-              .outputMode("append")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-            val batches = q.recentProgress.count(_.numInputRows > 0)
-            require(batches >= 8, s"expected >= 8 data micro-batches, saw $batches")
-            val mx = q.recentProgress
-              .flatMap(_.stateOperators.map(_.numRowsTotal)).max
-            (spark.table("headroom_bounded_out").count(), mx)
-          } finally {
-            prevProv match {
-              case Some(v) => spark.conf.set(provKey, v)
-              case None    => spark.conf.unset(provKey)
-            }
-            spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          }
+      val chunks = (0 until 8).map { c =>
+        val fresh = freshKeys(c, c * 250000L, 250000L)
+        // ids [base, base+50k) of chunk c-1, 10 min in
+        val near = if (c == 0) fresh
+          else fresh.unionByName(replayedKeys(c, (c - 1) * 250000L, 50000L, 600000L))
+        // ids [base+50k, base+100k) of chunk c-4, 5 min in
+        if (c < 4) near
+        else near.unionByName(replayedKeys(c, (c - 4) * 250000L + 50000L, 50000L, 300000L))
+      }
+      dedupReplay("headroom_bounded_out", "30 minutes", chunks) { (progress, emitted, _) =>
+        val batches = progress.count(_.numInputRows > 0)
+        require(batches >= 8, s"expected >= 8 data micro-batches, saw $batches")
+        val maxState = progress.flatMap(_.stateOperators.map(_.numRowsTotal)).max
         (s"emitted=$emitted/2200000 exact, max_state_rows=$maxState (<=700k bound, " +
           "vs 2.2M keys an unbounded dedup would hold)",
           emitted == 2200000L && maxState <= 700000L && maxState > 0L)
-      } finally {
-        val w = Files.walk(work)
-        try w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.deleteIfExists(f))
-        finally w.close()
       }
     }
 
     row("tree_merge_10k_ckpts", 10000L) {
       // SketchJob.mergeDeterministic at the 100 TB merge envelope: ~10k
       // checkpoint chunks (the checkpointChunks sizing that keeps checkpoint
-      // volume ~0.1% of a 100 TB input). Each synthetic chunk carries REAL
-      // (small-parameter) sketches whose contents are a pure function of the
-      // chunk id — distinct values across the table, so the merged HLL has a
+      // volume ~0.1% of a 100 TB input). Each synthetic chunk is a REAL
+      // composite (a 512×5 CMS and an 8192-bit Bloom, the other sketches at
+      // their defaults) built through `TurnSketches` and SketchJob's
+      // checkpoint row, whose contents are a pure function of the chunk id
+      // — distinct conv ids across the table, so the merged HLL has a
       // closed-form truth. PASS requires (a) byte-identical merged states
       // under an adversarial re-presentation of the same rows (shuffled,
       // then repartitioned by a non-key) — the order-canonicality contract
@@ -455,29 +400,21 @@ object ScaleHeadroom {
       // fold streams one decoded state at a time.
       import spark.implicits._
       import graft.jobs.{PartitionSketches, SketchJob}
-      import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch, SpaceSavingSketch, TDigestSketch}
+      import graft.sketch.HllSketch
+      import graft.sketch.agg.TurnSketches
+      import org.apache.spark.unsafe.types.UTF8String
       val nCkpt = 10000
       val perRow = 200
       val parts = spark.range(0, nCkpt, 1, 32).as[Long].map { pidL =>
         val pid = pidL.toInt
-        val role = s"role_${pid % 4}"
-        val hll = HllSketch()
-        val cms = CmsSketch(512, 5)
-        val topk = SpaceSavingSketch(100)
-        val td = TDigestSketch(100)
-        val kll = KllSketch(200)
-        val bloom = BloomSketch(8192, 5)
+        val t = TurnSketches.create(512, 5, 8192, 5)
         var i = 0
         while (i < perRow) {
-          val v = s"v_${pid}_$i"
-          hll.add(v); cms.add(v); topk.add(s"t_${(pid + i) % 37}"); bloom.add(v)
-          val x = ((pid * 31 + i * 7) % 1000).toDouble
-          td.add(x); kll.add(x)
+          t.add(UTF8String.fromString(s"v_${pid}_$i"), UTF8String.fromString(s"t_${(pid + i) % 37}"),
+            ((pid * 31 + i * 7) % 1000).toDouble, hasLen = true)
           i += 1
         }
-        PartitionSketches(pid, role, perRow.toLong, (pid % 17).toLong,
-          hll.toBytes, cms.toBytes, topk.toBytes, td.toBytes, kll.toBytes,
-          bloom.toBytes)
+        SketchJob.checkpointRow(pid, s"role_${pid % 4}", (pid % 17).toLong, t)
       }.persist()
       parts.count() // materialize so both presentations read the same rows
       try {

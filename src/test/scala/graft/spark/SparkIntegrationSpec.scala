@@ -603,19 +603,26 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SketchJob's merged states == the native aggregate's over the same rows") {
     // the third composite path: stage 1 plus the canonical tree merge,
-    // against turn_sketch_native with SketchJob's Bloom; NULLIF gives the
-    // aggregate SketchJob's rule of skipping empty tools
+    // against turn_sketch_native with SketchJob's Bloom. The input adds
+    // rows whose tool is '' to the transcripts' NULL tools: both paths skip
+    // only NULL, so '' must reach the CMS and top-k in each
+    val input = s"$tdir/paths-input"
+    transcripts.unionByName(transcripts.filter(col("role") === "tool").limit(40)
+      .withColumn("tool", lit("")))
+      .write.partitionBy("ts_date").parquet(input)
     val cfg = SketchJob.Config(
-      input = s"$tdir/transcripts",
+      input = input,
       output = s"$tdir/paths-out",
       checkpointDir = s"$tdir/paths-ckpt")
     SketchJob.run(spark, cfg)
     val job = SketchJob.mergeDeterministic(SketchJob.mergeCheckpoints(spark, cfg))
       .collect().sortBy(_.role)
     graft.plans.TurnSketchNativeAgg.register(spark, bloomW = BloomSketch.DefaultBits)
-    val native = spark.sql(
-      """SELECT role, turn_sketch_native(conv_id, NULLIF(tool, ''), CAST(text_len AS DOUBLE))
-        |AS sk FROM transcripts GROUP BY role""".stripMargin)
+    val rows = spark.read.parquet(input)
+    assert(rows.filter(col("tool") === "").count() == 40)
+    assert(rows.filter(col("tool").isNull).count() > 0)
+    val native = rows.groupBy("role")
+      .agg(expr("turn_sketch_native(conv_id, tool, CAST(text_len AS DOUBLE))").as("sk"))
       .select(col("role"), col("sk.*")).orderBy("role").collect()
     assert(job.map(_.role).toSeq == native.map(_.getString(0)).toSeq && job.nonEmpty)
     job.zip(native).foreach { case (j, n) =>

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Connected components (large-star/small-star rounds, one-task union-find
   * finish): planted shapes, equality with a brute-force union-find on
   * seeded random graphs, the O(log n) round bound on a long path (plain
-  * propagation would need diameter rounds and trip maxIter), and invariance
+  * propagation would need diameter rounds and trip MaxIter), and invariance
   * to input presentation. Every case runs both regimes — the bound forced
   * to 0 (distributed rounds to the fixpoint) and the default (one-task
   * finish) — and asserts equal labels; the handover between them and the
@@ -38,16 +38,16 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** Labels of `df` through both regimes, asserted equal. */
-  private def runBoth(df: DataFrame, maxIter: Int = 50): Map[Long, Long] = {
-    val rounds = labels(ConnectedComponents.components(df, maxIter, localEdges = 0)._1)
-    val local = labels(ConnectedComponents.components(df, maxIter)._1)
+  private def runBoth(df: DataFrame): Map[Long, Long] = {
+    val rounds = labels(ConnectedComponents.components(df, localEdges = 0)._1)
+    val local = labels(ConnectedComponents.components(df)._1)
     assert(rounds == local, "distributed rounds and one-task finish disagree")
     local
   }
 
-  private def run(edges: Seq[(Long, Long)], maxIter: Int = 50): Map[Long, Long] = {
+  private def run(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val ss = spark; import ss.implicits._
-    runBoth(edges.toDF("a", "b"), maxIter)
+    runBoth(edges.toDF("a", "b"))
   }
 
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -95,7 +95,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a 300-node path has diameter 299: plain min-propagation would blow
     // the 50-round cap; large-star/small-star needs ~2*log2(n)+4 rounds
     val edges = (0L until 299L).map(i => (i, i + 1))
-    val got = run(edges, maxIter = 50)
+    val got = run(edges)
     assert(got.size == 300 && got.values.forall(_ == 0L))
   }
 
@@ -133,8 +133,8 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val initial = edges.map { case (a, b) => (math.max(a, b), math.min(a, b)) }.distinct.size
     assert(initial > 150)
     val df = edges.toDF("a", "b")
-    val (full, fullRounds) = ConnectedComponents.components(df, 50, localEdges = 0)
-    val (mid, midRounds) = ConnectedComponents.components(df, 50, localEdges = 150)
+    val (full, fullRounds) = ConnectedComponents.components(df, localEdges = 0)
+    val (mid, midRounds) = ConnectedComponents.components(df, localEdges = 150)
     assert(midRounds > 0 && midRounds < fullRounds,
       s"expected a mid-run handover: $midRounds of $fullRounds rounds")
     assert(labels(mid) == labels(full))
@@ -165,7 +165,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       for (bound <- Seq(0L, 250000L)) {
         seen.clear(); drained = false
-        labels(ConnectedComponents.components(edges, 50, localEdges = bound)._1)
+        labels(ConnectedComponents.components(edges, localEdges = bound)._1)
         // a marker job after the run: once the listener has seen it, it
         // has seen every job the run submitted
         spark.sparkContext.setLocalProperty(marker, "1")
