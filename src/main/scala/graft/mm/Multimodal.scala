@@ -2,7 +2,6 @@ package graft.mm
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
@@ -268,13 +267,4 @@ object Multimodal {
   val resizeUdf: UserDefinedFunction =
     udf((b: Array[Byte], w: Int, h: Int) => resize(b, w, h))
   val syntheticMediaUdf: UserDefinedFunction = udf((id: Long) => synthetic(id))
-
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("media_meta", mediaMetaUdf)
-    spark.udf.register("media_encode", encodeMediaUdf)
-    spark.udf.register("media_features", mediaFeaturesUdf)
-    spark.udf.register("media_frames", frameSampleUdf)
-    spark.udf.register("media_resize", resizeUdf)
-    spark.udf.register("synthetic_media", syntheticMediaUdf)
-  }
 }

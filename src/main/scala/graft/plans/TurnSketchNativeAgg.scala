@@ -1,16 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.{Encoders, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketch.{BloomSketch, CmsSketch}
-import graft.sketch.agg.{TurnSketchResult, TurnSketches}
+import graft.sketch.agg.{SketchFunctions, TurnSketchResult, TurnSketches}
 
 /** Native Catalyst aggregate for the flagship transcript sketch build — the
   * (c)-tier of the custom-operator ladder: a `TypedImperativeAggregate`
@@ -32,8 +31,9 @@ import graft.sketch.agg.{TurnSketchResult, TurnSketches}
   * saturates (FPR → 1, zero information) while 4×-ing the partial state
   * every map task ships, so both flagships make the filter strictly opt-in.
   *
-  * SQL: `SELECT role, turn_sketch_native(conv_id, tool, text_len) ...`
-  * (register via [[GraftExtensions]] or [[TurnSketchNativeAgg.register]]).
+  * SQL: `SELECT role, turn_sketch_native(conv_id, tool, text_len) ...`, from
+  * [[GraftExtensions]] at the defaults, or one configuration per session
+  * through [[TurnSketchNativeAgg.register]] (another one: a `spark.newSession()`).
   */
 case class TurnSketchNativeAgg(
     conv: Expression,
@@ -100,38 +100,32 @@ object TurnSketchNativeAgg {
 
   val FunctionName = "turn_sketch_native"
 
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[TurnSketchNativeAgg].getName, null, FunctionName,
-    "_FUNC_(conv_id, tool, len) - composite transcript sketch aggregate " +
-      "(HLL++ conv, CMS + top-k tool, t-digest + KLL len) over raw UTF8String " +
-      "memory. conv-id Bloom is OFF unless registered with bloomW > 0 " +
-      "(capacity-size it via Bloom.create(n, p)).",
-    "", "", "", "agg_funcs", "4.0.0", "", "built-in")
-
-  def builder(cmsWidth: Int = CmsSketch.DefaultBins, cmsDepth: Int = CmsSketch.DefaultHash,
-      bloomW: Int = 0): Seq[Expression] => Expression = { children =>
+  /** The SQL table entry of one configuration, built as the sketch functions' are. */
+  def function(cmsWidth: Int = CmsSketch.DefaultBins, cmsDepth: Int = CmsSketch.DefaultHash,
+      bloomW: Int = 0): SketchFunctions.Entry = SketchFunctions.entry(FunctionName,
+    "_FUNC_(conv_id, tool, len) - composite transcript sketch aggregate (HLL++ conv, " +
+      s"CMS $cmsWidth x $cmsDepth + top-k tool, t-digest + KLL len); conv-id Bloom " +
+      (if (bloomW > 0) s"$bloomW bits." else "OFF (register with bloomW > 0 to add one)."),
+    classOf[TurnSketchNativeAgg], "agg_funcs") { children =>
     require(children.length == 3,
       s"$FunctionName expects (conv_id, tool, len), got ${children.length} args")
     TurnSketchNativeAgg(children(0), children(1), children(2),
-      cmsWidth = cmsWidth, cmsDepth = cmsDepth, bloomW = bloomW)
-      .toAggregateExpression()
+      cmsWidth = cmsWidth, cmsDepth = cmsDepth, bloomW = bloomW).toAggregateExpression()
   }
 
-  /** Session-scoped registration (tests, notebooks). */
+  /** Session-scoped registration (tests, notebooks, benchmarks). */
   def register(spark: SparkSession, cmsWidth: Int = CmsSketch.DefaultBins,
-      cmsDepth: Int = CmsSketch.DefaultHash, bloomW: Int = 0): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(FunctionName), info, builder(cmsWidth, cmsDepth, bloomW))
-  }
+      cmsDepth: Int = CmsSketch.DefaultHash, bloomW: Int = 0): Unit =
+    SketchFunctions.registerFunction(spark, function(cmsWidth, cmsDepth, bloomW))
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` — injects the native
-  * aggregate at session build time (the spark-submit path; no driver code
-  * needed).
+/** `spark.sql.extensions=graft.plans.GraftExtensions` — injects every graft
+  * SQL function (the default [[graft.sketch.agg.SketchFunctions]] table and
+  * `turn_sketch_native`) at session build time: the spark-submit path, with
+  * no driver code needed.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier(TurnSketchNativeAgg.FunctionName),
-      TurnSketchNativeAgg.info, TurnSketchNativeAgg.builder()))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    (SketchFunctions.default.functions :+ TurnSketchNativeAgg.function())
+      .foreach(ext.injectFunction)
 }

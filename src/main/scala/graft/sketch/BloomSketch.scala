@@ -126,6 +126,10 @@ final class BloomSketch private (val width: Int, val depth: Int, val words: Arra
 object BloomSketch {
   val DefaultBits = 1024 * 1024 * 8 // 1 MB (bloom.js:10)
   val DefaultHash = 5 // optimal for 2% FPR over 1M elements (bloom.js:11)
+  /** Most hash functions a filter may have: `sizing` gives ⌊log2(1/p)⌋ ≤ 1074
+    * for any positive double p, and each add and query walks `depth` slots.
+    */
+  val MaxDepth = 1074
 
   def apply(w: Int = DefaultBits, d: Int = DefaultHash): BloomSketch = {
     // replicate the reference's `w || DEFAULT_BITS` / `d || DEFAULT_HASH`
@@ -133,6 +137,7 @@ object BloomSketch {
     // never a degenerate zero-bit / zero-hash filter
     val w1 = if (w <= 0) DefaultBits else w
     val d1 = if (d <= 0) DefaultHash else d
+    require(d1 <= MaxDepth, s"Bloom depth $d1 exceeds $MaxDepth hash functions")
     val n = math.ceil(w1 / 32.0).toInt
     new BloomSketch(n * 32, d1, new Array[Int](n))
   }
@@ -161,7 +166,10 @@ object BloomSketch {
 
   def fromBytes(bytes: Array[Byte]): BloomSketch = Codec.decode(bytes, Codec.TagBloom) { bb =>
     val d = bb.getInt()
+    if (d < 1 || d > MaxDepth) throw Codec.corrupt(Codec.TagBloom, 3,
+      s"Bloom depth $d is outside [1, $MaxDepth]")
     val words = Codec.readIntArray(bb)
+    if (words.isEmpty) throw Codec.corrupt(Codec.TagBloom, 7, "Bloom filter has no bits")
     new BloomSketch(words.length * 32, d, words)
   }
 }

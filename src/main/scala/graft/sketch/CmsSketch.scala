@@ -121,8 +121,20 @@ object CmsSketch {
   }
 
   def fromBytes(bytes: Array[Byte]): CmsSketch = Codec.decode(bytes, Codec.TagCms) { bb =>
+    val (w, d, num, table) = readTable(bb, Codec.TagCms)
+    new CmsSketch(w, d, table, num)
+  }
+
+  /** Width, depth, count and table of a CMS or CMM encoding; a shape that is
+    * not `w·d ≥ 1` counters fails here, not as a bad index on first query.
+    */
+  private[sketch] def readTable(bb: java.nio.ByteBuffer, tag: Byte)
+      : (Int, Int, Long, Array[Long]) = {
     val w = bb.getInt(); val d = bb.getInt(); val num = bb.getLong()
-    new CmsSketch(w, d, Codec.readLongArray(bb), num)
+    val table = Codec.readLongArray(bb)
+    if (w < 1 || d < 1 || w.toLong * d != table.length) throw Codec.corrupt(tag, 3,
+      s"width $w x depth $d does not match the ${table.length} counters")
+    (w, d, num, table)
   }
 }
 
@@ -194,8 +206,8 @@ object CmmSketch {
   }
 
   def fromBytes(bytes: Array[Byte]): CmmSketch = Codec.decode(bytes, Codec.TagCmm) { bb =>
-    val w = bb.getInt(); val d = bb.getInt(); val num = bb.getLong()
-    new CmmSketch(w, d, Codec.readLongArray(bb), num)
+    val (w, d, num, table) = CmsSketch.readTable(bb, Codec.TagCmm)
+    new CmmSketch(w, d, table, num)
   }
 
   /** Median with JS-parity semantics: sort ascending, middle (odd) or mean of

@@ -327,10 +327,10 @@ object TDigestSketch {
     fromCentroids(nc, mn, mx, means, weights)
   }
 
-  /** Rebuild from centroid state (shared by the binary and JSON codecs).
-    * A state whose compression is out of range, or whose centroids do not
-    * fit its 2·nc centroid capacity or pair up with their weights, fails
-    * with an `IllegalArgumentException`.
+  /** Rebuild from centroid state (the binary and JSON codecs). A compression
+    * out of range, centroids beyond its 2·nc capacity or unpaired with weights,
+    * or weights not positive with a finite sum (`add` rejects them on merge,
+    * `quantile` bisects their running sum) fail with `IllegalArgumentException`.
     */
   def fromCentroids(nc: Int, mn: Double, mx: Double,
       means: Array[Double], weights: Array[Double]): TDigestSketch = {
@@ -344,11 +344,13 @@ object TDigestSketch {
       var sum = 0.0
       var i = 0
       while (i < means.length) {
+        require(weights(i) > 0, s"t-digest centroid $i has weight ${weights(i)}")
         td.mean(i) = means(i)
         td.weight(i) = weights(i)
         sum += weights(i)
         i += 1
       }
+      require(sum < Double.PositiveInfinity, "t-digest weights sum to infinity")
       td.last = means.length - 1
       td.totalSum = sum
       td.min = mn

@@ -1,8 +1,8 @@
 package graft.sketch.agg
 
-import org.apache.spark.sql.{Column, GraftColumns, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.{Column, GraftColumns}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
@@ -63,25 +63,22 @@ case class SketchAgg[S >: Null <: AnyRef](
 }
 
 /** A named sketch aggregate: the Column-API handle (`fns.hllAgg(col("x"))`)
-  * and its session-scoped SQL registration build the same [[SketchAgg]].
+  * and its SQL builder build the same [[SketchAgg]].
   */
 final class SketchAggFunction(name: String, adapter: SketchAdapter[_ >: Null <: AnyRef])
     extends Serializable {
 
-  private def build(fn: String)(children: Seq[Expression]): SketchAgg[_] = {
+  private def build(children: Seq[Expression]): SketchAgg[_] = {
     require(children.length == adapter.inputTypes.length,
-      s"$fn expects ${adapter.inputTypes.length} argument(s), got ${children.length}")
-    SketchAgg(fn, adapter, children)
+      s"$name expects ${adapter.inputTypes.length} argument(s), got ${children.length}")
+    SketchAgg(name, adapter, children)
   }
 
-  def apply(cols: Column*): Column = GraftColumns.aggregate(cols)(build(name))
+  def apply(cols: Column*): Column = GraftColumns.aggregate(cols)(build)
 
-  def register(spark: SparkSession, prefix: String): Unit = {
-    val fn = prefix + name
-    spark.sessionState.functionRegistry.registerFunction(FunctionIdentifier(fn),
-      new ExpressionInfo(classOf[SketchAgg[_]].getName, null, fn),
-      children => build(fn)(children).toAggregateExpression())
-  }
+  /** The builder of its SQL table entry (see [[SketchFunctions.functions]]). */
+  private[agg] def sqlBuilder(children: Seq[Expression]): Expression =
+    build(children).toAggregateExpression()
 }
 
 /** Merge and canonical codec of one sketch type, shared by its value and

@@ -2,7 +2,6 @@ package graft.text
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
@@ -465,29 +464,24 @@ object TextFunctions {
   }
 }
 
-/** Column-API + SQL registration for the text/dedup/similarity functions,
-  * at fixed parameters: MinHash k = 128, 5-character shingles, 16 LSH bands.
+/** Column-API handles for the text/dedup/similarity functions the queries
+  * use, at fixed parameters: MinHash k = 128, 5-character shingles, 16 LSH
+  * bands. None of them is a SQL name.
   */
 class TextSqlFunctions extends Serializable {
   import TextFunctions._
   import TextSqlFunctions.{Bands, MinHashK, Shingle}
 
   val langIdUdf: UserDefinedFunction = udf((t: String) => langId(t))
-  val tokenCountUdf: UserDefinedFunction = udf((t: String) => tokenCount(t))
   val bpeishCountUdf: UserDefinedFunction = udf((t: String) => bpeishCount(t))
   val qualityScoreUdf: UserDefinedFunction = udf((t: String) => qualityScore(t))
   val fingerprintUdf: UserDefinedFunction = udf((t: String) => fingerprint(t))
 
   val minhashSigUdf: UserDefinedFunction =
     udf((t: String) => MinHashSketch.ofText(t, MinHashK, Shingle).toBytes)
-  val minhashJaccardUdf: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      MinHashSketch.fromBytes(a).estJaccard(MinHashSketch.fromBytes(b)))
   val minhashBandsUdf: UserDefinedFunction =
     udf((sk: Array[Byte]) => MinHashSketch.fromBytes(sk).bandKeys(Bands))
 
-  val simhashUdf: UserDefinedFunction = udf((t: String) => SimHash.ofText(t))
-  val hammingUdf: UserDefinedFunction = udf((a: Long, b: Long) => SimHash.hamming(a, b))
   val exactJaccardUdf: UserDefinedFunction =
     udf((a: String, b: String) => exactShingleJaccard(a, b, Shingle))
 
@@ -500,12 +494,6 @@ class TextSqlFunctions extends Serializable {
   val exactJaccardOnceUdf: UserDefinedFunction =
     udf((a: String, b: String) => exactShingleJaccard(a, b, Shingle))
       .asNondeterministic()
-
-  /** KMV bottom-k blocking keys over the distinct shingle set
-    * (see TextFunctions.minKShingleHashes).
-    */
-  val minKShinglesUdf: UserDefinedFunction =
-    udf((t: String, k: Int) => minKShingleHashes(t, Shingle, k))
 
   /** Full hashed shingle set (see TextFunctions.shingleHashes). Marked
     * non-deterministic (it is pure) to stop InferFiltersFromGenerate +
@@ -532,11 +520,6 @@ class TextSqlFunctions extends Serializable {
   val cosineUdf: UserDefinedFunction =
     udf((a: Seq[Float], b: Seq[Float]) => cosine(a, b))
 
-  /** ANN scale path: LSH bucket keys for an embedding (join key, no cross
-    * join); 8 tables x 12 bits by default.
-    */
-  val annBucketsUdf: UserDefinedFunction =
-    udf((v: Seq[Float]) => VectorLsh.bucketKeys(v, 12, 8))
   val annBucketsParamUdf: UserDefinedFunction =
     udf((v: Seq[Float], bits: Int, tables: Int) => VectorLsh.bucketKeys(v, bits, tables))
   val perturbUdf: UserDefinedFunction =
@@ -581,25 +564,6 @@ class TextSqlFunctions extends Serializable {
     */
   val synthSimhashUdf: UserDefinedFunction =
     udf((id: Long, variant: Int) => synthSimhash(id, variant))
-
-  def register(spark: SparkSession, prefix: String = ""): Unit = {
-    def reg(name: String, f: UserDefinedFunction): Unit = spark.udf.register(prefix + name, f)
-    reg("lang_id", langIdUdf)
-    reg("token_count", tokenCountUdf)
-    reg("bpeish_count", bpeishCountUdf)
-    reg("quality_score", qualityScoreUdf)
-    reg("doc_fingerprint", fingerprintUdf)
-    reg("minhash_sig", minhashSigUdf)
-    reg("minhash_jaccard", minhashJaccardUdf)
-    reg("minhash_bands", minhashBandsUdf)
-    reg("simhash", simhashUdf)
-    reg("hamming", hammingUdf)
-    reg("exact_jaccard", exactJaccardUdf)
-    reg("kmv_shingles", minKShinglesUdf)
-    reg("cosine_sim", cosineUdf)
-    reg("ann_buckets", annBucketsUdf)
-    reg("ann_buckets_p", annBucketsParamUdf)
-  }
 }
 
 object TextSqlFunctions {

@@ -20,7 +20,6 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Multimodal.register(spark)
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
@@ -107,10 +106,12 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("distributed decode pipeline: binary column → meta struct + features") {
+    import Multimodal.{frameSampleUdf, mediaFeaturesUdf, mediaMetaUdf, syntheticMediaUdf}
     val df = spark.range(0, 100, 1, 4)
-      .selectExpr("id", "synthetic_media(id) AS blob")
-      .selectExpr("id", "media_meta(blob) AS meta", "media_features(blob, 16) AS feat",
-        "media_frames(blob, 3) AS frames")
+      .select(col("id"), syntheticMediaUdf(col("id")).as("blob"))
+      .select(col("id"), mediaMetaUdf(col("blob")).as("meta"),
+        mediaFeaturesUdf(col("blob"), lit(16)).as("feat"),
+        frameSampleUdf(col("blob"), lit(3)).as("frames"))
     val rows = df.collect()
     assert(rows.length == 100)
     // schema shape: struct + float array + array<binary>
@@ -126,7 +127,7 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // determinism across partitions/runs
     val again = spark.range(0, 100, 1, 7)
-      .selectExpr("id", "media_features(synthetic_media(id), 16) AS feat")
+      .select(col("id"), mediaFeaturesUdf(syntheticMediaUdf(col("id")), lit(16)).as("feat"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
     rows.foreach { r =>
       assert(again(r.getLong(0)) == r.getSeq[Float](2), "partition-count independent")

@@ -45,6 +45,22 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally if (tdir != null) TestDirs.deleteTree(Paths.get(tdir))
   }
 
+  /** `got == want`, except that byte arrays compare by content
+    * (`java.util.Arrays.equals`), and a failure names both lengths, a short
+    * SHA-256 of each side and the first differing offset instead of every
+    * byte.
+    */
+  private def assertSame(got: Any, want: Any, clue: => String): Unit = (got, want) match {
+    case (a: Array[Byte], b: Array[Byte]) =>
+      if (!java.util.Arrays.equals(a, b)) {
+        def sha(x: Array[Byte]) = java.security.MessageDigest.getInstance("SHA-256")
+          .digest(x).take(6).map("%02x".format(_)).mkString
+        fail(s"$clue: ${a.length} bytes (sha256 ${sha(a)}) vs ${b.length} bytes " +
+          s"(sha256 ${sha(b)}), first difference at offset ${java.util.Arrays.mismatch(a, b)}")
+      }
+    case _ => assert(got == want, clue)
+  }
+
   test("generator is deterministic and schema matches input_hint") {
     assert(transcripts.columns.toSet ==
       Set("conv_id", "turn_idx", "role", "text", "tool", "ts", "ts_date", "text_len"))
@@ -111,7 +127,7 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect()(0).getAs[Array[Byte]](0)
     val dsBytes = transcripts.filter(col("role") === "user")
       .agg(fns.hllAgg(col("conv_id"))).collect()(0).getAs[Array[Byte]](0)
-    assert(sqlBytes.toSeq == dsBytes.toSeq, "identical serialized sketch")
+    assertSame(sqlBytes, dsBytes, "identical serialized sketch")
   }
 
   test("cms point queries are exact on the small tool domain") {
@@ -193,16 +209,16 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .agg(fns.hllAgg(col("conv_id")).as("hll"),
         fns.cmsAgg(col("tool")).as("cms"))
       .collect().map(r => r.getString(0) ->
-        (r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq)).toMap
+        (r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2))).toMap
     val salted = SaltedAgg(transcripts, Seq("role"), col("conv_id"), 8,
       Seq(fns.hllAgg(col("conv_id")).as("hll"), fns.cmsAgg(col("tool")).as("cms")),
       Seq(fns.hllMergeAgg(col("hll")).as("hll"), fns.cmsMergeAgg(col("cms")).as("cms")))
       .collect().map(r => r.getString(0) ->
-        (r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq)).toMap
+        (r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2))).toMap
     assert(salted.keySet == unsalted.keySet)
     salted.keySet.foreach { role =>
-      assert(salted(role)._1 == unsalted(role)._1, s"hll bytes differ for $role")
-      assert(salted(role)._2 == unsalted(role)._2, s"cms bytes differ for $role")
+      assertSame(salted(role)._1, unsalted(role)._1, s"hll bytes differ for $role")
+      assertSame(salted(role)._2, unsalted(role)._2, s"cms bytes differ for $role")
     }
   }
 
@@ -280,12 +296,15 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fanout 2 forces a real two-level tree even on the small fixture
     def states(ds: org.apache.spark.sql.Dataset[graft.jobs.PartitionSketches]) =
       SketchJob.mergeDeterministic(ds, fanout = 2).collect().sortBy(_.role)
-        .map(p => (p.role, p.rows_seen, p.hll_conv.toSeq, p.cms_tool.toSeq,
-          p.topk_tool.toSeq, p.tdigest_len.toSeq, p.kll_len.toSeq,
-          p.bloom_conv.toSeq)).toSeq
+        .map(p => Seq(p.role, p.rows_seen, p.hll_conv, p.cms_tool,
+          p.topk_tool, p.tdigest_len, p.kll_len, p.bloom_conv)).toSeq
     val ref = states(presentations.head)
     presentations.tail.foreach { p =>
-      assert(states(p) == ref, "merged sketch bytes differ across presentations")
+      val got = states(p)
+      assert(got.length == ref.length, "merged groups differ across presentations")
+      for ((g, r) <- got.zip(ref); (a, b) <- g.zip(r)) {
+        assertSame(a, b, "merged sketch bytes differ across presentations")
+      }
     }
     // NOTE deliberately NOT asserted: fanout-invariance. t-digest merge is
     // greedy clustering, so different tree SHAPES give (deterministically)
@@ -299,12 +318,15 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must give the same sketches as the in-memory path and as a local
     // fold of the same rows, for every value and merge aggregate. Group 0 has
     // only NULL inputs (empty sketches); group 1's merge inputs are all NULL.
+    // The small config gets its own session, under the plain names; its
+    // views, its fallback threshold and its small turn_sketch_native stay
+    // there. Not stopped: stopping a session stops the shared SparkContext.
     val cfg = graft.sketch.agg.SketchConfig(bloomWidth = 2048, cmsWidth = 64, cmsDepth = 3)
-    SketchFunctions(cfg).register(spark, "fb_")
+    val fb = spark.newSession()
+    SketchFunctions(cfg).register(fb)
     val conf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prev = spark.conf.get(conf, "128")
     val groups = 2000
-    spark.range(0, groups * 6).selectExpr(
+    fb.range(0, groups * 6).selectExpr(
       s"id % $groups AS g", "id % 3 AS sub",
       // non-ASCII values take the sketches' String fallbacks (Bloom's FNV)
       s"CASE WHEN id % $groups = 0 OR id % 7 = 3 THEN NULL " +
@@ -315,16 +337,16 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       "CASE WHEN id % 13 = 4 THEN NULL ELSE id % 5 END AS w")
       .createOrReplaceTempView("fb_rows")
     val valueAggs = Seq(
-      "bloom" -> "fb_bloom_agg(s)", "cms" -> "fb_cms_agg(s)", "cmm" -> "fb_cmm_agg(s)",
-      "ngram" -> "fb_ngram_agg(s)", "topk" -> "fb_topk_agg(s)",
-      "topkw" -> "fb_topk_weighted_agg(s, w)", "td" -> "fb_tdigest_agg(x)",
-      "kll" -> "fb_kll_agg(x)", "hll" -> "fb_hll_agg(s)", "hlll" -> "fb_hll_agg_long(n)")
+      "bloom" -> "bloom_agg(s)", "cms" -> "cms_agg(s)", "cmm" -> "cmm_agg(s)",
+      "ngram" -> "ngram_agg(s)", "topk" -> "topk_agg(s)",
+      "topkw" -> "topk_weighted_agg(s, w)", "td" -> "tdigest_agg(x)",
+      "kll" -> "kll_agg(x)", "hll" -> "hll_agg(s)", "hlll" -> "hll_agg_long(n)")
     val mergeFn = Map("bloom" -> "bloom", "cms" -> "cms", "cmm" -> "cmm", "ngram" -> "ngram",
       "topk" -> "topk", "topkw" -> "topk", "td" -> "tdigest", "kll" -> "kll", "hll" -> "hll",
       "hlll" -> "hll")
     val names = valueAggs.map(_._1)
     def select(aggs: Seq[(String, String)], keys: String, from: String) =
-      spark.sql(s"SELECT $keys, ${aggs.map { case (n, e) => s"$e AS $n" }.mkString(", ")} " +
+      fb.sql(s"SELECT $keys, ${aggs.map { case (n, e) => s"$e AS $n" }.mkString(", ")} " +
         s"FROM $from GROUP BY $keys")
     // order-sensitive sketches (top-k tie order, KLL level-0 order) compare by content
     def canon(c: String, b: Array[Byte]): Any =
@@ -334,110 +356,112 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
         val k = KllSketch.fromBytes(b)
         if (k.totalN == 0) 0L
         else (k.totalN, k.minValue, k.maxValue, (0 to 20).map(i => k.quantileLower(i / 20.0)))
-      } else b.toSeq
+      } else b
     def byGroup(df: DataFrame): Map[Long, Seq[Any]] = df.collect()
       .map(r => r.getLong(0) -> names.map(c => canon(c, r.getAs[Array[Byte]](c)))).toMap
     def check(what: String, q: () => DataFrame, expected: Map[Long, Seq[Any]]): Unit =
       Seq("4", "1000000").foreach { threshold =>
-        spark.conf.set(conf, threshold)
+        fb.conf.set(conf, threshold)
         val got = byGroup(q())
         assert(got.keySet == expected.keySet, s"$what groups at threshold $threshold")
         expected.foreach { case (g, want) =>
           names.zip(got(g).zip(want)).foreach { case (c, (a, b)) =>
-            assert(a == b, s"$what $c, group $g, threshold $threshold")
+            assertSame(a, b, s"$what $c, group $g, threshold $threshold")
           }
         }
       }
-    try {
-      val rows = spark.table("fb_rows").collect().groupBy(_.getLong(0))
-      val folded = rows.map { case (g, rs) =>
-        val bloom = BloomSketch(cfg.bloomWidth, cfg.bloomDepth)
-        val cms = CmsSketch(cfg.cmsWidth, cfg.cmsDepth)
-        val cmm = CmmSketch(cfg.cmsWidth, cfg.cmsDepth)
-        val ngram = NGramSketch(cfg.ngramN, cfg.ngramCaseSensitive)
-        val topk = SpaceSavingSketch(cfg.topKCapacity)
-        val topkw = SpaceSavingSketch(cfg.topKCapacity)
-        val td = TDigestSketch.fast(cfg.tdigestCentroids)
-        val kll = KllSketch(cfg.kllK)
-        val hll = HllSketch(cfg.hllP)
-        val hlll = HllSketch(cfg.hllP)
-        rs.foreach { r =>
-          if (!r.isNullAt(2)) {
-            val s = r.getString(2)
-            bloom.add(s); cms.add(s); cmm.add(s); ngram.add(s); topk.add(s); hll.add(s)
-            topkw.add(s, if (r.isNullAt(5)) 0L else r.getLong(5))
-          }
-          if (!r.isNullAt(3)) { td.add(r.getDouble(3)); kll.add(r.getDouble(3)) }
-          if (!r.isNullAt(4)) hlll.addLong(r.getLong(4))
+    val rows = fb.table("fb_rows").collect().groupBy(_.getLong(0))
+    val folded = rows.map { case (g, rs) =>
+      val bloom = BloomSketch(cfg.bloomWidth, BloomSketch.DefaultHash)
+      val cms = CmsSketch(cfg.cmsWidth, cfg.cmsDepth)
+      val cmm = CmmSketch(cfg.cmsWidth, cfg.cmsDepth)
+      val ngram = NGramSketch()
+      val topk = SpaceSavingSketch()
+      val topkw = SpaceSavingSketch()
+      val td = TDigestSketch.fast(cfg.tdigestCentroids)
+      val kll = KllSketch(cfg.kllK)
+      val hll = HllSketch(cfg.hllP)
+      val hlll = HllSketch(cfg.hllP)
+      rs.foreach { r =>
+        if (!r.isNullAt(2)) {
+          val s = r.getString(2)
+          bloom.add(s); cms.add(s); cmm.add(s); ngram.add(s); topk.add(s); hll.add(s)
+          topkw.add(s, if (r.isNullAt(5)) 0L else r.getLong(5))
         }
-        g -> names.zip(Seq(bloom.toBytes, cms.toBytes, cmm.toBytes, ngram.toBytes,
-          topk.toBytes, topkw.toBytes, td.toBytes, kll.toBytes, hll.toBytes, hlll.toBytes))
-          .map { case (c, b) => canon(c, b) }
+        if (!r.isNullAt(3)) { td.add(r.getDouble(3)); kll.add(r.getDouble(3)) }
+        if (!r.isNullAt(4)) hlll.addLong(r.getLong(4))
       }
-      assert(folded.size == groups && folded(0L).forall(_ != null))
-      check("value aggs", () => select(valueAggs, "g", "fb_rows"), folded)
+      g -> names.zip(Seq(bloom.toBytes, cms.toBytes, cmm.toBytes, ngram.toBytes,
+        topk.toBytes, topkw.toBytes, td.toBytes, kll.toBytes, hll.toBytes, hlll.toBytes))
+        .map { case (c, b) => canon(c, b) }
+    }
+    assert(folded.size == groups && folded(0L).forall(_ != null))
+    check("value aggs", () => select(valueAggs, "g", "fb_rows"), folded)
 
-      spark.conf.set(conf, "4")
-      select(valueAggs, "g, sub", "fb_rows")
-        .select(col("g") +: col("sub") +: names.map(c =>
-          when(col("g") === 1, lit(null).cast("binary")).otherwise(col(c)).as(c)): _*)
-        .write.parquet(s"$tdir/fb_parts")
-      spark.read.parquet(s"$tdir/fb_parts").createOrReplaceTempView("fb_parts")
-      def merged(c: String, bs: Seq[Array[Byte]]): Array[Byte] = {
-        def fold[S](dec: Array[Byte] => S, m: (S, S) => S, enc: S => Array[Byte]) =
-          bs.map(dec).reduceOption(m).map(enc).orNull
-        mergeFn(c) match {
-          case "bloom" => fold[BloomSketch](BloomSketch.fromBytes, _ unionInPlace _, _.toBytes)
-          case "cms" => fold[CmsSketch](CmsSketch.fromBytes, _ mergeInPlace _, _.toBytes)
-          case "cmm" => fold[CmmSketch](CmmSketch.fromBytes, _ mergeInPlace _, _.toBytes)
-          case "ngram" => fold[NGramSketch](NGramSketch.fromBytes, _ mergeInPlace _, _.toBytes)
-          case "topk" =>
-            fold[SpaceSavingSketch](SpaceSavingSketch.fromBytes, _ mergeInPlace _, _.toBytes)
-          case "tdigest" =>
-            fold[TDigestSketch](TDigestSketch.fromBytes, _ mergeInPlace _, _.toBytes)
-          case "kll" => fold[KllSketch](KllSketch.fromBytes, _ mergeInPlace _, _.toBytes)
-          case "hll" => fold[HllSketch](HllSketch.fromBytes, _ mergeInPlace _, _.toBytes)
-        }
+    fb.conf.set(conf, "4")
+    select(valueAggs, "g, sub", "fb_rows")
+      .select(col("g") +: col("sub") +: names.map(c =>
+        when(col("g") === 1, lit(null).cast("binary")).otherwise(col(c)).as(c)): _*)
+      .write.parquet(s"$tdir/fb_parts")
+    fb.read.parquet(s"$tdir/fb_parts").createOrReplaceTempView("fb_parts")
+    def merged(c: String, bs: Seq[Array[Byte]]): Array[Byte] = {
+      def fold[S](dec: Array[Byte] => S, m: (S, S) => S, enc: S => Array[Byte]) =
+        bs.map(dec).reduceOption(m).map(enc).orNull
+      mergeFn(c) match {
+        case "bloom" => fold[BloomSketch](BloomSketch.fromBytes, _ unionInPlace _, _.toBytes)
+        case "cms" => fold[CmsSketch](CmsSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+        case "cmm" => fold[CmmSketch](CmmSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+        case "ngram" => fold[NGramSketch](NGramSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+        case "topk" =>
+          fold[SpaceSavingSketch](SpaceSavingSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+        case "tdigest" =>
+          fold[TDigestSketch](TDigestSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+        case "kll" => fold[KllSketch](KllSketch.fromBytes, _ mergeInPlace _, _.toBytes)
+        case "hll" => fold[HllSketch](HllSketch.fromBytes, _ mergeInPlace _, _.toBytes)
       }
-      val parts = spark.table("fb_parts").collect().groupBy(_.getLong(0))
-      val mergedLocally = parts.map { case (g, rs) =>
-        g -> names.map(c =>
-          canon(c, merged(c, rs.toSeq.flatMap(r => Option(r.getAs[Array[Byte]](c))))))
-      }
-      assert(mergedLocally(1L).forall(_ == null) && mergedLocally(0L).forall(_ != null))
-      check("merge aggs", () => select(names.map(c => c -> s"fb_${mergeFn(c)}_merge_agg($c)"),
-        "g", "fb_parts"), mergedLocally)
+    }
+    val parts = fb.table("fb_parts").collect().groupBy(_.getLong(0))
+    val mergedLocally = parts.map { case (g, rs) =>
+      g -> names.map(c =>
+        canon(c, merged(c, rs.toSeq.flatMap(r => Option(r.getAs[Array[Byte]](c))))))
+    }
+    assert(mergedLocally(1L).forall(_ == null) && mergedLocally(0L).forall(_ != null))
+    check("merge aggs", () => select(names.map(c => c -> s"${mergeFn(c)}_merge_agg($c)"),
+      "g", "fb_parts"), mergedLocally)
 
-      // the composite through both registrations: its buffer crosses the
-      // fallback as TurnSketches codec bytes (the native serialize, the
-      // udaf() buffer encoder); bytes for the order-free sketches, answers
-      // for top-k, KLL and t-digest
-      graft.plans.TurnSketchNativeAgg.register(spark, cmsWidth = cfg.cmsWidth,
-        cmsDepth = cfg.cmsDepth, bloomW = cfg.bloomWidth)
-      spark.udf.register("fb_turn_udaf", udaf(new graft.sketch.agg.TurnSketchAgg(
-        cmsWidth = cfg.cmsWidth, cmsDepth = cfg.cmsDepth, bloomW = cfg.bloomWidth)))
-      val tool = "CAST(w AS STRING)"
-      def composites(threshold: String): Map[Long, Seq[Seq[Any]]] = {
-        spark.conf.set(conf, threshold)
-        spark.sql(s"SELECT g, turn_sketch_native(s, $tool, x) AS native, " +
-          s"fb_turn_udaf(CAST(s AS BINARY), CAST($tool AS BINARY), x) AS udaf " +
-          "FROM fb_rows GROUP BY g").collect().map { r =>
-          r.getLong(0) -> Seq("native", "udaf").map { c =>
-            val sk = r.getAs[Row](c)
-            def part(f: String) = sk.getAs[Array[Byte]](f)
-            val td = TDigestSketch.fromBytes(part("tdigest_len"))
-            Seq(part("hll_conv").toSeq, part("cms_tool").toSeq, part("bloom_conv").toSeq,
-              sk.getAs[Long]("turns"), canon("topk", part("topk_tool")),
-              canon("kll", part("kll_len")),
-              // an empty digest's quantiles are NaN: compare their bits
-              (0 to 20).map(i => java.lang.Double.doubleToLongBits(td.quantile(i / 20.0))))
-          }
-        }.toMap
-      }
-      val inMemory = composites("1000000")
-      assert(inMemory.size == groups && inMemory(0L).forall(_(3) == 6L))
-      assert(composites("4") == inMemory, "composite states differ under sort-based fallback")
-    } finally spark.conf.set(conf, prev)
+    // the composite through both registrations: its buffer crosses the
+    // fallback as TurnSketches codec bytes (the native serialize, the
+    // udaf() buffer encoder); bytes for the order-free sketches, answers
+    // for top-k, KLL and t-digest
+    graft.plans.TurnSketchNativeAgg.register(fb, cmsWidth = cfg.cmsWidth,
+      cmsDepth = cfg.cmsDepth, bloomW = cfg.bloomWidth)
+    fb.udf.register("fb_turn_udaf", udaf(new graft.sketch.agg.TurnSketchAgg(
+      cmsWidth = cfg.cmsWidth, cmsDepth = cfg.cmsDepth, bloomW = cfg.bloomWidth)))
+    val tool = "CAST(w AS STRING)"
+    def composites(threshold: String): Map[Long, Seq[Seq[Any]]] = {
+      fb.conf.set(conf, threshold)
+      fb.sql(s"SELECT g, turn_sketch_native(s, $tool, x) AS native, " +
+        s"fb_turn_udaf(CAST(s AS BINARY), CAST($tool AS BINARY), x) AS udaf " +
+        "FROM fb_rows GROUP BY g").collect().map { r =>
+        r.getLong(0) -> Seq("native", "udaf").map { c =>
+          val sk = r.getAs[Row](c)
+          def part(f: String) = sk.getAs[Array[Byte]](f)
+          val td = TDigestSketch.fromBytes(part("tdigest_len"))
+          Seq(part("hll_conv"), part("cms_tool"), part("bloom_conv"),
+            sk.getAs[Long]("turns"), canon("topk", part("topk_tool")),
+            canon("kll", part("kll_len")),
+            // an empty digest's quantiles are NaN: compare their bits
+            (0 to 20).map(i => java.lang.Double.doubleToLongBits(td.quantile(i / 20.0))))
+        }
+      }.toMap
+    }
+    val inMemory = composites("1000000")
+    assert(inMemory.size == groups && inMemory(0L).forall(_(3) == 6L))
+    val fallback = composites("4")
+    assert(fallback.keySet == inMemory.keySet, "composite groups under sort-based fallback")
+    for ((g, want) <- inMemory; (got, w) <- fallback(g).zip(want); (a, b) <- got.zip(w)) {
+      assertSame(a, b, s"composite states differ under sort-based fallback, group $g")
+    }
   }
 
   test("sketch aggregates accept the same SQL input types and reject the rest at analysis") {
@@ -471,8 +495,8 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"topk_weighted_agg($v, $w)")
     }
     // accepted non-native types go through the implicit cast: same bytes
-    def bytes(expr: String): Seq[Byte] =
-      spark.sql(s"SELECT $expr FROM typed_in").collect()(0).getAs[Array[Byte]](0).toSeq
+    def bytes(expr: String): Array[Byte] =
+      spark.sql(s"SELECT $expr FROM typed_in").collect()(0).getAs[Array[Byte]](0)
     Seq(
       "kll_agg(i)" -> "kll_agg(CAST(i AS DOUBLE))",
       "tdigest_agg(dec)" -> "tdigest_agg(CAST(dec AS DOUBLE))",
@@ -482,11 +506,12 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       "topk_weighted_agg(s, i)" -> "topk_weighted_agg(s, CAST(i AS BIGINT))",
       // a NULL weight counts as 0: the value enters the summary uncounted
       "topk_weighted_agg(s, CAST(NULL AS BIGINT))" -> "topk_weighted_agg(s, 0L)"
-    ).foreach { case (a, b) => assert(bytes(a) == bytes(b), s"$a != $b") }
+    ).foreach { case (a, b) => assertSame(bytes(a), bytes(b), s"$a != $b") }
     val hllAsString = spark.sql(
       "SELECT CAST(hll_agg(s) AS STRING) AS h, hll_agg(s) AS hb FROM typed_in")
       .selectExpr("hll_merge_agg(h)", "hll_merge_agg(hb)").collect()(0)
-    assert(hllAsString.getAs[Array[Byte]](0).toSeq == hllAsString.getAs[Array[Byte]](1).toSeq)
+    assertSame(hllAsString.getAs[Array[Byte]](0), hllAsString.getAs[Array[Byte]](1),
+      "hll_merge_agg of a STRING-cast sketch")
   }
 
   test("truncated or bit-flipped sketch cells fail their merge aggregate with a typed error") {
@@ -591,7 +616,7 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       // HLL / CMS / t-digest / KLL / bloom states must be byte-identical;
       // top-k may differ only in eviction tie order, so compare its answers
       for (f <- Seq("hll_conv", "cms_tool", "tdigest_len", "kll_len", "bloom_conv")) {
-        assert(n.getAs[Array[Byte]](f).toSeq == u.getAs[Array[Byte]](f).toSeq,
+        assertSame(n.getAs[Array[Byte]](f), u.getAs[Array[Byte]](f),
           s"$f mismatch for role ${n.getString(0)}")
       }
       assert(n.getAs[Long]("turns") == u.getAs[Long]("turns"))
@@ -629,7 +654,7 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       // these merges ignore merge order, so the bytes must agree
       Seq("hll_conv" -> j.hll_conv, "cms_tool" -> j.cms_tool, "bloom_conv" -> j.bloom_conv)
         .foreach { case (f, b) =>
-          assert(b.toSeq == n.getAs[Array[Byte]](f).toSeq, s"$f mismatch for role ${j.role}")
+          assertSame(b, n.getAs[Array[Byte]](f), s"$f mismatch for role ${j.role}")
         }
       assert(j.rows_seen == n.getAs[Long]("turns"), s"turns for role ${j.role}")
       def top5(b: Array[Byte]) = SpaceSavingSketch.fromBytes(b).topK(Some(5))
@@ -697,6 +722,104 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.catalyst.expressions.Literal(1.0)))
     assert(expr.isInstanceOf[
       org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression])
+  }
+
+  test("GraftExtensions injects every graft SQL name with a usage; a plain session has none") {
+    val table = fns.functions :+ graft.plans.TurnSketchNativeAgg.function()
+    val names = table.map(_._1.funcName)
+    assert(names.size == 53 && names.distinct == names, names)
+    val withExt = SparkSession.builder().withExtensions(new graft.plans.GraftExtensions).create()
+    // the session the extension is not applied to; Spark's own near-namesakes
+    // (hll_union_agg, kll_merge_agg_double, ...) must not be among the names
+    val plain = spark.newSession()
+    names.foreach { n =>
+      assert(withExt.catalog.functionExists(n), s"$n is not injected")
+      assert(!plain.catalog.functionExists(n), s"$n resolves without the extension")
+      val usage = withExt.sql(s"DESCRIBE FUNCTION $n").collect().map(_.getString(0))
+        .find(_.startsWith("Usage:"))
+      assert(usage.exists(u => u.contains(s"$n(") && !u.contains("N/A")), s"$n: $usage")
+    }
+  }
+
+  test("every SQL query function equals its Column handle and maps a NULL sketch to NULL") {
+    val sketches = Seq("bloom", "cms", "cmm", "ngram", "topk", "td", "kll", "hll")
+    // each value aggregate per group, then each merge aggregate over both groups
+    spark.sql(
+      """SELECT g, bloom_agg(s) AS bloom, cms_agg(s) AS cms, cmm_agg(s) AS cmm,
+        |       ngram_agg(s) AS ngram, topk_agg(s) AS topk, topk_weighted_agg(s, w) AS topkw,
+        |       tdigest_agg(x) AS td, kll_agg(x) AS kll, hll_agg(s) AS hll, hll_agg_long(n) AS hlll
+        |FROM VALUES (0, 'a', 1.0D, 1L, 2L), (0, 'b', 2.0D, 2L, 1L), (0, 'a', 3.0D, 3L, 1L),
+        |            (1, 'b', 4.0D, 4L, 3L), (1, 'c', 5.0D, 5L, 1L), (1, 'ü', 6.0D, 6L, 1L)
+        |     AS t(g, s, x, n, w)
+        |GROUP BY g""".stripMargin).createOrReplaceTempView("fn_groups")
+    spark.sql(
+      """SELECT a.*, m.* FROM (SELECT * FROM fn_groups WHERE g = 0) a,
+        |  (SELECT bloom_merge_agg(bloom) AS bloom_b, cms_merge_agg(cms) AS cms_b,
+        |          cmm_merge_agg(cmm) AS cmm_b, ngram_merge_agg(ngram) AS ngram_b,
+        |          topk_merge_agg(topkw) AS topk_b, tdigest_merge_agg(td) AS td_b,
+        |          kll_merge_agg(kll) AS kll_b, hll_merge_agg(hlll) AS hll_b
+        |   FROM fn_groups) m""".stripMargin).createOrReplaceTempView("fn_sketches")
+    val aggsCalled = Set("bloom_agg", "cms_agg", "cmm_agg", "ngram_agg", "topk_agg",
+      "topk_weighted_agg", "tdigest_agg", "kll_agg", "hll_agg", "hll_agg_long") ++
+      Set("bloom", "cms", "cmm", "ngram", "topk", "tdigest", "kll", "hll").map(_ + "_merge_agg")
+    // SQL name -> (arguments, Column handle)
+    val cases = Map(
+      "bloom_contains" -> (Seq("bloom", "'a'"), fns.bloomContains),
+      "bloom_size" -> (Seq("bloom"), fns.bloomSize),
+      "bloom_jaccard" -> (Seq("bloom", "bloom_b"), fns.bloomJaccard),
+      "bloom_cover" -> (Seq("bloom", "bloom_b"), fns.bloomCover),
+      "bloom_width" -> (Seq("bloom"), fns.bloomWidth),
+      "bloom_depth" -> (Seq("bloom"), fns.bloomDepth),
+      "cms_width" -> (Seq("cms"), fns.cmsWidth),
+      "cms_depth" -> (Seq("cms"), fns.cmsDepth),
+      "cms_query" -> (Seq("cms", "'a'"), fns.cmsQuery),
+      "cms_num" -> (Seq("cms"), fns.cmsNum),
+      "cms_dot" -> (Seq("cms", "cms_b"), fns.cmsDot),
+      "cmm_query" -> (Seq("cmm", "'a'"), fns.cmmQuery),
+      "cmm_dot" -> (Seq("cmm", "cmm_b"), fns.cmmDot),
+      "ngram_query" -> (Seq("ngram", "'a'"), fns.ngramQuery),
+      "ngram_size" -> (Seq("ngram"), fns.ngramSize),
+      "ngram_norm" -> (Seq("ngram"), fns.ngramNorm),
+      "ngram_dot" -> (Seq("ngram", "ngram_b"), fns.ngramDot),
+      "ngram_cosine" -> (Seq("ngram", "ngram_b"), fns.ngramCosine),
+      "topk" -> (Seq("topk_b", "2"), fns.topk),
+      "topk_all" -> (Seq("topk"), fns.topkAll),
+      "topk_query" -> (Seq("topk_b", "'b'"), fns.topkQuery),
+      "topk_error" -> (Seq("topk_b", "'b'"), fns.topkError),
+      "tdigest_quantile" -> (Seq("td_b", "0.5"), fns.tdigestQuantile),
+      "tdigest_cdf" -> (Seq("td_b", "3.5"), fns.tdigestCdf),
+      "tdigest_size" -> (Seq("td"), fns.tdigestSize),
+      "kll_quantile" -> (Seq("kll_b", "0.5"), fns.kllQuantile),
+      "kll_cdf" -> (Seq("kll_b", "3.5"), fns.kllCdf),
+      "kll_size" -> (Seq("kll"), fns.kllSize),
+      "hll_estimate" -> (Seq("hll"), fns.hllEstimate),
+      "hll_cardinality" -> (Seq("hll"), fns.hllCardinality),
+      "hll_set_algebra" -> (Seq("hll", "hll_b"), fns.hllSetAlgebra),
+      "hll_union_cardinality" -> (Seq("hll", "hll_b"), fns.hllUnionCardinality),
+      "hll_intersection" -> (Seq("hll", "hll_b"), fns.hllIntersection),
+      "hll_jaccard" -> (Seq("hll", "hll_b"), fns.hllJaccard))
+    val (aggs, scalars) = fns.functions.partition(_._2.getGroup == "agg_funcs")
+    assert(cases.keySet == scalars.map(_._1.funcName).toSet)
+    assert(aggsCalled == aggs.map(_._1.funcName).toSet)
+
+    val names = cases.keys.toSeq.sorted
+    val view = spark.table("fn_sketches")
+    def call(nullSketches: Boolean) = names.map { n =>
+      val args = cases(n)._1.map { a =>
+        if (nullSketches && sketches.exists(k => a == k || a == s"${k}_b")) "CAST(NULL AS BINARY)"
+        else a
+      }
+      (s"$n(${args.mkString(", ")})", cases(n)._2(args.map(expr): _*))
+    }
+    val viaSql = view.selectExpr(call(false).map(_._1): _*).collect()
+    val viaColumns = view.select(call(false).map(_._2): _*).collect()
+    assert(viaSql.length == 1 && viaColumns.length == 1)
+    names.indices.foreach { i =>
+      assert(Row(viaSql(0).get(i)) == Row(viaColumns(0).get(i)), names(i))
+      assert(!viaSql(0).isNullAt(i), names(i))
+    }
+    val onNull = view.selectExpr(call(true).map(_._1): _*).collect()(0)
+    names.indices.foreach(i => assert(onNull.isNullAt(i), s"${names(i)} of a NULL sketch"))
   }
 
   test("SketchJob completeness guard rejects tampered checkpoint ids") {
