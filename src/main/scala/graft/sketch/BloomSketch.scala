@@ -1,5 +1,8 @@
 package graft.sketch
 
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.sketch.core.{Codec, Fnv1a}
 
 /** Bloom filter with the reference's exact hashing + sizing semantics
@@ -24,22 +27,25 @@ final class BloomSketch private (val width: Int, val depth: Int, val words: Arra
     }
   }
 
-  /** Add from UTF-8 bytes without materializing a String. ASCII bytes hash
-    * identically to `add(new String(v, UTF_8))`; non-ASCII falls back to the
-    * String path (the reference hashes UTF-16 code units, which diverge from
-    * UTF-8 bytes beyond 0x7F). Hot path of the 10^12-row ingest: saves a
+  /** Add from UTF-8 bytes without materializing a String; see
+    * [[addUtf8Memory]].
+    */
+  def addUtf8(v: Array[Byte]): Unit = addUtf8Memory(v, Platform.BYTE_ARRAY_OFFSET, v.length)
+
+  /** Add from UTF-8 bytes in raw memory (a `byte[]` at
+    * `Platform.BYTE_ARRAY_OFFSET` or a UTF8String's backing region). ASCII
+    * bytes hash identically to `add` of the decoded String; non-ASCII falls
+    * back to the String path (the reference hashes UTF-16 code units, which
+    * diverge from UTF-8 bytes beyond 0x7F). Hot path of the ingest: saves a
     * char[] decode + String alloc per row.
     */
-  def addUtf8(v: Array[Byte]): Unit = {
-    val h = Fnv1a.fnv1aUtf8OrSentinel(v)
+  def addUtf8Memory(base: AnyRef, offset: Long, len: Int): Unit = {
+    val h = Fnv1a.fnv1aUtf8MemoryOrSentinel(base, offset, len)
     if (h != Fnv1a.NonAscii) addFnv(h.toInt)
-    else add(new String(v, java.nio.charset.StandardCharsets.UTF_8))
+    else add(UTF8String.fromAddress(base, offset, len).toString)
   }
 
-  /** Add from a precomputed FNV-1a hash (callers that hash bytes/memory
-    * directly — see `Fnv1a.fnv1aUtf8OrSentinel`/`fnv1aUtf8MemoryOrSentinel`).
-    */
-  def addFnv(a: Int): Unit = {
+  private def addFnv(a: Int): Unit = {
     Fnv1a.locationsHash(a, depth, width, scratch)
     var i = 0
     while (i < depth) {

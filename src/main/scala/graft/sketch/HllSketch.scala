@@ -1,5 +1,7 @@
 package graft.sketch
 
+import org.apache.spark.unsafe.Platform
+
 import graft.sketch.core.{Codec, XxHash64}
 
 /** HyperLogLog++ cardinality sketch (Heule, Nunkesser & Hall 2013; Flajolet
@@ -35,7 +37,7 @@ final class HllSketch private (
     * valid UTF-8 (xxHash is defined over the UTF-8 byte stream), without the
     * per-row String materialization.
     */
-  def addUtf8(v: Array[Byte]): Unit = addHash(XxHash64.hashBytes(v, Seed))
+  def addUtf8(v: Array[Byte]): Unit = addUtf8Memory(v, Platform.BYTE_ARRAY_OFFSET, v.length)
   /** Add from a raw memory region holding UTF-8 bytes (e.g. a UTF8String's
     * backing region) — zero-copy variant of `addUtf8`.
     */

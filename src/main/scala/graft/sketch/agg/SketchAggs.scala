@@ -9,7 +9,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketch._
-import graft.sketch.core.Fnv1a
 
 /** One native Catalyst aggregate behind every per-sketch SQL aggregate
   * (`hll_agg`, `kll_agg`, ... and the `*_merge_agg`s), modelled on
@@ -127,12 +126,9 @@ object SketchAggs {
 
   final case class Bloom(w: Int, d: Int) extends ValueAdapter(SketchOps.Bloom, StringType) {
     def zero: BloomSketch = BloomSketch(w, d)
-    // FNV-1a over the UTF-8 bytes equals the String hash for ASCII; other
-    // strings take the String path (the reference hashes UTF-16 units)
     protected def add(s: BloomSketch, v: Any): Unit = {
       val u = v.asInstanceOf[UTF8String]
-      val h = Fnv1a.fnv1aUtf8MemoryOrSentinel(u.getBaseObject, u.getBaseOffset, u.numBytes)
-      if (h != Fnv1a.NonAscii) s.addFnv(h.toInt) else s.add(u.toString)
+      s.addUtf8Memory(u.getBaseObject, u.getBaseOffset, u.numBytes)
     }
   }
 

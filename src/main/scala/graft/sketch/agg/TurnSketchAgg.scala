@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketch._
-import graft.sketch.core.{Codec, Fnv1a, XxHash64}
+import graft.sketch.core.{Codec, XxHash64}
 
 /** Input projection for the composite transcript aggregator. Ids arrive as
   * UTF-8 bytes (`cast(conv_id as binary)`) — the sketches hash bytes
@@ -55,19 +55,14 @@ final class TurnSketches private (
     * numBytes)` — a `byte[]` at `Platform.BYTE_ARRAY_OFFSET` or a
     * `UTF8String`'s backing region — with `numBytes < 0` for NULL; a NULL
     * `len` is `hasLen = false`. NULL columns feed no sketch; the row still
-    * counts. Conv ids go to HLL (xxHash64 over the bytes) and Bloom (FNV-1a
-    * over the bytes; non-ASCII takes the reference's UTF-16 String path),
+    * counts. Conv ids go to HLL and Bloom (each sketch's `addUtf8Memory`),
     * the interned tool to CMS and top-k, `len` to t-digest and KLL.
     */
   def add(conv: AnyRef, convOffset: Long, convBytes: Int,
       tool: AnyRef, toolOffset: Long, toolBytes: Int, len: Double, hasLen: Boolean): Unit = {
     if (convBytes >= 0) {
       hll.addUtf8Memory(conv, convOffset, convBytes)
-      if (bloom != null) {
-        val h = Fnv1a.fnv1aUtf8MemoryOrSentinel(conv, convOffset, convBytes)
-        if (h != Fnv1a.NonAscii) bloom.addFnv(h.toInt)
-        else bloom.add(UTF8String.fromAddress(conv, convOffset, convBytes).toString)
-      }
+      if (bloom != null) bloom.addUtf8Memory(conv, convOffset, convBytes)
     }
     if (toolBytes >= 0) {
       if (tools == null) tools = new ToolInterner

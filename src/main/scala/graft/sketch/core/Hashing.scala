@@ -1,5 +1,10 @@
 package graft.sketch.core
 
+import java.nio.charset.StandardCharsets
+
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.unsafe.Platform
+
 /** Bit-exact Scala port of the reference FNV-1a hash chain
   * (reference: /root/reference/src/hash.js:1-55).
   *
@@ -71,37 +76,20 @@ object Fnv1a {
     }
   }
 
-  /** Sentinel returned by the fused UTF-8 FNV passes when the input
+  /** Sentinel returned by the fused UTF-8 FNV pass when the input
     * contains a non-ASCII byte (callers then fall back to the UTF-16
     * String path, whose hashing the reference defines).
     */
   val NonAscii: Long = Long.MinValue
 
-  /** Single fused pass over UTF-8 bytes: returns the FNV-1a hash (equal to
-    * `fnv1a(new String(v, UTF_8))` for ASCII, each char taking the
-    * single-byte branch of the UTF-16 loop) widened to Long, or
-    * [[NonAscii]] if any byte is outside ASCII — one byte scan, not an
+  /** Single fused pass over UTF-8 bytes in raw memory (a `byte[]` at
+    * `Platform.BYTE_ARRAY_OFFSET` or a UTF8String's backing region): returns
+    * the FNV-1a hash (equal to `fnv1a` of the decoded String for ASCII, each
+    * char taking the single-byte branch of the UTF-16 loop) widened to Long,
+    * or [[NonAscii]] if any byte is outside ASCII — one byte scan, not an
     * isAscii pass plus a hash pass.
     */
-  def fnv1aUtf8OrSentinel(v: Array[Byte]): Long = {
-    var a = 0x811c9dc5
-    var acc = 0
-    var i = 0
-    val n = v.length
-    while (i < n) {
-      val b = v(i)
-      acc |= b
-      a = fnvMultiply(a ^ (b & 0xff))
-      i += 1
-    }
-    if (acc < 0) NonAscii else fnvMix(a).toLong
-  }
-
-  /** [[fnv1aUtf8OrSentinel]] over raw memory (e.g. a UTF8String's backing
-    * region) — no byte[] copy.
-    */
   def fnv1aUtf8MemoryOrSentinel(base: AnyRef, offset: Long, len: Int): Long = {
-    import org.apache.spark.unsafe.Platform
     var a = 0x811c9dc5
     var acc = 0
     var i = 0
@@ -115,151 +103,23 @@ object Fnv1a {
   }
 }
 
-/** Self-contained xxHash64 (public algorithm, Yann Collet) over a string's
-  * UTF-8 bytes. Used by the HLL++ / KLL / MinHash sketches, which need a
+/** graft's one 64-bit hash: xxHash64 (public algorithm, Yann Collet) as
+  * Spark's own `XXH64` computes it, over a string's UTF-8 bytes. Used by the
+  * HLL++ / KLL / MinHash sketches and the near-dup shingles, which need a
   * 64-bit hash — the reference's FNV-32 is too weak beyond ~10^5 distinct
   * values (SURVEY.md §7.2 item 7).
   */
 object XxHash64 {
-  private final val P1 = -7046029288634856825L // 11400714785074694791
-  private final val P2 = -4417276706812531889L // 14029467366897019727
-  private final val P3 = 1609587929392839161L
-  private final val P4 = -8796714831421723037L // 9650029242287828579
-  private final val P5 = 2870177450012600261L
+  def hash(s: String, seed: Long): Long = hashBytes(s.getBytes(StandardCharsets.UTF_8), seed)
 
-  def hash(s: String, seed: Long): Long = hashBytes(s.getBytes("UTF-8"), seed)
+  def hashLong(v: Long, seed: Long): Long = XXH64.hashLong(v, seed)
 
-  def hashLong(v: Long, seed: Long): Long = {
-    var h = seed + P5 + 8
-    h ^= java.lang.Long.rotateLeft(v * P2, 31) * P1
-    h = java.lang.Long.rotateLeft(h, 27) * P1 + P4
-    avalanche(h)
-  }
-
-  def hashBytes(data: Array[Byte], seed: Long): Long = {
-    val len = data.length
-    var i = 0
-    var h: Long = 0L
-    if (len >= 32) {
-      var v1 = seed + P1 + P2
-      var v2 = seed + P2
-      var v3 = seed
-      var v4 = seed - P1
-      while (i + 32 <= len) {
-        v1 = round(v1, readLong(data, i))
-        v2 = round(v2, readLong(data, i + 8))
-        v3 = round(v3, readLong(data, i + 16))
-        v4 = round(v4, readLong(data, i + 24))
-        i += 32
-      }
-      h = java.lang.Long.rotateLeft(v1, 1) + java.lang.Long.rotateLeft(v2, 7) +
-        java.lang.Long.rotateLeft(v3, 12) + java.lang.Long.rotateLeft(v4, 18)
-      h = mergeRound(h, v1); h = mergeRound(h, v2)
-      h = mergeRound(h, v3); h = mergeRound(h, v4)
-    } else {
-      h = seed + P5
-    }
-    h += len
-    while (i + 8 <= len) {
-      h ^= round(0L, readLong(data, i))
-      h = java.lang.Long.rotateLeft(h, 27) * P1 + P4
-      i += 8
-    }
-    if (i + 4 <= len) {
-      h ^= (readInt(data, i) & 0xffffffffL) * P1
-      h = java.lang.Long.rotateLeft(h, 23) * P2 + P3
-      i += 4
-    }
-    while (i < len) {
-      h ^= (data(i) & 0xffL) * P5
-      h = java.lang.Long.rotateLeft(h, 11) * P1
-      i += 1
-    }
-    avalanche(h)
-  }
-
-  @inline private def round(acc: Long, input: Long): Long =
-    java.lang.Long.rotateLeft(acc + input * P2, 31) * P1
-
-  @inline private def mergeRound(acc0: Long, v: Long): Long = {
-    val acc = acc0 ^ round(0L, v)
-    acc * P1 + P4
-  }
-
-  @inline private def avalanche(h0: Long): Long = {
-    var h = h0
-    h ^= h >>> 33; h *= P2
-    h ^= h >>> 29; h *= P3
-    h ^= h >>> 32
-    h
-  }
+  def hashBytes(data: Array[Byte], seed: Long): Long =
+    XXH64.hashUnsafeBytes(data, Platform.BYTE_ARRAY_OFFSET, data.length, seed)
 
   /** `hashBytes` over raw memory (e.g. a UTF8String's backing region) — no
-    * byte[] copy; bit-identical to `hashBytes` on the same bytes.
+    * byte[] copy.
     */
-  def hashMemory(base: AnyRef, offset: Long, len: Int, seed: Long): Long = {
-    import org.apache.spark.unsafe.Platform
-    @inline def rl(i: Int): Long =
-      (Platform.getByte(base, offset + i) & 0xffL) |
-        (Platform.getByte(base, offset + i + 1) & 0xffL) << 8 |
-        (Platform.getByte(base, offset + i + 2) & 0xffL) << 16 |
-        (Platform.getByte(base, offset + i + 3) & 0xffL) << 24 |
-        (Platform.getByte(base, offset + i + 4) & 0xffL) << 32 |
-        (Platform.getByte(base, offset + i + 5) & 0xffL) << 40 |
-        (Platform.getByte(base, offset + i + 6) & 0xffL) << 48 |
-        (Platform.getByte(base, offset + i + 7) & 0xffL) << 56
-    @inline def ri(i: Int): Int =
-      (Platform.getByte(base, offset + i) & 0xff) |
-        (Platform.getByte(base, offset + i + 1) & 0xff) << 8 |
-        (Platform.getByte(base, offset + i + 2) & 0xff) << 16 |
-        (Platform.getByte(base, offset + i + 3) & 0xff) << 24
-    var i = 0
-    var h: Long = 0L
-    if (len >= 32) {
-      var v1 = seed + P1 + P2
-      var v2 = seed + P2
-      var v3 = seed
-      var v4 = seed - P1
-      while (i + 32 <= len) {
-        v1 = round(v1, rl(i))
-        v2 = round(v2, rl(i + 8))
-        v3 = round(v3, rl(i + 16))
-        v4 = round(v4, rl(i + 24))
-        i += 32
-      }
-      h = java.lang.Long.rotateLeft(v1, 1) + java.lang.Long.rotateLeft(v2, 7) +
-        java.lang.Long.rotateLeft(v3, 12) + java.lang.Long.rotateLeft(v4, 18)
-      h = mergeRound(h, v1); h = mergeRound(h, v2)
-      h = mergeRound(h, v3); h = mergeRound(h, v4)
-    } else {
-      h = seed + P5
-    }
-    h += len
-    while (i + 8 <= len) {
-      h ^= round(0L, rl(i))
-      h = java.lang.Long.rotateLeft(h, 27) * P1 + P4
-      i += 8
-    }
-    if (i + 4 <= len) {
-      h ^= (ri(i) & 0xffffffffL) * P1
-      h = java.lang.Long.rotateLeft(h, 23) * P2 + P3
-      i += 4
-    }
-    while (i < len) {
-      h ^= (Platform.getByte(base, offset + i) & 0xffL) * P5
-      h = java.lang.Long.rotateLeft(h, 11) * P1
-      i += 1
-    }
-    avalanche(h)
-  }
-
-  @inline private def readLong(d: Array[Byte], i: Int): Long =
-    (d(i) & 0xffL) | (d(i + 1) & 0xffL) << 8 | (d(i + 2) & 0xffL) << 16 |
-      (d(i + 3) & 0xffL) << 24 | (d(i + 4) & 0xffL) << 32 |
-      (d(i + 5) & 0xffL) << 40 | (d(i + 6) & 0xffL) << 48 |
-      (d(i + 7) & 0xffL) << 56
-
-  @inline private def readInt(d: Array[Byte], i: Int): Int =
-    (d(i) & 0xff) | (d(i + 1) & 0xff) << 8 | (d(i + 2) & 0xff) << 16 |
-      (d(i + 3) & 0xff) << 24
+  def hashMemory(base: AnyRef, offset: Long, len: Int, seed: Long): Long =
+    XXH64.hashUnsafeBytes(base, offset, len, seed)
 }

@@ -4,7 +4,7 @@ import java.nio.file.{FileSystemException, Files, NoSuchFileException, Path, Pat
 import java.nio.file.StandardCopyOption.ATOMIC_MOVE
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSessions, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -334,25 +334,29 @@ object StreamingQueries {
 
   // ---- replay --------------------------------------------------------------
 
-  /** Run `w` to the end of its input under Trigger.AvailableNow and return
-    * how many micro-batches read data. The state partition count is pinned
-    * into the stream's checkpoint at start; size it to the data, not the
-    * session default — every batch pays a state-store instance per
-    * partition, so 64 partitions × 5 micro-batches of a verify-scale table
-    * is pure overhead (measured 6.5 s → 2.7 s at sf0.1 going 64 → 8). A
-    * 100 TB backfill sizes this to cluster cores the same way; scoped +
-    * restored so the override cannot leak into other queries sharing the
-    * session.
+  /** Run the stream `writer` builds to the end of its input under
+    * Trigger.AvailableNow, in a clone of the caller's session `s`, and return
+    * that clone (a memory sink's view lives there) and how many micro-batches
+    * read data. The state partition count is pinned into the stream's
+    * checkpoint at start; size it to the data, not the session default —
+    * every batch pays a state-store instance per partition, so 64
+    * partitions × 5 micro-batches of a verify-scale table is pure overhead
+    * (measured 6.5 s → 2.7 s at sf0.1 going 64 → 8). A 100 TB backfill sizes
+    * this to cluster cores the same way. The pin is set on the clone only
+    * around `start()`: a query running on `s` meanwhile never sees it, and
+    * the sink is read back under the caller's value.
     */
-  private def runToEnd(s: SparkSession, w: DataStreamWriter[_]): Int = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+  private def runToEnd(s: SparkSession)(
+      writer: SparkSession => DataStreamWriter[_]): (SparkSession, Int) = {
+    val r = GraftSessions.cloneSession(s)
+    val prevParts = r.conf.get("spark.sql.shuffle.partitions")
     val q =
       try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        w.trigger(Trigger.AvailableNow()).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        r.conf.set("spark.sql.shuffle.partitions", "8")
+        writer(r).trigger(Trigger.AvailableNow()).start()
+      } finally r.conf.set("spark.sql.shuffle.partitions", prevParts)
     q.awaitTermination()
-    q.recentProgress.count(_.numInputRows > 0)
+    (r, q.recentProgress.count(_.numInputRows > 0))
   }
 
   /** The staged chunks in `src` as a file stream, one chunk per micro-batch. */
@@ -391,7 +395,7 @@ object StreamingQueries {
     // proven here through the DuckDB oracle gate (StreamingSpec
     // covers the update-mode and sessionization variants in sbt).
     "q_stream_windowed_sketches" -> { (s, dir) =>
-      val agg = eventsFileStream(s, dir)
+      def agg(r: SparkSession) = eventsFileStream(r, dir)
         // the table stores TIMESTAMP_NTZ; watermarks require TIMESTAMP —
         // the session is pinned to UTC, so this is a pure reinterpretation
         .withColumn("ts", col("ts").cast("timestamp"))
@@ -401,8 +405,9 @@ object StreamingQueries {
         .select(col("window.start").cast("date").as("day"), col("event_type"),
           fns.hllCardinality(col("hll")).as("users"), col("n"))
       val sink = "q_stream_windowed_out"
-      runToEnd(s, agg.writeStream.format("memory").queryName(sink).outputMode("complete"))
-      s.table(sink).orderBy("day", "event_type")
+      val (r, _) = runToEnd(s)(
+        agg(_).writeStream.format("memory").queryName(sink).outputMode("complete"))
+      r.table(sink).orderBy("day", "event_type")
     },
     // stateful streaming sessionization on the oracle-gated path:
     // flatMapGroupsWithState holding each key's pending event-time islands
@@ -423,7 +428,8 @@ object StreamingQueries {
       // incremental watermark sealing — not just the single-batch landing
       val stage = stageEventsByTime(s, dir, chunks = 4)
       val sink = "q_stream_sessions_out"
-      val batches = runToEnd(s, sessionsOf(s, table(s, dir, "events").schema, stage)
+      val schema = table(s, dir, "events").schema
+      val (r, batches) = runToEnd(s)(sessionsOf(_, schema, stage)
         .writeStream.format("memory").queryName(sink).outputMode("append"))
       // the multi-batch claim must hold on the executed path, not by
       // construction. Quantile-cut staging yields 4 non-empty chunk files
@@ -436,7 +442,7 @@ object StreamingQueries {
       // proving nothing about cross-batch state carry.
       require(batches >= 3,
         s"expected >= 3 data micro-batches in the staged replay, saw $batches")
-      sessionRows(s.table(sink))
+      sessionRows(r.table(sink))
     },
     // CHECKPOINTED RESTART on the oracle-gated path (the r4 VERDICT
     // item-3 stretch): the SAME sessionization replay as q_stream_sessions,
@@ -471,9 +477,9 @@ object StreamingQueries {
         }
       }
       val schema = table(s, dir, "events").schema
-      def runSegment(): Int = runToEnd(s, sessionsOf(s, schema, src.toString)
+      def runSegment(): Int = runToEnd(s)(sessionsOf(_, schema, src.toString)
         .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt).outputMode("append"))
+        .option("checkpointLocation", ckpt).outputMode("append"))._2
       admit(2)
       val b1 = runSegment() // chunks 0-1, then STOP with islands pending
       admit(4)
@@ -506,13 +512,14 @@ object StreamingQueries {
       // stageFlushSrc)
       val src = stageFlushSrc(s, dir, chunks = 4)
       val sink = "q_stream_flush_out"
-      val batches = runToEnd(s, sessionsOf(s, table(s, dir, "events").schema, src)
+      val schema = table(s, dir, "events").schema
+      val (r, batches) = runToEnd(s)(sessionsOf(_, schema, src)
         .writeStream.format("memory").queryName(sink).outputMode("append"))
       // >= 4 data batches: the sessions replay's >= 3 gate plus the
       // sentinel's own (always non-empty) final batch
       require(batches >= 4,
         s"expected >= 4 data micro-batches in the drained replay, saw $batches")
-      sessionRows(s.table(sink).filter(col("conv_id") =!= "-1"))
+      sessionRows(r.table(sink).filter(col("conv_id") =!= "-1"))
     },
     // STREAMING CROSS-BATCH EXACT DEDUP on the oracle-gated path: the
     // same 4-chunk time-cut replay as q_stream_sessions, with streaming
@@ -548,19 +555,20 @@ object StreamingQueries {
       require(spanning >= 1,
         "staged replay has no (user_id, event_type) key spanning two " +
           "chunks — the cross-batch dedup gate would be vacuous")
-      val deduped = chunkStream(s, table(s, dir, "events").schema, stage)
+      val schema = table(s, dir, "events").schema
+      def deduped(r: SparkSession) = chunkStream(r, schema, stage)
         .filter(col("user_id").isNotNull)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
       val sink = "q_stream_dedup_out"
-      val batches = runToEnd(s,
-        deduped.writeStream.format("memory").queryName(sink).outputMode("append"))
+      val (r, batches) = runToEnd(s)(
+        deduped(_).writeStream.format("memory").queryName(sink).outputMode("append"))
       // same multi-batch gate as q_stream_sessions: the dedup state must
       // actually be carried ACROSS batches on the executed path
       require(batches >= 3,
         s"expected >= 3 data micro-batches in the staged replay, saw $batches")
       sortedSmall(
-        s.table(sink)
+        r.table(sink)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("distinct_users")),
         col("event_type"))
@@ -599,15 +607,15 @@ object StreamingQueries {
       val Array(stagedRows, distinctKeys) = gateStat("bounded-dedup-counts", stage) {
         s"${st.count()}|${st.select("user_id", "event_type").distinct().count()}"
       }.split('|').map(_.toLong)
-      val deduped = chunkStream(s, st.schema, stage)
+      def deduped(r: SparkSession) = chunkStream(r, st.schema, stage)
         .withWatermark("ts", s"$dMs milliseconds")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
       val sink = "q_stream_dedup_bounded_out"
-      val batches = runToEnd(s,
-        deduped.writeStream.format("memory").queryName(sink).outputMode("append"))
+      val (r, batches) = runToEnd(s)(
+        deduped(_).writeStream.format("memory").queryName(sink).outputMode("append"))
       require(batches >= 3,
         s"expected >= 3 data micro-batches in the staged replay, saw $batches")
-      val out = s.table(sink)
+      val out = r.table(sink)
       val emitted = out.count()
       // non-vacuity: some key suppressed ACROSS batches (staging already
       // deduplicated within each chunk, so any emitted < staged gap is

@@ -134,6 +134,4 @@ object SimHash {
   def ofText(text: String): Long =
     if (text == null) 0L
     else ofTokens(text.toLowerCase(java.util.Locale.ROOT).split("\\s+").iterator.filter(_.nonEmpty))
-
-  def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 }

@@ -59,10 +59,6 @@ object TextFunctions {
     if (bestHits * 20 >= tokens.length) best else "und" // >=5% stopword mass
   }
 
-  /** Whitespace token count. */
-  def tokenCount(text: String): Int =
-    if (text == null) 0 else text.split("\\s+").count(_.nonEmpty)
-
   /** BPE-ish subword count: word-piece regex (letters runs, digit runs,
     * single punctuation) — a deterministic proxy for tokenizer cost.
     */
@@ -145,8 +141,8 @@ object TextFunctions {
     * the same globally smallest hashes (measured at sf0.1: 5000 docs →
     * 567 distinct keys → 6.2M candidate pairs); the prefix-filtered exact
     * join ([[shingleHashes]] + rarest-first prefixes) replaced it on the
-    * near-dup paths. Exposed as SQL `kmv_shingles` for set sampling /
-    * sketching uses where the subset law is what matters.
+    * near-dup paths. It stays as the bottom-k reference that
+    * [[shingleHashes]] is checked against (same hash and seed).
     */
   def minKShingleHashes(text: String, shingle: Int, k: Int): Array[Long] = {
     if (text == null || text.length < shingle || k <= 0) return Array.emptyLongArray

@@ -14,10 +14,12 @@ import graft.sketch.core.XxHash64
   */
 object VectorLsh {
 
-  /** Standard normal via Box–Muller over two hash-derived uniforms. */
-  private def gaussian(table: Int, bit: Int, dim: Int): Double = {
-    val h1 = XxHash64.hashLong((table.toLong << 40) | (bit.toLong << 20) | dim.toLong, 0xabcdef12L)
-    val h2 = XxHash64.hashLong(h1, 0x34567890L)
+  /** Standard normal via Box–Muller over two uniforms derived from `key`:
+    * one hash of it under `seed1`, and a hash of that under `seed2`.
+    */
+  private def gaussian(key: Long, seed1: Long, seed2: Long): Double = {
+    val h1 = XxHash64.hashLong(key, seed1)
+    val h2 = XxHash64.hashLong(h1, seed2)
     val u1 = ((h1 >>> 11).toDouble + 1.0) / (1L << 53).toDouble // (0,1]
     val u2 = (h2 >>> 11).toDouble / (1L << 53).toDouble
     math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.Pi * u2)
@@ -32,7 +34,11 @@ object VectorLsh {
       val (t, b, d) = key
       val a = new Array[Double](b * d)
       var i = 0
-      while (i < b * d) { a(i) = gaussian(t, i / d, i % d); i += 1 }
+      while (i < b * d) {
+        val tbd = (t.toLong << 40) | ((i / d).toLong << 20) | (i % d).toLong
+        a(i) = gaussian(tbd, 0xabcdef12L, 0x34567890L)
+        i += 1
+      }
       a
     })
 
@@ -74,12 +80,7 @@ object VectorLsh {
     val scale = eps * math.sqrt(norm / math.max(1, v.length))
     i = 0
     while (i < v.length) {
-      val h1 = XxHash64.hashLong((id << 20) | i.toLong, 0x9d2c5680L)
-      val h2 = XxHash64.hashLong(h1, 0xefc60000L)
-      val u1 = ((h1 >>> 11).toDouble + 1.0) / (1L << 53).toDouble
-      val u2 = (h2 >>> 11).toDouble / (1L << 53).toDouble
-      val g = math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.Pi * u2)
-      out(i) = (v(i) + scale * g).toFloat
+      out(i) = (v(i) + scale * gaussian((id << 20) | i.toLong, 0x9d2c5680L, 0xefc60000L)).toFloat
       i += 1
     }
     out

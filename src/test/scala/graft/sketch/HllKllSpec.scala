@@ -67,6 +67,15 @@ class HllKllSpec extends AnyFunSuite {
     values.foreach(v => bb.addUtf8(v.getBytes(utf8)))
     assert(bs.words.toSeq == bb.words.toSeq, "Bloom byte/string state parity (ASCII fast path + UTF-8 fallback)")
     values.foreach(v => assert(bb.query(v), s"membership through byte-add: $v"))
+    // the memory entry point the aggregates use, at an offset into a larger array
+    val bm = BloomSketch(4096, 5)
+    values.foreach { v =>
+      val bytes = v.getBytes(utf8)
+      val big = new Array[Byte](bytes.length + 11)
+      System.arraycopy(bytes, 0, big, 7, bytes.length)
+      bm.addUtf8Memory(big, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + 7L, bytes.length)
+    }
+    assert(bm.words.toSeq == bs.words.toSeq, "Bloom memory/string state parity")
   }
 
   test("HLL addLong and add(string) both distribute") {

@@ -1050,6 +1050,11 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       val m = got.map(x => x._1 -> (x._2, x._3)).toMap
       assert(m(5L) == ((1L, 1L)), "doc 5: one eval doc, one shared gram")
       assert(m(7L)._1 == 2L, "doc 7 hits BOTH eval docs")
+      // the whitespace token count the text queries run: runs of whitespace
+      // split once, and empty or NULL text has no tokens
+      val counts = Seq(Some("a b  c"), Some(""), None).toDF("text")
+        .select(graft.text.TextSqlFunctions.default.tokenCountCol($"text")).as[Int].collect()
+      assert(counts.toSeq == Seq(3, 0, 0), s"tokenCountCol: ${counts.toSeq}")
     } finally TestDirs.deleteTree(Paths.get(dir))
   }
 

@@ -2,11 +2,13 @@ package graft.spark
 
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -113,6 +115,43 @@ class StreamingQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("every streaming query restores spark.sql.shuffle.partitions") {
     for (q <- Seq("q_stream_windowed_sketches", "q_stream_dedup", "q_stream_dedup_bounded"))
       assert(run(q).nonEmpty, q)
+  }
+
+  test("a replay never shows its 8 state partitions to the caller's session") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    // onQueryStarted runs inside start(), so it sees the caller's conf while
+    // a replay starts in this session
+    val callerConf = new ConcurrentLinkedQueue[String]()
+    val onCaller = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        callerConf.add(spark.conf.get(key))
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    // the context's bus carries the progress of a stream started in any session
+    val stateParts = new ConcurrentLinkedQueue[java.lang.Long]()
+    val onContext = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: StreamingQueryListener.QueryProgressEvent =>
+          p.progress.stateOperators.foreach(o => stateParts.add(o.numShufflePartitions))
+        case _ =>
+      }
+    }
+    spark.streams.addListener(onCaller)
+    spark.sparkContext.addSparkListener(onContext)
+    try {
+      for (q <- Seq("q_stream_windowed_sketches", "q_stream_sessions")) assert(run(q).nonEmpty, q)
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (stateParts.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally {
+      spark.streams.removeListener(onCaller)
+      spark.sparkContext.removeSparkListener(onContext)
+    }
+    assert(callerConf.asScala.forall(_ == before),
+      s"the caller's $key read ${callerConf.asScala.mkString(", ")} while a replay started")
+    assert(!stateParts.isEmpty && stateParts.asScala.forall(_ == 8L),
+      s"state partitions: ${stateParts.asScala.mkString(", ")}")
   }
 
   test("two threads staging one table at once get one complete, single-staging chunk set") {

