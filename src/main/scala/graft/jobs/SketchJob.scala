@@ -130,11 +130,10 @@ object SketchJob {
     * split layout, not just the file list).
     */
   def plannedInput(spark: SparkSession, cfg: Config): DataFrame = {
-    val hasLen = scan(spark, cfg).columns.contains("text_len")
-    val scanned = scan(spark, cfg)
-      .select(col("conv_id"), col("role"), col("tool"),
-        (if (hasLen) col("text_len") else length(col("text")))
-          .cast("double").as("text_len"))
+    val in = scan(spark, cfg)
+    val len = if (in.columns.contains("text_len")) col("text_len") else length(col("text"))
+    val scanned = in.select(col("conv_id"), col("role"), col("tool"),
+      len.cast("double").as("text_len"))
     if (cfg.checkpointChunks > 0) scanned.coalesce(cfg.checkpointChunks) else scanned
   }
 
@@ -146,13 +145,8 @@ object SketchJob {
     * as the native flagship aggregate. Nothing is allocated per row: no
     * encoder tuple, no byte[] copies, no String decode (role and tool are
     * interned through [[graft.sketch.agg.ToolInterner]], which decodes each
-    * distinct pattern once per partition).
-    */
-  def buildPartitionSketches(spark: SparkSession, cfg: Config): Unit =
-    buildPartitionSketches(spark, cfg, plannedInput(spark, cfg))
-
-  /** As above, over an already-planned input (so `run` plans the scan once
-    * for the manifest, the partition count and stage 1).
+    * distinct pattern once per partition). `df` is [[plannedInput]], planned
+    * once by `run` for the manifest, the partition count and stage 1.
     */
   def buildPartitionSketches(spark: SparkSession, cfg: Config, df: DataFrame): Unit = {
     val ckptDir = cfg.checkpointDir

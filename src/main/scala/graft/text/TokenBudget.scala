@@ -55,13 +55,12 @@ object TokenBudget {
     * `tokens` sum is ≤ floor(stratum total · frac). `prof` must have
     * columns `doc_id` (long), `lang` (string), `quality` (double),
     * `tokens` (long); output keeps exactly those columns, one row per kept
-    * document. `partitions` ≤ 0 uses the session shuffle-partition count.
+    * document. The range exchange has the session's shuffle-partition count
+    * of slices.
     */
-  def sample(prof: DataFrame, frac: Double, partitions: Int = 0): DataFrame = {
+  def sample(prof: DataFrame, frac: Double): DataFrame = {
     val spark = prof.sparkSession
-    val p =
-      if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
+    val p = spark.sessionState.conf.numShufflePartitions
     val cols = Seq(col("doc_id").cast("long").as("doc_id"),
       col("lang").cast("string").as("lang"),
       col("quality").cast("double").as("quality"),
@@ -132,8 +131,8 @@ object TokenBudget {
   /** The per-stratum summary both the driver query and the oracle gate on:
     * kept-doc count, kept-token sum and the minimum kept quality per lang.
     */
-  def sampleSummary(prof: DataFrame, frac: Double, partitions: Int = 0): DataFrame =
-    sample(prof, frac, partitions)
+  def sampleSummary(prof: DataFrame, frac: Double): DataFrame =
+    sample(prof, frac)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("docs_kept"),
         sum(col("tokens")).as("tokens_kept"),

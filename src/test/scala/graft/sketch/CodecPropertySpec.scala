@@ -19,24 +19,11 @@ import graft.text.MinHashSketch
 class CodecPropertySpec extends AnyFunSuite {
   import CodecPropertySpec.Input
 
-  private def deflate(raw: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val os = new java.util.zip.DeflaterOutputStream(out)
-    os.write(raw); os.close()
-    out.toByteArray
-  }
+  import WireCorpus.{deflate, words}
 
-  private val composite: TurnSketches = {
-    val t = TurnSketches.create(16, 2, 256, 3)
-    (0 until 120).foreach { i =>
-      t.add(UTF8String.fromString(s"c${i % 37}"), UTF8String.fromString(s"t${i % 5}"),
-        (i * 7 % 50).toDouble, hasLen = i % 9 != 0)
-    }
-    t
-  }
+  private val composite: TurnSketches = WireCorpus.composite(120)
 
-  private val checkpointPayload: Array[Byte] = SketchJob.encodeCkpt(3,
-    Seq("assistant", "user").map(SketchJob.checkpointRow(3, _, 12L, composite)))
+  private val checkpointPayload: Array[Byte] = WireCorpus.checkpointPayload
 
   private def useComposite(a: TurnSketches, b: TurnSketches): Array[Byte] = {
     a.add(UTF8String.fromString("c1"), UTF8String.fromString("t1"), 3.0, hasLen = true)
@@ -49,7 +36,6 @@ class CodecPropertySpec extends AnyFunSuite {
     TurnSketches.encode(a)
   }
 
-  private val words = (0 until 60).map(i => s"w${i % 23}")
   private val bloom = Input[BloomSketch]("Bloom",
     { val s = BloomSketch(256, 3); words.foreach(s.add); s.toBytes }, BloomSketch.fromBytes,
     (a, b) => { a.query("w1"); a.jaccard(b); a.unionInPlace(b).toBytes })

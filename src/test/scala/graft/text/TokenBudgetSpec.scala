@@ -28,6 +28,16 @@ class TokenBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = { if (spark != null) spark.stop() }
 
+  /** A session whose shuffle-partition count — the number of range slices
+    * `TokenBudget` cuts — is `p`. Never stopped: stopping it would stop the
+    * SparkContext every session here shares.
+    */
+  private def session(p: Int): SparkSession = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", p.toLong)
+    ss
+  }
+
   /** The declarative reference: per-stratum window cumsum vs the
     * full-partition budget sum (the q_token_budget_sample shape). */
   private def windowSample(prof: DataFrame, frac: Double): DataFrame = {
@@ -47,8 +57,8 @@ class TokenBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Deterministic synthetic profile: `n` docs over skewed strata (en gets
     * ~70%), quality a hash-derived double with planted TIES, tokens with
     * planted zeros. */
-  private def synthProf(n: Int): DataFrame = {
-    val ss = spark; import ss.implicits._
+  private def synthProf(ss: SparkSession, n: Int): DataFrame = {
+    import ss.implicits._
     (0 until n).map { i =>
       val lang = if (i % 10 < 7) "en" else if (i % 10 < 9) "pt" else "de"
       val quality = ((i * 2654435761L) % 97) / 96.0 // 97 levels -> many ties
@@ -58,31 +68,33 @@ class TokenBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("equals the window formulation across partition counts and fracs") {
-    val prof = synthProf(5000)
-    for (frac <- Seq(0.3, 0.05, 0.9); p <- Seq(1, 3, 7, 32)) {
+    for (p <- Seq(1, 3, 7, 32); frac <- Seq(0.3, 0.05, 0.9)) {
+      val prof = synthProf(session(p), 5000)
       val want = keptSet(windowSample(prof, frac))
-      val got = keptSet(TokenBudget.sample(prof, frac, partitions = p))
+      val sampled = TokenBudget.sample(prof, frac)
+      assert(sampled.rdd.getNumPartitions == p)
+      val got = keptSet(sampled)
       assert(got == want, s"mismatch at frac=$frac partitions=$p " +
         s"(got ${got.size}, want ${want.size})")
     }
   }
 
   test("single giant stratum split across many partitions") {
-    val ss = spark; import ss.implicits._
+    val ss = session(16); import ss.implicits._
     // one lang only — the exact case the window shape cannot distribute;
     // constant quality makes the WHOLE stratum one tie run, so every range
     // cut lands inside a tie and the doc_id tiebreak carries the order
     val prof = (0L until 20000L)
       .map(i => (i, "en", 0.5, 1L + i % 7)).toDF("doc_id", "lang", "quality", "tokens")
     val want = keptSet(windowSample(prof, 0.3))
-    val got = keptSet(TokenBudget.sample(prof, 0.3, partitions = 16))
+    val got = keptSet(TokenBudget.sample(prof, 0.3))
     assert(got == want)
     assert(got.nonEmpty)
   }
 
   test("summary shape matches the driver row's aggregation") {
-    val prof = synthProf(2000)
-    val got = TokenBudget.sampleSummary(prof, 0.3, partitions = 8)
+    val prof = synthProf(session(8), 2000)
+    val got = TokenBudget.sampleSummary(prof, 0.3)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val want = windowSample(prof, 0.3)
       .groupBy(col("lang"))
@@ -94,17 +106,17 @@ class TokenBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("degenerate inputs: empty, one row, all-zero tokens") {
-    val ss = spark; import ss.implicits._
+    val ss = session(4); import ss.implicits._
     val empty = Seq.empty[(Long, String, Double, Long)].toDF("doc_id", "lang", "quality", "tokens")
-    assert(TokenBudget.sample(empty, 0.3, partitions = 4).count() == 0L)
+    assert(TokenBudget.sample(empty, 0.3).count() == 0L)
     val one = Seq((1L, "en", 0.9, 10L)).toDF("doc_id", "lang", "quality", "tokens")
     // budget = floor(10*0.3) = 3 < 10 -> nothing kept, same as the window
-    assert(keptSet(TokenBudget.sample(one, 0.3, partitions = 4)) ==
+    assert(keptSet(TokenBudget.sample(one, 0.3)) ==
       keptSet(windowSample(one, 0.3)))
     // all-zero tokens: budget 0, every cum 0 <= 0 -> everything kept
     val zeros = (0L until 50L).map(i => (i, "en", 0.1 * (i % 5), 0L))
       .toDF("doc_id", "lang", "quality", "tokens")
-    assert(keptSet(TokenBudget.sample(zeros, 0.3, partitions = 4)) ==
+    assert(keptSet(TokenBudget.sample(zeros, 0.3)) ==
       keptSet(windowSample(zeros, 0.3)))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Times individual SparkEntry queries at a given sf dir (steady-state:
   * one warmup pass then best of 3). The master is `local[$SPARK_GRAFT_CPUS]`
   * with as many shuffle partitions (default 4), as in `graft.Verify`. Usage:
-  *   sbt "runMain graft.tools.QueryProbe <sfDir> <query>[,<query>...]"
+  *   sbt "Test/runMain graft.tools.QueryProbe <sfDir> <query>[,<query>...]"
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {

@@ -484,7 +484,7 @@ object ScaleHeadroom {
         when(col("id") < enN, "en").otherwise("pt").as("lang"),
         (pmod(col("id"), lit(3)).cast("double") * 0.25).as("quality"),
         (lit(1L) + pmod(col("id"), lit(7))).as("tokens"))
-      val got = graft.text.TokenBudget.sampleSummary(prof, 0.3, partitions = 64)
+      val got = graft.text.TokenBudget.sampleSummary(prof, 0.3)
         .collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
       // independent simulation: same total order (quality DESC, doc_id),
