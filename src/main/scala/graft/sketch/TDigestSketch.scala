@@ -9,9 +9,10 @@ import graft.sketch.core.Codec
   * The ingest/compress/query arithmetic is kept operation-for-operation
   * faithful to the reference so identical ingest orders produce identical
   * centroids. The distributed `mergeInPlace` is NOT the reference's `union`,
-  * which drops the centroid at `_last` and discards the other digest's
-  * min/max (t-digest.js:286-293, confirmed empirically) — ours feeds all
-  * centroids and keeps true extrema (SURVEY.md §2.4).
+  * which re-adds the other digest's centroids one by one, drops the one at
+  * `_last` and discards its min/max (t-digest.js:286-293, confirmed
+  * empirically). Ours is the one-pass merging digest: a linear merge of both
+  * mean-sorted centroid lists, one compress, true extrema (SURVEY.md §2.4).
   */
 final class TDigestSketch(val compression: Int, tempSizeOverride: Int = 0)
     extends Serializable {
@@ -46,9 +47,7 @@ final class TDigestSketch(val compression: Int, tempSizeOverride: Int = 0)
 
   private val tempSize =
     if (tempSizeOverride > 0) tempSizeOverride else numTemp(compression)
-  private var unmergedSum: Double = 0.0
   private var tempLast: Int = 0
-  private var tempWeight: Array[Double] = new Array[Double](math.min(tempSize, 64))
   private var tempMean: Array[Double] = new Array[Double](math.min(tempSize, 64))
 
   /** Grow a buffer pair toward `needed` (geometric, capped at `cap`). */
@@ -73,72 +72,52 @@ final class TDigestSketch(val compression: Int, tempSizeOverride: Int = 0)
     }
   }
 
-  /** Add `count` occurrences of `v`; null/NaN callers filter upstream, NaN is
-    * ignored here (t-digest.js:82); count <= 0 throws (t-digest.js:84).
+  /** Add one occurrence of `v`; null/NaN callers filter upstream, NaN is
+    * ignored here (t-digest.js:82). Weighted centroids enter only through
+    * [[mergeInPlace]].
     */
-  def add(v: Double, count: Double = 1.0): Unit = {
+  def add(v: Double): Unit = {
     if (v.isNaN) return
-    if (count <= 0) throw new IllegalArgumentException("Count must be greater than zero.")
     if (tempLast >= tempSize) mergeValues()
-    else if (tempLast >= tempWeight.length) {
-      tempWeight = grown(tempWeight, tempLast + 1, tempSize)
-      tempMean = grown(tempMean, tempLast + 1, tempSize)
-    }
-    val n = tempLast
+    else if (tempLast >= tempMean.length) tempMean = grown(tempMean, tempLast + 1, tempSize)
+    tempMean(tempLast) = v
     tempLast += 1
-    tempWeight(n) = count
-    tempMean(n) = v
-    unmergedSum += count
   }
 
-  /** Compress temp buffer into the centroid set (t-digest.js:96-157). */
+  /** Compress temp buffer into the centroid set (t-digest.js:96-157). All
+    * temp weights are 1, where equal-value ties are indistinguishable, so an
+    * unstable primitive sort merges bit-identically to the reference's stable
+    * index sort.
+    */
   private[sketch] def mergeValues(): Unit = {
-    if (unmergedSum == 0) return
-    // worst case every temp point and every existing centroid survives as
+    val tn = tempLast
+    if (tn == 0) return
+    java.util.Arrays.sort(tempMean, 0, tn)
+    tempLast = 0
+    mergeRun(tempMean, null, tn, tn)
+  }
+
+  /** Merge one mean-sorted run of `rn` centroids with total weight `runSum`
+    * into the centroid set; `rw == null` means every weight is 1. On equal
+    * means the run goes first.
+    */
+  private def mergeRun(ru: Array[Double], rw: Array[Double], rn: Int, runSum: Double): Unit = {
+    val n = if (totalSum > 0) last + 1 else 0
+    // worst case every run entry and every existing centroid survives as
     // its own centroid (the exact-regime shape); capped at `size`, the
     // t-digest bound the eager allocation used
-    ensureCentroidCap((if (totalSum > 0) last + 1 else 0) + tempLast + 1)
-
-    val tw = tempWeight
-    val tu = tempMean
-    val tn = tempLast
+    ensureCentroidCap(n + rn + 1)
     val w = weight
     val u = mean
-    var n = 0
-
-    // Sort temp values. Hot path: all weights are 1 (row ingestion), where
-    // equal-weight ties are indistinguishable, so an unstable primitive sort
-    // of the values produces bit-identical merges to the reference's stable
-    // index sort — and avoids boxing. Weighted entries (digest merges) take
-    // the stable boxed path, matching the JS Array#sort semantics.
-    var allOnes = true
-    var c0 = 0
-    while (allOnes && c0 < tn) { if (tw(c0) != 1.0) allOnes = false; c0 += 1 }
-    var sortedVals: Array[Double] = null
-    var order: Array[Integer] = null
-    if (allOnes) {
-      sortedVals = java.util.Arrays.copyOfRange(tu, 0, tn)
-      java.util.Arrays.sort(sortedVals)
-    } else {
-      order = new Array[Integer](tn)
-      var i0 = 0
-      while (i0 < tn) { order(i0) = Integer.valueOf(i0); i0 += 1 }
-      java.util.Arrays.sort(order, (a: Integer, b: Integer) =>
-        java.lang.Double.compare(tu(a.intValue), tu(b.intValue)))
-    }
-    @inline def tVal(i: Int): Double = if (allOnes) sortedVals(i) else tu(order(i).intValue)
-    @inline def tWt(i: Int): Double = if (allOnes) 1.0 else tw(order(i).intValue)
-
-    if (totalSum > 0) n = last + 1
     last = 0
-    totalSum += unmergedSum
-    unmergedSum = 0
+    totalSum += runSum
 
     var i = 0; var j = 0; var k1 = 0.0; var sum = 0.0
-    while (i < tn && j < n) {
-      if (tVal(i) <= u(j)) {
-        sum += tWt(i)
-        k1 = mergeCentroid(sum, k1, tWt(i), tVal(i))
+    while (i < rn || j < n) {
+      if (j >= n || (i < rn && ru(i) <= u(j))) {
+        val wt = if (rw == null) 1.0 else rw(i)
+        sum += wt
+        k1 = mergeCentroid(sum, k1, wt, ru(i))
         i += 1
       } else {
         sum += w(j)
@@ -146,33 +125,14 @@ final class TDigestSketch(val compression: Int, tempSizeOverride: Int = 0)
         j += 1
       }
     }
-    while (i < tn) {
-      sum += tWt(i)
-      k1 = mergeCentroid(sum, k1, tWt(i), tVal(i))
-      i += 1
-    }
-    while (j < n) {
-      sum += w(j)
-      k1 = mergeCentroid(sum, k1, w(j), u(j))
-      j += 1
-    }
-    tempLast = 0
 
-    // swap working and merge space
+    // swap working and merge space, zero out merge weights
     weight = mergeWeight; mergeWeight = w
     mean = mergeMean; mergeMean = u
-
-    u(0) = weight(0)
-    w(0) = 0
-    val nn = last
-    var k = 1
-    while (k <= nn) {
-      w(k) = 0 // zero out merge weights
-      u(k) = u(k - 1) + weight(k) // stash cumulative dist
-      k += 1
-    }
+    java.util.Arrays.fill(w, 0, last + 1, 0.0)
+    restash()
     min = math.min(min, mean(0))
-    max = math.max(max, mean(nn))
+    max = math.max(max, mean(last))
   }
 
   @inline private def scaleK(q: Double): Double =
@@ -196,7 +156,7 @@ final class TDigestSketch(val compression: Int, tempSizeOverride: Int = 0)
   }
 
   /** Total weight added, including unmerged (t-digest.js:205-207). */
-  def count: Double = totalSum + unmergedSum
+  def count: Double = totalSum + tempLast
 
   /** Estimated quantile; q in (0,1) (t-digest.js:212-235). */
   def quantile(q0: Double): Double = {
@@ -246,19 +206,18 @@ final class TDigestSketch(val compression: Int, tempSizeOverride: Int = 0)
     ((if (i > 0) c(i - 1) else 0.0) + w(i) * interp(v, l, r)) / total
   }
 
-  /** Distributed merge: feed ALL of the other digest's centroids (inclusive
-    * of `_last`) into this one and keep true extrema — the corrected version
-    * of t-digest.js:286-293.
+  /** Distributed merge, one pass (Dunning & Ertl's merging digest): flush
+    * both digests, merge the other's mean-sorted centroids — all of them,
+    * inclusive of `_last` — with this one's in a single linear pass and one
+    * compress, and keep true extrema. The reference's `union`
+    * (t-digest.js:286-293) re-adds the centroids one by one, drops the one at
+    * `_last` and discards the other's min/max; neither bug is replicated.
     */
   def mergeInPlace(that: TDigestSketch): this.type = {
+    mergeValues()
     that.mergeValues()
     if (that.totalSum > 0) {
-      var i = 0
-      while (i <= that.last) {
-        add(that.mean(i), that.weight(i))
-        i += 1
-      }
-      mergeValues()
+      mergeRun(that.mean, that.weight, that.last + 1, that.totalSum)
       min = math.min(min, that.min)
       max = math.max(max, that.max)
     }
@@ -286,9 +245,10 @@ final class TDigestSketch(val compression: Int, tempSizeOverride: Int = 0)
   def minValue: Double = min
   def maxValue: Double = max
 
-  /** Rebuild the cumulative-weight stash read by quantile/cdf. Needed after
-    * deserialization: the reference's `import` leaves the stash empty, which
-    * breaks query-after-import (its `union` path papers over it by re-adding
+  /** Rebuild the cumulative-weight stash read by quantile/cdf, after each
+    * compress (t-digest.js:150-154) and after deserialization: the
+    * reference's `import` leaves the stash empty, which breaks
+    * query-after-import (its `union` path papers over it by re-adding
     * values); we repopulate it explicitly.
     */
   private[sketch] def restash(): Unit = {
@@ -329,8 +289,9 @@ object TDigestSketch {
 
   /** Rebuild from centroid state (the binary and JSON codecs). A compression
     * out of range, centroids beyond its 2·nc capacity or unpaired with weights,
-    * or weights not positive with a finite sum (`add` rejects them on merge,
-    * `quantile` bisects their running sum) fail with `IllegalArgumentException`.
+    * or weights not positive with a finite sum (a merge carries them into
+    * the other digest, `quantile` bisects their running sum) fail with
+    * `IllegalArgumentException`.
     */
   def fromCentroids(nc: Int, mn: Double, mx: Double,
       means: Array[Double], weights: Array[Double]): TDigestSketch = {

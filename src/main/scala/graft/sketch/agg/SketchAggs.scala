@@ -86,7 +86,9 @@ final class SketchAggFunction(name: String, adapter: SketchAdapter[_ >: Null <: 
 sealed abstract class SketchOps[S](
     val merge: (S, S) => S,
     val toBytes: S => Array[Byte],
-    val fromBytes: Array[Byte] => S) extends Serializable
+    val fromBytes: Array[Byte] => S) extends Serializable {
+  override def toString: String = getClass.getSimpleName.stripSuffix("$")
+}
 
 object SketchOps {
   object Bloom extends SketchOps[BloomSketch](_ unionInPlace _, _.toBytes, BloomSketch.fromBytes)

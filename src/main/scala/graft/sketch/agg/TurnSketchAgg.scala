@@ -223,4 +223,6 @@ final class TurnSketchAgg(
   def bufferEncoder: Encoder[TurnSketches] =
     TransformingEncoder(scala.reflect.classTag[TurnSketches], BinaryEncoder, () => TurnSketches)
   def outputEncoder: Encoder[TurnSketchResult] = Encoders.product[TurnSketchResult]
+
+  override def toString: String = s"TurnSketchAgg($cmsWidth, $cmsDepth, $bloomW, $bloomD)"
 }

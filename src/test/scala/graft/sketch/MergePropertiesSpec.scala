@@ -136,4 +136,31 @@ class MergePropertiesSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("TDigest: folded decoded partials keep rank error <= 0.005 (approximate regime)") {
+    // 16 partials of 40k values each at nc = 100, built as the Spark value
+    // aggregate builds them (`fast`), encoded, decoded, then folded as the
+    // merge aggregates fold them; ranks are read off the exact sorted data
+    val parts = 16; val perPart = 40000
+    for (seed <- 1 to 10; dist <- Seq("normal", "lognormal")) {
+      val rnd = new scala.util.Random(seed)
+      val data = Array.fill(parts * perPart) {
+        val g = rnd.nextGaussian()
+        if (dist == "normal") g else math.exp(g)
+      }
+      val merged = data.grouped(perPart).map { chunk =>
+        val td = TDigestSketch.fast(100)
+        chunk.foreach(v => td.add(v))
+        TDigestSketch.fromBytes(td.toBytes)
+      }.reduceLeft(_ mergeInPlace _)
+      java.util.Arrays.sort(data)
+      Seq(0.01, 0.1, 0.5, 0.9, 0.99).foreach { q =>
+        val v = merged.quantile(q)
+        var lo = 0; var hi = data.length // values <= v
+        while (lo < hi) { val mid = (lo + hi) >>> 1; if (data(mid) <= v) lo = mid + 1 else hi = mid }
+        val err = math.abs(lo.toDouble / data.length - q)
+        assert(err <= 0.005, s"seed=$seed $dist q=$q rank error $err")
+      }
+    }
+  }
 }

@@ -73,8 +73,8 @@ class TDigestGoldenSpec extends AnyFunSuite {
     td.add(Double.NaN)
     assert(td.count == 0.0)
     assert(td.quantile(0.5).isNaN)
-    intercept[IllegalArgumentException](td.add(1.0, 0))
-    intercept[IllegalArgumentException](td.add(1.0, -2))
+    // `add` takes no count: weighted centroids enter only through
+    // mergeInPlace, so the reference's count <= 0 throw has no counterpart
   }
 
   test("corrected merge: union of two half-ranges approximates uniform") {
@@ -181,7 +181,7 @@ class TDigestGoldenSpec extends AnyFunSuite {
         assert(grownDigest.quantile(q) == prealloc.quantile(q), s"q=$q nc=$nc")
         assert(grownDigest.cdf(500.0) == prealloc.cdf(500.0), s"cdf nc=$nc")
       }
-      // merge path exercises weighted adds + growth across both operands
+      // the one-pass merge exercises growth across both operands
       val m1 = TDigestSketch.fast(nc)
       val m2 = TDigestSketch.fast(nc)
       vals(n).zipWithIndex.foreach { case (v, i) =>

@@ -7,7 +7,8 @@ import graft.sketch.agg.TurnSketches
 import graft.text.MinHashSketch
 
 /** The wire-format corpus in `src/test/resources/wire/`: one encoded value
-  * per codec tag (HLL in sparse and in dense form), one composite buffer
+  * per codec tag (HLL in sparse and in dense form, t-digest as built and as
+  * merged from two decoded halves), one composite buffer
   * and one deflated two-role SketchJob checkpoint, each built from fixed
   * inputs. [[WireFormatSpec]] decodes the committed files. An intended
   * format change rewrites them, and is disclosed with the change:
@@ -25,6 +26,14 @@ object WireCorpus {
         (i * 7 % 50).toDouble, hasLen = i % 9 != 0)
     }
     t
+  }
+
+  /** The t-digest input: 200 values over 0–96. */
+  val tdigestValues: Seq[Double] = (0 until 200).map(i => (i * 13 % 97).toDouble)
+
+  /** A compression-20 digest of `vs`, encoded. */
+  private def tdigestBytes(vs: Seq[Double]): Array[Byte] = {
+    val s = TDigestSketch(20); vs.foreach(s.add); s.toBytes
   }
 
   val CheckpointPid = 3
@@ -52,8 +61,11 @@ object WireCorpus {
     "tag5-spacesaving.bin" -> {
       val s = SpaceSavingSketch(8); words.foreach(w => s.add(w)); s.toBytes
     },
-    "tag6-tdigest.bin" -> {
-      val s = TDigestSketch(20); (0 until 200).foreach(i => s.add(i * 13 % 97)); s.toBytes
+    "tag6-tdigest.bin" -> tdigestBytes(tdigestValues),
+    "tag6-tdigest-merged.bin" -> {
+      val (a, b) = tdigestValues.splitAt(100)
+      TDigestSketch.fromBytes(tdigestBytes(a))
+        .mergeInPlace(TDigestSketch.fromBytes(tdigestBytes(b))).toBytes
     },
     "tag7-hll-sparse.bin" -> { val s = HllSketch(); words.foreach(s.add); s.toBytes },
     "tag7-hll-dense.bin" -> {

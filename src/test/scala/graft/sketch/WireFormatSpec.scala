@@ -39,6 +39,7 @@ class WireFormatSpec extends AnyFunSuite {
     "tag4-ngram.bin" -> (NGramSketch.fromBytes(_).toBytes),
     "tag5-spacesaving.bin" -> (SpaceSavingSketch.fromBytes(_).toBytes),
     "tag6-tdigest.bin" -> (TDigestSketch.fromBytes(_).toBytes),
+    "tag6-tdigest-merged.bin" -> (TDigestSketch.fromBytes(_).toBytes),
     "tag7-hll-sparse.bin" -> (HllSketch.fromBytes(_).toBytes),
     "tag7-hll-dense.bin" -> (HllSketch.fromBytes(_).toBytes),
     "tag8-kll.bin" -> (KllSketch.fromBytes(_).toBytes),
@@ -68,6 +69,10 @@ class WireFormatSpec extends AnyFunSuite {
 
     val td = TDigestSketch.fromBytes(committed("tag6-tdigest.bin"))
     assert(td.count == 200.0 && td.quantile(0.5) == 47.312807881773395)
+    // the same 200 values as two encoded halves, decoded and merged
+    val merged = TDigestSketch.fromBytes(committed("tag6-tdigest-merged.bin"))
+    assert(merged.count == 200.0 && merged.minValue == 0.0 && merged.maxValue == 96.0)
+    assert(merged.quantile(0.5) == 47.27239316239316)
 
     val sparse = HllSketch.fromBytes(committed("tag7-hll-sparse.bin"))
     assert(sparse.isSparse && sparse.cardinality == 23L)

@@ -186,6 +186,24 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("ObjectHashAggregate"), s"plan was:\n$plan")
   }
 
+  test("plan text names the sketch aggregates without JVM identity hashes") {
+    val merge = spark.sql(
+      "SELECT ts_date, hll_agg(conv_id) AS hll FROM transcripts GROUP BY ts_date")
+      .agg(expr("hll_merge_agg(hll)"))
+    val udafAgg = udaf(new graft.sketch.agg.TurnSketchAgg(cmsWidth = 8192, cmsDepth = 5))
+    val composite = transcripts
+      .select(col("conv_id").cast("binary").as("c"), col("role"),
+        col("tool").cast("binary").as("t"), col("text_len").cast("double").as("l"))
+      .groupBy("role").agg(udafAgg(col("c"), col("t"), col("l")).as("sk"))
+    val formatted = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    Seq(merge -> "Merge(Hll)", composite -> "TurnSketchAgg(8192, 5, 0, 5)").foreach {
+      case (df, name) =>
+        val text = df.queryExecution.explainString(formatted)
+        assert("@[0-9a-f]{4,}".r.findFirstIn(text).isEmpty, s"plan was:\n$text")
+        assert(text.contains(name), s"plan was:\n$text")
+    }
+  }
+
   test("ts_date filter prunes partitions at the file index") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     def filesRead(df: DataFrame): Long = {

@@ -3,7 +3,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates PLANS.md: captured physical plans of the load-bearing
-  * operators, with the review notes. Run after any plan-shape change.
+  * operators, with the review notes. Run after any plan-shape change, from
+  * the checkout root (`sbt -batch "Test/runMain graft.tools.PlanDump"`):
+  * the flagship table, the header and PLANS.md resolve against `user.dir`.
+  * Lambda class names are cut to `$$Lambda`, so two runs over the same
+  * tables write the same text.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,9 +21,11 @@ object PlanDump {
     def dump(title: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n===== $title =====\n")
       sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        .replaceAll("""\$\$Lambda[^\s,)\]]*""", "\\$\\$Lambda"))
     }
-    val bench = "/root/repo/data/transcripts-c12000000"
+    val root = java.nio.file.Paths.get(sys.props("user.dir"))
+    val bench = root.resolve("data/transcripts-c12000000").toString
     val agg = udaf(new graft.sketch.agg.TurnSketchAgg(cmsWidth = 8192, cmsDepth = 5, bloomW = 0))
     val flagship = spark.read.parquet(bench)
       .filter(col("ts_date") >= "2025-01-05" && col("ts_date") <= "2025-01-15")
@@ -93,9 +99,8 @@ object PlanDump {
       } finally index.unpersist()
     }
 
-    val header = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/repo/scripts/plans_header.md"))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("/root/repo/PLANS.md"),
+    val header = java.nio.file.Files.readString(root.resolve("scripts/plans_header.md"))
+    java.nio.file.Files.writeString(root.resolve("PLANS.md"),
       header + "\n```" + sb.toString + "\n```\n")
     println("PLANS.md written")
     spark.stop()

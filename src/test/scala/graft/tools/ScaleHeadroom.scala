@@ -94,10 +94,14 @@ object ScaleHeadroom {
     v
   }
 
+  /** The checkout root: `Test/runMain` forks with it as `user.dir`. */
+  private val root = java.nio.file.Paths.get(sys.props("user.dir"))
+
   /** Runs every row, or only the rows named in `args` (an unknown name
     * fails before anything runs). Only a full run rewrites
     * SCALE_HEADROOM.md and scale_headroom.json; a named run prints its rows.
-    * The master is `local[$SPARK_GRAFT_CPUS]` (default 32).
+    * The master is `local[$SPARK_GRAFT_CPUS]` (default 32). The tables under
+    * `data/headroom` and both reports resolve against [[root]].
     */
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -109,7 +113,7 @@ object ScaleHeadroom {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val tfns = graft.text.TextSqlFunctions.default
-    val base = "/root/repo/data/headroom"
+    val base = root.resolve("data/headroom").toString
     val genTextUdf = udf((id: Long, variant: Int) => genText(id, variant))
     val genVecUdf = udf((id: Long) => genVec(id))
 
@@ -582,7 +586,7 @@ object ScaleHeadroom {
     }.mkString(","))
     json.append("}}")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/scale_headroom.json"), json.toString)
+      root.resolve("scale_headroom.json"), json.toString)
 
     val md = new StringBuilder
     md.append(
@@ -726,7 +730,7 @@ object ScaleHeadroom {
         |use it as ground truth.
         |""".stripMargin)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/SCALE_HEADROOM.md"), md.toString)
+      root.resolve("SCALE_HEADROOM.md"), md.toString)
     println("[headroom] wrote SCALE_HEADROOM.md + scale_headroom.json")
   }
 }
