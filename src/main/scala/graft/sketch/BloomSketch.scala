@@ -167,15 +167,18 @@ object BloomSketch {
     apply(w, d)
   }
 
-  def fromWords(words: Array[Int], d: Int): BloomSketch =
+  /** A filter over `words` with `d` hash functions: the one shape check of
+    * every import, binary or JSON. Depth is in [1, [[MaxDepth]]] and there
+    * is at least one word.
+    */
+  def fromWords(words: Array[Int], d: Int): BloomSketch = {
+    Codec.requireShape(d >= 1 && d <= MaxDepth, s"Bloom depth $d is outside [1, $MaxDepth]")
+    Codec.requireShape(words.nonEmpty, "Bloom filter has no bits")
     new BloomSketch(words.length * 32, d, words)
+  }
 
   def fromBytes(bytes: Array[Byte]): BloomSketch = Codec.decode(bytes, Codec.TagBloom) { bb =>
     val d = bb.getInt()
-    if (d < 1 || d > MaxDepth) throw Codec.corrupt(Codec.TagBloom, 3,
-      s"Bloom depth $d is outside [1, $MaxDepth]")
-    val words = Codec.readIntArray(bb)
-    if (words.isEmpty) throw Codec.corrupt(Codec.TagBloom, 7, "Bloom filter has no bits")
-    new BloomSketch(words.length * 32, d, words)
+    fromWords(Codec.readIntArray(bb), d)
   }
 }

@@ -121,21 +121,25 @@ object CmsSketch {
   }
 
   def fromBytes(bytes: Array[Byte]): CmsSketch = Codec.decode(bytes, Codec.TagCms) { bb =>
-    val (w, d, num, table) = readTable(bb, Codec.TagCms)
+    val (w, d, num, table) = readTable(bb)
     new CmsSketch(w, d, table, num)
   }
 
-  /** Width, depth, count and table of a CMS or CMM encoding; a shape that is
-    * not `w·d ≥ 1` counters fails here, not as a bad index on first query.
-    */
-  private[sketch] def readTable(bb: java.nio.ByteBuffer, tag: Byte)
-      : (Int, Int, Long, Array[Long]) = {
+  /** Width, depth, count and table of a CMS or CMM encoding, checked by [[requireShape]]. */
+  private[sketch] def readTable(bb: java.nio.ByteBuffer): (Int, Int, Long, Array[Long]) = {
     val w = bb.getInt(); val d = bb.getInt(); val num = bb.getLong()
     val table = Codec.readLongArray(bb)
-    if (w < 1 || d < 1 || w.toLong * d != table.length) throw Codec.corrupt(tag, 3,
-      s"width $w x depth $d does not match the ${table.length} counters")
+    requireShape(w, d, table.length)
     (w, d, num, table)
   }
+
+  /** The CMS and CMM shape rule of every import, binary or JSON: `w ≥ 1`,
+    * `d ≥ 1` and `w·d` counters, so a bad table fails here, not as a bad
+    * index on first query.
+    */
+  private[sketch] def requireShape(w: Int, d: Int, counters: Int): Unit =
+    Codec.requireShape(w >= 1 && d >= 1 && w.toLong * d == counters,
+      s"width $w x depth $d does not match the $counters counters")
 }
 
 /** Count-Mean-Min: CMS state plus Deng–Rafiei bias-corrected median estimator
@@ -206,7 +210,7 @@ object CmmSketch {
   }
 
   def fromBytes(bytes: Array[Byte]): CmmSketch = Codec.decode(bytes, Codec.TagCmm) { bb =>
-    val (w, d, num, table) = CmsSketch.readTable(bb, Codec.TagCmm)
+    val (w, d, num, table) = CmsSketch.readTable(bb)
     new CmmSketch(w, d, table, num)
   }
 

@@ -81,7 +81,9 @@ object JsonCodec {
     val j = JsonMethods.parse(json)
     val counts = (j \ "counts").asInstanceOf[JArray].arr.map(num).toArray
     val d = num(j \ "depth").toInt
-    new CmsSketch(counts.length / d, d, counts, num(j \ "num"))
+    val w = counts.length / math.max(d, 1) // a depth below 1 fails the check
+    CmsSketch.requireShape(w, d, counts.length)
+    new CmsSketch(w, d, counts, num(j \ "num"))
   }
 
   def cmmFromJson(json: String): CmmSketch = {

@@ -10,20 +10,20 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketch._
 
-/** One native Catalyst aggregate behind every per-sketch SQL aggregate
-  * (`hll_agg`, `kll_agg`, ... and the `*_merge_agg`s), modelled on
-  * `TurnSketchNativeAgg`. The live sketch is the aggregation buffer, so these
-  * run in `ObjectHashAggregateExec`. Rows are read straight from the
-  * `InternalRow`: strings are hashed from UTF8String memory where the sketch
-  * has a memory hash, and merge aggregates decode the `BinaryType` cell.
-  * Buffers cross shuffle, spill and the sort-based fallback as the sketch's
-  * canonical codec bytes. What differs per sketch is its [[SketchAdapter]].
+/** The one native Catalyst aggregate of the library: every per-sketch SQL
+  * aggregate (`hll_agg`, `kll_agg`, ... and the `*_merge_agg`s), the
+  * composite `turn_sketch_native` and the capped-bucket aggregates. The live
+  * state is the aggregation buffer, so these run in `ObjectHashAggregateExec`.
+  * Rows are read straight from the `InternalRow`: strings are hashed from
+  * UTF8String memory where the sketch has a memory hash, and merge
+  * aggregates decode the `BinaryType` cell. Everything that differs per
+  * aggregate is its [[SketchAdapter]]: input types, empty state, how a row
+  * updates it (NULL handling included), merge, the buffer codec that crosses
+  * shuffle, spill and the sort-based fallback, and the result.
   *
   * Arguments are implicitly cast to the adapter's input types (an INT column
   * into `kll_agg` is cast to DOUBLE, into `hll_agg` to STRING); any other type
-  * fails at analysis, naming the function. NULL inputs are skipped: a value
-  * aggregate over no rows returns an empty sketch, and a merge aggregate with
-  * no non-NULL input returns NULL.
+  * fails at analysis, naming the function.
   */
 case class SketchAgg[S >: Null <: AnyRef](
     fnName: String,
@@ -35,23 +35,15 @@ case class SketchAgg[S >: Null <: AnyRef](
 
   override def prettyName: String = fnName
   override def inputTypes: Seq[DataType] = adapter.inputTypes
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = adapter.nullable
+  override def dataType: DataType = adapter.dataType
 
   override def createAggregationBuffer(): S = adapter.zero
-  override def update(s: S, input: InternalRow): S = {
-    val v = children.head.eval(input)
-    if (v == null) s else adapter.update(s, v, input, children)
-  }
-  override def merge(a: S, b: S): S =
-    if (a == null) b else if (b == null) a else adapter.ops.merge(a, b)
-  override def eval(s: S): Any = if (s == null) null else adapter.ops.toBytes(s)
-
-  // a merge aggregate's buffer stays null until its first non-NULL sketch
-  override def serialize(s: S): Array[Byte] =
-    if (s == null) Array.emptyByteArray else adapter.ops.toBytes(s)
-  override def deserialize(bytes: Array[Byte]): S =
-    if (bytes.isEmpty) null else adapter.ops.fromBytes(bytes)
+  override def update(s: S, input: InternalRow): S = adapter.update(s, input, children)
+  override def merge(a: S, b: S): S = adapter.merge(a, b)
+  override def eval(s: S): Any = adapter.eval(s)
+  override def serialize(s: S): Array[Byte] = adapter.serialize(s)
+  override def deserialize(bytes: Array[Byte]): S = adapter.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(offset: Int): SketchAgg[S] =
     copy(mutableAggBufferOffset = offset)
@@ -61,8 +53,9 @@ case class SketchAgg[S >: Null <: AnyRef](
       newChildren: IndexedSeq[Expression]): SketchAgg[S] = copy(children = newChildren)
 }
 
-/** A named sketch aggregate: the Column-API handle (`fns.hllAgg(col("x"))`)
-  * and its SQL builder build the same [[SketchAgg]].
+/** A named aggregate: the Column-API handle (`fns.hllAgg(col("x"))`) and its
+  * SQL table entry build the same [[SketchAgg]], after one argument-count
+  * check.
   */
 final class SketchAggFunction(name: String, adapter: SketchAdapter[_ >: Null <: AnyRef])
     extends Serializable {
@@ -75,13 +68,14 @@ final class SketchAggFunction(name: String, adapter: SketchAdapter[_ >: Null <: 
 
   def apply(cols: Column*): Column = GraftColumns.aggregate(cols)(build)
 
-  /** The builder of its SQL table entry (see [[SketchFunctions.functions]]). */
-  private[agg] def sqlBuilder(children: Seq[Expression]): Expression =
-    build(children).toAggregateExpression()
+  /** Its SQL table entry; `usage` as in [[SketchFunctions.entry]]. */
+  def entry(usage: String): SketchFunctions.Entry =
+    SketchFunctions.entry(name, usage, classOf[SketchAgg[_]], "agg_funcs")(
+      build(_).toAggregateExpression())
 }
 
 /** Merge and canonical codec of one sketch type, shared by its value and
-  * merge aggregates.
+  * merge aggregates; `Turn` is the composite [[TurnSketches]]'s.
   */
 sealed abstract class SketchOps[S](
     val merge: (S, S) => S,
@@ -101,25 +95,46 @@ object SketchOps {
     _ mergeInPlace _, _.toBytes, TDigestSketch.fromBytes)
   object Kll extends SketchOps[KllSketch](_ mergeInPlace _, _.toBytes, KllSketch.fromBytes)
   object Hll extends SketchOps[HllSketch](_ mergeInPlace _, _.toBytes, HllSketch.fromBytes)
+  object Turn extends SketchOps[TurnSketches](_ merge _, TurnSketches.encode, TurnSketches.decode)
 }
 
-/** What a [[SketchAgg]] does for one sketch: its SQL argument types, its
-  * empty state, and how one input row updates the state.
+/** What a [[SketchAgg]] does for one aggregate: its SQL argument types, its
+  * empty state, how one input row updates the state, merge, the buffer codec
+  * and the result. The result is nullable `BinaryType`, the buffer's bytes,
+  * unless the adapter says otherwise.
   */
-abstract class SketchAdapter[S >: Null <: AnyRef](val ops: SketchOps[S]) extends Serializable {
+abstract class SketchAdapter[S >: Null <: AnyRef] extends Serializable {
   def inputTypes: Seq[DataType]
-  /** Empty state; null for merge aggregates, which take the first sketch. */
   def zero: S
-  /** Fold in a row whose first argument `v` is not NULL. */
-  def update(s: S, v: Any, input: InternalRow, args: Seq[Expression]): S
+  /** Fold in one row; `args` are the aggregate's arguments, NULLs included. */
+  def update(s: S, input: InternalRow, args: Seq[Expression]): S
+  def merge(a: S, b: S): S
+  def serialize(s: S): Array[Byte]
+  def deserialize(bytes: Array[Byte]): S
+  def dataType: DataType = BinaryType
+  def nullable: Boolean = true
+  def eval(s: S): Any = serialize(s)
 }
 
-/** Value aggregate over one argument, updating the state in place. */
+/** An adapter whose merge and buffer codec are a sketch type's [[SketchOps]]. */
+abstract class OpsAdapter[S >: Null <: AnyRef](ops: SketchOps[S]) extends SketchAdapter[S] {
+  def merge(a: S, b: S): S = ops.merge(a, b)
+  def serialize(s: S): Array[Byte] = ops.toBytes(s)
+  def deserialize(bytes: Array[Byte]): S = ops.fromBytes(bytes)
+}
+
+/** Value aggregate over one argument, updating the state in place. NULL
+  * inputs are skipped: over no rows it returns an empty sketch.
+  */
 abstract class ValueAdapter[S >: Null <: AnyRef](ops: SketchOps[S], inputType: DataType)
-    extends SketchAdapter[S](ops) {
+    extends OpsAdapter[S](ops) {
   def inputTypes: Seq[DataType] = Seq(inputType)
   protected def add(s: S, v: Any): Unit
-  def update(s: S, v: Any, input: InternalRow, args: Seq[Expression]): S = { add(s, v); s }
+  def update(s: S, input: InternalRow, args: Seq[Expression]): S = {
+    val v = args.head.eval(input)
+    if (v != null) add(s, v)
+    s
+  }
 }
 
 object SketchAggs {
@@ -156,15 +171,18 @@ object SketchAggs {
   }
 
   /** Weighted top-k over (value, count) pairs, e.g. pre-aggregated partials.
-    * A NULL count adds the value with count 0.
+    * A NULL value is skipped; a NULL count adds the value with count 0.
     */
-  final case class TopKWeighted(capacity: Int) extends SketchAdapter(SketchOps.TopK) {
+  final case class TopKWeighted(capacity: Int) extends OpsAdapter(SketchOps.TopK) {
     def inputTypes: Seq[DataType] = Seq(StringType, LongType)
     def zero: SpaceSavingSketch = SpaceSavingSketch(capacity)
-    def update(s: SpaceSavingSketch, v: Any, input: InternalRow, args: Seq[Expression])
+    def update(s: SpaceSavingSketch, input: InternalRow, args: Seq[Expression])
         : SpaceSavingSketch = {
-      val c = args(1).eval(input)
-      s.add(v.toString, if (c == null) 0L else c.asInstanceOf[Long])
+      val v = args.head.eval(input)
+      if (v != null) {
+        val c = args(1).eval(input)
+        s.add(v.toString, if (c == null) 0L else c.asInstanceOf[Long])
+      }
       s
     }
   }
@@ -196,13 +214,23 @@ object SketchAggs {
   // ---- merge aggregates: re-aggregate BinaryType sketch columns (the
   //      treeReduce-style second level, SURVEY.md §3.3) ----
 
+  /** The state stays null, and crosses shuffle as empty bytes, until the
+    * first non-NULL sketch: with no non-NULL input the result is NULL.
+    */
   final case class Merge[S >: Null <: AnyRef](sketch: SketchOps[S])
-      extends SketchAdapter[S](sketch) {
+      extends OpsAdapter[S](sketch) {
     def inputTypes: Seq[DataType] = Seq(BinaryType)
     def zero: S = null
-    def update(s: S, v: Any, input: InternalRow, args: Seq[Expression]): S = {
-      val other = sketch.fromBytes(v.asInstanceOf[Array[Byte]])
-      if (s == null) other else sketch.merge(s, other)
+    def update(s: S, input: InternalRow, args: Seq[Expression]): S = {
+      val v = args.head.eval(input)
+      if (v == null) s else merge(s, sketch.fromBytes(v.asInstanceOf[Array[Byte]]))
     }
+    override def merge(a: S, b: S): S =
+      if (a == null) b else if (b == null) a else sketch.merge(a, b)
+    override def serialize(s: S): Array[Byte] =
+      if (s == null) Array.emptyByteArray else sketch.toBytes(s)
+    override def deserialize(bytes: Array[Byte]): S =
+      if (bytes.isEmpty) null else sketch.fromBytes(bytes)
+    override def eval(s: S): Any = if (s == null) null else sketch.toBytes(s)
   }
 }

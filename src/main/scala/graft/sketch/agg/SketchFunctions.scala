@@ -47,7 +47,7 @@ class SketchFunctions(val config: SketchConfig) extends Serializable {
   private def agg(name: String, usage: String, adapter: SketchAdapter[_ >: Null <: AnyRef])
       : SketchAggFunction = {
     val f = new SketchAggFunction(name, adapter)
-    table += SketchFunctions.entry(name, usage, classOf[SketchAgg[_]], "agg_funcs")(f.sqlBuilder)
+    table += f.entry(usage)
     f
   }
   private def merge(kind: String, ops: SketchOps[_ >: Null <: AnyRef]): SketchAggFunction =

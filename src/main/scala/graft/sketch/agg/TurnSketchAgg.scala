@@ -35,8 +35,9 @@ case class TurnSketchResult(
   * Space-Saving on `tool`, t-digest and KLL on `len`, plus the row count —
   * and the one place its rules live: [[TurnSketches.create]], [[add]],
   * [[merge]], [[result]] and the [[TurnSketches.encode]]/`decode` codec.
-  * `TurnSketchAgg` (`udaf()`), `graft.plans.TurnSketchNativeAgg` (Catalyst)
-  * and `SketchJob` (stage 1 and its checkpoint fold) are shells over it.
+  * `TurnSketchAgg` (`udaf()`), `turn_sketch_native` (a [[SketchAgg]] over
+  * `graft.plans.TurnSketchNativeAgg.Composite`) and `SketchJob` (stage 1 and
+  * its checkpoint fold) are shells over it.
   *
   * The Bloom is optional (`null`: not built, emitted as empty bytes).
   */
@@ -182,7 +183,7 @@ object ToolInterner {
 /** The composite transcript sketch build as an `Aggregator` for `udaf()`:
   * one aggregation-buffer lookup and one input conversion per row instead
   * of six. A shell over [[TurnSketches]], as is the native
-  * `graft.plans.TurnSketchNativeAgg`; the buffer crosses shuffle, spill and
+  * `turn_sketch_native`; the buffer crosses shuffle, spill and
   * sort-based fallback as [[TurnSketches.encode]] bytes, so it needs no
   * Kryo registration.
   *
@@ -194,7 +195,7 @@ object ToolInterner {
   * shuffled per map task. Capacity-planned membership jobs configure it
   * explicitly; the throughput flagship runs the five capacity-valid
   * sketches. The default is therefore bloom-OFF — the same default as
-  * `TurnSketchNativeAgg`, so migrating a job between the UDAF and the
+  * `turn_sketch_native`, so migrating a job between the UDAF and the
   * native registration can never silently change which sketches it builds.
   */
 final class TurnSketchAgg(

@@ -42,6 +42,13 @@ object Codec {
   def corrupt(tag: Byte, offset: Int, why: String): IllegalArgumentException =
     new IllegalArgumentException(s"corrupt sketch (tag $tag) at offset $offset: $why")
 
+  /** A failed sketch shape rule. Where a sketch is built from parts (JSON
+    * import, `fromWords`) it is a plain `IllegalArgumentException`; inside
+    * [[decode]] it becomes `corrupt`'s error at the offset read so far.
+    */
+  final class BadShape(why: String) extends IllegalArgumentException(why)
+  def requireShape(ok: Boolean, why: => String): Unit = if (!ok) throw new BadShape(why)
+
   /** Decode a framing with no sketch header (the composite aggregation
     * buffer, SketchJob checkpoints) with `read`, which must consume every
     * byte. A short read, a bad length prefix or trailing bytes fail with one
@@ -56,6 +63,7 @@ object Codec {
     val t = try read(bb)
     catch {
       case e: BadLength => throw fail(e.offset, e.getMessage)
+      case e: BadShape => throw fail(bb.position(), e.getMessage)
       case _: java.nio.BufferUnderflowException =>
         throw fail(bb.position(), s"ends early (${bb.limit} bytes)")
     }

@@ -2,25 +2,25 @@ package graft.text
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{Column, GraftColumns}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 
+import graft.sketch.agg.SketchAdapter
+
 /** Ingest-capped bucket occupant collection, the grouping step of every
-  * LSH / prefix-filter candidate search, as a native Catalyst aggregate
-  * (the `SketchAgg` pattern, so it runs in `ObjectHashAggregateExec` with
-  * no per-row encoder). The cap is enforced at INGEST: the buffer never
-  * holds more than `cap + 1` occupants, so a degenerate hot bucket
-  * (millions of rows under one band key — boilerplate/empty docs,
-  * near-zero vectors) costs O(cap) memory instead of materializing the
-  * whole bucket before a size filter. A result with more than `cap`
-  * occupants means "overflowed — drop this bucket" (the extra occupant is
-  * the overflow marker). Overflow propagates through `merge` in every
-  * merge order: once either side has reached `cap + 1` occupants the
+  * LSH / prefix-filter candidate search, as a [[graft.sketch.agg.SketchAgg]]
+  * over the [[CappedBucketAgg.Capped]] adapter (so it runs in
+  * `ObjectHashAggregateExec` with no per-row encoder). The cap is enforced
+  * at INGEST: the buffer never holds more than `cap + 1` occupants, so a
+  * degenerate hot bucket (millions of rows under one band key —
+  * boilerplate/empty docs, near-zero vectors) costs O(cap) memory instead of
+  * materializing the whole bucket before a size filter. A result with more
+  * than `cap` occupants means "overflowed — drop this bucket" (the extra
+  * occupant is the overflow marker). Overflow propagates through `merge` in
+  * every merge order: once either side has reached `cap + 1` occupants the
   * merged buffer has too.
   *
   * The buffer is a flat primitive `Array[Long]`: slot 0 holds the used
@@ -32,66 +32,6 @@ import org.apache.spark.unsafe.Platform
   * is its input columns, how many slots one occupant takes, and whether
   * the finished array leads with the count. NULL inputs are skipped.
   */
-case class CappedBucketAgg(
-    shape: CappedBucketAgg.Shape,
-    cap: Int,
-    children: Seq[Expression],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] with ImplicitCastInputTypes {
-  import CappedBucketAgg._
-
-  override def prettyName: String = shape.name
-  override def inputTypes: Seq[DataType] = shape.inputTypes
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] = {
-    val b = new Array[Long](32); b(Used) = Header; b
-  }
-  override def update(b: Array[Long], input: InternalRow): Array[Long] =
-    if (b(Count) > cap) b else shape.add(b, input, children)
-  override def merge(a0: Array[Long], c: Array[Long]): Array[Long] = {
-    val cUsed = c(Used).toInt
-    var a = a0
-    var i = Header
-    while (a(Count) <= cap && i < cUsed) {
-      val n = shape.slots(c, i)
-      val p = a(Used).toInt
-      a = claim(a, n)
-      System.arraycopy(c, i, a, p, n)
-      i += n
-    }
-    a
-  }
-  override def eval(b: Array[Long]): Any = {
-    val from = shape.resultFrom(b)
-    UnsafeArrayData.fromPrimitiveArray(
-      b, Platform.LONG_ARRAY_OFFSET + 8 * from, b(Used).toInt - from, 8)
-  }
-
-  override def serialize(b: Array[Long]): Array[Byte] = {
-    val used = b(Used).toInt
-    val bb = ByteBuffer.allocate(8 * used).order(ByteOrder.LITTLE_ENDIAN)
-    bb.asLongBuffer().put(b, 0, used)
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val b = new Array[Long](bytes.length / 8)
-    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(b)
-    require(bytes.length % 8 == 0 && b.length >= Header && b(Used) == b.length,
-      s"corrupt capped bucket buffer: ${bytes.length} bytes")
-    b
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): CappedBucketAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): CappedBucketAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CappedBucketAgg = copy(children = newChildren)
-}
-
 object CappedBucketAgg {
   private[text] final val Used = 0
   private[text] final val Count = 1
@@ -121,6 +61,47 @@ object CappedBucketAgg {
     b(Used) += n
     b(Count) += 1
     b
+  }
+
+  /** Occupants of `shape`, at most `cap + 1` per bucket. */
+  final case class Capped(shape: Shape, cap: Int) extends SketchAdapter[Array[Long]] {
+    def inputTypes: Seq[DataType] = shape.inputTypes
+    def zero: Array[Long] = { val b = new Array[Long](32); b(Used) = Header; b }
+    def update(b: Array[Long], input: InternalRow, args: Seq[Expression]): Array[Long] =
+      if (b(Count) > cap) b else shape.add(b, input, args)
+    def merge(a0: Array[Long], c: Array[Long]): Array[Long] = {
+      val cUsed = c(Used).toInt
+      var a = a0
+      var i = Header
+      while (a(Count) <= cap && i < cUsed) {
+        val n = shape.slots(c, i)
+        val p = a(Used).toInt
+        a = claim(a, n)
+        System.arraycopy(c, i, a, p, n)
+        i += n
+      }
+      a
+    }
+    def serialize(b: Array[Long]): Array[Byte] = {
+      val used = b(Used).toInt
+      val bb = ByteBuffer.allocate(8 * used).order(ByteOrder.LITTLE_ENDIAN)
+      bb.asLongBuffer().put(b, 0, used)
+      bb.array()
+    }
+    def deserialize(bytes: Array[Byte]): Array[Long] = {
+      val b = new Array[Long](bytes.length / 8)
+      ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(b)
+      require(bytes.length % 8 == 0 && b.length >= Header && b(Used) == b.length,
+        s"corrupt capped bucket buffer: ${bytes.length} bytes")
+      b
+    }
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullable: Boolean = false
+    override def eval(b: Array[Long]): Any = {
+      val from = shape.resultFrom(b)
+      UnsafeArrayData.fromPrimitiveArray(
+        b, Platform.LONG_ARRAY_OFFSET + 8 * from, b(Used).toInt - from, 8)
+    }
   }
 
   /** What one occupant is: its input columns and its slots in the buffer. */
@@ -187,14 +168,5 @@ object CappedBucketAgg {
       out
     }
     override def resultFrom(b: Array[Long]): Int = if (b(Count) == 0) b(Used).toInt else Count
-  }
-
-  /** Column-API handle: `fn(cols*)` aggregates `cols` into capped buckets. */
-  final case class Fn(shape: Shape, cap: Int) {
-    def apply(cols: Column*): Column = GraftColumns.aggregate(cols) { children =>
-      require(children.length == shape.inputTypes.length,
-        s"${shape.name} expects ${shape.inputTypes.length} argument(s), got ${children.length}")
-      CappedBucketAgg(shape, cap, children)
-    }
   }
 }

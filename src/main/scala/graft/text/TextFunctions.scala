@@ -5,6 +5,7 @@ import java.util.Locale
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
+import graft.sketch.agg.SketchAggFunction
 import graft.sketch.core.XxHash64
 
 /** Text-analysis + dedup + similarity operators for large-scale training-data
@@ -524,14 +525,16 @@ class TextSqlFunctions extends Serializable {
   /** Expand one capped LSH bucket into its unordered candidate id pairs. */
   val idPairsUdf: UserDefinedFunction = udf((ids: Array[Long]) => idPairs(ids))
 
+  private def capped(shape: CappedBucketAgg.Shape, cap: Int): SketchAggFunction =
+    new SketchAggFunction(shape.name, CappedBucketAgg.Capped(shape, cap))
+
   /** Ingest-capped bucket occupant collection (see [[CappedBucketAgg]]). */
-  def cappedIdsAgg(cap: Int): CappedBucketAgg.Fn = CappedBucketAgg.Fn(CappedBucketAgg.Ids, cap)
+  def cappedIdsAgg(cap: Int): SketchAggFunction = capped(CappedBucketAgg.Ids, cap)
 
   /** Payload-carrying variant (see [[CappedBucketAgg.TaggedIds]]):
     * apply to `(id, tag)` columns, occupants come back interleaved.
     */
-  def cappedTaggedIdsAgg(cap: Int): CappedBucketAgg.Fn =
-    CappedBucketAgg.Fn(CappedBucketAgg.TaggedIds, cap)
+  def cappedTaggedIdsAgg(cap: Int): SketchAggFunction = capped(CappedBucketAgg.TaggedIds, cap)
 
   /** Expand one capped interleaved `[id, tag, …]` bucket into its
     * unordered payload-carrying candidate pairs.
@@ -541,8 +544,7 @@ class TextSqlFunctions extends Serializable {
   /** Framed prefix-bucket collection (see [[CappedBucketAgg.FramedPrefixes]]):
     * apply to `(xid, prefixArray)` columns.
     */
-  def cappedPrefixAgg(cap: Int): CappedBucketAgg.Fn =
-    CappedBucketAgg.Fn(CappedBucketAgg.FramedPrefixes, cap)
+  def cappedPrefixAgg(cap: Int): SketchAggFunction = capped(CappedBucketAgg.FramedPrefixes, cap)
 
   /** Gated candidate pairs of one framed prefix bucket as a flat
     * `[a0, b0, a1, b1, …]` Long array (see TextFunctions.prefixBucketPairs).

@@ -76,4 +76,19 @@ class JsonCodecSpec extends AnyFunSuite {
     val back = JsonCodec.tdigestFromJson(JsonCodec.toJson(td))
     Seq(0.1, 0.5, 0.9).foreach(q => assert(back.quantile(q) == td.quantile(q)))
   }
+
+  // JSON import applies the binary decoder's shape rule
+  for ((what, read) <- Seq[(String, () => Any)](
+      "CMS depth 0" -> (() => JsonCodec.cmsFromJson("""{"num":0,"depth":0,"counts":[0,0]}""")),
+      "CMS with 4 counts at depth 3" ->
+        (() => JsonCodec.cmsFromJson("""{"num":4,"depth":3,"counts":[1,1,1,1]}""")),
+      "CMM with 4 counts at depth 3" ->
+        (() => JsonCodec.cmmFromJson("""{"num":4,"depth":3,"counts":[1,1,1,1]}""")),
+      "Bloom depth -1" -> (() => JsonCodec.bloomFromJson("""{"depth":-1,"bits":[0]}""")),
+      "Bloom depth 5000" -> (() => JsonCodec.bloomFromJson("""{"depth":5000,"bits":[0]}""")),
+      "Bloom without bits" -> (() => JsonCodec.bloomFromJson("""{"depth":3,"bits":[]}""")))) {
+    test(s"JSON import of a $what fails with IllegalArgumentException") {
+      intercept[IllegalArgumentException](read())
+    }
+  }
 }

@@ -530,6 +530,22 @@ class SparkIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .selectExpr("hll_merge_agg(h)", "hll_merge_agg(hb)").collect()(0)
     assertSame(hllAsString.getAs[Array[Byte]](0), hllAsString.getAs[Array[Byte]](1),
       "hll_merge_agg of a STRING-cast sketch")
+    // the composite casts to (STRING, STRING, DOUBLE) by the same rules
+    val turn = graft.plans.TurnSketchNativeAgg.FunctionName
+    graft.plans.TurnSketchNativeAgg.register(spark)
+    for (c <- all; (args, ok) <- Seq(s"$c, s, d" -> (c != "arr"), s"s, $c, d" -> (c != "arr"),
+        s"s, s, $c" -> numeric(c))) analyze(s"SELECT $turn($args) FROM typed_in") match {
+      case None => assert(ok, s"$turn($args) should fail analysis")
+      case Some(e) =>
+        assert(!ok, s"$turn($args) should analyze: ${e.getMessage}")
+        assert(e.getMessage.contains(turn), s"error for $turn($args) must name it: ${e.getMessage}")
+    }
+    def composite(len: String): Row =
+      spark.sql(s"SELECT $turn(s, s, $len) FROM typed_in").collect()(0).getStruct(0)
+    val (viaInt, viaDouble) = (composite("i"), composite("CAST(i AS DOUBLE)"))
+    viaInt.schema.fieldNames.foreach { f =>
+      assertSame(viaInt.getAs[Any](f), viaDouble.getAs[Any](f), s"$turn with an INT len: $f")
+    }
   }
 
   test("truncated or bit-flipped sketch cells fail their merge aggregate with a typed error") {

@@ -17,6 +17,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sketch.agg.SketchAgg
 import graft.spark.TestDirs
 
 /** The native capped-bucket aggregate against the `udaf()` Aggregators it
@@ -129,6 +130,28 @@ class CappedBucketAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a corrupt partial buffer fails to decode with a typed error, for every shape") {
+    for (shape <- Seq(CappedBucketAgg.Ids, CappedBucketAgg.TaggedIds,
+        CappedBucketAgg.FramedPrefixes)) {
+      val d = new Driven(shape, 8)
+      val occupant: Seq[Any] = shape match {
+        case CappedBucketAgg.Ids       => Seq(1L)
+        case CappedBucketAgg.TaggedIds => Seq(1L, 3L)
+        case _ => Seq(1L, UnsafeArrayData.fromPrimitiveArray(Array(5L, 6L)))
+      }
+      val good = d.agg.serialize(d.reduce(d.zero, occupant: _*))
+      assert(d.agg.deserialize(good).length == good.length / 8)
+      val badUsed = good.clone()
+      badUsed(0) = (badUsed(0) + 1).toByte // slot 0, the used length, little-endian
+      for ((how, bad) <- Seq("empty" -> Array.emptyByteArray,
+          "a length that is not a multiple of 8" -> (good ++ Array[Byte](0, 0, 0)),
+          "a used-slot header that does not match the length" -> badUsed)) {
+        val e = intercept[IllegalArgumentException](d.agg.deserialize(bad))
+        assert(e.getMessage.contains("corrupt capped bucket buffer"), s"$shape, $how: $e")
+      }
+    }
+  }
+
   test("no query that buckets occupants plans a ScalaAggregator") {
     val dir = Files.createTempDirectory("graft-capped-plans")
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
@@ -159,7 +182,10 @@ class CappedBucketAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         graft.SparkEntry.queries(q)(spark, dir.toString).collect()
         GraftExtensionsTestAccess.drainListenerBus(spark)
         val fns = plans.asScala.toSeq.flatMap(aggregateFunctions)
-        assert(fns.exists(_.isInstanceOf[CappedBucketAgg]), s"$q: no capped bucket aggregate seen")
+        assert(fns.exists {
+          case a: SketchAgg[_] => a.adapter.isInstanceOf[CappedBucketAgg.Capped]
+          case _ => false
+        }, s"$q: no capped bucket aggregate seen")
         assert(!fns.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]),
           s"$q plans a ScalaAggregator: ${fns.filter(_.isInstanceOf[ScalaAggregator[_, _, _]])}")
       }
@@ -187,12 +213,12 @@ object CappedBucketAggSpec {
     Plans.collectWithSubqueries(plan) { case a: BaseAggregateExec => a.aggregateExpressions }
       .flatten.map(_.aggregateFunction)
 
-  /** A [[CappedBucketAgg]] driven the way the hash aggregate drives it: one
-    * input row per occupant, buffers merged pairwise, the result read back
-    * as a primitive array.
+  /** A capped bucket aggregate driven the way the hash aggregate drives it:
+    * one input row per occupant, buffers merged pairwise, the result read
+    * back as a primitive array.
     */
   final class Driven(shape: CappedBucketAgg.Shape, cap: Int) {
-    val agg: CappedBucketAgg = CappedBucketAgg(shape, cap,
+    val agg: SketchAgg[Array[Long]] = SketchAgg(shape.name, CappedBucketAgg.Capped(shape, cap),
       shape.inputTypes.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) })
     def zero: Array[Long] = agg.createAggregationBuffer()
     def reduce(b: Array[Long], fields: Any*): Array[Long] = agg.update(b, InternalRow(fields: _*))
